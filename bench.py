@@ -161,7 +161,8 @@ def token_scale(sf: float) -> tuple[int, int]:
     """(n_sources, n_total sequences) for the synthetic token table.
 
     sf0.1 -> 32 sources x 240k sequences (~15M tokens at avg 64
-    tok/seq); Zipf(1.2) source skew exercises the salted rollup.
+    tok/seq); Zipf(1.2) source skew exercises the map-side partial
+    aggregation of the hour rollup.
     """
     n_total = max(4_000, int(2_400_000 * sf))
     return 32, n_total
@@ -187,7 +188,7 @@ def write_token_table(spark, sf: float, scale_mult: int = 1,
 
 def run_token_job(spark, sf: float, scale_mult: int = 1,
                   t0_dir: str | None = None, iters: int = 1) -> dict:
-    """North-rule job: hour rollup (salted) -> day/month cascade +
+    """North-rule job: hour rollup -> day/month cascade +
     payload pack; returns min wall seconds over `iters` runs and the
     throughput counters (min = least host-steal-contaminated sample;
     this sandbox VM shows heavy scheduling noise under full load)."""
@@ -205,13 +206,7 @@ def run_token_job(spark, sf: float, scale_mult: int = 1,
     stats = prow = None
     for _ in range(iters):
         t0 = time.time()
-        # plain, not salted: the r5 hot-source A/B (BENCH/skew_r5.json —
-        # ONE source holding 50% of rows, squeezed into 4 hour buckets)
-        # measured plain 4.05 s vs salted 4.91 s: map-side partial
-        # aggregation already combines hot algebraic groups per map
-        # task, so the salt's second shuffle+agg only adds cost. The
-        # salted path stays for holistic/sort-keyed stages.
-        hour = R.rollup_hour(t1, salted=False)
+        hour = R.rollup_hour(t1)
         day = R.cascade(hour, "day")
         month = R.cascade(day, "month")
         stats = (
@@ -596,7 +591,7 @@ def run_scaling_bucketed_child(cores: int, root: str) -> None:
         # scan+hour per branch — a harness artifact that measured as
         # INVERSE core scaling (probe: tools/probe_bucketed_stats.py;
         # lazy 16.5 s flat vs cached 2.7 s at local[32], mult=32).
-        hour = R.rollup_hour(t1, salted=False).cache()
+        hour = R.rollup_hour(t1).cache()
         day = R.cascade(hour, "day").cache()
         month = R.cascade(day, "month")
         srow = (

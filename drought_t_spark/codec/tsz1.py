@@ -94,7 +94,7 @@ def wrap_zlib(container: bytes, level: int = 1) -> bytes:
     return MAGIC_Z + zlib.compress(container, level)
 
 
-def unwrap(blob: bytes | bytearray | memoryview) -> bytes:
+def _unwrap(blob: bytes | bytearray | memoryview) -> bytes:
     b = bytes(blob)
     if b[:4] == MAGIC_Z:
         try:
@@ -140,7 +140,7 @@ def encode_tokens(values) -> bytes:
 def decode_tokens(blob: bytes | bytearray | memoryview) -> np.ndarray:
     """TSZ1 bytes (optionally TSZZ zlib-wrapped) -> np.int32 array;
     raises CodecError on corruption."""
-    b = unwrap(blob)
+    b = _unwrap(blob)
     if len(b) < 18 or b[:4] != MAGIC:
         raise CodecError("bad magic/short container")
     (crc,) = struct.unpack("<I", b[-4:])
@@ -211,7 +211,7 @@ def encode_floats(values) -> bytes:
 
 
 def decode_floats(blob) -> np.ndarray:
-    b = unwrap(blob)
+    b = _unwrap(blob)
     if len(b) < 18 or b[:4] != MAGIC:
         raise CodecError("bad magic/short container")
     (crc,) = struct.unpack("<I", b[-4:])

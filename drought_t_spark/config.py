@@ -17,18 +17,9 @@ from dataclasses import dataclass, replace
 from dataclasses import fields as dataclass_fields
 from typing import Literal
 
-Tier = Literal["hour", "day", "month"]
-
-#: bucket width per retention tier, as Spark/DuckDB date_trunc unit
-TIER_TRUNC: dict[str, str] = {"hour": "hour", "day": "day", "month": "month"}
-
 #: bucket width per tier in seconds (month is calendar-varying; the
 #: gap-fill operator uses calendar intervals, never this constant)
 TIER_SECONDS: dict[str, int] = {"hour": 3600, "day": 86400}
-
-#: cycle position (seasonal index) per tier for the variable threshold:
-#: hour tier → hour-of-week, day tier → day-of-year, month tier → month.
-TIER_CYCLE: dict[str, str] = {"hour": "hourofweek", "day": "dayofyear", "month": "month"}
 
 
 @dataclass(frozen=True)
@@ -54,10 +45,8 @@ class EngineConfig:
     # --- gap-fill (GF1) ---
     gap_fill_mode: Literal["none", "locf", "zero"] = "none"
 
-    # --- scale knobs (SURVEY.md §4 skew row) ---
-    salt_buckets: int = 8        # salt factor S for heavy-source rollups
+    # --- scale (SURVEY.md §4) ---
     max_bucket_tokens: int = 4_000_000  # payload chunking bound (spill safety)
-    shuffle_partitions: int = 32
 
     # --- codec ---
     payload_codec: str = "TSZ1"

@@ -32,19 +32,15 @@ _FREQ = {"hour": "h", "day": "D", "month": "MS"}
 
 
 def _cycle_pos(idx: pd.DatetimeIndex, tier: str) -> np.ndarray:
+    """Match functions/scalars.cycle_pos: Spark dayofweek is 1=Sunday."""
+    if tier == "hour":
+        spark_dow = (idx.dayofweek.to_numpy() + 1) % 7 + 1  # Mon=2 ... Sun=1
+        return (spark_dow - 1) * 24 + idx.hour.to_numpy()
     if tier == "day":
         return idx.dayofyear.to_numpy()
     if tier == "month":
         return idx.month.to_numpy()
     raise ValueError(tier)
-
-
-def cycle_pos_like_spark(idx: pd.DatetimeIndex, tier: str) -> np.ndarray:
-    """Match functions/scalars.cycle_pos: Spark dayofweek is 1=Sunday."""
-    if tier == "hour":
-        spark_dow = (idx.dayofweek.to_numpy() + 1) % 7 + 1  # Mon=2 ... Sun=1
-        return (spark_dow - 1) * 24 + idx.hour.to_numpy()
-    return _cycle_pos(idx, tier)
 
 
 def run_site(
@@ -71,7 +67,7 @@ def run_site(
 
     # TH1/TH2 threshold
     if cfg.threshold_mode == "variable":
-        cp = cycle_pos_like_spark(idx, tier)
+        cp = _cycle_pos(idx, tier)
         x0 = np.full(len(idx), np.nan)
         dfp = pd.DataFrame({"cp": cp, "v": x_ma})
         per = dfp.dropna().groupby("cp")["v"].apply(

@@ -1,11 +1,13 @@
 """Deduplication operators for training-data pipelines.
 
-All hot paths are JVM-side Catalyst expressions (higher-order array
-functions + xxhash64) — no Python UDFs anywhere:
+Hot paths are JVM-side Catalyst expressions (higher-order array
+functions + xxhash64), except the MinHash signature, which is one
+vectorized Arrow/NumPy kernel per record batch:
 
 * exact dedup — hash-groupBy with a deterministic keeper (min doc id);
-* MinHash + LSH — char-shingles → per-seed min of xxhash64 → banded
-  signature → bucket join → candidate pairs → exact Jaccard verify;
+* MinHash + LSH — byte k-grams → Arrow MinHash signature → banded
+  signature → bucket join → candidate pairs → exact Jaccard verify on
+  char shingles;
 * SimHash — 64-bit sign-aggregated word-hash fingerprint;
 * n-gram Jaccard — exact similarity on candidate pairs.
 
@@ -40,31 +42,17 @@ def shingles(text_col: str, k: int = 3):
     )
 
 
-def minhash_signature(shingle_col: str, n_hashes: int = 32):
-    """Array of n_hashes minima of seeded xxhash64 over the shingles.
-
-    Built as ONE transform over the seed range so `shingle_col` appears
-    exactly once — n_hashes separate array_min() expressions would let
-    CollapseProject inline (= re-evaluate) the shingle computation once
-    per hash function."""
-    return F.expr(
-        f"transform(sequence(0, {n_hashes - 1}),"
-        f" i -> array_min(transform({shingle_col}, s -> xxhash64(s, i))))"
-    )
-
-
 def minhash_signatures_arrow(
     base: DataFrame, k: int = 3, n_hashes: int = 32, seed: int = 7
 ) -> DataFrame:
     """(id, text) → (id, sig: array<bigint>) — MinHash signatures as one
     vectorized Arrow kernel per record batch.
 
-    Differs from the Catalyst HOF path ONLY in the hash family (UTF-8
-    byte k-grams → splitmix64 → n_hashes odd-multiplier permutations of
-    Z_2^64, vs char shingles → seeded xxhash64). Both are uniform
-    MinHash families; the funnel's exact-Jaccard verify stage pins the
-    OUTPUT pairs, so the engines are interchangeable wherever stage-1
-    recall holds (gated by the planted-twin tests + the driver oracle).
+    Hash family: UTF-8 byte k-grams → splitmix64 → n_hashes
+    odd-multiplier permutations of Z_2^64 — a uniform MinHash family.
+    The funnel's exact-Jaccard verify stage (on char shingles) pins the
+    OUTPUT pairs, so only stage-1 recall depends on the family (gated by
+    the planted-twin tests + the DuckDB oracle).
 
     Vectorization: the batch's text is one concatenated uint8 buffer;
     k-grams are k shifted ORs over it, splitmix64 mixes them in one
@@ -142,7 +130,7 @@ def minhash_signatures_arrow(
                 for i in range(n_hashes):
                     sig[good, i] = np.minimum.reduceat(A[i] * hv + B[i], cuts)
             for d in np.nonzero(~good)[0]:
-                # Spark-path parity: a doc shorter than k yields ONE
+                # `shingles` parity: a doc shorter than k yields ONE
                 # (truncated) shingle — here one short-packed gram
                 gsh = np.uint64(0)
                 for j, bb in enumerate(buf[starts[d] : starts[d] + lens[d]]):
@@ -158,7 +146,7 @@ def minhash_signatures_arrow(
     return base.select("id", "text").mapInArrow(kernel, f"id {id_t}, sig array<bigint>")
 
 
-def auto_bands(n_hashes: int, threshold: float, target_recall: float = 0.85) -> int:
+def _auto_bands(n_hashes: int, threshold: float, target_recall: float = 0.85) -> int:
     """Smallest band count (= tightest selectivity) whose expected
     recall 1-(1-t^r)^b at the threshold still meets target_recall.
     Looser banding than needed floods the verify stage with candidate
@@ -182,7 +170,6 @@ def minhash_lsh_pairs(
     max_bucket: int = 256,
     materialize=None,
     counters: dict | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH: banding tuned to the
     threshold, signature-estimate prefilter, exact Jaccard verify.
@@ -207,34 +194,14 @@ def minhash_lsh_pairs(
     if materialize is None:
         materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     if bands is None:
-        bands = auto_bands(n_hashes, jaccard_threshold)
+        bands = _auto_bands(n_hashes, jaccard_threshold)
     rows_per_band = n_hashes // bands
     assert rows_per_band * bands == n_hashes
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    sh_expr = (
-        f"array_distinct(transform(sequence(1, greatest(length(text) - {k - 1}, 1)),"
-        f" i -> substring(text, i, {k})))"
-    )
-    if engine == "arrow":
-        # vectorized NumPy kernel: measured 4-8x the HOF path's docs/s at
-        # 1M docs (BENCH/BASELINE.md r5 A/B); HOF kept as the
-        # dependency-free fallback and A/B control
-        sig_tbl = materialize(
-            minhash_signatures_arrow(base, k=k, n_hashes=n_hashes)
-        )
-    else:
-        # let-bind the shingle set so it is built once per row, not once
-        # per hash seed (the seed transform's lambda body would
-        # otherwise inline it)
-        sig_tbl = materialize(
-            base.select(
-                "id",
-                F.expr(
-                    f"transform(array({sh_expr}), sh -> transform(sequence(0, {n_hashes - 1}),"
-                    f" i -> array_min(transform(sh, s -> xxhash64(s, i)))))[0]"
-                ).alias("sig"),
-            )
-        )
+    # vectorized NumPy kernel: measured 4-8x the Catalyst HOF
+    # (xxhash64-per-shingle) signature's docs/s at 1M docs
+    # (BENCH/BASELINE.md r5 A/B)
+    sig_tbl = materialize(minhash_signatures_arrow(base, k=k, n_hashes=n_hashes))
     # Band rows carry ONLY (id, band, bkey) — never shingle arrays.
     # The band shuffle is then 3 scalar columns wide; wide arrays rejoin
     # only for surviving pairs. At 100TB this is the difference between

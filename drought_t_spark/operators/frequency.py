@@ -1,7 +1,7 @@
 """FR1/AG5/AG7 — frequency and summary reporting (SURVEY.md §2.4).
 
-Drought frequency = events per source per year of onset; summary stats
-over non-excluded events; cross-tier rollup report via GROUPING SETS.
+Drought frequency = events per source per year of onset, with summary
+stats over non-excluded events.
 """
 
 from __future__ import annotations
@@ -19,24 +19,5 @@ def frequency(events: DataFrame) -> DataFrame:
             F.avg("duration").alias("mean_duration"),
             F.avg("severity").alias("mean_severity"),
             F.max("severity").alias("max_severity"),
-        )
-    )
-
-
-def summary_rollup(events: DataFrame) -> DataFrame:
-    """AG7 — source × year totals with ROLLUP subtotals (grouping nulls
-    coalesced to 'ALL'/-1 so cross-engine hashing is unambiguous)."""
-    return (
-        events.where(~F.col("excluded"))
-        .rollup("source", F.year("onset").alias("year"))
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum("duration").cast("long").alias("total_duration"),
-        )
-        .select(
-            F.coalesce("source", F.lit("ALL")).alias("source"),
-            F.coalesce(F.col("year"), F.lit(-1)).alias("year"),
-            "n_events",
-            "total_duration",
         )
     )

@@ -99,28 +99,29 @@ def _pool_pass(ev: DataFrame, cfg: EngineConfig) -> DataFrame:
     return merged
 
 
-def pool_events(ev_with_gaps: DataFrame, cfg: EngineConfig = DEFAULT,
-                max_passes: int = 64) -> DataFrame:
+def pool_events(ev_with_gaps: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """Iterate _pool_pass to fixed point (driver-side loop on a tiny
-    table; each pass localCheckpoint()ed to keep lineage flat)."""
+    table; each pass localCheckpoint()ed to keep lineage flat).
+
+    Stops when a pass leaves the row count unchanged — the same rule as
+    `local_ref.run_site`. A pass either merges at least one pair (the
+    table shrinks) or is the identity (singleton chains re-aggregate to
+    the same rows), so the loop terminates, and it never returns an
+    unconverged table however long the chain of merges is.
+
+    The input is consumed exactly once (by the first pass) and never
+    counted or checkpointed: the convergence baseline is the first
+    pass's own count, which saves two Spark jobs per call."""
     if cfg.pooling != "ic":
         return ev_with_gaps
-    # r6: no up-front checkpoint/count of the input — the input is
-    # consumed exactly once (by the first pass), and the convergence
-    # baseline comes from the first pass's own count. A pass applied to
-    # a fixed point is the identity (singleton chains re-aggregate to
-    # the same rows), so "two consecutive passes with equal counts"
-    # terminates at the same table as the old "pass count equals input
-    # count" check, two driver jobs cheaper per call.
     ev = ev_with_gaps
     n = -1
-    for _ in range(max_passes):
+    while True:
         ev = _pool_pass(ev, cfg).localCheckpoint(eager=True)
         m = ev.count()
         if m == n:
-            break
+            return ev
         n = m
-    return ev
 
 
 def finalize_events(ev: DataFrame) -> DataFrame:

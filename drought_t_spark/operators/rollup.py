@@ -2,10 +2,8 @@
 
 Scale posture (§4): stats rollups are algebraic (count/sum/min/max), so
 Spark's partial+final hash aggregation already combines map-side — one
-shuffle keyed by (source, bucket). The salted two-phase variant splits a
-pathologically hot (source, bucket) across `salt_buckets` reducers
-first, then re-aggregates the partials: exact for algebraic stats, and
-the pattern the north rule requires for heavy sources. Tier cascading
+shuffle keyed by (source, bucket), and a hot source's rows collapse to
+one partial per (map task, bucket) before the shuffle. Tier cascading
 (day←hour, month←day) re-aggregates integer partials — never re-reads
 raw — and is bit-exact because the equality-bearing stats are integers.
 
@@ -15,7 +13,7 @@ CRITICAL pruning invariant: stats-only rollups must never touch the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from drought_t_spark.config import EngineConfig, DEFAULT
@@ -29,9 +27,9 @@ def with_event_time(seqs: DataFrame) -> DataFrame:
     return seqs.withColumn("seq", seq_index()).withColumn("ts", seq_timestamp())
 
 
-def _stats_agg(prefix_count="*"):
+def _stats_agg():
     return [
-        F.count(prefix_count).alias("n_seq"),
+        F.count("*").alias("n_seq"),
         F.sum("n_tok").cast("long").alias("n_tok_sum"),
         F.min("n_tok").cast("int").alias("n_tok_min"),
         F.max("n_tok").cast("int").alias("n_tok_max"),
@@ -47,24 +45,12 @@ def _finish(df: DataFrame) -> DataFrame:
     )
 
 
-def rollup_hour(seqs_t1: DataFrame, cfg: EngineConfig = DEFAULT, salted: bool = False) -> DataFrame:
+def rollup_hour(seqs_t1: DataFrame) -> DataFrame:
     """AG1 — hourly stats rollup from T1. Never reads `tokens`."""
     base = seqs_t1.select(
-        "source", F.date_trunc("hour", "ts").alias("bucket_start"), "n_tok", "doc_id"
+        "source", F.date_trunc("hour", "ts").alias("bucket_start"), "n_tok"
     )
-    if not salted:
-        out = base.groupBy("source", "bucket_start").agg(*_stats_agg())
-    else:
-        # two-phase: split hot (source,bucket) groups across S reducers
-        salt = F.pmod(F.hash("doc_id"), F.lit(cfg.salt_buckets)).alias("salt")
-        partial = base.groupBy("source", "bucket_start", salt).agg(*_stats_agg())
-        out = partial.groupBy("source", "bucket_start").agg(
-            F.sum("n_seq").alias("n_seq"),
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
-    return _finish(out)
+    return _finish(base.groupBy("source", "bucket_start").agg(*_stats_agg()))
 
 
 def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:

@@ -61,17 +61,3 @@ def extract_events(runs: DataFrame, order_col: str = "bucket_start") -> DataFram
             F.sum(e).alias("excess"),
         )
     )
-
-
-def drought_events(run_events: DataFrame) -> DataFrame:
-    """Below-runs only, with intensity, ordered ids per source."""
-    w = Window.partitionBy("source").orderBy("onset")
-    return (
-        run_events.where(F.col("below") == 1)
-        .withColumn("event_id", F.row_number().over(w).cast("long"))
-        .withColumn("intensity", F.col("severity") / F.col("duration"))
-        .select(
-            "source", "event_id", "onset", "termination",
-            "duration", "severity", "intensity", "peak", "run_id",
-        )
-    )

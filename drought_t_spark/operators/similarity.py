@@ -44,28 +44,7 @@ def cosine_topk(
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
 
-def hyperplane_bucket(vec_col: str, n_planes: int = 12, seed: int = 42,
-                      dim: int = 64) -> Column:
-    """LSH bucket id: sign bits of dot products with seeded random
-    hyperplanes (deterministic; planes inlined as literals, truncated
-    to `dim` — zip_with ignores trailing mismatch harmlessly).
-
-    This is the pure-Catalyst form; it evaluates n_planes × dim
-    interpreted multiply-adds per row, so the hot paths
-    (`cosine_topk_lsh`, `embedding_near_dups`) use the Arrow kernels
-    below instead — same planes, same sign convention, one BLAS matmul
-    per record batch. Kept as the dependency-free reference expression."""
-    rng = np.random.default_rng(seed)
-    bits = []
-    planes = rng.standard_normal((n_planes, 512))
-    for p, plane in enumerate(planes):
-        lit = _lit_vec(plane[:dim])
-        dot = f"aggregate(zip_with({vec_col}, {lit}, (x, y) -> x * y), cast(0.0 as double), (s, x) -> s + x)"
-        bits.append(f"CASE WHEN ({dot}) > 0 THEN shiftleft(1L, {p}) ELSE 0L END")
-    return F.expr(" + ".join(bits))
-
-
-def hyperplanes(n_planes: int, seed: int = 42) -> np.ndarray:
+def _hyperplanes(n_planes: int, seed: int = 42) -> np.ndarray:
     """The seeded plane matrix every bucketing path shares. Generated as
     one (n_planes, 512) row-major draw so a SMALLER n_planes with the
     same seed yields a prefix of a larger one — kernel and driver-side
@@ -77,8 +56,8 @@ def _batch_sign_bits(vcol, P: np.ndarray) -> np.ndarray:
     """(n, n_planes) bool sign bits for one Arrow list<double> column:
     zero-copy flatten → one X @ Pᵀ matmul when the batch's dims are
     uniform (the normal case), per-row dots otherwise. Sign convention
-    is `dot > 0`, identical to `hyperplane_bucket` and the driver-side
-    query bucketing in `cosine_topk_lsh`."""
+    is `dot > 0`, identical to the query-vector bucketing in
+    `cosine_topk_lsh`."""
     offs = vcol.offsets.to_numpy()
     vals = vcol.values.to_numpy(zero_copy_only=False)
     n = len(offs) - 1
@@ -94,13 +73,13 @@ def _batch_sign_bits(vcol, P: np.ndarray) -> np.ndarray:
     return bits
 
 
-def attach_hyperplane_bucket(dv: DataFrame, n_planes: int = 8,
-                             seed: int = 42) -> DataFrame:
+def _attach_lsh_bucket(dv: DataFrame, n_planes: int = 8,
+                       seed: int = 42) -> DataFrame:
     """(id, v:array<double>) → (id, v, bucket:long) — the single-key LSH
     bucket as one Arrow matmul + packbits per record batch. n_planes ≤
     63 so the key fits an int64."""
     assert n_planes <= 63, "single-key bucket packs into one int64"
-    P = hyperplanes(n_planes, seed)
+    P = _hyperplanes(n_planes, seed)
     pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
 
     def kernel(batches):
@@ -132,7 +111,7 @@ def hyperplane_band_rows(dv: DataFrame, n_planes: int, n_bands: int,
     selective keys (e.g. 144 planes / 6 bands of 24 bits)."""
     w = n_planes // n_bands
     assert w * n_bands == n_planes and w <= 63
-    P = hyperplanes(n_planes, seed)
+    P = _hyperplanes(n_planes, seed)
     pow2 = (np.uint64(1) << np.arange(w, dtype=np.uint64))
 
     def kernel(batches):
@@ -180,12 +159,12 @@ def cosine_topk_lsh(
     (1+n_planes)/2^n_planes fraction of the data scanned). Recall < 1 by
     design; `cosine_topk` is the exact baseline."""
     q = np.asarray(query_vec, dtype=np.float64)
-    planes = hyperplanes(n_planes, seed)
+    planes = _hyperplanes(n_planes, seed)
     qbucket = 0
     for p, plane in enumerate(planes):
         if float(np.dot(q, plane[: len(q)])) > 0:
             qbucket |= 1 << p
-    dv = attach_hyperplane_bucket(
+    dv = _attach_lsh_bucket(
         df.select(
             F.col(id_col).alias("id"),
             F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
@@ -238,129 +217,6 @@ def train_ivf_centroids(
                 C[c] = members.mean(axis=0)
         C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     return C
-
-
-def train_ivf_centroids_kmeanspar(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    oversample: int | None = None,
-    n_rounds: int = 3,
-    n_iter: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """k-means‖ (Bahmani et al., VLDB 2012) spherical coarse-centroid
-    trainer — the in-Spark path for codebooks past the driver-sample
-    budget of `train_ivf_centroids`. No step collects more than the
-    candidate set (~oversample × n_rounds vectors); the full table is
-    only ever scanned, never gathered.
-
-    1. seed candidate: the vector with min xxhash64(id) — deterministic
-       under any partitioning;
-    2. `n_rounds` distributed oversampling rounds: every row computes
-       its spherical distance d² = 1 − max-dot to the nearest current
-       candidate (Arrow-batched matmul, closure-broadcast candidates)
-       and SELF-selects with probability min(1, ℓ·d²/Σd²) using a
-       seeded per-(id, round) hash — no RNG state anywhere;
-    3. parallel assignment: one more scan votes each row to its nearest
-       candidate; the groupBy counts are the candidate weights;
-    4. driver finish: weighted Lloyd over the tiny candidate set down
-       to `n_centroids`, L2-normalized (assignment by max dot == max
-       cosine, as everywhere else in this module).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    ell = oversample or 2 * n_centroids
-
-    # raw double vectors; L2 normalization happens INSIDE the Arrow
-    # kernels (a pandas UDF whose argument is a higher-order-function
-    # expression fails Python-UDF extraction under an aggregate —
-    # verified on Spark 4.1 — and NumPy normalization is faster anyway)
-    # `seed` is folded into the per-row hash, so BOTH the seed-candidate
-    # choice (min h) and every round's sampling hash vary with it — a
-    # dangling seed parameter would silently hand every caller the
-    # identical codebook
-    dv = df.select(
-        F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed))).alias("h"),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-    )
-
-    def _norm(X: np.ndarray) -> np.ndarray:
-        return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-
-    first = dv.orderBy("h").limit(1).collect()
-    if not first:
-        raise ValueError("empty input")
-    cand = _norm(np.asarray([list(first[0]["v"])], dtype=np.float64))
-
-    def _dist_udf(C: np.ndarray):
-        @pandas_udf("double")
-        def d2(vecs: pd.Series) -> pd.Series:
-            X = _norm(np.stack(vecs.map(np.asarray)).astype(np.float64))
-            return pd.Series(1.0 - np.max(X @ C.T, axis=1))
-        return d2
-
-    for rnd in range(n_rounds):
-        d2 = _dist_udf(cand)
-        # no clamp around the UDF: wrapping a PythonUDF in greatest()
-        # leaves it under an interpreted expression (unevaluable), and a
-        # tiny negative d² (fp noise when a row == a candidate) selects
-        # nothing — exactly right. Persisted for the round: the Σd²
-        # aggregate and the sampling filter both consume d2, and the
-        # Arrow matmul is the round's dominant cost — without the
-        # persist every round pays it twice (spills to disk if the
-        # (h, v, d2) projection outgrows memory).
-        scored = dv.withColumn("d2", d2(F.col("v"))).persist()
-        try:
-            total = scored.agg(F.sum("d2")).first()[0] or 0.0
-            if total <= 0:
-                break  # every row coincides with a candidate already
-            # seeded per-(id, round) uniform in [0, 1): select iff
-            # u < ℓ·d²/Σd² — the k-means|| oversampling step, RNG-free
-            u = (
-                F.pmod(F.xxhash64(F.col("h"), F.lit(rnd)), F.lit(1 << 30))
-                / float(1 << 30)
-            )
-            picked = scored.where(
-                u < F.lit(float(ell)) * F.col("d2") / F.lit(float(total))
-            )
-            # collect() row order is partition-dependent; the candidate
-            # ORDER feeds the Lloyd init tie-break, so sort by the
-            # content hash to stay deterministic under any partitioning
-            new = sorted(picked.select("h", "v").collect(), key=lambda r: r["h"])
-        finally:
-            scored.unpersist()
-        if new:
-            cand = np.concatenate(
-                [cand, _norm(np.asarray([list(r["v"]) for r in new], dtype=np.float64))]
-            )
-
-    # parallel assignment → candidate weights (≤ |cand| rows collected)
-    C = cand
-    @pandas_udf("int")
-    def nearest(vecs: pd.Series) -> pd.Series:
-        X = _norm(np.stack(vecs.map(np.asarray)).astype(np.float64))
-        return pd.Series(np.argmax(X @ C.T, axis=1).astype(np.int32))
-
-    wrows = dv.select(nearest(F.col("v")).alias("c")).groupBy("c").count().collect()
-    w = np.zeros(len(cand))
-    for r in wrows:
-        w[int(r["c"])] = float(r["count"])
-
-    # driver finish: weighted spherical Lloyd down to n_centroids,
-    # initialized from the heaviest candidates (deterministic)
-    k = min(n_centroids, len(cand))
-    order = np.lexsort((np.arange(len(cand)), -w))
-    Ck = cand[order[:k]].copy()
-    for _ in range(n_iter):
-        assign = np.argmax(cand @ Ck.T, axis=1)
-        for c in range(k):
-            m = assign == c
-            if w[m].sum() > 0:
-                Ck[c] = np.average(cand[m], axis=0, weights=w[m])
-        Ck /= np.maximum(np.linalg.norm(Ck, axis=1, keepdims=True), 1e-12)
-    return Ck
 
 
 def _topk_ivf_udf(df, q, cents, k, id_col, vec_col, n_probe) -> DataFrame:

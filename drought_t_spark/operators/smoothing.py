@@ -3,8 +3,7 @@
 `rowsBetween(-k, k)` is correct ONLY because gap-fill guarantees a
 dense calendar (documented invariant); `F.avg` ignores nulls, which is
 exactly the NaN-aware mean the drought method wants (mean over present
-buckets in the window; null if none). `moving_avg_range` is the
-rangeBetween variant for frames where density is NOT guaranteed.
+buckets in the window; null if none).
 
 Scale: one shuffle keyed by source; within a partition this is a single
 sorted window pass. Heavy sources are bounded by calendar length (not
@@ -15,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from drought_t_spark.config import TIER_SECONDS
 
 
 def moving_avg(
@@ -36,23 +33,4 @@ def moving_avg(
         return df.withColumn(out_col, F.col(value_col).cast("double"))
     k = window // 2
     w = Window.partitionBy("source").orderBy(order_col).rowsBetween(-k, k)
-    return df.withColumn(out_col, F.avg(value_col).over(w))
-
-
-def moving_avg_range(
-    df: DataFrame,
-    window: int,
-    tier: str,
-    value_col: str = "value",
-    out_col: str = "x_ma",
-    order_col: str = "bucket_start",
-) -> DataFrame:
-    """W7 — time-keyed centered MA that tolerates missing buckets."""
-    assert window % 2 == 1
-    k = (window // 2) * TIER_SECONDS[tier]
-    w = (
-        Window.partitionBy("source")
-        .orderBy(F.col(order_col).cast("long"))
-        .rangeBetween(-k, k)
-    )
     return df.withColumn(out_col, F.avg(value_col).over(w))

@@ -44,25 +44,6 @@ def fixed_threshold(
     )
 
 
-def fixed_threshold_approx(
-    df: DataFrame, cfg: EngineConfig = DEFAULT, value_col: str = "x_ma",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Sketch-based threshold for the 100 TB regime: `percentile_approx`
-    (Greenwald-Khanna) builds a MERGEABLE per-partition sketch, so the
-    shuffle carries one bounded sketch per (partition, source) instead
-    of every value — exact `percentile` must move the full column
-    through the aggregation. Rank error ≤ 1/accuracy (1e-4 at the
-    default), deterministic for a given partitioning. The exact variant
-    stays the fixture/oracle contract; this is the scale path when a
-    source's history no longer fits a reducer comfortably."""
-    return df.groupBy("source").agg(
-        F.percentile_approx(
-            value_col, F.lit(cfg.threshold_pct), F.lit(accuracy)
-        ).alias("x0")
-    )
-
-
 def _smooth_cyclic(th: DataFrame, window: int) -> DataFrame:
     """Centered MA over cycle_pos with wrap-around: head/tail cycle
     positions are duplicated beyond the ends so the window sees the

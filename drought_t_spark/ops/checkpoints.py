@@ -8,41 +8,6 @@ restart, `pending_partitions` anti-joins (J5) the stage's work list
 against committed checkpoints — only unfinished groups re-run, and the
 sink's per-partition overwrite makes re-runs idempotent (no duplicate
 buckets even if a crash hit mid-write).
-
-Determinism: `updated_seq` is a counter, never wall-clock — seeded ONCE
-per warehouse from the existing table (max+1) and advanced in-process
-afterwards, so commit cost is independent of ops-table size (the old
-per-commit max-scan was O(table) and got slower as the ops tables
-grew). Cross-process UNIQUENESS is enforced by an O_EXCL claim marker
-per value (`ops/_seq/<n>` — atomic create on POSIX): a process whose
-in-process counter lands on a value another writer already claimed
-skips forward until its create succeeds. This is the parquet-shim
-analogue of what the Iceberg catalog does natively — CAS on the next
-snapshot id — and costs O(1) amortized per commit (one create; skips
-only when writers actually interleaved). Scope stays honest: seq
-TOTALLY ORDERS commits within one process and NEVER REPEATS across
-processes, but interleaved writers' values are claim-race order, not
-wall-clock order. Nothing in resume depends on seq either way —
-`pending_partitions` anti-joins on (job_id, stage, partition_id,
-state) — and the production Iceberg runtime replaces the column with
-catalog snapshot ids (docs/ICEBERG.md).
-
-Marker lifecycle: claim markers are garbage-collected at seed time so
-long-lived warehouses don't accumulate one inode per commit forever.
-GC publishes a floor BEFORE deleting markers at or below it, and every
-successful O_EXCL claim re-checks the floor afterwards — a stale
-process whose counter lands inside a GC'd region sees floor >= n and
-re-claims above it, so uniqueness survives concurrent GC. The floor is
-MONOTONE by construction: it is the max over immutable O_EXCL-created
-marker files (`ops/_seq/_floor.<n>`), and a lower `_floor.<k>` is only
-deleted while a strictly higher one exists — a mutable single file
-(tmp+rename, the first implementation) could REGRESS when a process
-seeding from a stale table max published its lower floor after a
-concurrent GC published a higher one, letting a later claim reuse an
-already-committed seq from the cleared region. O_EXCL atomicity is a
-POSIX-local-filesystem guarantee: the marker scheme is scoped to the
-local-parquet shim; on object stores / real clusters the Iceberg
-catalog's snapshot CAS replaces it outright.
 """
 
 from __future__ import annotations
@@ -56,105 +21,6 @@ from drought_t_spark.sources.warehouse import Warehouse
 CHECKPOINT_TBL = "ops.checkpoints"
 LINEAGE_TBL = "ops.lineage"
 METRICS_TBL = "ops.metrics"
-
-#: per-warehouse monotone seq, seeded lazily from the table (see module doc)
-_SEQ_CACHE: dict[str, int] = {}
-
-
-def _seq_floor(seq_dir: str) -> int:
-    """Highest GC'd seq value (no marker at or below it may be claimed):
-    the max over the immutable `_floor.<n>` marker files. Monotone —
-    see the module docstring's marker-lifecycle paragraph."""
-    import os
-
-    best = 0
-    try:
-        names = os.listdir(seq_dir)
-    except FileNotFoundError:
-        return 0
-    for name in names:
-        if name.startswith("_floor."):
-            try:
-                best = max(best, int(name[7:]))
-            except ValueError:
-                pass  # stray tmp file from the retired mutable scheme
-    return best
-
-
-def _gc_markers(seq_dir: str, committed_max: int) -> None:
-    """Delete claim markers at/below the committed max — AFTER publishing
-    that value as a floor marker, so a stale writer whose counter lands
-    in the cleared region re-claims above it (see module doc).
-
-    The floor is published as an immutable O_EXCL file `_floor.<n>`,
-    never a rewritten single file: max-over-files cannot regress when
-    two GCs race with different committed_max views (the loser's lower
-    marker coexists below the winner's), whereas rewrite-in-place let
-    the stale GC LOWER the floor and re-expose burnt seq values. Lower
-    floor markers are deleted only here, while this process's >= floor
-    marker exists, which preserves the monotone max."""
-    import os
-
-    floor = max(committed_max, _seq_floor(seq_dir))
-    if floor <= 0:
-        return
-    try:
-        os.close(os.open(os.path.join(seq_dir, f"_floor.{floor}"),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-    except FileExistsError:
-        pass  # same floor already published — fine, it's immutable
-    for name in os.listdir(seq_dir):
-        doomed = (name.isdigit() and int(name) <= floor) or (
-            name.startswith("_floor.")
-            and name[7:].isdigit() and int(name[7:]) < floor
-        )
-        if doomed:
-            try:
-                os.unlink(os.path.join(seq_dir, name))
-            except FileNotFoundError:
-                pass  # concurrent GC got it
-
-
-def _next_seq(spark: SparkSession, wh: Warehouse) -> int:
-    import os
-
-    seq_dir = os.path.join(wh.root, "ops", "_seq")
-    os.makedirs(seq_dir, exist_ok=True)
-    key = wh.root
-    if key not in _SEQ_CACHE:
-        if not wh.exists(CHECKPOINT_TBL):
-            _SEQ_CACHE[key] = 0
-        else:
-            row = wh.read(spark, CHECKPOINT_TBL).agg(F.max("updated_seq")).first()
-            _SEQ_CACHE[key] = int(row[0] or 0)
-            # seed time = GC time: every value <= committed max is either
-            # durably in the table or burned by a crash; clearing them here
-            # bounds marker growth to one inode per commit per SESSION, not
-            # per warehouse lifetime.
-            _gc_markers(seq_dir, _SEQ_CACHE[key])
-    n = max(_SEQ_CACHE[key], _seq_floor(seq_dir)) + 1
-    # claim the value with an atomic O_EXCL create — a concurrent writer
-    # that already claimed n (its commit may not be visible in the table
-    # yet) forces a skip, so two processes can interleave commits on one
-    # warehouse without ever repeating a seq. A crash between claim and
-    # append just burns the value (markers are claims, not commits).
-    while True:
-        try:
-            os.close(os.open(os.path.join(seq_dir, str(n)),
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-        except FileExistsError:
-            n += 1
-            continue
-        # a create that succeeded INSIDE a concurrently-GC'd region is not
-        # a valid claim (the marker that would have blocked it was deleted
-        # after the floor advanced past n) — re-read the floor and go above.
-        floor = _seq_floor(seq_dir)
-        if n <= floor:
-            n = floor + 1
-            continue
-        break
-    _SEQ_CACHE[key] = n
-    return n
 
 
 def committed_partitions(spark: SparkSession, wh: Warehouse, job_id: str, stage: str) -> DataFrame:
@@ -189,9 +55,8 @@ def record_commit(
     rows_out: int,
     metrics: dict[str, float] | None = None,
 ) -> None:
-    seq = _next_seq(spark, wh)
     cp = spark.createDataFrame(
-        [(job_id, stage, p, "committed", snapshot_id, seq) for p in partition_ids],
+        [(job_id, stage, p, "committed", snapshot_id) for p in partition_ids],
         CHECKPOINTS,
     )
     wh.append(cp, CHECKPOINT_TBL)

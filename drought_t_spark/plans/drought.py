@@ -18,12 +18,11 @@ from drought_t_spark.operators.smoothing import moving_avg
 from drought_t_spark.operators.threshold import attach_threshold, fixed_threshold, variable_threshold
 
 
-def rollup_tiers(seqs: DataFrame, cfg: EngineConfig = DEFAULT, salted: bool = False
-                 ) -> dict[str, DataFrame]:
+def rollup_tiers(seqs: DataFrame) -> dict[str, DataFrame]:
     """T0 → {hour, day, month} stats tiers; coarser tiers cascade from
     finer partials (never re-read raw) — SURVEY.md §2.4 AG1/AG2."""
     t1 = R.with_event_time(seqs)
-    hour = R.rollup_hour(t1, cfg, salted=salted)
+    hour = R.rollup_hour(t1)
     day = R.cascade(hour, "day")
     month = R.cascade(day, "month")
     return {"hour": hour, "day": day, "month": month}

@@ -10,8 +10,6 @@ identical to a single-shot run.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,15 +89,13 @@ def run_rollup_job(
             )
             continue
         part = t1.where(F.col("_grp") == g).drop("_grp")
-        # plain beats salted even on a 50%-hot-source fixture (r5 skew
-        # A/B, BENCH/skew_r5.json): partial agg absorbs algebraic skew
-        stats = R.rollup_hour(part, cfg, salted=False)
+        stats = R.rollup_hour(part)
         wh.write_partitioned(stats, "agg.tier_hour", ["source"])
         if with_payloads:
             pay = R.pack_payloads(part, "hour", cfg, pre_partitioned=pre_partitioned)
             wh.write_partitioned(pay, "agg.payload_hour", ["source"])
         # lineage counts + snapshot token come from the WRITTEN table,
-        # never from `stats` — which is the full salted-aggregation DAG
+        # never from `stats` — which is the full aggregation DAG
         # over the group's raw scan, so each extra consumer would
         # re-execute the whole rollup (Spark has no plan-level CSE).
         # Dynamic overwrite just replaced exactly this group's source

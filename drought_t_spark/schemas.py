@@ -64,7 +64,6 @@ CHECKPOINTS = T.StructType(
         T.StructField("partition_id", T.StringType(), False),
         T.StructField("state", T.StringType(), False),
         T.StructField("snapshot_id", T.StringType(), True),
-        T.StructField("updated_seq", T.LongType(), False),
     ]
 )
 

@@ -25,7 +25,7 @@ def read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int 
     )
 
 
-def streaming_hour_rollup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def _streaming_hour_rollup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Tumbling-window continuous aggregate; late rows beyond the
     watermark are dropped (batch re-rollup reconciles them)."""
     t1 = stream.withColumn("seq", seq_index()).withColumn("ts", seq_timestamp())
@@ -57,7 +57,7 @@ def start_append_stream(spark: SparkSession, path: str,
     §2.11). Returns the running StreamingQuery; the caller drives
     micro-batches (processAllAvailable) between file drops so the
     watermark actually advances between batches."""
-    agg = streaming_hour_rollup(read_sequence_stream(spark, path), watermark)
+    agg = _streaming_hour_rollup(read_sequence_stream(spark, path), watermark)
     return (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -285,7 +285,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
 
 def run_to_memory(spark: SparkSession, path: str, name: str = "stream_tier_hour"):
     """Drive the stream to completion over static files (test helper)."""
-    agg = streaming_hour_rollup(read_sequence_stream(spark, path))
+    agg = _streaming_hour_rollup(read_sequence_stream(spark, path))
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")

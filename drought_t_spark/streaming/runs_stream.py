@@ -206,7 +206,7 @@ def _fold_runs(
         yield out
 
 
-def streaming_run_events(stream: DataFrame) -> DataFrame:
+def _streaming_run_events(stream: DataFrame) -> DataFrame:
     """RL1+RL2+EV1 over a stream of (source, bucket_start, x_ma, x0):
     one appended row per TERMINATED run, bit-equal to the batch
     extract_events row for that run. The trailing open run per source
@@ -220,8 +220,8 @@ def streaming_run_events(stream: DataFrame) -> DataFrame:
     )
 
 
-def read_series_stream(spark: SparkSession, path: str,
-                       files_per_trigger: int = 1) -> DataFrame:
+def _read_series_stream(spark: SparkSession, path: str,
+                        files_per_trigger: int = 1) -> DataFrame:
     return (
         spark.readStream.schema(RUN_STREAM_INPUT)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -240,7 +240,7 @@ def start_runs_stream(spark: SparkSession, path: str,
     controls where the state store writes its per-batch deltas, which
     matters: the default lands in java.io.tmpdir, and on a slow scratch
     disk the state-store fsyncs dominate the micro-batch wall.)"""
-    events = streaming_run_events(read_series_stream(spark, path, files_per_trigger))
+    events = _streaming_run_events(_read_series_stream(spark, path, files_per_trigger))
     w = (
         events.writeStream.outputMode("append")
         .format("memory")
@@ -264,7 +264,7 @@ def start_runs_stream_to_parquet(spark: SparkSession, path: str, out: str,
     Each batch therefore writes into its own `_batch=<id>` partition —
     dynamic overwrite makes the replay idempotent (the same trick the
     ingest partials use, streaming/rollup_stream.py batch keys)."""
-    events = streaming_run_events(read_series_stream(spark, path, files_per_trigger))
+    events = _streaming_run_events(_read_series_stream(spark, path, files_per_trigger))
     return (
         events.writeStream.outputMode("append")
         .foreachBatch(lambda df, bid: write_events_batch(df, bid, out))

@@ -22,8 +22,6 @@ import pandas as pd
 
 M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 VOCAB = 50257
-TS_EPOCH = np.datetime64("2024-01-01T00:00:00", "us")
-TICK_US = 60_000_000  # 1 minute
 
 
 def _mix(x: np.ndarray) -> np.ndarray:
@@ -51,7 +49,7 @@ def _key(seed: int, *parts: np.ndarray | int) -> np.ndarray:
 # ---------------------------------------------------------------- F1 --
 
 
-def source_counts(seed: int = 42, n_sources: int = 4, n_total: int = 8000) -> np.ndarray:
+def _source_counts(seed: int = 42, n_sources: int = 4, n_total: int = 8000) -> np.ndarray:
     """Zipf(s=1.2)-proportional sequence counts per source (sum≈n_total)."""
     k = np.arange(1, n_sources + 1, dtype=np.float64)
     w = k ** -1.2
@@ -84,7 +82,7 @@ def _gap_mask(seed: int, src_idx: np.ndarray, seq: np.ndarray) -> np.ndarray:
     return h < 0.05
 
 
-def rows_for_range(
+def _rows_for_range(
     lo: int, hi: int, counts: np.ndarray, seed: int = 42
 ) -> pd.DataFrame:
     """Materialize F1 rows for global ids [lo, hi) — the shared core.
@@ -129,8 +127,8 @@ def sequences_pdf(seed: int = 42, n_sources: int = 4, n_total: int = 8000,
                   counts: np.ndarray | None = None) -> pd.DataFrame:
     """Whole F1 table locally (small scales / oracle)."""
     if counts is None:
-        counts = source_counts(seed, n_sources, n_total)
-    return rows_for_range(0, int(counts.sum()), counts, seed)
+        counts = _source_counts(seed, n_sources, n_total)
+    return _rows_for_range(0, int(counts.sum()), counts, seed)
 
 
 def sequences_df(spark, seed: int = 42, n_sources: int = 4, n_total: int = 8000,
@@ -140,7 +138,7 @@ def sequences_df(spark, seed: int = 42, n_sources: int = 4, n_total: int = 8000,
     from drought_t_spark.schemas import SEQUENCES
 
     if counts is None:
-        counts = source_counts(seed, n_sources, n_total)
+        counts = _source_counts(seed, n_sources, n_total)
     n = int(counts.sum())
     counts_l = counts.tolist()  # small; closure-captured (broadcast-size)
 
@@ -149,7 +147,7 @@ def sequences_df(spark, seed: int = 42, n_sources: int = 4, n_total: int = 8000,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield rows_for_range(int(pdf["id"].min()), int(pdf["id"].max()) + 1, cs, seed)
+            yield _rows_for_range(int(pdf["id"].min()), int(pdf["id"].max()) + 1, cs, seed)
 
     rng = spark.range(0, n, 1, slices or spark.sparkContext.defaultParallelism)
     return rng.mapInPandas(gen, schema=SEQUENCES)
@@ -169,11 +167,6 @@ def zipf_tokens(n: int, s: float = 1.2, seed: int = 42) -> np.ndarray:
     cdf /= cdf[-1]
     u = _u01(_key(seed, np.arange(n, dtype=np.uint64), 0x5A4950))
     return np.searchsorted(cdf, u).astype(np.int32)
-
-
-def seq_ts(seq: np.ndarray) -> np.ndarray:
-    """Derived event time for a seq index array (numpy datetime64[us])."""
-    return TS_EPOCH + (seq.astype(np.int64) * TICK_US).astype("timedelta64[us]")
 
 
 # ---------------------------------------------------------------- F2 --

@@ -36,7 +36,11 @@ def test_duplicate_key_across_levels_is_an_error(tmp_path):
 
 
 def test_from_dict_strict():
-    cfg = EngineConfig.from_dict({"salt_buckets": 16})
-    assert cfg.salt_buckets == 16
+    cfg = EngineConfig.from_dict({"pool_tc": 7})
+    assert cfg.pool_tc == 7
     with pytest.raises(ValueError, match="nope"):
         EngineConfig.from_dict({"nope": 1})
+    # removed knobs: a stale config that still sets them fails loudly
+    for stale in ({"salt_buckets": 16}, {"shuffle_partitions": 8}):
+        with pytest.raises(ValueError, match=next(iter(stale))):
+            EngineConfig.from_dict(stale)

@@ -6,7 +6,6 @@ SURVEY.md §5.1). Also a tiny hand-computed run-extraction check.
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from drought_t_spark import local_ref, synth
 from drought_t_spark.config import EngineConfig
@@ -83,24 +82,41 @@ def test_hand_computed_runs(spark):
     assert ev.termination.iloc[0] == pd.Timestamp("2024-01-03")
 
 
-def test_pooling_merges_close_events(spark):
-    # two severe dips separated by a 2-bucket weak excess gap: with
-    # t_c=5, p_c=0.5 they pool into one event with d = d1+t+d2
-    vals = [10.0] * 10 + [1.0] * 4 + [10.2, 10.2] + [1.0] * 4 + [10.0] * 10
-    pdf = pd.DataFrame({
+def _pool_fixture(vals: list[float]) -> pd.DataFrame:
+    return pd.DataFrame({
         "site": "s",
         "date": pd.date_range("2024-01-01", periods=len(vals), freq="D"),
         "value": vals,
     })
+
+
+def test_pooling_merges_close_events(spark):
     cfg = EngineConfig(ma_window=1, threshold_mode="fixed", threshold_pct=0.5,
                        pooling="ic", pool_tc=5, pool_pc=0.5,
                        min_duration=1, min_severity_abs=0.0)
-    ev = (
-        drought_events_for_tier(series_to_tier(spark.createDataFrame(pdf), ts_col="date"), "day", cfg)
-        .orderBy("event_id").toPandas()
-    )
-    ref = local_ref.run_site(pdf.rename(columns={"date": "bucket_start"}), "day", cfg)
-    assert len(ev) == len(ref) == 1
-    assert bool(ev.pooled.iloc[0])
-    assert int(ev.duration.iloc[0]) == 10  # 4 + 2 + 4
-    np.testing.assert_allclose(ev.severity.iloc[0], ref.severity.iloc[0], rtol=1e-12)
+    # two severe dips separated by a 2-bucket weak excess gap: with
+    # t_c=5, p_c=0.5 they pool into one event with d = d1+t+d2
+    two_dips = [10.0] * 10 + [1.0] * 4 + [10.2, 10.2] + [1.0] * 4 + [10.0] * 10
+    # one severe dip (deficit 10) then 65 weak dips (deficit 1.5), each
+    # behind a 1-bucket gap of excess 1 > p_c·1.5: no weak pair ever
+    # pools, and the grown event absorbs exactly one weak dip per pass
+    # (severity +0.5 per merge) — 66 passes to the fixed point
+    n_weak = 65
+    chain = [10.0] * 10 + [0.0] + [11.0, 8.5] * n_weak + [10.0] * 10
+    for vals, duration, severity in [
+        (two_dips, 4 + 2 + 4, None),
+        (chain, 1 + 2 * n_weak, 10.0 + 0.5 * n_weak),
+    ]:
+        pdf = _pool_fixture(vals)
+        ev = (
+            drought_events_for_tier(series_to_tier(spark.createDataFrame(pdf), ts_col="date"), "day", cfg)
+            .orderBy("event_id").toPandas()
+        )
+        ref = local_ref.run_site(pdf.rename(columns={"date": "bucket_start"}), "day", cfg)
+        assert len(ev) == len(ref) == 1
+        assert bool(ev.pooled.iloc[0])
+        assert int(ev.duration.iloc[0]) == duration
+        if severity is not None:
+            assert float(ev.severity.iloc[0]) == severity
+        np.testing.assert_allclose(ev.severity.iloc[0], ref.severity.iloc[0], rtol=1e-12)
+        _compare(ev, ref, "s")

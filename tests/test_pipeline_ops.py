@@ -157,42 +157,6 @@ def test_ivf_trained_centroids_recall_and_quantization(spark, emb):
     assert (X @ C.T).max(axis=1).mean() > (X @ R.T).max(axis=1).mean()
 
 
-def test_ivf_kmeanspar_distributed_trainer(spark, emb):
-    """The in-Spark k-means‖ trainer (no driver sample — only the
-    candidate set is ever collected) must pass the same recall gate as
-    the driver-sample trainer, quantize the data comparably, and be
-    deterministic under repartitioning."""
-    e = _emb_double(emb)
-    qv = [float(x) for x in e.where(F.col("vec_id") == 0).first()["embedding"]]
-    planted = [(10_000 + s, [qv[0] + 0.01 * s] + qv[1:]) for s in range(1, 11)]
-    aug = e.unionByName(
-        spark.createDataFrame(planted, "vec_id long, embedding array<double>")
-    )
-    C = SIM.train_ivf_centroids_kmeanspar(aug, n_centroids=16)
-    assert C.shape[1] == len(qv)
-    np.testing.assert_allclose(np.linalg.norm(C, axis=1), 1.0, rtol=1e-9)
-    got = {
-        r.vec_id
-        for r in SIM.cosine_topk_ivf(aug, qv, k=11, n_probe=4, centroids=C).collect()
-    }
-    assert got == {0} | {10_000 + s for s in range(1, 11)}  # recall@10 = 1
-    # deterministic under any partitioning (seeded hashes, no RNG state)
-    C2 = SIM.train_ivf_centroids_kmeanspar(aug.repartition(13), n_centroids=16)
-    np.testing.assert_allclose(np.sort(C, axis=0), np.sort(C2, axis=0), atol=1e-12)
-    # the seed parameter is actually consumed: a different seed changes
-    # the oversampling draw, so the codebook differs
-    C3 = SIM.train_ivf_centroids_kmeanspar(aug, n_centroids=16, seed=7)
-    assert not np.allclose(np.sort(C, axis=0), np.sort(C3, axis=0), atol=1e-9)
-    # quantization sanity: beats seeded random directions
-    pdf = emb.toPandas()
-    X = np.stack(pdf.embedding.map(np.asarray)).astype(np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    rng = np.random.default_rng(42)
-    R = rng.standard_normal((16, X.shape[1]))
-    R /= np.linalg.norm(R, axis=1, keepdims=True)
-    assert (X @ C.T).max(axis=1).mean() > (X @ R.T).max(axis=1).mean()
-
-
 def test_ivf_udf_path_matches_expression_path(spark, emb):
     """The Arrow-matmul assignment (large-codebook path) must return
     exactly what the inlined-literal expression path returns for the
@@ -206,29 +170,6 @@ def test_ivf_udf_path_matches_expression_path(spark, emb):
                SIM._topk_ivf_udf(e, np.asarray(qv, dtype=np.float64), C, 10,
                                  "vec_id", "embedding", 4).collect()]
     assert expr_ids == udf_ids
-
-
-def test_fixed_threshold_approx_within_rank_error(spark):
-    """The mergeable-sketch threshold must sit within the documented
-    rank error of the exact percentile on a 20k-value series."""
-    import numpy as np
-
-    from drought_t_spark.config import EngineConfig
-    from drought_t_spark.operators.threshold import fixed_threshold, fixed_threshold_approx
-
-    n = 20_000
-    vals = np.sin(np.arange(n) * 0.37) * 50 + np.arange(n) % 97
-    df = spark.createDataFrame(
-        [("s", float(v)) for v in vals], "source string, x_ma double"
-    )
-    cfg = EngineConfig(threshold_pct=0.5)
-    exact = fixed_threshold(df, cfg).first()["x0"]
-    approx = fixed_threshold_approx(df, cfg, accuracy=10_000).first()["x0"]
-    # rank error 1e-4 of 20k values = ±2 ranks; translate via the sorted
-    # neighborhood rather than assuming value-space closeness
-    s = np.sort(vals)
-    lo, hi = s[max(0, n // 2 - 4)], s[min(n - 1, n // 2 + 4)]
-    assert lo <= approx <= hi, (exact, approx, lo, hi)
 
 
 def test_asof_join_semantics(spark):

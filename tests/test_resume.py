@@ -6,12 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark import synth
-from drought_t_spark.config import EngineConfig
+from drought_t_spark.config import DEFAULT
 from drought_t_spark.ops import checkpoints as CP
 from drought_t_spark.plans.rollup_job import InjectedFailure, run_rollup_job
 from drought_t_spark.sources.warehouse import Warehouse
 
-CFG = EngineConfig(salt_buckets=4)
+CFG = DEFAULT
 
 
 @pytest.fixture(scope="module")
@@ -97,34 +97,19 @@ def test_lineage_and_metrics_written(spark, seqs, tmp_path):
     assert int(got) == hour_rows
 
 
-def test_interleaved_writer_processes_never_repeat_seq(spark, tmp_path, monkeypatch):
-    """Two driver processes committing to ONE warehouse must never
-    repeat an `updated_seq` value, even though each seeds its in-process
-    counter only once: the O_EXCL claim marker (the shim's stand-in for
-    the Iceberg catalog's snapshot-id CAS) forces the stale process to
-    skip past values the other already claimed. Processes are simulated
-    by swapping fresh _SEQ_CACHE dicts."""
-    wh = Warehouse(str(tmp_path / "wh_two_writers"))
-    cache_p1, cache_p2 = {}, {}
-
-    monkeypatch.setattr(CP, "_SEQ_CACHE", cache_p1)
-    CP.record_commit(spark, wh, "jobW", "s", ["p1a"], "0:0", 1, 1)  # P1 -> 1
-    monkeypatch.setattr(CP, "_SEQ_CACHE", cache_p2)
-    CP.record_commit(spark, wh, "jobW", "s", ["p2a"], "0:0", 1, 1)  # P2 seeds -> 2
-    monkeypatch.setattr(CP, "_SEQ_CACHE", cache_p1)
-    # P1's stale counter lands on 2 — already claimed by P2 — must skip
-    CP.record_commit(spark, wh, "jobW", "s", ["p1b"], "0:0", 1, 1)
-    monkeypatch.setattr(CP, "_SEQ_CACHE", cache_p2)
-    CP.record_commit(spark, wh, "jobW", "s", ["p2b"], "0:0", 1, 1)
-
-    rows = wh.read(spark, CP.CHECKPOINT_TBL).select(
-        "partition_id", "updated_seq"
-    ).collect()
-    seqs_seen = [r.updated_seq for r in rows]
-    assert len(seqs_seen) == len(set(seqs_seen)) == 4
-    # and resume still sees every commit
+def test_two_writers_commits_all_visible(spark, tmp_path):
+    """Two writers committing interleaved to ONE warehouse (each with
+    its own Warehouse handle, as two Spark applications would hold): every
+    commit is visible to `committed_partitions`, so resume skips all of
+    them."""
+    root = str(tmp_path / "wh_two_writers")
+    w1, w2 = Warehouse(root), Warehouse(root)
+    CP.record_commit(spark, w1, "jobW", "s", ["p1a"], "0:0", 1, 1)
+    CP.record_commit(spark, w2, "jobW", "s", ["p2a"], "0:0", 1, 1)
+    CP.record_commit(spark, w1, "jobW", "s", ["p1b"], "0:0", 1, 1)
+    CP.record_commit(spark, w2, "jobW", "s", ["p2b"], "0:0", 1, 1)
     done = {r.partition_id for r in
-            CP.committed_partitions(spark, wh, "jobW", "s").collect()}
+            CP.committed_partitions(spark, w1, "jobW", "s").collect()}
     assert done == {"p1a", "p1b", "p2a", "p2b"}
 
 
@@ -132,7 +117,7 @@ def test_hour_rollup_executes_exactly_once_per_group(spark, seqs, tmp_path, monk
     """Hour-tier lineage counts and the snapshot token must come from
     the WRITTEN table, not from re-consuming the `stats` DAG: an
     accumulator spliced into each group's rollup input counts every raw
-    row that flows through the salted aggregation — with the old
+    row that flows through the aggregation — with the old
     stats.agg(...).first() + snapshot_token(stats) shape each group's
     rollup executed three times (~3× raw rows through the accumulator)."""
     from drought_t_spark.operators import rollup as R
@@ -206,62 +191,3 @@ def test_hour_lineage_scoped_to_run_sources(spark, seqs, tmp_path):
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
     sub_out = ln[(ln.job_id == "jobSub") & (ln.stage == "hour")].rows_out.sum()
     assert int(sub_out) == own_rows
-
-
-def test_seq_markers_garbage_collected(spark, seqs, tmp_path):
-    """Claim markers at/below the committed max are GC'd at seed time
-    (bounded inode growth), the floor file blocks re-claims in the GC'd
-    region, and seq values keep advancing uniquely afterwards."""
-    import os
-
-    wh = Warehouse(str(tmp_path / "wh_gc"))
-    run_rollup_job(spark, wh, seqs, "jobG", CFG, n_groups=3, with_payloads=False)
-    seq_dir = os.path.join(wh.root, "ops", "_seq")
-    n_markers_before = len([f for f in os.listdir(seq_dir) if f.isdigit()])
-    assert n_markers_before > 0
-    committed_max = int(
-        wh.read(spark, CP.CHECKPOINT_TBL).agg(F.max("updated_seq")).first()[0]
-    )
-    # fresh process = empty cache → re-seed triggers GC
-    CP._SEQ_CACHE.pop(wh.root, None)
-    nxt = CP._next_seq(spark, wh)
-    assert nxt == committed_max + 1
-    live = [int(f) for f in os.listdir(seq_dir) if f.isdigit()]
-    assert live == [nxt]  # everything <= committed max was collected
-    assert CP._seq_floor(seq_dir) == committed_max
-    # a stale writer whose counter sits inside the GC'd region must
-    # re-claim ABOVE the floor even though the markers are gone
-    CP._SEQ_CACHE[wh.root] = 0
-    assert CP._next_seq(spark, wh) == nxt + 1
-
-
-def test_seq_floor_monotone_under_stale_gc(tmp_path):
-    """Two GCs racing with different committed-max views must never
-    LOWER the floor: the retired rewrite-in-place floor file regressed
-    here (a GC seeded from a stale table max published its lower value
-    after a concurrent GC published a higher one, re-exposing burnt seq
-    values 11..20 for duplicate claims). Immutable max-over-marker
-    files make the regression structurally impossible."""
-    import os
-
-    seq_dir = str(tmp_path / "_seq")
-    os.makedirs(seq_dir)
-    CP._gc_markers(seq_dir, 10)
-    CP._gc_markers(seq_dir, 20)
-    assert CP._seq_floor(seq_dir) == 20
-    # only the winning marker survives (lower ones are collected)
-    assert [f for f in os.listdir(seq_dir) if f.startswith("_floor.")] == [
-        "_floor.20"
-    ]
-    # the stale GC's publish step lands AFTER the winner: under the old
-    # scheme this rewrote the floor down to 10; now it only adds a lower
-    # marker that the max ignores
-    os.close(os.open(os.path.join(seq_dir, "_floor.10"),
-                     os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-    assert CP._seq_floor(seq_dir) == 20
-    # and the next GC sweep collects the straggler
-    CP._gc_markers(seq_dir, 0)
-    assert CP._seq_floor(seq_dir) == 20
-    assert [f for f in os.listdir(seq_dir) if f.startswith("_floor.")] == [
-        "_floor.20"
-    ]

@@ -8,12 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark import synth
-from drought_t_spark.config import EngineConfig
+from drought_t_spark.config import DEFAULT
 from drought_t_spark.plans.retention import RetentionError, expire_tier, read_series
 from drought_t_spark.plans.rollup_job import run_rollup_job
 from drought_t_spark.sources.warehouse import Warehouse
 
-CFG = EngineConfig(salt_buckets=4)
+CFG = DEFAULT
 
 
 @pytest.fixture(scope="module")

@@ -1,7 +1,6 @@
 """Tier rollup + payload invariants (SURVEY.md §5.3; FIXTURES.md §F5).
 
 - distributed generator == local generator (determinism)
-- salted two-phase rollup == plain rollup (exactness under salting)
 - tier cascade consistency: sum(hour.n_tok_sum) per day == day.n_tok_sum
 - payload: payload_n_tokens == Σ n_tok; decoded payload == seq-ordered
   concat of member tokens; day payloads cascaded from hour payloads ==
@@ -15,12 +14,12 @@ from pyspark.sql import functions as F
 
 from drought_t_spark import synth
 from drought_t_spark.codec import tsz1
-from drought_t_spark.config import EngineConfig
+from drought_t_spark.config import DEFAULT
 from drought_t_spark.operators import rollup as R
 from drought_t_spark.operators.gapfill import missing_buckets
 from drought_t_spark.plans.drought import rollup_tiers
 
-CFG = EngineConfig(salt_buckets=4)
+CFG = DEFAULT
 
 
 @pytest.fixture(scope="module")
@@ -58,15 +57,8 @@ def test_uniform_counts_fixture(spark):
     assert per_src.max() <= 1.25 * per_src.min()
 
 
-def test_salted_equals_plain(spark, seqs):
-    plain = R.rollup_hour(seqs, CFG, salted=False)
-    salted = R.rollup_hour(seqs, CFG, salted=True)
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
 def test_tier_cascade_consistency(spark, seqs):
-    tiers = rollup_tiers(seqs.drop("seq", "ts").select("doc_id", "tokens", "n_tok", "source"), CFG)
+    tiers = rollup_tiers(seqs.drop("seq", "ts").select("doc_id", "tokens", "n_tok", "source"))
     hour, day, month = tiers["hour"], tiers["day"], tiers["month"]
     re_day = (
         hour.groupBy("source", F.date_trunc("day", "bucket_start").alias("bucket_start"))
@@ -85,7 +77,7 @@ def test_tier_cascade_consistency(spark, seqs):
 
 def test_payload_roundtrip_and_invariants(spark, seqs):
     pay = R.pack_payloads(seqs, "hour", CFG)
-    stats = R.rollup_hour(seqs, CFG)
+    stats = R.rollup_hour(seqs)
     joined = pay.join(stats, ["source", "bucket_start"]).select(
         "source", "bucket_start", "payload", "payload_n_tokens", "n_tok_sum"
     )
@@ -201,7 +193,7 @@ def test_cascade_payloads_plan_is_streamed(spark, seqs, tmp_path):
 
 
 def test_gap_injection_creates_missing_buckets(spark, seqs):
-    stats = R.rollup_hour(seqs, CFG)
+    stats = R.rollup_hour(seqs)
     assert missing_buckets(stats, "hour").count() > 0
 
 
@@ -209,7 +201,7 @@ def test_stats_plan_prunes_tokens_column(spark, seqs, tmp_path):
     # via parquet (pruning is visible in the scan's ReadSchema)
     p = str(tmp_path / "seqs")
     seqs.select("doc_id", "tokens", "n_tok", "source").write.parquet(p)
-    df = R.rollup_hour(R.with_event_time(spark.read.parquet(p)), CFG)
+    df = R.rollup_hour(R.with_event_time(spark.read.parquet(p)))
     plan = df._jdf.queryExecution().executedPlan().toString()
     schemas = [l.split("ReadSchema:", 1)[1] for l in plan.splitlines() if "ReadSchema" in l]
     assert schemas and all("tokens" not in s for s in schemas), plan
@@ -225,7 +217,7 @@ def test_value_history_roundtrip_bit_exact(spark, seqs):
         unpack_value_history,
     )
 
-    hour = R.rollup_hour(seqs, CFG)
+    hour = R.rollup_hour(seqs)
     hist = pack_value_history(hour, "month")
     # plan keeps the streamed shape (no per-group Arrow batches); judge
     # the pack in isolation from the synth generator's own MapInPandas

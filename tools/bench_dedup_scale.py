@@ -139,11 +139,6 @@ def main(doc_mult: int = 200, vec_mult: int = 500) -> None:
 def _bench_minhash(spark, doc_mult: int, out: dict) -> None:
     docs = tile_documents(spark, doc_mult).localCheckpoint(eager=True)
     n_docs = docs.count()
-    engines = (
-        ["arrow", "hof"]
-        if os.environ.get("SPARK_GRAFT_MINHASH_AB") == "1"
-        else ["arrow"]
-    )
     # k=7 char shingles, not the sf0.01 default k=3: the driver docs
     # average ~300 chars, and 3-grams SATURATE on texts that long (two
     # unrelated docs share most of the ~26³ possible trigrams, so the
@@ -154,22 +149,16 @@ def _bench_minhash(spark, doc_mult: int, out: dict) -> None:
     # true near-dups (shared long substrings) still collide.
     out["minhash"] = {"n_docs": n_docs, "doc_mult": doc_mult, "k": 7}
     _log(f"docs tiled: {n_docs}")
-    for eng in engines:
-        t0 = time.time()
-        cnt: dict = {}
-        pairs = minhash_lsh_pairs(docs, k=7, counters=cnt, engine=eng)
-        n_pairs = pairs.count()
-        res = dict(
-            wall_sec=round(time.time() - t0, 2),
-            pairs=n_pairs,
-            docs_per_sec=round(n_docs / max(time.time() - t0, 1e-9), 1),
-            **cnt,
-        )
-        if eng == engines[0]:
-            out["minhash"].update(res)
-        else:
-            out["minhash"][f"engine_{eng}"] = res
-        _log(f"minhash[{eng}]: {res}")
+    t0 = time.time()
+    cnt: dict = {}
+    n_pairs = minhash_lsh_pairs(docs, k=7, counters=cnt).count()
+    out["minhash"].update(
+        wall_sec=round(time.time() - t0, 2),
+        pairs=n_pairs,
+        docs_per_sec=round(n_docs / max(time.time() - t0, 1e-9), 1),
+        **cnt,
+    )
+    _log(f"minhash: {out['minhash']}")
 
 
 def _bench_embedding(spark, vec_mult: int, out: dict) -> None:

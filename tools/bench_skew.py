@@ -1,23 +1,17 @@
-"""Skewed-fixture A/B for the two skew mitigations (SURVEY.md §4):
-
-1. salted vs plain hourly rollup on a token table where ONE source
-   holds ~50% of all rows (deterministic remap of the standard synth
-   fixture — every row with pmod(xxhash64(doc_id), 2) = 0 becomes
-   source 'hot'), concentrated into a narrow hour span so the hot
-   (source, bucket) groups are genuinely degenerate;
-2. chunked vs global per-source window MA on a dense series whose
-   skew is SERIES LENGTH: one source owns a multi-million-bucket
-   hourly calendar, so the global window is a single-task sort while
-   the chunked variant fans out over (source, chunk) with halos.
+"""Skewed-fixture A/B for window skew (SURVEY.md §4): chunked vs global
+per-source window MA on a dense series whose skew is SERIES LENGTH: one
+source owns a multi-million-bucket hourly calendar, so the global
+window is a single-task sort while the chunked variant fans out over
+(source, chunk) with halos.
 
 Each variant runs `iters` times; min wall is reported (the host steals
 CPU in bursts — min is the least-contaminated sample, same convention
-as bench.py). The chunked/global pair also cross-checks equality on
-(count, bit_xor of the value rounded to micro-units) so the A/B can
-never silently compare different answers. One JSON line on stdout.
+as bench.py). The pair also cross-checks equality on (count, bit_xor of
+the value rounded to micro-units) so the A/B can never silently compare
+different answers. One JSON line on stdout.
 
 Usage:
-    python tools/bench_skew.py [seq_mult] [n_buckets]
+    python tools/bench_skew.py [n_buckets]
 """
 
 from __future__ import annotations
@@ -31,8 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from drought_t_spark import synth  # noqa: E402
-from drought_t_spark.operators import rollup as R  # noqa: E402
 from drought_t_spark.operators.chunked import moving_avg_chunked  # noqa: E402
 from drought_t_spark.operators.smoothing import moving_avg  # noqa: E402
 from drought_t_spark.session import build_session  # noqa: E402
@@ -51,45 +43,6 @@ def _min_wall(fn, iters: int = 3) -> tuple[float, object]:
         last = fn()
         walls.append(time.time() - t0)
     return min(walls), last
-
-
-def bench_salted(spark, seq_mult: int, out: dict) -> None:
-    # standard fixture, then: half of ALL rows -> source 'hot', and the
-    # hot rows' timestamps squeezed into a 4-hour span so the skew hits
-    # single (source, bucket) groups, not just one source
-    n_total = 240_000 * seq_mult
-    t1 = R.with_event_time(
-        synth.sequences_df(spark, n_sources=32, n_total=n_total)
-    )
-    hot = F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0
-    skewed = t1.withColumn(
-        "source", F.when(hot, F.lit("hot")).otherwise(F.col("source"))
-    ).withColumn(
-        "ts",
-        F.when(
-            hot,
-            F.timestamp_seconds(
-                F.lit(1_600_000_000)
-                + F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(4 * 3600))
-            ),
-        ).otherwise(F.col("ts")),
-    ).localCheckpoint(eager=True)
-    n_rows = skewed.count()
-    hot_rows = skewed.where(F.col("source") == "hot").count()
-    out["rollup"] = {"n_rows": n_rows, "hot_share": round(hot_rows / n_rows, 3)}
-    for name, salted in (("plain", False), ("salted", True)):
-        w, row = _min_wall(
-            lambda s=salted: R.rollup_hour(skewed, salted=s)
-            .agg(F.count("*").alias("g"), F.sum("n_tok_sum").alias("t"))
-            .first()
-        )
-        out["rollup"][name] = {
-            "sec": round(w, 3),
-            "groups": int(row["g"]),
-            "tokens": int(row["t"]),
-        }
-        _log(f"rollup[{name}]: {out['rollup'][name]}")
-    assert out["rollup"]["plain"]["tokens"] == out["rollup"]["salted"]["tokens"]
 
 
 def bench_chunked(spark, n_buckets: int, out: dict) -> None:
@@ -133,23 +86,17 @@ def bench_chunked(spark, n_buckets: int, out: dict) -> None:
     assert (g["n"], g["xor"]) == (c["n"], c["xor"]), "chunked != global"
 
 
-def main(seq_mult: int, n_buckets: int) -> None:
+def main(n_buckets: int) -> None:
     spark = build_session(
         "bench-skew",
         master=f"local[{CPUS}]",
         shuffle_partitions=max(32, CPUS),
         extra_conf={"spark.driver.maxResultSize": "8g"},
     )
-    out: dict = {"cpus": CPUS, "seq_mult": seq_mult, "n_buckets": n_buckets}
-    if seq_mult > 0:
-        bench_salted(spark, seq_mult, out)
-    if n_buckets > 0:
-        bench_chunked(spark, n_buckets, out)
+    out: dict = {"cpus": CPUS, "n_buckets": n_buckets}
+    bench_chunked(spark, n_buckets, out)
     print(json.dumps(out))
 
 
 if __name__ == "__main__":
-    main(
-        int(sys.argv[1]) if len(sys.argv) > 1 else 8,
-        int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000,
-    )
+    main(int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000)

@@ -48,7 +48,7 @@ def main():
         t0dir = bench.write_token_table(spark, bench._sf_of(SF_DIR))
         t1 = R.with_event_time(spark.read.parquet(t0dir))
         pay = R.pack_payloads(t1, "hour")
-        hour = R.rollup_hour(t1, salted=False)
+        hour = R.rollup_hour(t1)
         day = R.cascade(hour, "day")
         month = R.cascade(day, "month")
         u = (hour.select("source", "bucket_start", "n_tok_sum")

@@ -53,7 +53,7 @@ def main() -> None:
     walls, row, plan = [], None, ""
     for _ in range(3):
         t0 = time.time()
-        hour = R.rollup_hour(t1, salted=False)
+        hour = R.rollup_hour(t1)
         if mode == "cached":
             hour = hour.cache()
         day = R.cascade(hour, "day")

@@ -31,26 +31,20 @@ def main(argv=None) -> None:
                    help="checkpoint hash-bucket count (~executors/4 at scale)")
     p.add_argument("--no-payloads", action="store_true",
                    help="skip the TSZ1 payload pack stage")
-    p.add_argument("--salt-buckets", type=int, default=None,
-                   help="override cfg.salt_buckets for the salted rollup")
     p.add_argument("--master", default="",
                    help="Spark master for direct python runs; leave empty "
                         "under spark-submit")
     a = p.parse_args(argv)
 
-    from drought_t_spark.config import DEFAULT, EngineConfig
     from drought_t_spark.plans.rollup_job import run_rollup_job
     from drought_t_spark.session import build_session
     from drought_t_spark.sources.warehouse import Warehouse
 
-    cfg = DEFAULT
-    if a.salt_buckets is not None:
-        cfg = EngineConfig(salt_buckets=a.salt_buckets)
     spark = build_session(f"rollup-{a.job_id}", master=a.master)
     seqs = spark.read.parquet(a.input)
     run_rollup_job(
         spark, Warehouse(a.warehouse), seqs, a.job_id,
-        cfg=cfg, n_groups=a.n_groups, with_payloads=not a.no_payloads,
+        n_groups=a.n_groups, with_payloads=not a.no_payloads,
     )
     print(f"rollup job {a.job_id} complete", file=sys.stderr)
 
