@@ -242,7 +242,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         h = _hour_stats(spark, sf_dir).withColumn("value", F.round("avg_raw", 6))
         filled = gap_fill(h, "hour", EngineConfig(), value_cols=("value",))
         sm = moving_avg(filled, 1)
-        cfg_v = EngineConfig(threshold_pct=0.5, threshold_ma_window=1)
+        cfg_v = EngineConfig(threshold_pct=0.5)
         th = variable_threshold(sm, "hour", cfg_v)
         joined = attach_threshold(sm, th, "hour", variable=True)
         runs = segment_runs(below_mask(joined))

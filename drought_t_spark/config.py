@@ -15,7 +15,7 @@ from __future__ import annotations
 import tomllib
 from dataclasses import dataclass, replace
 from dataclasses import fields as dataclass_fields
-from typing import Literal
+from typing import Literal, get_args, get_origin, get_type_hints
 
 #: bucket width per tier in seconds (month is calendar-varying; the
 #: gap-fill operator uses calendar intervals, never this constant)
@@ -30,10 +30,9 @@ class EngineConfig:
     # --- threshold (TH1/TH2) ---
     threshold_pct: float = 0.5   # exact percentile level P in [0,1]
     threshold_mode: Literal["variable", "fixed"] = "variable"
-    threshold_ma_window: int = 1  # optional smoothing of the threshold curve itself
 
-    # --- pooling (PL1/PL2), Fleig et al. 2006 §3.2 ---
-    pooling: Literal["none", "ic", "ma"] = "ic"
+    # --- pooling (PL1), Fleig et al. 2006 §3.2 ---
+    pooling: Literal["none", "ic"] = "ic"
     pool_tc: int = 5             # max inter-event buckets to pool
     pool_pc: float = 0.1         # pool iff v_i <= pool_pc * s_i
 
@@ -45,12 +44,16 @@ class EngineConfig:
     # --- gap-fill (GF1) ---
     gap_fill_mode: Literal["none", "locf", "zero"] = "none"
 
-    # --- scale (SURVEY.md §4) ---
-    max_bucket_tokens: int = 4_000_000  # payload chunking bound (spill safety)
-
     # --- codec ---
-    payload_codec: str = "TSZ1"
     payload_zlib: bool = False   # wrap containers in the TSZZ DEFLATE envelope
+
+    def __post_init__(self) -> None:
+        # a mode the engine does not implement must not silently fall
+        # back to another one — same reasoning as from_dict's key check
+        for name, hint in get_type_hints(EngineConfig).items():
+            allowed = get_args(hint) if get_origin(hint) is Literal else None
+            if allowed and getattr(self, name) not in allowed:
+                raise ValueError(f"{name}={getattr(self, name)!r}; allowed: {list(allowed)}")
 
     def with_(self, **kw) -> "EngineConfig":
         return replace(self, **kw)

@@ -73,6 +73,9 @@ def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
 # ------------------------------------------------------------ payload --
 
 
+#: payload_codec column value (plus "+zlib" for the TSZZ envelope)
+_CODEC = "TSZ1"
+
 _PAYLOAD_SCHEMA = (
     "source string, bucket_start timestamp, chunk_id int, "
     "payload binary, payload_n_tokens long"
@@ -233,8 +236,8 @@ def pack_payloads(
     Tokens of member sequences are ordered by seq (== ts order), then
     flattened and encoded. Oversize buckets are split into fixed
     chunk_minutes chunks (chunk_id ascending reconstructs the bucket) so
-    a single group never exceeds `max_bucket_tokens` — the spill-safety
-    bound from SURVEY.md §4.
+    a single group's token count is bounded by one chunk's span — the
+    spill-safety bound from SURVEY.md §4.
 
     Shape: repartition by group key + sortWithinPartitions +
     mapInArrow — ONE plain row shuffle, whole-partition Arrow streams,
@@ -296,7 +299,7 @@ def pack_payloads(
         F.col("bs_epoch").cast("timestamp").alias("bucket_start"),
         "chunk_id", "payload", "payload_n_tokens",
     )
-    codec_name = cfg.payload_codec + ("+zlib" if wrap else "")
+    codec_name = _CODEC + ("+zlib" if wrap else "")
     return (
         pay.withColumn("payload_codec", F.lit(codec_name))
         .withColumn("payload_crc32", F.crc32("payload").cast("long"))
@@ -374,7 +377,7 @@ def cascade_payloads(payloads: DataFrame, to_tier: str, cfg: EngineConfig = DEFA
     out = parts.mapInPandas(
         lambda batches: _recode_stream(batches, wrap_zlib=wrap), _PAYLOAD_SCHEMA
     )
-    codec_name = cfg.payload_codec + ("+zlib" if wrap else "")
+    codec_name = _CODEC + ("+zlib" if wrap else "")
     return (
         out.withColumn("payload_codec", F.lit(codec_name))
         .withColumn("payload_crc32", F.crc32("payload").cast("long"))

@@ -8,9 +8,9 @@ from drought_t_spark.config import DEFAULT, EngineConfig
 
 def test_from_toml_top_level(tmp_path):
     p = tmp_path / "cfg.toml"
-    p.write_text('ma_window = 15\nthreshold_pct = 0.2\npooling = "ma"\n')
+    p.write_text('ma_window = 15\nthreshold_pct = 0.2\npooling = "none"\n')
     cfg = EngineConfig.from_toml(str(p))
-    assert (cfg.ma_window, cfg.threshold_pct, cfg.pooling) == (15, 0.2, "ma")
+    assert (cfg.ma_window, cfg.threshold_pct, cfg.pooling) == (15, 0.2, "none")
     assert cfg.pool_tc == DEFAULT.pool_tc  # untouched knobs keep defaults
 
 
@@ -41,6 +41,19 @@ def test_from_dict_strict():
     with pytest.raises(ValueError, match="nope"):
         EngineConfig.from_dict({"nope": 1})
     # removed knobs: a stale config that still sets them fails loudly
-    for stale in ({"salt_buckets": 16}, {"shuffle_partitions": 8}):
+    for stale in ({"salt_buckets": 16}, {"shuffle_partitions": 8},
+                  {"threshold_ma_window": 1}, {"max_bucket_tokens": 4_000_000},
+                  {"payload_codec": "TSZ1"}):
         with pytest.raises(ValueError, match=next(iter(stale))):
             EngineConfig.from_dict(stale)
+
+
+def test_unimplemented_mode_is_an_error():
+    # "ma" pooling was accepted but never implemented (unpooled events);
+    # a typo'd mode must not fall back to another one either
+    for bad in ({"pooling": "ma"}, {"threshold_mode": "varaible"},
+                {"gap_fill_mode": "linear"}):
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            EngineConfig.from_dict(bad)
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            EngineConfig(**bad)

@@ -12,9 +12,25 @@ from drought_t_spark.config import EngineConfig
 from drought_t_spark.plans.drought import drought_events_for_tier, series_to_tier
 
 
+def _edge_sources() -> pd.DataFrame:
+    """Sources at the pooling kernel's group edges: a single bucket,
+    exactly one event, and a series whose last run is below threshold
+    (its last event has no following gap)."""
+    dates = pd.date_range("2016-01-01", "2018-12-31", freq="D")
+    one = np.full(len(dates), 10.0)
+    one[560:580] = 1.0
+    trailing = one.copy()
+    trailing[-20:] = 1.0
+    return pd.concat([
+        pd.DataFrame({"site": "edge_single", "date": dates[:1], "value": [10.0]}),
+        pd.DataFrame({"site": "edge_one_event", "date": dates, "value": one}),
+        pd.DataFrame({"site": "edge_trailing", "date": dates, "value": trailing}),
+    ], ignore_index=True)
+
+
 @pytest.fixture(scope="module")
 def series(spark):
-    pdf = synth.series_pdf()
+    pdf = pd.concat([synth.series_pdf(), _edge_sources()], ignore_index=True)
     df = spark.createDataFrame(pdf)
     return pdf, series_to_tier(df, ts_col="date")
 
@@ -47,11 +63,27 @@ def _compare(spark_pdf: pd.DataFrame, ref: pd.DataFrame, site: str):
 def test_site_partition_parity(spark, series, cfg):
     pdf, tier_df = series
     events = drought_events_for_tier(tier_df, "day", cfg).toPandas()
+    # 3-row Arrow batches: every source's run table spans several
+    # batches, so each group goes through grouped_stream's carry path
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        small_batches = drought_events_for_tier(tier_df, "day", cfg).toPandas()
+    finally:
+        spark.conf.set(key, old)
     for site, g in pdf.groupby("site"):
         ref = local_ref.run_site(
             g.rename(columns={"date": "bucket_start"}), tier="day", cfg=cfg
         )
         _compare(events[events.source == site], ref, site)
+        _compare(small_batches[small_batches.source == site], ref, site)
+    # the edge sources really hit their edge
+    assert "edge_single" not in set(events.source)
+    assert (events.source == "edge_one_event").sum() == 1
+    trailing = events[events.source == "edge_trailing"]
+    assert len(trailing) > 1
+    assert trailing.termination.max() == pdf[pdf.site == "edge_trailing"].date.max()
 
 
 def test_constant_site_has_no_events(spark, series):

@@ -1,11 +1,8 @@
 #!/usr/bin/env python
-"""Supplemental r6 plan capture for the two changes that hide behind
-eager localCheckpoints in the final query plans:
+"""Supplemental r6 plan capture for the change that hides behind an
+eager localCheckpoint in the final query plans:
   * runs_sm     — the gap-fill→MA(window=1) smoothing subplan
                   (before: Exchange+Sort+Window; after: projection only)
-  * pool_pass   — one IC pooling pass over an event frame
-                  (before: 2 window sorts incl. a (source,chain) DESC
-                   re-partition; after: one window spec)
 Usage: python tools/capture_plans_r6b.py <tag> <out_dir>
 """
 import datetime as dt
@@ -31,30 +28,19 @@ def dump(df, name):
 def main():
     from drought_t_spark.config import EngineConfig
     from drought_t_spark.operators.gapfill import gap_fill
-    from drought_t_spark.operators.pooling import _pool_pass
     from drought_t_spark.operators.smoothing import moving_avg
     from drought_t_spark.session import build_session
 
     spark = build_session("capture-plans-b", master="local[8]",
                           shuffle_partitions=16)
     os.makedirs(OUT, exist_ok=True)
-    cfg = EngineConfig(ma_window=1, threshold_mode="fixed", threshold_pct=0.5,
-                       pooling="ic", min_duration=1, min_severity_abs=0.0,
-                       gap_fill_mode="none")
+    cfg = EngineConfig(ma_window=1, gap_fill_mode="none")
     t0 = dt.datetime(2024, 1, 1)
     tier = spark.createDataFrame(
         [("s1", t0 + dt.timedelta(days=i), float(i % 7)) for i in range(30)],
         "source string, bucket_start timestamp, value double",
     )
     dump(moving_avg(gap_fill(tier, "day", cfg), 1), "runs_sm")
-
-    ev = spark.createDataFrame(
-        [("s1", t0 + dt.timedelta(days=3 * i), t0 + dt.timedelta(days=3 * i + 1),
-          2, 5.0, 3.0, 1, 0.5, False) for i in range(6)],
-        "source string, onset timestamp, termination timestamp, duration long,"
-        " severity double, peak double, gap_t long, gap_v double, pooled boolean",
-    )
-    dump(_pool_pass(ev, cfg), "pool_pass")
 
 
 main()
