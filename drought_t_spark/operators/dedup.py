@@ -32,7 +32,7 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def shingles(text_col: str, k: int = 3):
+def _shingles(text_col: str, k: int = 3):
     """Character k-shingle array (JVM-side, distinct)."""
     return F.array_distinct(
         F.expr(
@@ -130,7 +130,7 @@ def minhash_signatures_arrow(
                 for i in range(n_hashes):
                     sig[good, i] = np.minimum.reduceat(A[i] * hv + B[i], cuts)
             for d in np.nonzero(~good)[0]:
-                # `shingles` parity: a doc shorter than k yields ONE
+                # `_shingles` parity: a doc shorter than k yields ONE
                 # (truncated) shingle — here one short-packed gram
                 gsh = np.uint64(0)
                 for j, bb in enumerate(buf[starts[d] : starts[d] + lens[d]]):
@@ -262,7 +262,7 @@ def minhash_lsh_pairs(
     # estimate joins, not the shingle projection). Shingles also stay
     # BELOW the verify join so the jaccard threshold cannot be pushed
     # into (and duplicate) the shingle HOF.
-    sh_tbl = base.select("id", shingles("text", k).alias("sh"))
+    sh_tbl = base.select("id", _shingles("text", k).alias("sh"))
     jac = (
         est.join(sh_tbl.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh_tbl.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -487,7 +487,7 @@ def ngram_jaccard_pairs(
     at scale). Without, scores ALL pairs — O(n²), for small cohorts
     only; the join is a size-guarded broadcast nested loop. Returns
     (id_a, id_b, jaccard ≥ threshold)."""
-    sh = df.select(F.col(id_col).alias("id"), shingles(text_col, k).alias("sh"))
+    sh = df.select(F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh"))
     if candidates is None:
         pairs = (
             sh.alias("a")

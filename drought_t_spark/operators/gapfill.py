@@ -12,7 +12,7 @@ row followed by the missing buckets up to its successor. No
 min/max aggregation, no self-join: a lazy upstream (e.g. a rollup fed
 straight into gap_fill) is computed exactly once, where the previous
 calendar-join shape re-executed it per consumer (Spark has no
-plan-level CSE). `calendar`/`missing_buckets` keep the explicit
+plan-level CSE). `_calendar`/`missing_buckets` keep the explicit
 calendar + anti-join shape (J3) for gap *reporting*.
 """
 
@@ -26,7 +26,7 @@ from drought_t_spark.config import EngineConfig, DEFAULT
 _INTERVAL = {"hour": "interval 1 hour", "day": "interval 1 day", "month": "interval 1 month"}
 
 
-def calendar(tier_df: DataFrame, tier: str, ts_col: str = "bucket_start") -> DataFrame:
+def _calendar(tier_df: DataFrame, tier: str, ts_col: str = "bucket_start") -> DataFrame:
     """Dense per-source bucket calendar spanning each source's range."""
     return (
         tier_df.groupBy("source")
@@ -84,6 +84,6 @@ def gap_fill(
 
 def missing_buckets(tier_df: DataFrame, tier: str) -> DataFrame:
     """J3 — calendar anti-join: buckets that SHOULD exist but don't."""
-    return calendar(tier_df, tier).join(
+    return _calendar(tier_df, tier).join(
         tier_df.select("source", "bucket_start"), ["source", "bucket_start"], "left_anti"
     )

@@ -26,6 +26,8 @@ Both record ops rows (lineage/metrics) like every other stage.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +46,10 @@ def _trunc(tier: str, col):
     return F.date_trunc(tier, col)
 
 
+def _parse_ts(t) -> datetime:
+    return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
+
+
 def expire_tier(
     spark: SparkSession,
     wh: Warehouse,
@@ -59,6 +65,11 @@ def expire_tier(
     check is one left-anti join (J5 shape) and the whole call aborts
     with RetentionError on any uncovered bucket. Returns counts.
 
+    The commit's snapshot token covers the rows this cycle REWROTE (the
+    kept rows of the source partitions that lost buckets), reported by
+    the write itself; a cycle that expires nothing commits "0:0". It
+    does not describe the whole tier.
+
     `archive_values=True` additionally packs the doomed rows' float64
     `value` series into `agg.value_history_<tier>` (one row per
     (source, coarser bucket): minute-offset GZ1 + Gorilla-XOR GZ3
@@ -73,9 +84,7 @@ def expire_tier(
     # mid-month cutoff would pass the coverage check (the coarse bucket
     # exists) yet expire only part of that bucket's fine rows, leaving
     # read_series with a ragged edge inside a partially-expired bucket
-    from datetime import datetime
-
-    cut_t = cutoff if isinstance(cutoff, datetime) else datetime.fromisoformat(str(cutoff))
+    cut_t = _parse_ts(cutoff)
     aligned = (
         cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
         if coarser == "day"
@@ -105,8 +114,9 @@ def expire_tier(
             f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
             f"have no committed {coarser}-tier row; refusing to expire"
         )
-    n_before = df.count()
-    n_doomed = doomed.count()
+    n_before, n_doomed = df.agg(
+        F.count(F.lit(1)), F.count_if(F.col("bucket_start") < cutoff_lit)
+    ).first()
     if n_doomed and archive_values:
         from drought_t_spark.operators.value_history import (
             pack_value_history,
@@ -121,9 +131,10 @@ def expire_tier(
         # idempotent) and never destroys previously archived history.
         # Partitioning by source alone did exactly that (one cycle wiped
         # the whole source=X partition, including older cycles' rows).
-        # cb is int32 (yyyyMMdd — numeric order == date order) so the
-        # read path's literal range filter prunes partitions without
-        # fighting hive partition-type inference.
+        # cb is the fixed-width yyyyMMdd string (string order == date
+        # order); partition values read back as strings (the session
+        # disables partition-type inference), so the read path's literal
+        # range filter prunes partitions exactly.
         #
         # LATE ARRIVALS break the disjointness: fine rows landing in an
         # already-archived coarse bucket would make dynamic overwrite
@@ -140,9 +151,7 @@ def expire_tier(
         # and repacks identical content.
         hist_tbl = f"agg.value_history_{tier}"
         pack_src = doomed
-        cb_expr = F.date_format(
-            _trunc(coarser, "bucket_start"), "yyyyMMdd"
-        ).cast("int")
+        cb_expr = F.date_format(_trunc(coarser, "bucket_start"), "yyyyMMdd")
         if wh.exists(hist_tbl):
             cycle_keys = doomed.select("source", cb_expr.alias("cb")).distinct()
             overlap = wh.read(spark, hist_tbl).join(
@@ -164,9 +173,10 @@ def expire_tier(
                     old_only.select("source", "bucket_start", "value", "gap_filled")
                 )
         hist = pack_value_history(pack_src, coarser).withColumn(
-            "cb", F.date_format("bucket_start", "yyyyMMdd").cast("int")
+            "cb", F.date_format("bucket_start", "yyyyMMdd")
         )
         wh.write_partitioned(hist, hist_tbl, ["source", "cb"])
+    token = "0:0"
     if n_doomed:
         # rewrite only the source partitions that actually lose rows —
         # dynamic partition overwrite leaves the others untouched. A
@@ -186,14 +196,14 @@ def expire_tier(
                 kept.select("source").distinct(), ["source"], "left_anti"
             ).collect()
         ]
-        wh.write_partitioned(kept, tbl, ["source"])
+        _, token = wh.write_partitioned(
+            kept, tbl, ["source"], key_cols=["source", "bucket_start"]
+        )
         if gone:
             wh.drop_partitions(tbl, "source", gone)
     CP.record_commit(
         spark, wh, job_id, f"retention_{tier}", [f"{tier}:retention"],
-        snapshot_id=Warehouse.snapshot_token(
-            wh.read(spark, tbl), ["source", "bucket_start"]
-        ),
+        snapshot_id=token,
         rows_in=n_before, rows_out=n_before - n_doomed,
         metrics={"expired_rows": float(n_doomed)},
     )
@@ -213,20 +223,15 @@ def read_values(
     Rows still in the live tier are served straight from it (non-gap-
     filled, literal range filter → pushdown). The sub-horizon part comes
     from `agg.value_history_<tier>`: the coarse-bucket partitions
-    overlapping the range are pruned by the `cb` partition int
-    (yyyyMMdd — numeric order == date order, so a literal range
-    prunes exactly), unpacked bit-exactly (GZ1 offsets + GZ3 XOR
+    overlapping the range are pruned by the `cb` partition string
+    (fixed-width yyyyMMdd — string order == date order, so a literal
+    range prunes exactly), unpacked bit-exactly (GZ1 offsets + GZ3 XOR
     floats), then row-filtered to [lo, hi). The two sets are disjoint by
     construction (expire archives exactly what it drops); the
     crash-window overlap (archive written, drop not reached) is closed
     with a dropDuplicates on the key — both copies are bit-identical.
     Output: (source, bucket_start, value)."""
-    from datetime import datetime
-
-    def _parse(t) -> datetime:
-        return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
-
-    lo_t, hi_t = _parse(lo), _parse(hi)
+    lo_t, hi_t = _parse_ts(lo), _parse_ts(hi)
     if not lo_t < hi_t:
         raise ValueError(f"read_values needs lo < hi, got [{lo_t}, {hi_t})")
     coarser = COARSER.get(tier)
@@ -252,8 +257,8 @@ def read_values(
             else lo_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
         )
         hist = wh.read(spark, hist_tbl).where(
-            (F.col("cb") >= F.lit(int(c_lo.strftime("%Y%m%d"))))
-            & (F.col("cb") <= F.lit(int(hi_t.strftime("%Y%m%d"))))
+            (F.col("cb") >= F.lit(c_lo.strftime("%Y%m%d")))
+            & (F.col("cb") <= F.lit(hi_t.strftime("%Y%m%d")))
         )
         pieces.append(unpack_value_history(hist).where(in_range))
     if not pieces:
@@ -268,12 +273,6 @@ def read_values(
     # binding bug ([INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND]) the moment a
     # downstream exceptAll/aggregate reshapes it
     return out.distinct()
-
-
-def _parse_ts(t):
-    from datetime import datetime
-
-    return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
 
 
 def route_slices(lo_t, hi_t) -> list[tuple[str, object, object]]:
@@ -430,7 +429,8 @@ def expire_payload_tier(
     (source, coarser-bucket) losing fine payloads must already exist in
     the committed coarser PAYLOAD tier (left-anti coverage check;
     refusal beats data loss — the coarse payload holds the same token
-    stream bit-exactly, so nothing is lost once covered)."""
+    stream bit-exactly, so nothing is lost once covered). The snapshot
+    token covers the rewritten kept payload rows, as in `expire_tier`."""
     coarser = COARSER.get(tier)
     if coarser is None:
         raise ValueError(f"tier {tier!r} has no coarser payload tier to retain into")
@@ -465,8 +465,10 @@ def expire_payload_tier(
             f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
             f"have no committed {coarser}-tier payload row; refusing to expire"
         )
-    n_before = df.count()
-    n_doomed = doomed.count()
+    n_before, n_doomed = df.agg(
+        F.count(F.lit(1)), F.count_if(F.col("bucket_start") < cutoff_lit)
+    ).first()
+    token = "0:0"
     if n_doomed:
         affected = doomed.select("source").distinct()
         kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
@@ -478,14 +480,14 @@ def expire_payload_tier(
                 kept.select("source").distinct(), ["source"], "left_anti"
             ).collect()
         ]
-        wh.write_partitioned(kept, tbl, ["source"])
+        _, token = wh.write_partitioned(
+            kept, tbl, ["source"], key_cols=["source", "bucket_start", "chunk_id"]
+        )
         if gone:
             wh.drop_partitions(tbl, "source", gone)
     CP.record_commit(
         spark, wh, job_id, f"retention_payload_{tier}", [f"{tier}:retention_payload"],
-        snapshot_id=Warehouse.snapshot_token(
-            wh.read(spark, tbl), ["source", "bucket_start", "chunk_id"]
-        ),
+        snapshot_id=token,
         rows_in=n_before, rows_out=n_before - n_doomed,
         metrics={"expired_payload_rows": float(n_doomed)},
     )

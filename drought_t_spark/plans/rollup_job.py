@@ -10,7 +10,7 @@ identical to a single-shot run.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from drought_t_spark.config import EngineConfig, DEFAULT
@@ -70,17 +70,21 @@ def run_rollup_job(
     todo = [g for g in range(n_groups) if f"{n_groups}:{g}" not in done]
 
     # ONE aggregation job sizes every pending group: empty groups commit
-    # without launching write/count jobs, and per-group rows_in needs no
-    # second scan. ≤ n_groups rows reach the driver — never the source set.
-    grp_rows: dict[int, int] = {}
+    # without launching write jobs, and per-group rows_in and tokens need
+    # no second scan (the rollup is exact integer arithmetic, so the raw
+    # n_tok sum equals the written n_tok_sum). ≤ n_groups rows reach the
+    # driver — never the source set.
+    grp_rows: dict[int, tuple[int, int]] = {}
     if todo:
         grp_rows = {
-            r["_grp"]: r["n"]
-            for r in t1.groupBy("_grp").agg(F.count("*").alias("n")).collect()
+            r["_grp"]: (r["n"], r["tok"])
+            for r in t1.groupBy("_grp")
+            .agg(F.count("*").alias("n"), F.sum("n_tok").alias("tok"))
+            .collect()
         }
 
     for gi, g in enumerate(todo):
-        n_in = grp_rows.get(g, 0)
+        n_in, tok = grp_rows.get(g, (0, 0))
         if n_in == 0:
             CP.record_commit(
                 spark, wh, job_id, "hour", [f"{n_groups}:{g}"],
@@ -89,45 +93,16 @@ def run_rollup_job(
             )
             continue
         part = t1.where(F.col("_grp") == g).drop("_grp")
-        stats = R.rollup_hour(part)
-        wh.write_partitioned(stats, "agg.tier_hour", ["source"])
+        n_out, token = wh.write_partitioned(
+            R.rollup_hour(part), "agg.tier_hour", ["source"],
+            key_cols=["source", "bucket_start"],
+        )
         if with_payloads:
             pay = R.pack_payloads(part, "hour", cfg, pre_partitioned=pre_partitioned)
             wh.write_partitioned(pay, "agg.payload_hour", ["source"])
-        # lineage counts + snapshot token come from the WRITTEN table,
-        # never from `stats` — which is the full aggregation DAG
-        # over the group's raw scan, so each extra consumer would
-        # re-execute the whole rollup (Spark has no plan-level CSE).
-        # Dynamic overwrite just replaced exactly this group's source
-        # partitions with `stats`, so filtering the read-back by the
-        # group hash recovers the written rows via a 3-column
-        # column-pruned parquet scan; one aggregation job yields count,
-        # token sum, and the content hash together. The semi-join scopes
-        # the read-back to sources present in THIS run's input (same
-        # guard as the cascade path below): dynamic overwrite leaves
-        # partitions of sources from earlier jobs/runs that hash into
-        # group g untouched, and lineage must describe this run's
-        # output, not stale rows. `part` only contributes its `source`
-        # column — a column-pruned scan, and the distinct source set is
-        # small enough that AQE broadcasts it.
-        wrow = (
-            wh.read(spark, "agg.tier_hour")
-            .where(group_expr(n_groups) == g)
-            .join(part.select("source").distinct(), ["source"], "left_semi")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("n_tok_sum").alias("tok"),
-                F.sum(
-                    F.expr("xxhash64(source, bucket_start)").cast("decimal(38,0)")
-                ).alias("h"),
-            )
-            .first()
-        )
-        n_out, tok = int(wrow["n"]), int(wrow["tok"] or 0)
         CP.record_commit(
             spark, wh, job_id, "hour", [f"{n_groups}:{g}"],
-            snapshot_id=f"{n_out}:{wrow['h'] or 0}",
-            rows_in=n_in, rows_out=n_out,
+            snapshot_id=token, rows_in=n_in, rows_out=n_out,
             metrics={"rolled_points": float(n_out), "tokens": float(tok)},
         )
         if fail_after_groups is not None and gi + 1 >= fail_after_groups:
@@ -150,8 +125,14 @@ def run_rollup_job(
         if not todo and f"{tier}:all" in cascade_done:
             continue  # nothing new rolled in and the tier is committed
         src = hour if tier == "day" else wh.read(spark, "agg.tier_day")
-        out = R.cascade(src, tier)
-        wh.write_partitioned(out, f"agg.tier_{tier}", ["source"])
+        # lineage comes from the write itself: rows_in is observed on the
+        # cascade input, rows_out and the token on its output, so the
+        # cascade DAG runs exactly once (the write) and no table is read back
+        seen_in = Observation()
+        n_out, token = wh.write_partitioned(
+            R.cascade(src.observe(seen_in, F.count(F.lit(1)).alias("n")), tier),
+            f"agg.tier_{tier}", ["source"], key_cols=["source", "bucket_start"],
+        )
         if with_payloads:
             # payload cascade reads the COMPRESSED finer payload tier
             # (never raw tokens — the 100 TB path: month payloads cost
@@ -165,21 +146,8 @@ def run_rollup_job(
                 R.cascade_payloads(pay_src, tier, cfg),
                 f"agg.payload_{tier}", ["source"],
             )
-        # lineage counts and the snapshot token come from the WRITTEN
-        # table and the (plain parquet) source read — never from `out`,
-        # which would re-execute the cascade aggregation + upstream hour
-        # scan once per metric. The cascade DAG runs exactly once (the
-        # write); everything after is cheap column-pruned parquet scans.
-        # Scoped to sources present in THIS run's input: dynamic
-        # overwrite keeps partitions of sources that vanished upstream,
-        # and lineage must describe the run's output, not stale rows.
-        written = wh.read(spark, f"agg.tier_{tier}").join(
-            src.select("source").distinct(), ["source"], "left_semi"
-        )
-        n_out = written.count()
         CP.record_commit(
             spark, wh, job_id, tier, partition_ids=[f"{tier}:all"],
-            snapshot_id=Warehouse.snapshot_token(written, ["source", "bucket_start"]),
-            rows_in=src.count(), rows_out=n_out,
+            snapshot_id=token, rows_in=seen_in.get["n"], rows_out=n_out,
             metrics={"rolled_points": float(n_out)},
         )

@@ -44,6 +44,11 @@ def build_session(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
+        # hive partition values read back as the strings they were
+        # written from: with inference on, a `source=0001` directory
+        # reads back as the integer 1 and every downstream tier rewrites
+        # the id as `source=1`
+        "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",  # wide token arrays
         "spark.sql.parquet.compression.codec": "zstd",

@@ -8,8 +8,10 @@ parquet warehouse with hive-style partitioning:
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
 * append — for ops tables;
-* snapshot token — deterministic content token per write (row count +
-  sum of a column hash), standing in for the Iceberg snapshot id.
+* commit report — `write_partitioned(..., key_cols)` returns the rows
+  it wrote and a deterministic content token (row count + sum of a key
+  hash), standing in for the Iceberg snapshot id. Both are observed
+  while the rows flow into the write, so lineage costs no second scan.
 
 On a real cluster: add iceberg-spark-runtime via --packages and swap
 `write_partitioned` for `df.writeTo(tbl).overwritePartitions()`; the
@@ -20,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -42,17 +44,47 @@ class Warehouse:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
 
-    def write_partitioned(self, df: DataFrame, table: str, partition_cols: list[str]) -> None:
+    def write_partitioned(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_cols: list[str],
+        key_cols: list[str] | None = None,
+    ) -> tuple[int, str] | None:
         """Idempotent per-partition overwrite (Iceberg overwritePartitions
-        stand-in): only partitions present in `df` are replaced."""
-        (
-            df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        )
+        stand-in): only partitions present in `df` are replaced.
+
+        With `key_cols`, returns the commit report `(rows_written, token)`
+        of exactly the rows this write produced. The token
+        `"{count}:{sum}"` (Iceberg snapshot-id stand-in) sums xxhash64 of
+        the keys as decimal(38,0): order-independent and overflow-free
+        under ANSI (int64 summands can't exhaust 38 digits below ~10^19
+        rows) — unlike int64 sum (scheduling-dependent ANSI overflow) or
+        bit_xor (self-cancelling: keys duplicated an even number of times
+        contribute nothing, so duplicate-shuffled datasets with equal row
+        counts could collide). Both come from a `df.observe` on the write
+        itself. Observed metrics are merged once per successful task, the
+        same condition as action accumulators: exact for rows produced in
+        the write's own stage; an observation below a shuffle can
+        over-count if a lost map output forces its stage to re-run."""
+        obs = None
+        if key_cols is not None:
+            obs = Observation()
+            df = df.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.xxhash64(*key_cols).cast("decimal(38,0)")).alias("h"),
+            )
+        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             df.write.mode("overwrite")
             .partitionBy(*partition_cols)
             .parquet(self.path(table))
         )
+        if obs is None:
+            return None
+        m = obs.get
+        return m["n"], f"{m['n']}:{m['h'] or 0}"
 
     def append(self, df: DataFrame, table: str) -> None:
         df.write.mode("append").parquet(self.path(table))
@@ -67,20 +99,3 @@ class Warehouse:
                 os.path.join(self.path(table), f"{partition_col}={v}"),
                 ignore_errors=True,
             )
-
-    @staticmethod
-    def snapshot_token(df: DataFrame, key_cols: list[str]) -> str:
-        """Deterministic content token (Iceberg snapshot-id stand-in).
-        sum over decimal(38,0) is order-independent and overflow-free
-        under ANSI (int64 summands can't exhaust 38 digits below ~10^19
-        rows) — unlike int64 sum (scheduling-dependent ANSI overflow) or
-        bit_xor (self-cancelling: keys duplicated an even number of
-        times contribute nothing, so duplicate-shuffled datasets with
-        equal row counts could collide)."""
-        row = df.select(
-            F.count("*").alias("n"),
-            F.sum(
-                F.expr(f"xxhash64({', '.join(key_cols)})").cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return f"{row.n}:{row.h or 0}"

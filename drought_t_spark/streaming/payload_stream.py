@@ -89,7 +89,6 @@ def seal_payload_partials(spark: SparkSession, wh,
     partitions present in the partials are rewritten. Returns the
     number of batch partitions folded."""
     from drought_t_spark.ops import checkpoints as CP
-    from drought_t_spark.sources.warehouse import Warehouse
 
     if not wh.exists(PAYLOAD_PARTIALS_TBL):
         return 0
@@ -128,12 +127,12 @@ def seal_payload_partials(spark: SparkSession, wh,
     # replaces); raw rows only — no aggregation, payloads are packed
     # later once their bucket is complete
     sealed = u.localCheckpoint(eager=True)
-    wh.write_partitioned(sealed, PAYLOAD_TAIL_TBL, ["source"])
+    _, token = wh.write_partitioned(
+        sealed, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
+    )
     CP.record_commit(
         spark, wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
-        snapshot_id=Warehouse.snapshot_token(
-            sealed.select("source", "ts", "seq", "n_tok"), ["source", "seq"]
-        ),
+        snapshot_id=token,
         rows_in=n_partials, rows_out=n_partials,
         metrics={"folded_batches": float(len(batch_keys))},
     )
@@ -180,7 +179,6 @@ def pack_complete_buckets(
     number of (source, bucket, chunk) payload rows committed."""
     from drought_t_spark.operators.rollup import pack_payloads
     from drought_t_spark.ops import checkpoints as CP
-    from drought_t_spark.sources.warehouse import Warehouse
 
     if not wh.exists(PAYLOAD_TAIL_TBL):
         return 0
@@ -233,7 +231,10 @@ def pack_complete_buckets(
     # materialize before the overwrite (the pass-through reads files the
     # dynamic overwrite replaces)
     committed = out.localCheckpoint(eager=True)
-    wh.write_partitioned(committed, "agg.payload_hour", ["source"])
+    _, token = wh.write_partitioned(
+        committed, "agg.payload_hour", ["source"],
+        key_cols=["source", "bucket_start", "chunk_id"],
+    )
 
     # shrink the tail: rewrite affected sources to their incomplete
     # remainder; an emptied source partition must be dropped explicitly
@@ -251,10 +252,7 @@ def pack_complete_buckets(
 
     CP.record_commit(
         spark, wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
-        snapshot_id=Warehouse.snapshot_token(
-            committed.select("source", "bucket_start", "chunk_id", "payload_crc32"),
-            ["source", "bucket_start", "chunk_id"],
-        ),
+        snapshot_id=token,
         rows_in=n_new + late_dropped, rows_out=n_new,
         metrics={
             "late_rows_dropped": float(late_dropped),

@@ -215,7 +215,6 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     the un-compacted batch count, never by the all-time fold history.
     Returns the number of batch partitions folded."""
     from drought_t_spark.ops import checkpoints as CP
-    from drought_t_spark.sources.warehouse import Warehouse
 
     if not wh.exists(PARTIALS_TBL):
         return 0
@@ -263,7 +262,9 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
         u.groupBy("source", "bucket_start").agg(*_merge_agg())
     ).localCheckpoint(eager=True)
     # dynamic overwrite replaces exactly the affected source partitions
-    wh.write_partitioned(merged, "agg.tier_hour", ["source"])
+    n_out, token = wh.write_partitioned(
+        merged, "agg.tier_hour", ["source"], key_cols=["source", "bucket_start"]
+    )
     # ledger BEFORE the partition drop: a crash between the two leaves
     # folded-but-present partials, which the next compaction recognizes
     # from the ledger and drops WITHOUT re-folding (the `replayed` path
@@ -275,8 +276,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     # the window closes. Documented, not hidden.
     CP.record_commit(
         spark, wh, job_id, "stream_compact", [f"batch:{b}" for b in batch_keys],
-        snapshot_id=Warehouse.snapshot_token(merged, ["source", "bucket_start"]),
-        rows_in=n_partials, rows_out=merged.count(),
+        snapshot_id=token, rows_in=n_partials, rows_out=n_out,
         metrics={"folded_batches": float(len(batch_keys))},
     )
     wh.drop_partitions(PARTIALS_TBL, "batch_key", batch_keys)

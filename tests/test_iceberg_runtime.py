@@ -71,7 +71,7 @@ def _snapshot_ids(spark, tbl: str) -> list[int]:
     ]
 
 
-def test_overwrite_partitions_idempotent_with_snapshot_tokens(ispark):
+def test_overwrite_partitions_idempotent_with_snapshot_ids(ispark):
     from pyspark.sql import functions as F
 
     from drought_t_spark import synth

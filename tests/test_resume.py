@@ -115,11 +115,11 @@ def test_two_writers_commits_all_visible(spark, tmp_path):
 
 def test_hour_rollup_executes_exactly_once_per_group(spark, seqs, tmp_path, monkeypatch):
     """Hour-tier lineage counts and the snapshot token must come from
-    the WRITTEN table, not from re-consuming the `stats` DAG: an
+    the write itself, not from re-consuming the `stats` DAG: an
     accumulator spliced into each group's rollup input counts every raw
-    row that flows through the aggregation — with the old
-    stats.agg(...).first() + snapshot_token(stats) shape each group's
-    rollup executed three times (~3× raw rows through the accumulator)."""
+    row that flows through the aggregation — a separate count or token
+    action over `stats` would re-execute the group's rollup (~2-3× raw
+    rows through the accumulator)."""
     from drought_t_spark.operators import rollup as R
 
     acc = spark.sparkContext.accumulator(0)
@@ -141,11 +141,12 @@ def test_hour_rollup_executes_exactly_once_per_group(spark, seqs, tmp_path, monk
 
 
 def test_cascade_executes_exactly_once_per_tier(spark, seqs, tmp_path, monkeypatch):
-    """Lineage counts must come from the written table, not from
+    """Lineage counts must come from the write itself, not from
     re-executing the cascade DAG: an accumulator spliced into the
     cascade input counts every row that ever FLOWS THROUGH the
-    aggregation — with re-execution per metric (the old out.count() +
-    snapshot_token(out) shape) it would read ~3× the source rows."""
+    aggregation — with re-execution per metric (a separate count or
+    token action over the cascade output) it would read ~3× the source
+    rows."""
     from drought_t_spark.operators import rollup as R
 
     acc = spark.sparkContext.accumulator(0)
@@ -169,7 +170,7 @@ def test_cascade_executes_exactly_once_per_tier(spark, seqs, tmp_path, monkeypat
 
 
 def test_hour_lineage_scoped_to_run_sources(spark, seqs, tmp_path):
-    """Hour-tier lineage read-back must be scoped to THIS run's sources:
+    """Hour-tier lineage must be scoped to THIS run's sources:
     a second job on the same warehouse seeing only a subset of sources
     (here n_groups=1, so every stale source hashes into its one group)
     must not count the first job's stale partitions in rows_out/metrics."""
@@ -191,3 +192,101 @@ def test_hour_lineage_scoped_to_run_sources(spark, seqs, tmp_path):
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
     sub_out = ln[(ln.job_id == "jobSub") & (ln.stage == "hour")].rows_out.sum()
     assert int(sub_out) == own_rows
+
+
+def _content(df, keys):
+    """(rows, snapshot token) of `df`, computed independently of the
+    engine's write report: the row count plus the decimal sum of
+    xxhash64 over the key columns."""
+    r = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*keys).cast("decimal(38,0)")).alias("h"),
+    ).first()
+    return r["n"], f"{r['n']}:{r['h'] or 0}"
+
+
+def _lineage(spark, wh, job_id):
+    ln = wh.read(spark, CP.LINEAGE_TBL).where(F.col("job_id") == job_id).toPandas()
+    return {(r.stage, r.partition_id): (r.rows_out, r.output_snapshot)
+            for r in ln.itertuples()}
+
+
+def test_lineage_equals_written_content(spark, tmp_path):
+    """Every commit's rows_out and snapshot token describe exactly the
+    rows that commit wrote, re-derived here by reading the written tables
+    back. The second job sees a subset of sources, and one source has
+    vanished upstream (its day rows are stale: the day cascade no longer
+    rewrites them), so stale partitions must not leak into lineage. An
+    expire_tier commit reports the rows it rewrote, and "0:0" when it
+    expires nothing."""
+    from drought_t_spark.plans.retention import expire_tier
+    from drought_t_spark.plans.rollup_job import group_expr
+
+    keys = ["source", "bucket_start"]
+    seqs = synth.sequences_df(spark, n_sources=5, n_total=12_000)
+    wh = Warehouse(str(tmp_path / "wh_lineage"))
+    run_rollup_job(spark, wh, seqs, "jobFull", CFG, n_groups=2, with_payloads=False)
+
+    by_grp = {r.g: r.source for r in seqs.select(
+        "source", group_expr(2).alias("g")).distinct().orderBy("source").collect()}
+    sub = sorted(by_grp.values())  # one source per non-empty group
+    srcs = sorted(r.source for r in seqs.select("source").distinct().collect())
+    vanished = next(s for s in reversed(srcs) if s not in sub)
+    wh.drop_partitions("agg.tier_hour", "source", [vanished])
+    run_rollup_job(spark, wh, seqs.where(F.col("source").isin(sub)), "jobSub", CFG,
+                   n_groups=2, with_payloads=False)
+
+    got = _lineage(spark, wh, "jobSub")
+    hour = wh.read(spark, "agg.tier_hour")
+    for g in range(2):
+        want = _content(hour.where(F.col("source").isin(sub) & (group_expr(2) == g)), keys)
+        assert got[("hour", f"2:{g}")] == want, g
+    # a cascade rewrites exactly the sources of the tier it reads
+    assert wh.read(spark, "agg.tier_day").where(F.col("source") == vanished).count() > 0
+    for tier, finer in (("day", "hour"), ("month", "day")):
+        inputs = [r.source for r in
+                  wh.read(spark, f"agg.tier_{finer}").select("source").distinct().collect()]
+        assert got[(tier, f"{tier}:all")] == _content(
+            wh.read(spark, f"agg.tier_{tier}").where(F.col("source").isin(inputs)), keys
+        ), tier
+
+    # a source whose data starts after the cutoff loses nothing, so the
+    # expiry must not rewrite it and its rows stay out of the token
+    cutoff = "2024-01-02 00:00:00"
+    late = spark.createDataFrame(
+        hour.where((F.col("source") == sub[0]) & (F.col("bucket_start") >= cutoff))
+        .withColumn("source", F.lit("late_src")).toPandas(),
+        hour.schema,
+    )
+    wh.write_partitioned(late, "agg.tier_hour", ["source"])
+    before = wh.read(spark, "agg.tier_hour")
+    affected = [r.source for r in before.where(F.col("bucket_start") < cutoff)
+                .select("source").distinct().collect()]
+    assert "late_src" not in affected
+    expire_tier(spark, wh, "jobRet", "hour", cutoff)
+    after = wh.read(spark, "agg.tier_hour")
+    rows_out, token = _lineage(spark, wh, "jobRet")[("retention_hour", "hour:retention")]
+    assert rows_out == after.count()
+    assert token == _content(after.where(F.col("source").isin(affected)), keys)[1]
+    expire_tier(spark, wh, "jobRet2", "hour", cutoff)
+    assert _lineage(spark, wh, "jobRet2")[("retention_hour", "hour:retention")] == (
+        after.count(), "0:0")
+
+
+def test_zero_padded_source_ids_survive_every_tier(spark, tmp_path):
+    """Numeric-looking, zero-padded source ids ("0000", "0001", ...)
+    keep their exact spelling in every tier: partition values read back
+    as written, so the cascades do not rewrite `source=0001` as
+    `source=1`, and the hour lineage counts every row the job wrote."""
+    seqs = synth.sequences_df(spark, n_sources=6, n_total=4000).withColumn(
+        "source", F.regexp_extract("source", r"(\d+)$", 1))
+    want = {r.source for r in seqs.select("source").distinct().collect()}
+    assert want == {f"{i:04d}" for i in range(6)}
+    wh = Warehouse(str(tmp_path / "wh_padded"))
+    run_rollup_job(spark, wh, seqs, "jobP", CFG, n_groups=2, with_payloads=False)
+    for tier in ("hour", "day", "month"):
+        got = {r.source for r in
+               wh.read(spark, f"agg.tier_{tier}").select("source").distinct().collect()}
+        assert got == want, tier
+    ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
+    assert ln[ln.stage == "hour"].rows_out.sum() == wh.read(spark, "agg.tier_hour").count()

@@ -51,8 +51,9 @@ def main(argv=None) -> None:
     events = drought_events_for_tier(tier_df, a.tier, cfg).localCheckpoint(
         eager=True  # events are consumed twice below (table + CSV)
     )
-    wh.write_partitioned(events, f"drought.events_{a.tier}", ["source"])
-    n = events.count()
+    n, _ = wh.write_partitioned(
+        events, f"drought.events_{a.tier}", ["source"], key_cols=["source", "event_id"]
+    )
     if a.export_csv:
         export_events_csv(events, a.export_csv, single_file=True)
     print(f"drought job tier={a.tier}: {n} events committed", file=sys.stderr)
