@@ -4,16 +4,33 @@ SURVEY.md §2 SK1/SK2/J5, §4 checkpoint row).
 Model: a stage processes PARTITION GROUPS (sets of sources). After each
 group's sink write commits, one checkpoint row per partition plus a
 lineage row and metrics rows are appended to the ops tables. On
-restart, `pending_partitions` anti-joins (J5) the stage's work list
-against committed checkpoints — only unfinished groups re-run, and the
+restart, `pending_partitions` skips (J5) the stage's work items that
+have a committed checkpoint — only unfinished groups re-run, and the
 sink's per-partition overwrite makes re-runs idempotent (no duplicate
 buckets even if a crash hit mid-write).
+
+The ops rows are a handful per commit and produced on the driver, so
+they never touch Spark: `record_commit` appends each table's rows as
+one parquet file with pyarrow (`Warehouse.append_rows`, written to a
+hidden temp name and published by an atomic rename, so readers never
+see a partial file), and `committed_partitions` reads the checkpoint
+table with `pyarrow.dataset`. A commit launches no Spark job.
+
+Commit order: lineage and metrics first, the checkpoint row LAST — it
+is the commit marker. A crash before it leaves lineage/metrics rows of
+an uncommitted attempt (the re-run appends its own) but never a group
+that resume trusts without its lineage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from drought_t_spark.schemas import CHECKPOINTS, LINEAGE, METRICS
 from drought_t_spark.sources.warehouse import Warehouse
@@ -23,29 +40,29 @@ LINEAGE_TBL = "ops.lineage"
 METRICS_TBL = "ops.metrics"
 
 
-def committed_partitions(spark: SparkSession, wh: Warehouse, job_id: str, stage: str) -> DataFrame:
-    if not wh.exists(CHECKPOINT_TBL):
-        return spark.createDataFrame([], "partition_id string")
-    cp = wh.read(spark, CHECKPOINT_TBL)
-    return (
-        cp.where((F.col("job_id") == job_id) & (F.col("stage") == stage)
-                 & (F.col("state") == "committed"))
-        .select("partition_id")
-        .distinct()
+def committed_partitions(wh: Warehouse, job_id: str, stage: str) -> set[str]:
+    path = wh.path(CHECKPOINT_TBL)
+    if not os.path.isdir(path):
+        return set()
+    # the declared schema, not one inferred from some file: a directory
+    # holding only a crashed write's temp file reads as empty, and files
+    # of older layouts (extra columns) are read by column name
+    cp = ds.dataset(path, format="parquet", schema=to_arrow_schema(CHECKPOINTS)).to_table(
+        columns=["partition_id"],
+        filter=(pc.field("job_id") == job_id) & (pc.field("stage") == stage)
+        & (pc.field("state") == "committed"),
     )
+    return set(cp.column("partition_id").to_pylist())
 
 
-def pending_partitions(spark: SparkSession, wh: Warehouse, job_id: str, stage: str,
+def pending_partitions(wh: Warehouse, job_id: str, stage: str,
                        work: DataFrame, key: str = "source") -> DataFrame:
     """J5 — work items with no committed checkpoint."""
-    done = committed_partitions(spark, wh, job_id, stage)
-    return work.join(
-        done.withColumnRenamed("partition_id", key), [key], "left_anti"
-    )
+    done = committed_partitions(wh, job_id, stage)
+    return work.where(~F.col(key).isin(sorted(done)))
 
 
 def record_commit(
-    spark: SparkSession,
     wh: Warehouse,
     job_id: str,
     stage: str,
@@ -55,19 +72,12 @@ def record_commit(
     rows_out: int,
     metrics: dict[str, float] | None = None,
 ) -> None:
-    cp = spark.createDataFrame(
-        [(job_id, stage, p, "committed", snapshot_id) for p in partition_ids],
-        CHECKPOINTS,
-    )
-    wh.append(cp, CHECKPOINT_TBL)
-    ln = spark.createDataFrame(
-        [(job_id, stage, None, snapshot_id, ",".join(sorted(partition_ids)),
-          rows_in, rows_out)],
-        LINEAGE,
-    )
-    wh.append(ln, LINEAGE_TBL)
+    wh.append_rows(LINEAGE_TBL, LINEAGE, [
+        (job_id, stage, None, snapshot_id, ",".join(sorted(partition_ids)),
+         rows_in, rows_out),
+    ])
     if metrics:
-        mt = spark.createDataFrame(
-            [(job_id, stage, k, float(v)) for k, v in metrics.items()], METRICS
-        )
-        wh.append(mt, METRICS_TBL)
+        wh.append_rows(METRICS_TBL, METRICS,
+                       [(job_id, stage, k, float(v)) for k, v in metrics.items()])
+    wh.append_rows(CHECKPOINT_TBL, CHECKPOINTS,
+                   [(job_id, stage, p, "committed", snapshot_id) for p in partition_ids])

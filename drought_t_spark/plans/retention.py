@@ -26,6 +26,7 @@ Both record ops rows (lineage/metrics) like every other stage.
 
 from __future__ import annotations
 
+import time
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,6 +98,7 @@ def expire_tier(
             f"read_series exactness — use {aligned.isoformat()} or the next boundary"
         )
     tbl = f"agg.tier_{tier}"
+    t0 = time.perf_counter()  # the commit's wall_s metric starts here
     df = wh.read(spark, tbl)
     cutoff_lit = F.lit(cutoff).cast("timestamp")
     doomed = df.where(F.col("bucket_start") < cutoff_lit)
@@ -202,10 +204,11 @@ def expire_tier(
         if gone:
             wh.drop_partitions(tbl, "source", gone)
     CP.record_commit(
-        spark, wh, job_id, f"retention_{tier}", [f"{tier}:retention"],
+        wh, job_id, f"retention_{tier}", [f"{tier}:retention"],
         snapshot_id=token,
         rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_rows": float(n_doomed)},
+        metrics={"expired_rows": float(n_doomed),
+                 "wall_s": time.perf_counter() - t0},
     )
     return {"expired": n_doomed, "kept": n_before - n_doomed}
 
@@ -448,6 +451,7 @@ def expire_payload_tier(
             f"{aligned.isoformat()} or the next boundary"
         )
     tbl = f"agg.payload_{tier}"
+    t0 = time.perf_counter()  # the commit's wall_s metric starts here
     df = wh.read(spark, tbl)
     cutoff_lit = F.lit(cut_t).cast("timestamp")
     doomed = df.where(F.col("bucket_start") < cutoff_lit)
@@ -486,9 +490,10 @@ def expire_payload_tier(
         if gone:
             wh.drop_partitions(tbl, "source", gone)
     CP.record_commit(
-        spark, wh, job_id, f"retention_payload_{tier}", [f"{tier}:retention_payload"],
+        wh, job_id, f"retention_payload_{tier}", [f"{tier}:retention_payload"],
         snapshot_id=token,
         rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_payload_rows": float(n_doomed)},
+        metrics={"expired_payload_rows": float(n_doomed),
+                 "wall_s": time.perf_counter() - t0},
     )
     return {"expired": n_doomed, "kept": n_before - n_doomed}

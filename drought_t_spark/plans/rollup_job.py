@@ -2,13 +2,17 @@
 
 One run = for each tier: process pending partition groups (sources with
 no committed checkpoint), write tier stats + payload tables with
-idempotent per-partition overwrite, record checkpoint/lineage/metrics.
+idempotent per-partition overwrite, record checkpoint/lineage/metrics
+(each commit's metrics include `wall_s`, the driver wall time from the
+stage's first read or write to its commit).
 `fail_after_groups` injects a crash for the resume test (§5.5): a
 re-run must complete only the missing groups and yield a table
 identical to a single-shot run.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -63,10 +67,7 @@ def run_rollup_job(
     # count must NOT trust old group ids (same id = different source
     # set), so stale checkpoints simply don't match and work re-runs —
     # idempotent sinks make that safe rather than silently gappy.
-    done = {
-        r.partition_id for r in
-        CP.committed_partitions(spark, wh, job_id, "hour").collect()
-    }
+    done = CP.committed_partitions(wh, job_id, "hour")
     todo = [g for g in range(n_groups) if f"{n_groups}:{g}" not in done]
 
     # ONE aggregation job sizes every pending group: empty groups commit
@@ -84,12 +85,14 @@ def run_rollup_job(
         }
 
     for gi, g in enumerate(todo):
+        t0 = time.perf_counter()
         n_in, tok = grp_rows.get(g, (0, 0))
         if n_in == 0:
             CP.record_commit(
-                spark, wh, job_id, "hour", [f"{n_groups}:{g}"],
+                wh, job_id, "hour", [f"{n_groups}:{g}"],
                 snapshot_id="0:0", rows_in=0, rows_out=0,
-                metrics={"rolled_points": 0.0, "tokens": 0.0},
+                metrics={"rolled_points": 0.0, "tokens": 0.0,
+                         "wall_s": time.perf_counter() - t0},
             )
             continue
         part = t1.where(F.col("_grp") == g).drop("_grp")
@@ -101,9 +104,10 @@ def run_rollup_job(
             pay = R.pack_payloads(part, "hour", cfg, pre_partitioned=pre_partitioned)
             wh.write_partitioned(pay, "agg.payload_hour", ["source"])
         CP.record_commit(
-            spark, wh, job_id, "hour", [f"{n_groups}:{g}"],
+            wh, job_id, "hour", [f"{n_groups}:{g}"],
             snapshot_id=token, rows_in=n_in, rows_out=n_out,
-            metrics={"rolled_points": float(n_out), "tokens": float(tok)},
+            metrics={"rolled_points": float(n_out), "tokens": float(tok),
+                     "wall_s": time.perf_counter() - t0},
         )
         if fail_after_groups is not None and gi + 1 >= fail_after_groups:
             raise InjectedFailure(f"injected crash after {gi + 1} groups")
@@ -115,15 +119,13 @@ def run_rollup_job(
     # full overwrite per run is idempotent by construction, so the
     # checkpoint unit is ONE stage-level token (`{tier}:all`), never a
     # per-source list: the driver materializes no source set anywhere.
-    cascade_done = {
-        r.partition_id
-        for tier in ("day", "month")
-        for r in CP.committed_partitions(spark, wh, job_id, tier).collect()
-    }
+    cascade_done = (CP.committed_partitions(wh, job_id, "day")
+                    | CP.committed_partitions(wh, job_id, "month"))
     hour = wh.read(spark, "agg.tier_hour")
     for tier in ("day", "month"):
         if not todo and f"{tier}:all" in cascade_done:
             continue  # nothing new rolled in and the tier is committed
+        t0 = time.perf_counter()
         src = hour if tier == "day" else wh.read(spark, "agg.tier_day")
         # lineage comes from the write itself: rows_in is observed on the
         # cascade input, rows_out and the token on its output, so the
@@ -147,7 +149,8 @@ def run_rollup_job(
                 f"agg.payload_{tier}", ["source"],
             )
         CP.record_commit(
-            spark, wh, job_id, tier, partition_ids=[f"{tier}:all"],
+            wh, job_id, tier, partition_ids=[f"{tier}:all"],
             snapshot_id=token, rows_in=seen_in.get["n"], rows_out=n_out,
-            metrics={"rolled_points": float(n_out)},
+            metrics={"rolled_points": float(n_out),
+                     "wall_s": time.perf_counter() - t0},
         )

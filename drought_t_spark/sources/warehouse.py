@@ -7,7 +7,9 @@ parquet warehouse with hive-style partitioning:
 
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
-* append — for ops tables;
+* append — `append_rows` writes the ops tables' driver-produced rows
+  as one zstd parquet file per call with pyarrow (no Spark job),
+  published by an atomic rename so no reader ever sees a partial file;
 * commit report — `write_partitioned(..., key_cols)` returns the rows
   it wrote and a deterministic content token (row count + sum of a key
   hash), standing in for the Iceberg snapshot id. Both are observed
@@ -21,9 +23,14 @@ call sites do not change shape.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class Warehouse:
@@ -86,8 +93,24 @@ class Warehouse:
         m = obs.get
         return m["n"], f"{m['n']}:{m['h'] or 0}"
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
+    def append_rows(self, table: str, schema: T.StructType, rows: list[tuple]) -> None:
+        """Append driver rows as one new parquet file, without Spark.
+
+        The file is written under a dot-prefixed name that does not end
+        in `.parquet` — invisible to Spark, `pyarrow.dataset` and a
+        `*.parquet` glob — and published with `os.replace`, atomic on
+        one filesystem: a crash mid-write leaves only an ignored temp
+        file, never a partial part file."""
+        d = self.path(table)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        arrow = to_arrow_schema(schema)
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow),
+            tmp, compression="zstd",
+        )
+        os.replace(tmp, os.path.join(d, name))
 
     def drop_partitions(self, table: str, partition_col: str, values: list[str]) -> None:
         """Remove whole hive partitions (Iceberg stand-in for a

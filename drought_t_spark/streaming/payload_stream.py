@@ -99,12 +99,9 @@ def seal_payload_partials(spark: SparkSession, wh,
     ]
     if not present:
         return 0
-    folded_before = {
-        r.partition_id
-        for r in CP.committed_partitions(spark, wh, job_id, "payload_seal")
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
+    folded_before = {f"batch:{b}" for b in present} & CP.committed_partitions(
+        wh, job_id, "payload_seal"
+    )
     replayed = [b for b in present if f"batch:{b}" in folded_before]
     if replayed:  # already in the tail — drop without re-folding
         wh.drop_partitions(PAYLOAD_PARTIALS_TBL, "batch_key", replayed)
@@ -131,7 +128,7 @@ def seal_payload_partials(spark: SparkSession, wh,
         sealed, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
     )
     CP.record_commit(
-        spark, wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
+        wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
         snapshot_id=token,
         rows_in=n_partials, rows_out=n_partials,
         metrics={"folded_batches": float(len(batch_keys))},
@@ -251,7 +248,7 @@ def pack_complete_buckets(
         wh.drop_partitions(PAYLOAD_TAIL_TBL, "source", gone)
 
     CP.record_commit(
-        spark, wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
+        wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
         snapshot_id=token,
         rows_in=n_new + late_dropped, rows_out=n_new,
         metrics={
@@ -265,8 +262,8 @@ def pack_complete_buckets(
 def _unsealed_partials(spark: SparkSession, wh) -> DataFrame | None:
     """Raw partial rows NOT yet folded into the tail — replayed-but-
     ledgered batch partitions are excluded so the live view never
-    double-counts across a seal replay (lookup cost is bounded by the
-    un-sealed batch count, never the all-time ledger)."""
+    double-counts across a seal replay (the ledger lookup is a
+    driver-side Arrow scan of the sealed batch ids, no Spark job)."""
     from drought_t_spark.ops import checkpoints as CP
 
     if not wh.exists(PAYLOAD_PARTIALS_TBL):
@@ -275,14 +272,9 @@ def _unsealed_partials(spark: SparkSession, wh) -> DataFrame | None:
     present = [str(r.batch_key) for r in p.select("batch_key").distinct().collect()]
     if not present:
         return None
-    folded = {
-        r.partition_id
-        for r in CP.committed_partitions(
-            spark, wh, "stream-payload-seal", "payload_seal"
-        )
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
+    folded = {f"batch:{b}" for b in present} & CP.committed_partitions(
+        wh, "stream-payload-seal", "payload_seal"
+    )
     live = [b for b in present if f"batch:{b}" not in folded]
     if not live:
         return None

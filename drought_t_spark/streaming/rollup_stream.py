@@ -211,8 +211,8 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     dropped without re-folding — no double count — while a FRESH
     checkpoint's batch 0 carries a new stream id and is folded normally
     (a bare-batch_id ledger would have silently dropped it). The ledger
-    lookup is filtered to the present keys, so its cost is bounded by
-    the un-compacted batch count, never by the all-time fold history.
+    lookup is a driver-side Arrow scan of this job's folded batch ids
+    (no Spark job), intersected with the present keys.
     Returns the number of batch partitions folded."""
     from drought_t_spark.ops import checkpoints as CP
 
@@ -224,12 +224,9 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     ]
     if not present:
         return 0
-    folded_before = {
-        r.partition_id
-        for r in CP.committed_partitions(spark, wh, job_id, "stream_compact")
-        .where(F.col("partition_id").isin([f"batch:{b}" for b in present]))
-        .collect()
-    }
+    folded_before = {f"batch:{b}" for b in present} & CP.committed_partitions(
+        wh, job_id, "stream_compact"
+    )
     replayed = [b for b in present if f"batch:{b}" in folded_before]
     if replayed:  # already in the tier — drop without re-folding
         wh.drop_partitions(PARTIALS_TBL, "batch_key", replayed)
@@ -275,7 +272,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     # tier overwrite and the ledger append become one transaction and
     # the window closes. Documented, not hidden.
     CP.record_commit(
-        spark, wh, job_id, "stream_compact", [f"batch:{b}" for b in batch_keys],
+        wh, job_id, "stream_compact", [f"batch:{b}" for b in batch_keys],
         snapshot_id=token, rows_in=n_partials, rows_out=n_out,
         metrics={"folded_batches": float(len(batch_keys))},
     )

@@ -2,6 +2,8 @@
 rollup job mid-run, re-run, assert no duplicate buckets and a final
 table identical to a single-shot run; lineage/metrics recorded."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,7 +35,7 @@ def test_crash_resume_identical_to_single_shot(spark, seqs, tmp_path):
         run_rollup_job(spark, wh2, seqs, "job1", CFG, n_groups=3,
                        fail_after_groups=1, with_payloads=False)
     # partial state: some groups committed, not all
-    committed = CP.committed_partitions(spark, wh2, "job1", "hour").count()
+    committed = len(CP.committed_partitions(wh2, "job1", "hour"))
     assert 0 < committed < 3
 
     run_rollup_job(spark, wh2, seqs, "job1", CFG, n_groups=3, with_payloads=False)
@@ -58,14 +60,13 @@ def test_crash_before_cascade_resumes_with_stage_token(spark, seqs, tmp_path):
     with pytest.raises(InjectedFailure):
         run_rollup_job(spark, wh, seqs, "jobC", CFG, n_groups=3,
                        fail_before_cascade=True, with_payloads=False)
-    assert CP.committed_partitions(spark, wh, "jobC", "hour").count() == 3
-    assert CP.committed_partitions(spark, wh, "jobC", "day").count() == 0
+    assert len(CP.committed_partitions(wh, "jobC", "hour")) == 3
+    assert len(CP.committed_partitions(wh, "jobC", "day")) == 0
 
     run_rollup_job(spark, wh, seqs, "jobC", CFG, n_groups=3, with_payloads=False)
     for tier in ("day", "month"):
-        parts = [r.partition_id for r in
-                 CP.committed_partitions(spark, wh, "jobC", tier).collect()]
-        assert parts == [f"{tier}:all"]  # stage token, never a source list
+        parts = CP.committed_partitions(wh, "jobC", tier)
+        assert parts == {f"{tier}:all"}  # stage token, never a source list
     hour_tok = wh.read(spark, "agg.tier_hour").agg(F.sum("n_tok_sum")).first()[0]
     day_tok = wh.read(spark, "agg.tier_day").agg(F.sum("n_tok_sum")).first()[0]
     assert hour_tok == day_tok
@@ -79,7 +80,7 @@ def test_resume_skips_committed_work(spark, seqs, tmp_path):
     work = seqs.select(
         F.concat(F.lit("3:"), group_expr(3).cast("string")).alias("source")
     ).distinct()
-    pend = CP.pending_partitions(spark, wh, "jobX", "hour", work)
+    pend = CP.pending_partitions(wh, "jobX", "hour", work)
     assert pend.count() == 0  # every group committed → nothing pending
 
 
@@ -95,6 +96,10 @@ def test_lineage_and_metrics_written(spark, seqs, tmp_path):
     hour_rows = wh.read(spark, "agg.tier_hour").count()
     got = mt[(mt.stage == "hour") & (mt.name == "rolled_points")].value.sum()
     assert int(got) == hour_rows
+    # every commit (3 hour groups, day, month) records its driver wall time
+    wall = mt[mt.name == "wall_s"]
+    assert sorted(wall.stage) == ["day", "hour", "hour", "hour", "month"]
+    assert (wall.value > 0).all()
 
 
 def test_two_writers_commits_all_visible(spark, tmp_path):
@@ -104,13 +109,104 @@ def test_two_writers_commits_all_visible(spark, tmp_path):
     them."""
     root = str(tmp_path / "wh_two_writers")
     w1, w2 = Warehouse(root), Warehouse(root)
-    CP.record_commit(spark, w1, "jobW", "s", ["p1a"], "0:0", 1, 1)
-    CP.record_commit(spark, w2, "jobW", "s", ["p2a"], "0:0", 1, 1)
-    CP.record_commit(spark, w1, "jobW", "s", ["p1b"], "0:0", 1, 1)
-    CP.record_commit(spark, w2, "jobW", "s", ["p2b"], "0:0", 1, 1)
-    done = {r.partition_id for r in
-            CP.committed_partitions(spark, w1, "jobW", "s").collect()}
+    CP.record_commit(w1, "jobW", "s", ["p1a"], "0:0", 1, 1)
+    CP.record_commit(w2, "jobW", "s", ["p2a"], "0:0", 1, 1)
+    CP.record_commit(w1, "jobW", "s", ["p1b"], "0:0", 1, 1)
+    CP.record_commit(w2, "jobW", "s", ["p2b"], "0:0", 1, 1)
+    done = CP.committed_partitions(w1, "jobW", "s")
     assert done == {"p1a", "p1b", "p2a", "p2b"}
+
+
+def test_crash_before_commit_marker_leaves_group_pending(spark, seqs, tmp_path, monkeypatch):
+    """The checkpoint row is the commit marker and is written last: a
+    crash while appending the metrics rows leaves the group uncommitted
+    (resume never trusts a group without its lineage), and the re-run
+    commits it together with its lineage row."""
+    wh = Warehouse(str(tmp_path / "wh_marker"))
+    real = Warehouse.append_rows
+
+    def metrics_crash(self, table, *a, **kw):
+        if table == CP.METRICS_TBL:
+            raise InjectedFailure("crash while appending metrics")
+        return real(self, table, *a, **kw)
+
+    monkeypatch.setattr(Warehouse, "append_rows", metrics_crash)
+    with pytest.raises(InjectedFailure):
+        run_rollup_job(spark, wh, seqs, "jobM", CFG, n_groups=1, with_payloads=False)
+    assert CP.committed_partitions(wh, "jobM", "hour") == set()
+
+    monkeypatch.setattr(Warehouse, "append_rows", real)
+    run_rollup_job(spark, wh, seqs, "jobM", CFG, n_groups=1, with_payloads=False)
+    assert CP.committed_partitions(wh, "jobM", "hour") == {"1:0"}
+    ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
+    ln = ln[(ln.job_id == "jobM") & (ln.stage == "hour")]
+    # the crashed attempt's orphan row plus the committed attempt's
+    assert list(ln.partition_id) == ["1:0", "1:0"]
+    assert (ln.rows_out == wh.read(spark, "agg.tier_hour").count()).all()
+
+
+def test_leftover_temp_file_ignored(spark, tmp_path):
+    """A crash mid-write leaves only a hidden temp file: the resume read,
+    Spark and a DuckDB `*.parquet` glob all skip it."""
+    import duckdb
+
+    wh = Warehouse(str(tmp_path / "wh_tmpfile"))
+    cp_dir = wh.path(CP.CHECKPOINT_TBL)
+    os.makedirs(cp_dir)
+    with open(os.path.join(cp_dir, ".part-crashed.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 truncated mid-write")
+    # the crash hit the table's first write: nothing is committed yet
+    assert CP.committed_partitions(wh, "jobT", "s") == set()
+    CP.record_commit(wh, "jobT", "s", ["p1", "p2"], "0:0", 1, 1)
+    assert CP.committed_partitions(wh, "jobT", "s") == {"p1", "p2"}
+    assert wh.read(spark, CP.CHECKPOINT_TBL).count() == 2
+    n = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{cp_dir}/*.parquet')").fetchone()[0]
+    assert n == 2
+
+
+def test_commit_and_resume_read_launch_no_spark_job(spark, tmp_path):
+    """Ops rows are written and read on the driver: a commit and a
+    resume read launch no Spark job."""
+    wh = Warehouse(str(tmp_path / "wh_nojobs"))
+    sc = spark.sparkContext
+    sc.setJobGroup("ops-no-jobs", "ops rows only")
+    try:
+        CP.record_commit(wh, "jobJ", "s", ["p1"], "0:0", 1, 1, metrics={"m": 1.0})
+        assert CP.committed_partitions(wh, "jobJ", "s") == {"p1"}
+        assert list(sc.statusTracker().getJobIdsForGroup("ops-no-jobs")) == []
+        spark.range(1).count()  # control: the group does record Spark jobs
+        assert list(sc.statusTracker().getJobIdsForGroup("ops-no-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_mixed_ops_files(spark, tmp_path):
+    """Ops tables written by the earlier Spark append path (checkpoints
+    with the removed `updated_seq` column) stay readable next to
+    driver-written files."""
+    from pyspark.sql import types as T
+
+    from drought_t_spark.schemas import CHECKPOINTS, LINEAGE
+
+    wh = Warehouse(str(tmp_path / "wh_mixed"))
+    old_cp = T.StructType(
+        CHECKPOINTS.fields + [T.StructField("updated_seq", T.LongType(), False)])
+    spark.createDataFrame([("jobV", "s", "old", "committed", "0:0", 7)], old_cp) \
+        .write.mode("append").parquet(wh.path(CP.CHECKPOINT_TBL))
+    spark.createDataFrame([("jobV", "s", None, "0:0", "old", 3, 2)], LINEAGE) \
+        .write.mode("append").parquet(wh.path(CP.LINEAGE_TBL))
+    CP.record_commit(wh, "jobV", "s", ["new"], "5:9", 6, 5)
+    CP.record_commit(wh, "jobV", "other", ["other"], "0:0", 0, 0)
+
+    assert CP.committed_partitions(wh, "jobV", "s") == {"old", "new"}
+    ln = wh.read(spark, CP.LINEAGE_TBL)
+    assert [(f.name, f.dataType) for f in ln.schema] == [
+        (f.name, f.dataType) for f in LINEAGE]
+    got = {(r.stage, r.partition_id, r.output_snapshot, r.rows_in, r.rows_out)
+           for r in ln.collect()}
+    assert got == {("s", "old", "0:0", 3, 2), ("s", "new", "5:9", 6, 5),
+                   ("other", "other", "0:0", 0, 0)}
 
 
 def test_hour_rollup_executes_exactly_once_per_group(spark, seqs, tmp_path, monkeypatch):
