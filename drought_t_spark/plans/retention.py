@@ -2,26 +2,30 @@
 north rule: hourly → daily → monthly tiers with bounded-horizon fine
 data).
 
-Two operators:
+Two operator families:
 
-* `expire_tier` — drop a tier's buckets older than a cutoff, but ONLY
-  after proving the next-coarser tier covers the expired range (a
-  left-anti coverage check — refusing is cheaper than losing data).
-  On the parquet shim this rewrites each affected source partition via
-  dynamic partition overwrite; on Iceberg with
+* `expire_tier` / `expire_payload_tier` — drop a stats or payload
+  tier's buckets older than a cutoff, but ONLY after proving the
+  next-coarser tier covers the expired range (refusing is cheaper than
+  losing data). Both are thin wrappers over one core: a single
+  per-source aggregation answers coverage, counts and the affected
+  sources in one action, and `Warehouse.overwrite_partitions` rewrites
+  each affected source partition in place (dropping the ones that come
+  out empty). On Iceberg with
   `PARTITIONED BY (days(bucket_start), bucket(source, N))` the same
   call is a metadata-only `DELETE WHERE bucket_start < cutoff` +
   `expire_snapshots` — the call site does not change shape.
 
-* `read_series` — the continuous-aggregate read path: serve a time
-  range from the COARSEST tier that fully covers each sub-range
-  (month for the old span, day for the middle, hour for the recent
-  tail), so a year-long query touches ~12 + ~30 + ~24·30 rows per
-  source instead of 8760. Boundaries are bucket-aligned, each tier
-  reads a disjoint [lo, hi) slice, and partition pruning applies per
-  tier because the filter is a literal range on `bucket_start`.
+* `read_series` / `read_payloads` / `read_values` — the continuous-
+  aggregate read path: serve a time range from the COARSEST tier that
+  fully covers each sub-range (month for the old span, day for the
+  middle, hour for the recent tail), so a year-long query touches
+  ~12 + ~30 + ~24·30 rows per source instead of 8760. Boundaries are
+  bucket-aligned, each tier reads a disjoint [lo, hi) slice, and
+  partition pruning applies per tier because the filter is a literal
+  range on `bucket_start`.
 
-Both record ops rows (lineage/metrics) like every other stage.
+Expiries record ops rows (lineage/metrics) like every other stage.
 """
 
 from __future__ import annotations
@@ -43,10 +47,6 @@ class RetentionError(RuntimeError):
     """Refusal to expire data the coarser tier does not cover."""
 
 
-def _trunc(tier: str, col):
-    return F.date_trunc(tier, col)
-
-
 def _parse_ts(t) -> datetime:
     return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
 
@@ -63,8 +63,8 @@ def expire_tier(
 
     Safety invariant: every (source, coarser-bucket) that would lose
     fine rows must already exist in the committed coarser tier; the
-    check is one left-anti join (J5 shape) and the whole call aborts
-    with RetentionError on any uncovered bucket. Returns counts.
+    whole call aborts with RetentionError on any uncovered bucket.
+    Returns counts.
 
     The commit's snapshot token covers the rows this cycle REWROTE (the
     kept rows of the source partitions that lost buckets), reported by
@@ -78,13 +78,51 @@ def expire_tier(
     so the fine-grained series stays recoverable bit-exactly after the
     integer stats have been downsampled away. The archive write is an
     idempotent per-source-partition overwrite, like every other sink."""
+    return _expire(
+        spark, wh, job_id, tier, cutoff, "tier", ["source", "bucket_start"],
+        "retention", "expired_rows", archive_values,
+    )
+
+
+def expire_payload_tier(
+    spark: SparkSession,
+    wh: Warehouse,
+    job_id: str,
+    tier: str,
+    cutoff,
+) -> dict:
+    """Expire `agg.payload_<tier>` buckets with bucket_start < cutoff —
+    the payload twin of `expire_tier`, with the same two guards: the
+    cutoff must sit on a coarser-tier bucket boundary, and every
+    (source, coarser-bucket) losing fine payloads must already exist in
+    the committed coarser PAYLOAD tier (refusal beats data loss — the
+    coarse payload holds the same token stream bit-exactly, so nothing
+    is lost once covered). The snapshot token covers the rewritten kept
+    payload rows, as in `expire_tier`."""
+    return _expire(
+        spark, wh, job_id, tier, cutoff, "payload",
+        ["source", "bucket_start", "chunk_id"],
+        "retention_payload", "expired_payload_rows",
+    )
+
+
+def _expire(
+    spark: SparkSession, wh: Warehouse, job_id: str, tier: str, cutoff,
+    prefix: str, key_cols: list[str], stage: str, metric: str,
+    archive_values: bool = False,
+) -> dict:
+    """The one expiry of `agg.<prefix>_<tier>`: cutoff alignment, then a
+    single per-source aggregation that answers the coverage check, the
+    counts and the affected-source set together, then one in-place
+    rewrite of the affected source partitions and the commit."""
+    noun = "" if prefix == "tier" else " payload"
     coarser = COARSER.get(tier)
     if coarser is None:
-        raise ValueError(f"tier {tier!r} has no coarser tier to retain into")
+        raise ValueError(f"tier {tier!r} has no coarser{noun} tier to retain into")
     # the cutoff must sit on a COARSER-tier bucket boundary: a mid-day /
     # mid-month cutoff would pass the coverage check (the coarse bucket
     # exists) yet expire only part of that bucket's fine rows, leaving
-    # read_series with a ragged edge inside a partially-expired bucket
+    # the routed reads with a ragged edge inside a partially-expired bucket
     cut_t = _parse_ts(cutoff)
     aligned = (
         cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
@@ -92,125 +130,128 @@ def expire_tier(
         else cut_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
     )
     if aligned != cut_t:
+        ragged = (
+            "would break read_series exactness" if prefix == "tier"
+            else "would leave read_payloads unable to serve it"
+        )
         raise RetentionError(
             f"cutoff {cut_t.isoformat()} is not aligned to a {coarser}-tier "
-            f"bucket boundary; expiring part of a {coarser} bucket would break "
-            f"read_series exactness — use {aligned.isoformat()} or the next boundary"
+            f"bucket boundary; expiring part of a {coarser}{noun} bucket "
+            f"{ragged} — use {aligned.isoformat()} or the next boundary"
         )
-    tbl = f"agg.tier_{tier}"
+    tbl = f"agg.{prefix}_{tier}"
     t0 = time.perf_counter()  # the commit's wall_s metric starts here
     df = wh.read(spark, tbl)
-    cutoff_lit = F.lit(cutoff).cast("timestamp")
-    doomed = df.where(F.col("bucket_start") < cutoff_lit)
-    cover = wh.read(spark, f"agg.tier_{coarser}").select(
-        "source", F.col("bucket_start").alias("cb")
+    is_doomed = F.col("bucket_start") < F.lit(cut_t).cast("timestamp")
+    # one row per (source, coarse bucket of its doomed rows); kept rows
+    # group under cb = NULL, which never matches the coverage join. The
+    # coarser side is distinct: payload tiers hold several chunks per
+    # bucket, which would multiply the counts
+    per = df.groupBy(
+        "source", F.when(is_doomed, F.date_trunc(coarser, "bucket_start")).alias("cb")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    cover = wh.read(spark, f"agg.{prefix}_{coarser}").select(
+        "source", F.col("bucket_start").alias("cb"), F.lit(True).alias("covered")
+    ).distinct()
+    doomed_grp = F.col("cb").isNotNull()
+    n_before, n_doomed, n_uncovered, affected = (
+        per.join(cover, ["source", "cb"], "left")
+        .agg(
+            F.sum("n"),
+            F.sum(F.when(doomed_grp, F.col("n"))),
+            F.count_if(doomed_grp & F.col("covered").isNull()),
+            F.collect_set(F.when(doomed_grp, F.col("source"))),
+        )
+        .first()
     )
-    uncovered = (
-        doomed.select("source", _trunc(coarser, "bucket_start").alias("cb"))
-        .distinct()
-        .join(cover, ["source", "cb"], "left_anti")
-    )
-    n_uncovered = uncovered.count()
     if n_uncovered:
         raise RetentionError(
             f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
-            f"have no committed {coarser}-tier row; refusing to expire"
+            f"have no committed {coarser}-tier{noun} row; refusing to expire"
         )
-    n_before, n_doomed = df.agg(
-        F.count(F.lit(1)), F.count_if(F.col("bucket_start") < cutoff_lit)
-    ).first()
-    if n_doomed and archive_values:
-        from drought_t_spark.operators.value_history import (
-            pack_value_history,
-            unpack_value_history,
-        )
-
-        # partitioned by (source, cb=yyyyMMdd of the coarse bucket):
-        # successive retention cycles have strictly increasing ALIGNED
-        # cutoffs, so each cycle's coarse buckets are NORMALLY disjoint
-        # from every earlier cycle's — dynamic overwrite then replaces
-        # only THIS cycle's buckets (crash-replay of one cycle stays
-        # idempotent) and never destroys previously archived history.
-        # Partitioning by source alone did exactly that (one cycle wiped
-        # the whole source=X partition, including older cycles' rows).
-        # cb is the fixed-width yyyyMMdd string (string order == date
-        # order); partition values read back as strings (the session
-        # disables partition-type inference), so the read path's literal
-        # range filter prunes partitions exactly.
-        #
-        # LATE ARRIVALS break the disjointness: fine rows landing in an
-        # already-archived coarse bucket would make dynamic overwrite
-        # replace that (source, cb) partition with only the late rows,
-        # silently destroying the earlier archive. So overlapping
-        # partitions are MERGED: unpack the existing payload, drop any
-        # fine bucket the live tier re-supplies (the live row is the
-        # most recent computation and wins), union, repack. The overlap
-        # probe is one broadcast semi-join against this cycle's key set
-        # and the unpack cost is paid only for genuinely overlapping
-        # partitions — the common disjoint cycle takes the fast path
-        # untouched. Replay-idempotent: re-running a crashed cycle finds
-        # its own merged write, subtracts the doomed rows it re-supplies,
-        # and repacks identical content.
-        hist_tbl = f"agg.value_history_{tier}"
-        pack_src = doomed
-        cb_expr = F.date_format(_trunc(coarser, "bucket_start"), "yyyyMMdd")
-        if wh.exists(hist_tbl):
-            cycle_keys = doomed.select("source", cb_expr.alias("cb")).distinct()
-            overlap = wh.read(spark, hist_tbl).join(
-                F.broadcast(cycle_keys), ["source", "cb"], "left_semi"
-            )
-            if overlap.limit(1).count():
-                old_only = (
-                    unpack_value_history(overlap)
-                    .join(
-                        doomed.select("source", "bucket_start"),
-                        ["source", "bucket_start"],
-                        "left_anti",
-                    )
-                    .withColumn("gap_filled", F.lit(False))
-                )
-                pack_src = doomed.select(
-                    "source", "bucket_start", "value", "gap_filled"
-                ).unionByName(
-                    old_only.select("source", "bucket_start", "value", "gap_filled")
-                )
-        hist = pack_value_history(pack_src, coarser).withColumn(
-            "cb", F.date_format("bucket_start", "yyyyMMdd")
-        )
-        wh.write_partitioned(hist, hist_tbl, ["source", "cb"])
+    n_before, n_doomed = n_before or 0, n_doomed or 0
     token = "0:0"
     if n_doomed:
-        # rewrite only the source partitions that actually lose rows —
-        # dynamic partition overwrite leaves the others untouched. A
-        # fully-expired source writes NO rows, so dynamic overwrite
-        # would silently keep its old partition: those are dropped
-        # explicitly (Iceberg: the same DELETE handles both; the
-        # collected list is bounded by the affected-source count).
-        affected = doomed.select("source").distinct()
-        # materialized BEFORE the overwrite: the rewrite reads the same
-        # files it replaces, so the kept rows must leave the table first
-        kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
-            F.col("bucket_start") >= cutoff_lit
-        ).localCheckpoint(eager=True)
-        gone = [
-            r["source"]
-            for r in affected.join(
-                kept.select("source").distinct(), ["source"], "left_anti"
-            ).collect()
-        ]
-        _, token = wh.write_partitioned(
-            kept, tbl, ["source"], key_cols=["source", "bucket_start"]
+        if archive_values:
+            _archive_values(spark, wh, tier, coarser, df.where(is_doomed))
+        # rewrite only the source partitions that lose rows; a source
+        # whose rows are all doomed comes out empty and is dropped
+        affected = sorted(affected)
+        _, token = wh.overwrite_partitions(
+            df.where(F.col("source").isin(affected) & ~is_doomed),
+            tbl, "source", affected, key_cols,
         )
-        if gone:
-            wh.drop_partitions(tbl, "source", gone)
     CP.record_commit(
-        wh, job_id, f"retention_{tier}", [f"{tier}:retention"],
+        wh, job_id, f"{stage}_{tier}", [f"{tier}:{stage}"],
         snapshot_id=token,
         rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_rows": float(n_doomed),
-                 "wall_s": time.perf_counter() - t0},
+        metrics={metric: float(n_doomed), "wall_s": time.perf_counter() - t0},
     )
     return {"expired": n_doomed, "kept": n_before - n_doomed}
+
+
+def _archive_values(
+    spark: SparkSession, wh: Warehouse, tier: str, coarser: str, doomed: DataFrame
+) -> None:
+    """Pack the doomed rows' `value` series into `agg.value_history_<tier>`."""
+    from drought_t_spark.operators.value_history import (
+        pack_value_history,
+        unpack_value_history,
+    )
+
+    # partitioned by (source, cb=yyyyMMdd of the coarse bucket):
+    # successive retention cycles have strictly increasing ALIGNED
+    # cutoffs, so each cycle's coarse buckets are NORMALLY disjoint
+    # from every earlier cycle's — dynamic overwrite then replaces
+    # only THIS cycle's buckets (crash-replay of one cycle stays
+    # idempotent) and never destroys previously archived history.
+    # Partitioning by source alone did exactly that (one cycle wiped
+    # the whole source=X partition, including older cycles' rows).
+    # cb is the fixed-width yyyyMMdd string (string order == date
+    # order); partition values read back as strings (the session
+    # disables partition-type inference), so the read path's literal
+    # range filter prunes partitions exactly.
+    #
+    # LATE ARRIVALS break the disjointness: fine rows landing in an
+    # already-archived coarse bucket would make dynamic overwrite
+    # replace that (source, cb) partition with only the late rows,
+    # silently destroying the earlier archive. So overlapping
+    # partitions are MERGED: unpack the existing payload, drop any
+    # fine bucket the live tier re-supplies (the live row is the
+    # most recent computation and wins), union, repack. The overlap
+    # probe is one broadcast semi-join against this cycle's key set
+    # and the unpack cost is paid only for genuinely overlapping
+    # partitions — the common disjoint cycle takes the fast path
+    # untouched. Replay-idempotent: re-running a crashed cycle finds
+    # its own merged write, subtracts the doomed rows it re-supplies,
+    # and repacks identical content.
+    hist_tbl = f"agg.value_history_{tier}"
+    pack_src = doomed
+    cb_expr = F.date_format(F.date_trunc(coarser, "bucket_start"), "yyyyMMdd")
+    if wh.exists(hist_tbl):
+        cycle_keys = doomed.select("source", cb_expr.alias("cb")).distinct()
+        overlap = wh.read(spark, hist_tbl).join(
+            F.broadcast(cycle_keys), ["source", "cb"], "left_semi"
+        )
+        if overlap.limit(1).count():
+            old_only = (
+                unpack_value_history(overlap)
+                .join(
+                    doomed.select("source", "bucket_start"),
+                    ["source", "bucket_start"],
+                    "left_anti",
+                )
+                .withColumn("gap_filled", F.lit(False))
+            )
+            pack_src = doomed.select(
+                "source", "bucket_start", "value", "gap_filled"
+            ).unionByName(
+                old_only.select("source", "bucket_start", "value", "gap_filled")
+            )
+    hist = pack_value_history(pack_src, coarser).withColumn(
+        "cb", F.date_format("bucket_start", "yyyyMMdd")
+    )
+    wh.write_partitioned(hist, hist_tbl, ["source", "cb"])
 
 
 def read_values(
@@ -417,83 +458,3 @@ def read_payloads(
         "source", "tier", "bucket_start", "chunk_id", "n_tokens",
         decode_tokens_udf("payload").alias("tokens"),
     )
-
-
-def expire_payload_tier(
-    spark: SparkSession,
-    wh: Warehouse,
-    job_id: str,
-    tier: str,
-    cutoff,
-) -> dict:
-    """Expire `agg.payload_<tier>` buckets with bucket_start < cutoff —
-    the payload twin of `expire_tier`, with the same two guards: the
-    cutoff must sit on a coarser-tier bucket boundary, and every
-    (source, coarser-bucket) losing fine payloads must already exist in
-    the committed coarser PAYLOAD tier (left-anti coverage check;
-    refusal beats data loss — the coarse payload holds the same token
-    stream bit-exactly, so nothing is lost once covered). The snapshot
-    token covers the rewritten kept payload rows, as in `expire_tier`."""
-    coarser = COARSER.get(tier)
-    if coarser is None:
-        raise ValueError(f"tier {tier!r} has no coarser payload tier to retain into")
-    cut_t = _parse_ts(cutoff)
-    aligned = (
-        cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
-        if coarser == "day"
-        else cut_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-    )
-    if aligned != cut_t:
-        raise RetentionError(
-            f"cutoff {cut_t.isoformat()} is not aligned to a {coarser}-tier "
-            f"bucket boundary; expiring part of a {coarser} payload bucket "
-            f"would leave read_payloads unable to serve it — use "
-            f"{aligned.isoformat()} or the next boundary"
-        )
-    tbl = f"agg.payload_{tier}"
-    t0 = time.perf_counter()  # the commit's wall_s metric starts here
-    df = wh.read(spark, tbl)
-    cutoff_lit = F.lit(cut_t).cast("timestamp")
-    doomed = df.where(F.col("bucket_start") < cutoff_lit)
-    cover = wh.read(spark, f"agg.payload_{coarser}").select(
-        "source", F.col("bucket_start").alias("cb")
-    )
-    uncovered = (
-        doomed.select("source", _trunc(coarser, "bucket_start").alias("cb"))
-        .distinct()
-        .join(cover, ["source", "cb"], "left_anti")
-    )
-    n_uncovered = uncovered.count()
-    if n_uncovered:
-        raise RetentionError(
-            f"{n_uncovered} (source, {coarser}-bucket) groups below the cutoff "
-            f"have no committed {coarser}-tier payload row; refusing to expire"
-        )
-    n_before, n_doomed = df.agg(
-        F.count(F.lit(1)), F.count_if(F.col("bucket_start") < cutoff_lit)
-    ).first()
-    token = "0:0"
-    if n_doomed:
-        affected = doomed.select("source").distinct()
-        kept = df.join(F.broadcast(affected), ["source"], "left_semi").where(
-            F.col("bucket_start") >= cutoff_lit
-        ).localCheckpoint(eager=True)
-        gone = [
-            r["source"]
-            for r in affected.join(
-                kept.select("source").distinct(), ["source"], "left_anti"
-            ).collect()
-        ]
-        _, token = wh.write_partitioned(
-            kept, tbl, ["source"], key_cols=["source", "bucket_start", "chunk_id"]
-        )
-        if gone:
-            wh.drop_partitions(tbl, "source", gone)
-    CP.record_commit(
-        wh, job_id, f"retention_payload_{tier}", [f"{tier}:retention_payload"],
-        snapshot_id=token,
-        rows_in=n_before, rows_out=n_before - n_doomed,
-        metrics={"expired_payload_rows": float(n_doomed),
-                 "wall_s": time.perf_counter() - t0},
-    )
-    return {"expired": n_doomed, "kept": n_before - n_doomed}

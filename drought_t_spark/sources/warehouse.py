@@ -2,11 +2,14 @@
 
 Iceberg is the production target (`writeTo(...).overwritePartitions()`,
 snapshot ids as checkpoint tokens); this sandbox has no Iceberg runtime
-jar, so the shim provides the same three primitives over a plain
+jar, so the shim provides the same four primitives over a plain
 parquet warehouse with hive-style partitioning:
 
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
+* in-place rewrite — `overwrite_partitions` replaces a named set of
+  partitions with a frame that may read those same partitions, and
+  drops the ones the frame left empty (Iceberg: `overwrite(isin)`);
 * append — `append_rows` writes the ops tables' driver-produced rows
   as one zstd parquet file per call with pyarrow (no Spark job),
   published by an atomic rename so no reader ever sees a partial file;
@@ -23,7 +26,9 @@ call sites do not change shape.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -112,13 +117,42 @@ class Warehouse:
         )
         os.replace(tmp, os.path.join(d, name))
 
+    def overwrite_partitions(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_col: str,
+        values: list[str],
+        key_cols: list[str] | None = None,
+    ) -> tuple[int, str] | None:
+        """Replace partitions `values` of `table` with the rows of `df`
+        (Iceberg: `df.writeTo(t).overwrite(col(partition_col).isin(values))`).
+        Every row of `df` must lie in `values`.
+
+        `df` may read the partitions it replaces: dynamic overwrite stages
+        the output and swaps each partition in at job commit, after every
+        task has read its input, and a failed job discards the staging
+        directory, leaving the table as it was. A partition in `values`
+        that the write did not produce is dropped after the commit; the
+        written set is observed on the write itself, so finding it costs
+        no extra scan. Returns `write_partitioned`'s commit report."""
+        obs = Observation()
+        df = df.observe(obs, F.collect_set(partition_col).alias("written"))
+        report = self.write_partitioned(df, table, [partition_col], key_cols)
+        written = set(obs.get["written"])
+        self.drop_partitions(table, partition_col, [v for v in values if v not in written])
+        return report
+
     def drop_partitions(self, table: str, partition_col: str, values: list[str]) -> None:
         """Remove whole hive partitions (Iceberg stand-in for a
-        partition-predicate DELETE + expire_snapshots)."""
-        import shutil
-
-        for v in values:
-            shutil.rmtree(
-                os.path.join(self.path(table), f"{partition_col}={v}"),
-                ignore_errors=True,
-            )
+        partition-predicate DELETE + expire_snapshots). Spark escapes
+        characters such as `:`, `/`, `=` and `%` in partition directory
+        names (`st:1` is written as `source=st%3A1`), so directories are
+        matched by their unescaped value."""
+        d = self.path(table)
+        if not values or not os.path.isdir(d):
+            return
+        prefix, doomed = f"{partition_col}=", set(values)
+        for name in os.listdir(d):
+            if name.startswith(prefix) and unquote(name[len(prefix):]) in doomed:
+                shutil.rmtree(os.path.join(d, name), ignore_errors=True)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from drought_t_spark.config import DEFAULT, EngineConfig
@@ -120,12 +120,11 @@ def seal_payload_partials(spark: SparkSession, wh,
             .join(F.broadcast(affected), ["source"], "left_semi")
             .select(*_RAW_COLS)
         )
-    # materialize before the overwrite (the rewrite reads files it
-    # replaces); raw rows only — no aggregation, payloads are packed
-    # later once their bucket is complete
-    sealed = u.localCheckpoint(eager=True)
+    # raw rows only — no aggregation, payloads are packed later once
+    # their bucket is complete. Every affected source has partial rows,
+    # so dynamic overwrite replaces exactly the partitions it reads
     _, token = wh.write_partitioned(
-        sealed, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
+        u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
     )
     CP.record_commit(
         wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
@@ -171,9 +170,12 @@ def pack_complete_buckets(
     the idempotent batch re-pack reconciles genuine late data.
 
     Only source partitions with complete rows are rewritten in either
-    table; a source whose tail empties is dropped explicitly (dynamic
-    overwrite cannot delete a partition it does not write). Returns the
-    number of (source, bucket, chunk) payload rows committed."""
+    table, each by one in-place overwrite that reads the partitions it
+    replaces: the tier write always produces every affected source (its
+    new payloads or its pass-through rows), and the tail shrink goes
+    through `Warehouse.overwrite_partitions`, which drops a source whose
+    tail empties. Returns the number of (source, bucket, chunk) payload
+    rows committed."""
     from drought_t_spark.operators.rollup import pack_payloads
     from drought_t_spark.ops import checkpoints as CP
 
@@ -186,18 +188,19 @@ def pack_complete_buckets(
     tail = wh.read(spark, PAYLOAD_TAIL_TBL)
     bucket = F.date_trunc("hour", F.col("ts"))
     complete = tail.where(bucket < F.lit(cutoff))
-    affected = complete.select("source").distinct()
-    n_affected = affected.count()
-    if n_affected == 0:
+    affected = sorted(
+        r.source for r in complete.select("source").distinct().collect()
+    )
+    if not affected:
         return 0
+    in_affected = F.col("source").isin(affected)
 
     late_dropped = 0
     fresh = complete
     if wh.exists("agg.payload_hour"):
         packed_keys = (
             wh.read(spark, "agg.payload_hour")
-            .join(F.broadcast(affected), ["source"], "left_semi")
-            .where(F.col("bucket_start") < F.lit(cutoff))
+            .where(in_affected & (F.col("bucket_start") < F.lit(cutoff)))
             .select("source", "bucket_start").distinct()
         )
         keyed = complete.withColumn("bucket_start", bucket)
@@ -209,43 +212,28 @@ def pack_complete_buckets(
                 packed_keys, ["source", "bucket_start"], "left_anti"
             ).drop("bucket_start")
 
-    # eager checkpoint: `pay` is consumed twice (count + union) and
-    # Spark has no plan-level CSE — without it the shuffle+sort+encode
-    # would re-run per consumer; volume is watermark-bounded (only the
-    # tail's complete buckets), so the copy is small at any scale
-    pay = pack_payloads(fresh.select(*_RAW_COLS), "hour", cfg).localCheckpoint(
-        eager=True
+    # the new payloads are counted in flight, so the shuffle+sort+encode
+    # runs once, inside the tier write
+    pay_obs = Observation()
+    out = pack_payloads(fresh.select(*_RAW_COLS), "hour", cfg).observe(
+        pay_obs, F.count(F.lit(1)).alias("n")
     )
-    n_new = pay.count()
-    out = pay
     if wh.exists("agg.payload_hour"):
         # pass-through rows of the affected sources: fresh ∩ packed = ∅
         # by the late split above, so a plain union is duplicate-free
-        out = out.unionByName(
-            wh.read(spark, "agg.payload_hour")
-            .join(F.broadcast(affected), ["source"], "left_semi")
-        )
-    # materialize before the overwrite (the pass-through reads files the
-    # dynamic overwrite replaces)
-    committed = out.localCheckpoint(eager=True)
+        out = out.unionByName(wh.read(spark, "agg.payload_hour").where(in_affected))
     _, token = wh.write_partitioned(
-        committed, "agg.payload_hour", ["source"],
+        out, "agg.payload_hour", ["source"],
         key_cols=["source", "bucket_start", "chunk_id"],
     )
+    n_new = pay_obs.get["n"]
 
     # shrink the tail: rewrite affected sources to their incomplete
-    # remainder; an emptied source partition must be dropped explicitly
-    remainder = (
-        tail.join(F.broadcast(affected), ["source"], "left_semi")
-        .where(bucket >= F.lit(cutoff))
-        .localCheckpoint(eager=True)
+    # remainder (a source whose tail empties is dropped)
+    wh.overwrite_partitions(
+        tail.where(in_affected & (bucket >= F.lit(cutoff))),
+        PAYLOAD_TAIL_TBL, "source", affected,
     )
-    keep = {r.source for r in remainder.select("source").distinct().collect()}
-    gone = [r.source for r in affected.collect() if r.source not in keep]
-    if keep:
-        wh.write_partitioned(remainder, PAYLOAD_TAIL_TBL, ["source"])
-    if gone:
-        wh.drop_partitions(PAYLOAD_TAIL_TBL, "source", gone)
 
     CP.record_commit(
         wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
@@ -253,7 +241,7 @@ def pack_complete_buckets(
         rows_in=n_new + late_dropped, rows_out=n_new,
         metrics={
             "late_rows_dropped": float(late_dropped),
-            "sources_rewritten": float(n_affected),
+            "sources_rewritten": float(len(affected)),
         },
     )
     return n_new

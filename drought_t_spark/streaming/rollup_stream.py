@@ -123,8 +123,6 @@ def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if not sid:
             sid.append(_stream_identity(checkpoint_dir))
-        # '-' separator: hive partition dirs escape ':' (%3A), which
-        # would desync drop_partitions' path from the read-back value
         part = R.rollup_hour(batch_df).withColumn(
             "batch_key", F.lit(f"{sid[0]}-{int(batch_id)}")
         )
@@ -239,8 +237,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
         F.col("batch_key").isin(batch_keys)
     )
     n_partials = partials.count()  # BEFORE the partitions are dropped
-    # merge ONLY the affected source partitions; materialize before the
-    # overwrite (the rewrite reads files it replaces)
+    # merge ONLY the affected source partitions
     affected = partials.select("source").distinct()
     tier_affected = (
         wh.read(spark, "agg.tier_hour")
@@ -255,10 +252,9 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compa
     u = partials.select(*_STAT_COLS)
     if tier_affected is not None:
         u = u.unionByName(tier_affected)
-    merged = _finish(
-        u.groupBy("source", "bucket_start").agg(*_merge_agg())
-    ).localCheckpoint(eager=True)
-    # dynamic overwrite replaces exactly the affected source partitions
+    merged = _finish(u.groupBy("source", "bucket_start").agg(*_merge_agg()))
+    # dynamic overwrite replaces exactly the affected source partitions,
+    # swapping them in at job commit, after the merge has read them
     n_out, token = wh.write_partitioned(
         merged, "agg.tier_hour", ["source"], key_cols=["source", "bucket_start"]
     )

@@ -321,3 +321,35 @@ def test_read_payloads_routed_reconstruction(spark, tmp_path):
     got2 = _concat_tokens(read_payloads(spark, wh, lo, hi).toPandas())
     for src in want:
         assert got2[src] == want[src], f"post-expiry stream mismatch for {src}"
+
+
+def test_expire_drops_fully_expired_source_with_escaped_name(spark, tmp_path):
+    """A source whose rows all lie below the cutoff must leave the table,
+    also when Spark escapes its name in the partition directory
+    (`st:1` is stored as `source=st%3A1`). Checked for both expiries;
+    the payload tables hold two chunks per bucket, so the coverage join
+    must not multiply the counts."""
+    from datetime import datetime, timedelta
+
+    from drought_t_spark.plans.retention import expire_payload_tier
+
+    wh = Warehouse(str(tmp_path / "wh_escaped"))
+    d1, d2 = datetime(2024, 1, 1), datetime(2024, 1, 2)
+    hours = {"st:1": [d1 + timedelta(hours=h) for h in range(6)],
+             "plain": [d + timedelta(hours=h) for d in (d1, d2) for h in range(6)]}
+    days = {"st:1": [d1], "plain": [d1, d2]}
+    for prefix, chunks in (("tier", [0]), ("payload", [0, 1])):
+        for tier, buckets in (("hour", hours), ("day", days)):
+            rows = [(s, b, c) for s, bs in buckets.items() for b in bs for c in chunks]
+            wh.write_partitioned(
+                spark.createDataFrame(rows, "source string, bucket_start timestamp, chunk_id int"),
+                f"agg.{prefix}_{tier}", ["source"],
+            )
+    cutoff = "2024-01-02 00:00:00"
+    assert expire_tier(spark, wh, "jobE", "hour", cutoff) == {"expired": 12, "kept": 6}
+    assert expire_payload_tier(spark, wh, "jobE", "hour", cutoff) == {
+        "expired": 24, "kept": 12}
+    for prefix, n in (("tier", 6), ("payload", 12)):
+        left = wh.read(spark, f"agg.{prefix}_hour")
+        assert {r.source for r in left.select("source").distinct().collect()} == {"plain"}
+        assert left.where(F.col("bucket_start") >= cutoff).count() == left.count() == n
