@@ -20,6 +20,17 @@ window per (source, chunk), and make the result exact across edges:
   suffices — contiguity is not value-dependent, so chains of any length
   collapse in one grouping (unlike IC pooling's fixed point).
 
+Measured for the drought method itself (4 vCPUs, local[4]): one
+10^6-bucket hour-tier source (114 years, 3% gaps) through
+`drought_events_for_tier` completes as ONE task of the grouped NumPy
+kernel — 2.75 s warm (6.9 s cold), 1.6 GB peak RSS of the whole process
+tree, the same 26169 events as the window DAG it replaced (9.2 s warm,
+2.1 GB). The method therefore no longer needs chunking: a source's whole
+calendar is a few arrays of 8 MB in one Python worker, linear in its
+length. This module stays for the declared window queries that still
+partition by source (`ma_chunked`, `runs_events_chunked`), where the
+reason above holds.
+
 Parity with the global-window operators is asserted by
 tests/test_chunked.py on the F2 fixture, and `runs_events_chunked` /
 `ma_chunked` in __spark_entry__ are oracle-checked against the SAME

@@ -6,6 +6,7 @@ SURVEY.md §5.1). Also a tiny hand-computed run-extraction check.
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from drought_t_spark import local_ref, synth
 from drought_t_spark.config import EngineConfig
@@ -55,6 +56,29 @@ def _compare(spark_pdf: pd.DataFrame, ref: pd.DataFrame, site: str):
     np.testing.assert_array_equal(got.excluded.to_numpy(), want.excluded.to_numpy(), err_msg=site)
 
 
+def _parity(spark, pdf: pd.DataFrame, tier_df, tier: str, cfg: EngineConfig) -> pd.DataFrame:
+    """Events of every site of `pdf` (= `tier_df`) equal
+    `local_ref.run_site`'s, in the default Arrow batches and in 3-row
+    ones: every source's series then spans several batches, so each
+    group goes through grouped_stream's carry path. Returns the
+    default-batch events."""
+    events = drought_events_for_tier(tier_df, tier, cfg).toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        small_batches = drought_events_for_tier(tier_df, tier, cfg).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    for site, g in pdf.groupby("site"):
+        ref = local_ref.run_site(
+            g.rename(columns={"date": "bucket_start"}), tier=tier, cfg=cfg
+        )
+        _compare(events[events.source == site], ref, site)
+        _compare(small_batches[small_batches.source == site], ref, site)
+    return events
+
+
 @pytest.mark.parametrize("cfg", [
     EngineConfig(),                                            # fixture defaults
     EngineConfig(threshold_mode="fixed", pooling="none"),      # TH2, unpooled
@@ -62,28 +86,74 @@ def _compare(spark_pdf: pd.DataFrame, ref: pd.DataFrame, site: str):
 ], ids=["default", "fixed-unpooled", "heavy-pool"])
 def test_site_partition_parity(spark, series, cfg):
     pdf, tier_df = series
-    events = drought_events_for_tier(tier_df, "day", cfg).toPandas()
-    # 3-row Arrow batches: every source's run table spans several
-    # batches, so each group goes through grouped_stream's carry path
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        small_batches = drought_events_for_tier(tier_df, "day", cfg).toPandas()
-    finally:
-        spark.conf.set(key, old)
-    for site, g in pdf.groupby("site"):
-        ref = local_ref.run_site(
-            g.rename(columns={"date": "bucket_start"}), tier="day", cfg=cfg
-        )
-        _compare(events[events.source == site], ref, site)
-        _compare(small_batches[small_batches.source == site], ref, site)
+    events = _parity(spark, pdf, tier_df, "day", cfg)
     # the edge sources really hit their edge
     assert "edge_single" not in set(events.source)
     assert (events.source == "edge_one_event").sum() == 1
     trailing = events[events.source == "edge_trailing"]
     assert len(trailing) > 1
     assert trailing.termination.max() == pdf[pdf.site == "edge_trailing"].date.max()
+
+
+def _seasonal_sites(dates: pd.DatetimeIndex, period: int, seed: int) -> pd.DataFrame:
+    """Three seeded sites on `dates`: a `period`-bucket cycle, noise and
+    a few dips; ~3% of buckets dropped and ~1% NaN values (missing
+    buckets, like gaps)."""
+    rng = np.random.default_rng(seed)
+    n = len(dates)
+    frames = []
+    for k in range(3):
+        val = 50.0 + 10.0 * k + 20.0 * np.sin(2 * np.pi * np.arange(n) / period)
+        val += rng.normal(0.0, 3.0, n)
+        for s in rng.integers(0, n - 8, 4):
+            val[s:s + rng.integers(3, 8)] -= 30.0
+        val[rng.random(n) < 0.01] = np.nan
+        keep = rng.random(n) >= 0.03
+        frames.append(pd.DataFrame({"site": f"site_{k}", "date": dates[keep], "value": val[keep]}))
+    return pd.concat(frames, ignore_index=True)
+
+
+@pytest.mark.parametrize("tier,dates,period", [
+    # six weeks of hours from a Thursday: hour-of-week positions wrap
+    # (Spark dayofweek, Sunday = 1) and the leap day falls inside
+    ("hour", pd.date_range("2020-02-20", periods=24 * 7 * 6, freq="h"), 24),
+    # six years of months over the 2016 leap year: calendar months of
+    # 28-31 days, month-of-year positions
+    ("month", pd.date_range("2014-01-01", "2019-12-01", freq="MS"), 12),
+], ids=["hour-weeks", "month-leap-year"])
+def test_calendar_tier_parity(spark, tier, dates, period):
+    pdf = _seasonal_sites(dates, period, seed=7)
+    tier_df = series_to_tier(spark.createDataFrame(pdf), ts_col="date")
+    for cfg in (EngineConfig(ma_window=3), EngineConfig(ma_window=1, threshold_mode="fixed")):
+        events = _parity(spark, pdf, tier_df, tier, cfg)
+        assert len(events) > 0
+
+
+def test_session_time_zone_calendar(spark):
+    """Calendar days, cycle positions and event dates are the session
+    time zone's, as for Spark's own date functions: the same wall-clock
+    series gives the same events in UTC and across New York's
+    daylight-saving changes (23- and 25-hour days)."""
+    sql = """SELECT 's' AS source, t AS bucket_start,
+                    50 + 20 * sin(2 * pi() * dayofyear(t) / 365.25)
+                       - 30 * CAST(pmod(dayofyear(t) * 37, 23) < 5 AS INT) AS value
+             FROM (SELECT explode(sequence(timestamp'2019-01-01', timestamp'2021-12-31',
+                                           interval 1 day)) AS t)"""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set(key, tz)
+            ev = drought_events_for_tier(spark.sql(sql), "day", EngineConfig(ma_window=3))
+            out[tz] = ev.select(
+                "event_id", "duration", "severity", "pooled", "excluded",
+                *[F.date_format(c, "yyyy-MM-dd HH:mm").alias(c) for c in ("onset", "termination")],
+            ).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert len(out["UTC"]) > 0
+    pd.testing.assert_frame_equal(out["UTC"], out["America/New_York"])
 
 
 def test_constant_site_has_no_events(spark, series):

@@ -48,14 +48,12 @@ def main(argv=None) -> None:
     spark = build_session(f"drought-{a.tier}", master=a.master)
     wh = Warehouse(a.warehouse)
     tier_df = wh.read(spark, f"agg.tier_{a.tier}")
-    events = drought_events_for_tier(tier_df, a.tier, cfg).localCheckpoint(
-        eager=True  # events are consumed twice below (table + CSV)
-    )
-    n, _ = wh.write_partitioned(
-        events, f"drought.events_{a.tier}", ["source"], key_cols=["source", "event_id"]
-    )
+    events = drought_events_for_tier(tier_df, a.tier, cfg)
+    table = f"drought.events_{a.tier}"
+    n, _ = wh.write_partitioned(events, table, ["source"], key_cols=["source", "event_id"])
     if a.export_csv:
-        export_events_csv(events, a.export_csv, single_file=True)
+        # from the committed table: the method runs once, for the write
+        export_events_csv(wh.read(spark, table), a.export_csv, single_file=True)
     print(f"drought job tier={a.tier}: {n} events committed", file=sys.stderr)
 
 
