@@ -245,13 +245,23 @@ def pack_payloads(
     a single group's token count is bounded by one chunk's span — the
     spill-safety bound from SURVEY.md §4.
 
-    Shape: repartition by group key + sortWithinPartitions +
+    Shape: repartition by (source, day bucket) + sortWithinPartitions +
     mapInArrow — ONE plain row shuffle, whole-partition Arrow streams,
     group boundaries found vectorized in NumPy, and each group's token
     stream taken as a single zero-copy slice of the Arrow list-values
     buffer (see `_encode_arrow_stream`; the pandas kernel's per-row
-    object materialization cost more than the codec). Rejected shapes,
-    both measured on 118M tokens at local[8..32]:
+    object materialization cost more than the codec).
+    The shuffle key is (source, day) rather than the group key (source,
+    bucket, chunk). The group key scatters each source's hours over
+    every task, so every task wrote a file into nearly every `source=`
+    partition of the payload table (107 `payload_hour` files for the
+    benchmark's 32 sources on 4 tasks). By (source, day) each
+    source-day is one task's, and `payload_hour` gets as many files as
+    `payload_day` (41). It is the grouping `cascade_payloads` already
+    shuffles the day tier by, so no task holds more of one hot source
+    than the day cascade's already does: the job gets no more
+    skew-bound than it was. Rejected shapes, both measured on 118M
+    tokens at local[8..32]:
       * collect_list→array_sort→flatten→pandas_udf: same data movement
         but builds every group as JVM object trees (ObjectHashAggregate)
         — 4-8× slower wall, ~20× kernel time from the allocation storm;
@@ -285,8 +295,10 @@ def pack_payloads(
             "chunk_id", "tokens", "n_tok", "seq",
         )
     )
+    # the UTC day of the bucket start is a function of the group key, so
+    # every (source, bucket, chunk) group still lands whole in one task
     shuffled = base if pre_partitioned else base.repartition(
-        "source", "bs_epoch", "chunk_id"
+        "source", F.floor(F.col("bs_epoch") / 86400)
     )
     # Sort by (source, seq) only: ts := epoch + seq minutes (the T1
     # contract, with_event_time), so bs_epoch and chunk_id are

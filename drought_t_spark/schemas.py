@@ -20,7 +20,11 @@ SEQUENCES = T.StructType(
     ]
 )
 
-# T2 — rollup tier (hour/day/month share the schema; FIXTURES.md §F5)
+# T2 — rollup tiers (FIXTURES.md §F5). Every tier is written as two
+# tables: stats (`agg.tier_{hour,day,month}`, one shared schema) and
+# TSZ1 token payloads (`agg.payload_{hour,day,month}`).
+# `Warehouse.read(..., schema=...)` hands these to the reader, so
+# reading a tier launches no schema-inference job.
 TIER = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
@@ -32,6 +36,14 @@ TIER = T.StructType(
         T.StructField("n_tok_avg", T.DoubleType(), True),
         T.StructField("value", T.DoubleType(), True),
         T.StructField("gap_filled", T.BooleanType(), False),
+    ]
+)
+
+PAYLOAD = T.StructType(
+    [
+        T.StructField("source", T.StringType(), False),
+        T.StructField("bucket_start", T.TimestampType(), False),
+        T.StructField("chunk_id", T.IntegerType(), False),
         T.StructField("payload", T.BinaryType(), True),
         T.StructField("payload_codec", T.StringType(), True),
         T.StructField("payload_n_tokens", T.LongType(), True),

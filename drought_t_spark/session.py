@@ -16,6 +16,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """`spark.driver.memory`: `SPARK_DRIVER_MEMORY` if set, else half
+    the host's physical memory, capped at 32g. A local-mode driver runs
+    every executor too, so a heap above the host's RAM is not a limit:
+    a large job grows the JVM until the kernel kills it rather than
+    failing with a Java heap error."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 32 * 1024)}m"
+
+
 def build_session(
     app_name: str = "drought_t_spark",
     master: str | None = None,
@@ -68,7 +81,7 @@ def build_session(
         # scan in parallel; single-row-group files still collapse to
         # one effective task (empty splits cost ~ms). Guide §6.
         "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "32g"),
+        "spark.driver.memory": driver_memory(),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     }

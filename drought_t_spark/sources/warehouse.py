@@ -53,8 +53,16 @@ class Warehouse:
             for f in os.listdir(p)
         )
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+    def read(
+        self, spark: SparkSession, table: str, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """Read `table`. Without `schema` Spark infers it, which costs one
+        Spark job (a scan of the table's parquet footers); with the
+        table's declared schema (`drought_t_spark.schemas`) the read
+        launches none. A file that lacks a declared column reads it as
+        null."""
+        r = spark.read if schema is None else spark.read.schema(schema)
+        return r.parquet(self.path(table))
 
     def write_partitioned(
         self,
@@ -87,9 +95,11 @@ class Warehouse:
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64(*key_cols).cast("decimal(38,0)")).alias("h"),
             )
-        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
+            # a write option, not the session conf, so concurrent writes
+            # from several threads share no mutable setting
             df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
             .parquet(self.path(table))
         )

@@ -386,3 +386,125 @@ def test_zero_padded_source_ids_survive_every_tier(spark, tmp_path):
         assert got == want, tier
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
     assert ln[ln.stage == "hour"].rows_out.sum() == wh.read(spark, "agg.tier_hour").count()
+
+
+_TABLES = [f"agg.{k}_{t}" for k in ("tier", "payload") for t in ("hour", "day", "month")]
+
+
+def _tables(spark, wh):
+    """Every tier and payload table, as sorted pandas frames."""
+    out = {}
+    for t in _TABLES:
+        pdf = wh.read(spark, t).toPandas()
+        cols = sorted(pdf.columns)
+        out[t] = pdf[cols].sort_values(
+            [c for c in ("source", "bucket_start", "chunk_id") if c in cols]
+        ).reset_index(drop=True)
+    return out
+
+
+@pytest.fixture(scope="module")
+def single_shot(spark, seqs, tmp_path_factory):
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_single_shot")))
+    run_rollup_job(spark, wh, seqs, "jobS", CFG, n_groups=1)
+    return _tables(spark, wh)
+
+
+@pytest.mark.parametrize("failing,stage", [("agg.payload_hour", "hour"),
+                                           ("agg.payload_day", "day")])
+def test_failed_payload_write_commits_nothing_and_stops_its_sibling(
+        spark, seqs, tmp_path, monkeypatch, single_shot, failing, stage):
+    """A tier's stats and payload writes run side by side. When the payload
+    write raises while the stats write of the same tier succeeds, the
+    error surfaces, the tier does not commit, the stats write has
+    finished by the time the job returns, and a re-run yields tables
+    identical to a single-shot run."""
+    wh = Warehouse(str(tmp_path / "wh_fail"))
+    real = Warehouse.write_partitioned
+    finished = []
+
+    def flaky(self, df, table, *a, **kw):
+        if table == failing:
+            raise InjectedFailure(f"injected failure writing {table}")
+        out = real(self, df, table, *a, **kw)
+        finished.append(table)
+        return out
+
+    monkeypatch.setattr(Warehouse, "write_partitioned", flaky)
+    with pytest.raises(InjectedFailure, match=failing):
+        run_rollup_job(spark, wh, seqs, "jobF", CFG, n_groups=1)
+    sibling = failing.replace("payload", "tier")
+    assert finished[-1] == sibling  # the stats write ran to its end first
+    assert CP.committed_partitions(wh, "jobF", stage) == set()
+    if stage == "day":
+        assert CP.committed_partitions(wh, "jobF", "hour") == {"1:0"}
+
+    monkeypatch.setattr(Warehouse, "write_partitioned", real)
+    run_rollup_job(spark, wh, seqs, "jobF", CFG, n_groups=1)
+    got = _tables(spark, wh)
+    for t in _TABLES:
+        assert got[t].equals(single_shot[t]), t
+
+
+def test_empty_groups_commit_zeros(spark, seqs, tmp_path):
+    """More groups than sources: every group is written without being
+    sized first, and an empty group commits rows_in = 0, tokens 0 and
+    the empty snapshot token "0:0"."""
+    from drought_t_spark.plans.rollup_job import group_expr
+
+    n = 12
+    by_grp = {r.g: (r.n, r.tok) for r in seqs.groupBy(group_expr(n).alias("g")).agg(
+        F.count("*").alias("n"), F.sum("n_tok").alias("tok")).collect()}
+    assert len(by_grp) < n  # some groups are empty
+    wh = Warehouse(str(tmp_path / "wh_empty"))
+    run_rollup_job(spark, wh, seqs, "jobE", CFG, n_groups=n, with_payloads=False)
+    assert CP.committed_partitions(wh, "jobE", "hour") == {f"{n}:{g}" for g in range(n)}
+    ln = wh.read(spark, CP.LINEAGE_TBL).toPandas().set_index("partition_id")
+    mt = wh.read(spark, CP.METRICS_TBL).toPandas()
+    tok = mt[(mt.stage == "hour") & (mt.name == "tokens")].value.tolist()
+    assert sorted(tok) == sorted(float(by_grp.get(g, (0, 0))[1]) for g in range(n))
+    for g in range(n):
+        row = ln.loc[f"{n}:{g}"]
+        if g in by_grp:
+            assert row.rows_in == by_grp[g][0] and row.rows_out > 0, g
+        else:
+            assert (row.rows_in, row.rows_out, row.output_snapshot) == (0, 0, "0:0"), g
+
+
+def test_rollup_job_launches_at_most_12_jobs(spark, seqs, tmp_path):
+    """One group: six writes of two Spark jobs each, and nothing else —
+    no sizing scan and no schema-inference read. The write threads
+    inherit the caller's job group, so every job is counted."""
+    seqs.count()  # the cached fixture is materialized outside the group
+    wh = Warehouse(str(tmp_path / "wh_jobs"))
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup-job-count", "one rollup job")
+    try:
+        run_rollup_job(spark, wh, seqs, "jobJ", CFG, n_groups=1)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("rollup-job-count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(jobs) <= 12, jobs
+
+
+def test_written_frames_have_the_declared_schemas(spark, seqs, tmp_path, monkeypatch):
+    """The frames the job writes carry exactly the declared tier and
+    payload schemas (names and types), so the schemas the cascade reads
+    pass cannot drift from what the job writes."""
+    from drought_t_spark import schemas as S
+
+    real = Warehouse.write_partitioned
+    seen = {}
+
+    def recording(self, df, table, *a, **kw):
+        seen[table] = [(f.name, f.dataType) for f in df.schema]
+        return real(self, df, table, *a, **kw)
+
+    monkeypatch.setattr(Warehouse, "write_partitioned", recording)
+    run_rollup_job(spark, Warehouse(str(tmp_path / "wh_schema")), seqs, "jobD", CFG,
+                   n_groups=1)
+    assert sorted(seen) == sorted(_TABLES)
+    for table, fields in seen.items():
+        want = S.TIER if table.startswith("agg.tier_") else S.PAYLOAD
+        assert fields == [(f.name, f.dataType) for f in want], table

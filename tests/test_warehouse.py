@@ -8,6 +8,7 @@ from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from drought_t_spark.sources.warehouse import Warehouse
 
@@ -75,3 +76,34 @@ def test_failed_rewrite_leaves_table_as_it_was(spark, tmp_path, ids):
         )
     assert _content(spark, wh) == before
     assert _files(wh) == files
+
+
+def test_read_with_declared_schema_launches_no_job(spark, tmp_path):
+    """A read given the table's schema infers nothing: no Spark job runs
+    until the frame is used, and it reads what an inferring read does."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.write_partitioned(spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA), TBL, ["source"])
+    declared = T.StructType([T.StructField("source", T.StringType()),
+                             T.StructField("k", T.IntegerType())])
+    sc = spark.sparkContext
+    sc.setJobGroup("declared-read", "read with a declared schema")
+    try:
+        df = wh.read(spark, TBL, declared)
+        assert list(sc.statusTracker().getJobIdsForGroup("declared-read")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert df.schema == wh.read(spark, TBL).schema
+    assert _content(spark, wh) == sorted(tuple(r) for r in df.select("source", "k").collect())
+
+
+def test_read_with_declared_schema_fills_missing_column_with_nulls(spark, tmp_path):
+    """A file written before a column was declared still reads: the
+    column it lacks reads as null."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.write_partitioned(spark.createDataFrame([("a", 1)], SCHEMA), TBL, ["source"])
+    declared = T.StructType([T.StructField("source", T.StringType()),
+                             T.StructField("k", T.IntegerType()),
+                             T.StructField("extra", T.LongType())])
+    rows = wh.read(spark, TBL, declared).collect()
+    assert [(r.source, r.k, r.extra) for r in rows] == [("a", 1, None)]
