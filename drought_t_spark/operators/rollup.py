@@ -36,6 +36,18 @@ def _stats_agg():
     ]
 
 
+def _merge_stats():
+    """Merge of `_stats_agg` partials (sums of sums, min of mins): the
+    one partial merge of the tier cascade and the stream's live view and
+    compaction."""
+    return [
+        F.sum("n_seq").alias("n_seq"),
+        F.sum("n_tok_sum").alias("n_tok_sum"),
+        F.min("n_tok_min").alias("n_tok_min"),
+        F.max("n_tok_max").alias("n_tok_max"),
+    ]
+
+
 def _finish(df: DataFrame) -> DataFrame:
     """Derive float stats from integer provenance (no drift across N/4N)."""
     return (
@@ -60,12 +72,7 @@ def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
     out = (
         tier_df.where(~F.col("gap_filled"))
         .groupBy("source", F.date_trunc(to_tier, "bucket_start").alias("bucket_start"))
-        .agg(
-            F.sum("n_seq").alias("n_seq"),
-            F.sum("n_tok_sum").alias("n_tok_sum"),
-            F.min("n_tok_min").alias("n_tok_min"),
-            F.max("n_tok_max").alias("n_tok_max"),
-        )
+        .agg(*_merge_stats())
     )
     return _finish(out)
 

@@ -36,6 +36,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drought_t_spark import schemas as S
 from drought_t_spark.ops import checkpoints as CP
 from drought_t_spark.sources.warehouse import Warehouse
 
@@ -150,7 +151,10 @@ def _expire(
     per = df.groupBy(
         "source", F.when(is_doomed, F.date_trunc(coarser, "bucket_start")).alias("cb")
     ).agg(F.count(F.lit(1)).alias("n"))
-    cover = wh.read(spark, f"agg.{prefix}_{coarser}").select(
+    # the coverage read only reads, so it takes the declared schema; the
+    # table read above feeds the rewrite and keeps every column it finds
+    cover_schema = S.TIER if prefix == "tier" else S.PAYLOAD
+    cover = wh.read(spark, f"agg.{prefix}_{coarser}", cover_schema).select(
         "source", F.col("bucket_start").alias("cb"), F.lit(True).alias("covered")
     ).distinct()
     doomed_grp = F.col("cb").isNotNull()
@@ -285,7 +289,7 @@ def read_values(
     pieces: list[DataFrame] = []
     if wh.exists(f"agg.tier_{tier}"):
         pieces.append(
-            wh.read(spark, f"agg.tier_{tier}")
+            wh.read(spark, f"agg.tier_{tier}", S.TIER)
             .where(~F.col("gap_filled") & in_range)
             .select("source", "bucket_start", F.col("value").cast("double").alias("value"))
         )
@@ -376,7 +380,7 @@ def read_series(
         raise ValueError(f"read_series needs lo < hi, got [{lo_t}, {hi_t})")
     pieces: list[DataFrame] = []
     for tier, a, b in route_slices(lo_t, hi_t):
-        t = wh.read(spark, f"agg.tier_{tier}").where(
+        t = wh.read(spark, f"agg.tier_{tier}", S.TIER).where(
             (F.col("bucket_start") >= F.lit(a)) & (F.col("bucket_start") < F.lit(b))
         )
         pieces.append(
@@ -439,7 +443,7 @@ def read_payloads(
                 f"not exist in this warehouse — run the rollup job with "
                 f"payloads (the cascade writes day/month payload tiers)"
             )
-        t = wh.read(spark, tbl).where(
+        t = wh.read(spark, tbl, S.PAYLOAD).where(
             (F.col("bucket_start") >= F.lit(a)) & (F.col("bucket_start") < F.lit(b))
         )
         pieces.append(

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 from urllib.parse import unquote
 
@@ -95,18 +96,45 @@ class Warehouse:
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64(*key_cols).cast("decimal(38,0)")).alias("h"),
             )
-        (
+        writer = (
             # a write option, not the session conf, so concurrent writes
             # from several threads share no mutable setting
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
-            .parquet(self.path(table))
         )
+        try:
+            writer.parquet(self.path(table))
+        except Exception:
+            self._remove_aborted_staging(df.sparkSession, table)
+            raise
         if obs is None:
             return None
         m = obs.get
         return m["n"], f"{m['n']}:{m['h'] or 0}"
+
+    def _remove_aborted_staging(self, spark: SparkSession, table: str) -> None:
+        """Leave a failed write's table as it was. The job abort deletes
+        the write's `.spark-staging-*` directory, but tasks the abort
+        killed can still be writing and create it again (Spark then logs
+        `FileOutputCommitter: Could not delete ... attempt_...`). So wait,
+        up to a minute, until no unfinished job of this thread's job group
+        has a running task, then remove the table's staging directories."""
+        st = spark.sparkContext.statusTracker()
+        group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        stages = [s for j in jobs if j and j.status != "SUCCEEDED" for s in j.stageIds]
+
+        def running() -> bool:
+            return any((i := st.getStageInfo(s)) and i.numActiveTasks for s in stages)
+
+        deadline = time.monotonic() + 60
+        while running() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        d = self.path(table)
+        for name in os.listdir(d) if os.path.isdir(d) else []:
+            if name.startswith(".spark-staging-"):
+                shutil.rmtree(os.path.join(d, name), ignore_errors=True)
 
     def append_rows(self, table: str, schema: T.StructType, rows: list[tuple]) -> None:
         """Append driver rows as one new parquet file, without Spark.
@@ -153,16 +181,26 @@ class Warehouse:
         self.drop_partitions(table, partition_col, [v for v in values if v not in written])
         return report
 
+    def partitions(self, table: str, partition_col: str) -> dict[str, str]:
+        """{value: directory} of `table`'s `partition_col` partitions,
+        listed on the driver (no Spark job). Spark escapes characters
+        such as `:`, `/`, `=` and `%` in partition directory names
+        (`st:1` is written as `source=st%3A1`), so each value is the
+        unescaped directory name."""
+        d = self.path(table)
+        if not os.path.isdir(d):
+            return {}
+        prefix = f"{partition_col}="
+        return {
+            unquote(name[len(prefix):]): os.path.join(d, name)
+            for name in os.listdir(d) if name.startswith(prefix)
+        }
+
     def drop_partitions(self, table: str, partition_col: str, values: list[str]) -> None:
         """Remove whole hive partitions (Iceberg stand-in for a
-        partition-predicate DELETE + expire_snapshots). Spark escapes
-        characters such as `:`, `/`, `=` and `%` in partition directory
-        names (`st:1` is written as `source=st%3A1`), so directories are
-        matched by their unescaped value."""
-        d = self.path(table)
-        if not values or not os.path.isdir(d):
-            return
-        prefix, doomed = f"{partition_col}=", set(values)
-        for name in os.listdir(d):
-            if name.startswith(prefix) and unquote(name[len(prefix):]) in doomed:
-                shutil.rmtree(os.path.join(d, name), ignore_errors=True)
+        partition-predicate DELETE + expire_snapshots), matched by their
+        unescaped value (`partitions`)."""
+        doomed = set(values)
+        for value, d in self.partitions(table, partition_col).items():
+            if value in doomed:
+                shutil.rmtree(d, ignore_errors=True)

@@ -15,11 +15,15 @@ contract as the stats append stream), at which point all of its rows
 sit in the tail and one deterministic batch pack emits the final
 payload. Until then the live view serves the raw tail exactly.
 
-Crash windows (parquet shim; on Iceberg each pair below is one
+Ingest and seal are the stats ingest's own exactly-once protocol, not
+a copy of it: the partials land through `rollup_stream.start_batch_ingest`,
+the seal is a `rollup_stream.fold_batches` call (ledger-before-drop;
+replayed foreachBatch partitions are recognized by
+`<stream-id>-<batch_id>` and dropped without re-folding), and the live
+view reads the un-sealed partials through `rollup_stream.live_batches`.
+
+Crash window of the pack (parquet shim; on Iceberg the pair is one
 transaction):
-  * seal: ledger-before-drop, replayed foreachBatch partitions are
-    recognized by `<stream-id>-<batch_id>` and dropped without
-    re-folding — identical machinery to `compact_stream_partials`.
   * pack: tier-write → tail-rewrite. A crash between the two leaves
     packed rows in the tail; the next pack classifies them as
     already-packed (their bucket is in the tier), drops them from the
@@ -40,100 +44,52 @@ from pyspark.sql import functions as F
 
 from drought_t_spark.config import DEFAULT, EngineConfig
 from drought_t_spark.streaming.rollup_stream import (
-    _stream_identity,
-    read_sequence_stream,
+    fold_batches,
+    live_batches,
+    start_batch_ingest,
 )
 
 PAYLOAD_PARTIALS_TBL = "agg.stream_payload_partials"  # raw rows / batch_key
 PAYLOAD_TAIL_TBL = "agg.stream_payload_tail"  # sealed raw rows / source
 
 _RAW_COLS = ["source", "ts", "seq", "tokens", "n_tok"]
+_SEAL_JOB, _SEAL_SCOPE = "stream-payload-seal", "payload_seal"
 
 
 def start_payload_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
                          files_per_trigger: int = 1):
-    """foreachBatch sink: each micro-batch's raw rows (with derived
-    event time) land in `agg.stream_payload_partials` partitioned by
-    `batch_key = <stream-id>-<batch_id>` via idempotent partition
-    overwrite — an at-least-once replay overwrites its own partition
-    with identical rows (same contract as `start_tier_ingest`)."""
-    from drought_t_spark.operators import rollup as R
+    """Each micro-batch's raw rows (with derived event time) land in
+    `agg.stream_payload_partials` through the shared batch sink
+    (`rollup_stream.start_batch_ingest`)."""
+    return start_batch_ingest(spark, path, wh, checkpoint_dir, PAYLOAD_PARTIALS_TBL,
+                              lambda batch: batch.select(*_RAW_COLS), files_per_trigger)
 
-    t1 = R.with_event_time(read_sequence_stream(spark, path, files_per_trigger))
-    sid: list[str] = []  # resolved lazily: metadata exists once started
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not sid:
-            sid.append(_stream_identity(checkpoint_dir))
-        part = batch_df.select(*_RAW_COLS).withColumn(
-            "batch_key", F.lit(f"{sid[0]}-{int(batch_id)}")
+def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> int:
+    """Fold raw batch partitions into the per-source tail
+    (`rollup_stream.fold_batches`, ledger scope `payload_seal`). Only
+    source partitions present in the partials are rewritten; the commit's
+    `rows_out` is the tail rows written for them. Returns the number of
+    batch partitions folded."""
+
+    def fold(partials: DataFrame):
+        u = partials.select(*_RAW_COLS)
+        if wh.exists(PAYLOAD_TAIL_TBL):
+            affected = partials.select("source").distinct()
+            u = u.unionByName(
+                wh.read(spark, PAYLOAD_TAIL_TBL)
+                .join(F.broadcast(affected), ["source"], "left_semi")
+                .select(*_RAW_COLS)
+            )
+        # raw rows only — no aggregation, payloads are packed later once
+        # their bucket is complete. Every affected source has partial
+        # rows, so dynamic overwrite replaces exactly the partitions it
+        # reads
+        return wh.write_partitioned(
+            u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
         )
-        wh.write_partitioned(part, PAYLOAD_PARTIALS_TBL, ["batch_key"])
 
-    return (
-        t1.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def seal_payload_partials(spark: SparkSession, wh,
-                          job_id: str = "stream-payload-seal") -> int:
-    """Fold raw batch partitions into the per-source tail and drop them.
-
-    Same replay-safe shape as `compact_stream_partials`: the folded set
-    and the dropped set are pinned to one collected batch_key list;
-    folded keys are ledgered (scope `payload_seal`) BEFORE the drop, so
-    a foreachBatch replay of an already-folded batch is recognized and
-    its recreated partition dropped without re-folding. Only source
-    partitions present in the partials are rewritten. Returns the
-    number of batch partitions folded."""
-    from drought_t_spark.ops import checkpoints as CP
-
-    if not wh.exists(PAYLOAD_PARTIALS_TBL):
-        return 0
-    present = [
-        str(r.batch_key)
-        for r in wh.read(spark, PAYLOAD_PARTIALS_TBL)
-        .select("batch_key").distinct().collect()
-    ]
-    if not present:
-        return 0
-    folded_before = {f"batch:{b}" for b in present} & CP.committed_partitions(
-        wh, job_id, "payload_seal"
-    )
-    replayed = [b for b in present if f"batch:{b}" in folded_before]
-    if replayed:  # already in the tail — drop without re-folding
-        wh.drop_partitions(PAYLOAD_PARTIALS_TBL, "batch_key", replayed)
-    batch_keys = [b for b in present if f"batch:{b}" not in folded_before]
-    if not batch_keys:
-        return 0
-    partials = wh.read(spark, PAYLOAD_PARTIALS_TBL).where(
-        F.col("batch_key").isin(batch_keys)
-    )
-    n_partials = partials.count()  # BEFORE the partitions are dropped
-    affected = partials.select("source").distinct()
-    u = partials.select(*_RAW_COLS)
-    if wh.exists(PAYLOAD_TAIL_TBL):
-        u = u.unionByName(
-            wh.read(spark, PAYLOAD_TAIL_TBL)
-            .join(F.broadcast(affected), ["source"], "left_semi")
-            .select(*_RAW_COLS)
-        )
-    # raw rows only — no aggregation, payloads are packed later once
-    # their bucket is complete. Every affected source has partial rows,
-    # so dynamic overwrite replaces exactly the partitions it reads
-    _, token = wh.write_partitioned(
-        u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
-    )
-    CP.record_commit(
-        wh, job_id, "payload_seal", [f"batch:{b}" for b in batch_keys],
-        snapshot_id=token,
-        rows_in=n_partials, rows_out=n_partials,
-        metrics={"folded_batches": float(len(batch_keys))},
-    )
-    wh.drop_partitions(PAYLOAD_PARTIALS_TBL, "batch_key", batch_keys)
-    return len(batch_keys)
+    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, job_id, _SEAL_SCOPE, fold)
 
 
 def _default_cutoff(spark: SparkSession, wh, watermark_hours: int):
@@ -247,28 +203,6 @@ def pack_complete_buckets(
     return n_new
 
 
-def _unsealed_partials(spark: SparkSession, wh) -> DataFrame | None:
-    """Raw partial rows NOT yet folded into the tail — replayed-but-
-    ledgered batch partitions are excluded so the live view never
-    double-counts across a seal replay (the ledger lookup is a
-    driver-side Arrow scan of the sealed batch ids, no Spark job)."""
-    from drought_t_spark.ops import checkpoints as CP
-
-    if not wh.exists(PAYLOAD_PARTIALS_TBL):
-        return None
-    p = wh.read(spark, PAYLOAD_PARTIALS_TBL)
-    present = [str(r.batch_key) for r in p.select("batch_key").distinct().collect()]
-    if not present:
-        return None
-    folded = {f"batch:{b}" for b in present} & CP.committed_partitions(
-        wh, "stream-payload-seal", "payload_seal"
-    )
-    live = [b for b in present if f"batch:{b}" not in folded]
-    if not live:
-        return None
-    return p.where(F.col("batch_key").isin(live)).select(*_RAW_COLS)
-
-
 def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
     """The live exact token view: committed packed buckets (decoded,
     chunks concatenated in chunk_id order) ⊎ the raw in-flight rows
@@ -315,8 +249,9 @@ def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
     raw = None
     if wh.exists(PAYLOAD_TAIL_TBL):
         raw = wh.read(spark, PAYLOAD_TAIL_TBL).select(*_RAW_COLS)
-    unsealed = _unsealed_partials(spark, wh)
+    unsealed = live_batches(spark, wh, PAYLOAD_PARTIALS_TBL, _SEAL_JOB, _SEAL_SCOPE)
     if unsealed is not None:
+        unsealed = unsealed.select(*_RAW_COLS)
         raw = unsealed if raw is None else raw.unionByName(unsealed)
     if raw is not None:
         r = raw.withColumn("bucket_start", F.date_trunc("hour", "ts"))

@@ -3,6 +3,10 @@
 sequences. Batch tiers remain the contract; this is the streaming
 ingest path for tier-0.
 
+It also holds the exactly-once micro-batch protocol of both streaming
+ingests (stats here, tokens in `payload_stream`): the sink
+`start_batch_ingest`, the ledgered `fold_batches` and `live_batches`.
+
 Run semantics (RL2) deliberately stay batch: run segmentation needs
 full history, so the streaming job maintains ONLY the continuous
 aggregate; the drought DAG re-runs per tier on the committed table.
@@ -13,13 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark.functions.scalars import seq_index, seq_timestamp
-from drought_t_spark.schemas import SEQUENCES
+from drought_t_spark import schemas as S
+from drought_t_spark.operators import rollup as R
 
 
-def read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int = 8) -> DataFrame:
+def _read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int = 8) -> DataFrame:
     return (
-        spark.readStream.schema(SEQUENCES)
+        spark.readStream.schema(S.SEQUENCES)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
     )
@@ -28,16 +32,11 @@ def read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int 
 def _streaming_hour_rollup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Tumbling-window continuous aggregate; late rows beyond the
     watermark are dropped (batch re-rollup reconciles them)."""
-    t1 = stream.withColumn("seq", seq_index()).withColumn("ts", seq_timestamp())
+    t1 = R.with_event_time(stream)
     return (
         t1.withWatermark("ts", watermark)
         .groupBy("source", F.window("ts", "1 hour").alias("win"))
-        .agg(
-            F.count("*").alias("n_seq"),
-            F.sum("n_tok").cast("long").alias("n_tok_sum"),
-            F.min("n_tok").cast("int").alias("n_tok_min"),
-            F.max("n_tok").cast("int").alias("n_tok_max"),
-        )
+        .agg(*R._stats_agg())
         .select(
             "source",
             F.col("win.start").alias("bucket_start"),
@@ -57,7 +56,7 @@ def start_append_stream(spark: SparkSession, path: str,
     §2.11). Returns the running StreamingQuery; the caller drives
     micro-batches (processAllAvailable) between file drops so the
     watermark actually advances between batches."""
-    agg = _streaming_hour_rollup(read_sequence_stream(spark, path), watermark)
+    agg = _streaming_hour_rollup(_read_sequence_stream(spark, path), watermark)
     return (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -67,6 +66,7 @@ def start_append_stream(spark: SparkSession, path: str,
 
 
 PARTIALS_TBL = "agg.stream_partials_hour"
+TIER_TBL = "agg.tier_hour"
 
 
 def _stream_identity(checkpoint_dir: str) -> str:
@@ -100,33 +100,25 @@ def _stream_identity(checkpoint_dir: str) -> str:
         ) from e
 
 
-def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
-                      files_per_trigger: int = 1):
-    """Incremental continuous-aggregate ingest: each micro-batch's hour
-    partials (mergeable integer stats) land in `agg.stream_partials_hour`
-    partitioned by `batch_key = <stream-id>-<batch_id>` via idempotent
-    partition overwrite.
-
-    foreachBatch is at-least-once — a crash between sink and stream
-    checkpoint replays the batch — so the sink must be IDEMPOTENT, not
-    guarded: a replayed batch overwrites its own partition with
-    identical rows instead of double-merging into the tier. The
-    committed tier stays untouched until `compact_stream_partials`
-    folds partials in (the Iceberg append-only + compaction shape);
-    `read_stream_hour_tier` serves the exact up-to-date aggregate
-    meanwhile by merging tier + partials at read time."""
-    from drought_t_spark.operators import rollup as R
-
-    t1 = R.with_event_time(read_sequence_stream(spark, path, files_per_trigger))
+def start_batch_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
+                       table: str, to_rows, files_per_trigger: int = 1):
+    """Each micro-batch's `to_rows(batch)` lands in `table` partitioned
+    by `batch_key = <stream-id>-<batch_id>` via idempotent partition
+    overwrite. foreachBatch is at-least-once — a crash between sink and
+    stream checkpoint replays the batch — so the sink must be IDEMPOTENT,
+    not guarded: a replay overwrites its own partition with identical
+    rows, and `fold_batches` drops a replay of a batch it already
+    folded."""
+    t1 = R.with_event_time(_read_sequence_stream(spark, path, files_per_trigger))
     sid: list[str] = []  # resolved lazily: metadata exists once started
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if not sid:
             sid.append(_stream_identity(checkpoint_dir))
-        part = R.rollup_hour(batch_df).withColumn(
+        part = to_rows(batch_df).withColumn(
             "batch_key", F.lit(f"{sid[0]}-{int(batch_id)}")
         )
-        wh.write_partitioned(part, PARTIALS_TBL, ["batch_key"])
+        wh.write_partitioned(part, table, ["batch_key"])
 
     return (
         t1.writeStream.foreachBatch(sink)
@@ -135,150 +127,146 @@ def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
     )
 
 
-def _merge_agg():
-    # built lazily: Column construction needs an active SparkContext
-    return [
-        F.sum("n_seq").alias("n_seq"),
-        F.sum("n_tok_sum").alias("n_tok_sum"),
-        F.min("n_tok_min").alias("n_tok_min"),
-        F.max("n_tok_max").alias("n_tok_max"),
-    ]
+def _batch_keys(wh, table: str, job_id: str, scope: str) -> tuple[list[str], list[str]]:
+    """(live, folded) batch keys present in `table`, from a listing of
+    its partition directories and the ledger (checkpoint rows of
+    `job_id`/`scope`), both read on the driver without a Spark job."""
+    from drought_t_spark.ops import checkpoints as CP
+
+    present = sorted(wh.partitions(table, "batch_key"))
+    ledger = CP.committed_partitions(wh, job_id, scope)
+    folded = [b for b in present if f"batch:{b}" in ledger]
+    return [b for b in present if f"batch:{b}" not in ledger], folded
+
+
+def live_batches(spark: SparkSession, wh, table: str, job_id: str,
+                 scope: str) -> DataFrame | None:
+    """Rows of `table`'s not yet folded batch partitions, or None: a
+    replayed partition of a folded batch is left out, so a live view
+    never counts a batch twice."""
+    live, _ = _batch_keys(wh, table, job_id, scope)
+    if not live:
+        return None
+    return wh.read(spark, table).where(F.col("batch_key").isin(live))
+
+
+def fold_batches(spark: SparkSession, wh, table: str, job_id: str, scope: str,
+                 fold) -> int:
+    """Fold `table`'s micro-batch partitions exactly once: drop the
+    replays of folded batches, pin the live keys, count their rows, let
+    `fold(partials)` write them and return its commit report
+    `(rows, token)`, ledger the keys (`rows_in` = partial rows,
+    `rows_out` = rows the fold wrote), then drop their partitions.
+
+    The key list is taken once and both the fold input and the drop are
+    restricted to it, so a micro-batch landing in between (stream still
+    running) is neither folded nor dropped: it waits for the next fold.
+    Returns the number of batch partitions folded."""
+    from drought_t_spark.ops import checkpoints as CP
+
+    live, folded = _batch_keys(wh, table, job_id, scope)
+    # a replay of an already-folded batch: drop it without re-folding
+    wh.drop_partitions(table, "batch_key", folded)
+    if not live:
+        return 0
+    partials = wh.read(spark, table).where(F.col("batch_key").isin(live))
+    n_partials = partials.count()  # BEFORE the partitions are dropped
+    n_out, token = fold(partials)
+    # ledger BEFORE the partition drop: a crash between the two leaves
+    # folded-but-present partials, which the next fold recognizes from
+    # the ledger and drops WITHOUT re-folding (above). The only unsafe
+    # window is fold write → ledger: a crash exactly there leaves folded
+    # partials unledgered and the next fold folds them twice. Two
+    # separate writes can't be atomic on the parquet shim; on Iceberg the
+    # table write and the ledger append are one transaction.
+    CP.record_commit(
+        wh, job_id, scope, [f"batch:{b}" for b in live],
+        snapshot_id=token, rows_in=n_partials, rows_out=n_out,
+        metrics={"folded_batches": float(len(live))},
+    )
+    wh.drop_partitions(table, "batch_key", live)
+    return len(live)
+
+
+def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
+                      files_per_trigger: int = 1):
+    """Each micro-batch's hour partials (mergeable integer stats) land
+    in `agg.stream_partials_hour` until `compact_stream_partials` folds
+    them into the tier (the Iceberg append-only + compaction shape)."""
+    return start_batch_ingest(spark, path, wh, checkpoint_dir, PARTIALS_TBL,
+                              R.rollup_hour, files_per_trigger)
 
 
 _STAT_COLS = ["source", "bucket_start", "n_seq", "n_tok_sum", "n_tok_min", "n_tok_max"]
+_COMPACT_JOB, _COMPACT_SCOPE = "stream-compact", "stream_compact"
 
 
-def _merge_with_tier(spark: SparkSession, wh, partials: DataFrame) -> DataFrame:
-    """Committed tier ⊎ `partials`, re-aggregated ONLY where partials
-    touch: tier rows whose (source, bucket_start) has no partial pass
-    through untouched (a left-anti join — no re-aggregation), the rest
-    merge on the mergeable integer stats. Cost is O(|touched keys|), not
-    O(full tier) — the property that keeps frequent merges viable when
-    the committed tier is 100 TB and a batch touches a handful of
-    buckets."""
-    from drought_t_spark.operators.rollup import _finish
+def _committed_tier(spark: SparkSession, wh) -> DataFrame | None:
+    if not wh.exists(TIER_TBL):
+        return None
+    return wh.read(spark, TIER_TBL, S.TIER).where(~F.col("gap_filled")).select(*_STAT_COLS)
 
+
+def _merge_with_tier(partials: DataFrame | None, tier: DataFrame | None) -> DataFrame:
+    """`tier` ⊎ `partials`, re-aggregated ONLY where partials touch:
+    tier rows whose (source, bucket_start) has no partial pass through
+    untouched (a left-anti join — no re-aggregation), the rest merge on
+    the mergeable integer stats: cost O(|touched keys|), not O(|tier|).
+    The live view passes the whole tier, compaction the tier of the
+    sources it rewrites."""
+    if partials is None:
+        return R._finish(tier)
     p = partials.select(*_STAT_COLS)
-    if not wh.exists("agg.tier_hour"):
-        return _finish(p.groupBy("source", "bucket_start").agg(*_merge_agg()))
-    tier = wh.read(spark, "agg.tier_hour").where(~F.col("gap_filled")).select(*_STAT_COLS)
+    if tier is None:
+        return R._finish(p.groupBy("source", "bucket_start").agg(*R._merge_stats()))
     keys = p.select("source", "bucket_start").distinct()
     untouched = tier.join(keys, ["source", "bucket_start"], "left_anti")
     touched = tier.join(keys, ["source", "bucket_start"], "left_semi")
     merged = (
         touched.unionByName(p)
         .groupBy("source", "bucket_start")
-        .agg(*_merge_agg())
+        .agg(*R._merge_stats())
     )
-    return _finish(untouched.unionByName(merged))
+    return R._finish(untouched.unionByName(merged))
 
 
 def read_stream_hour_tier(spark: SparkSession, wh) -> DataFrame:
-    """The live continuous aggregate: committed tier ⊎ stream partials.
-    Exact at any moment; only buckets the partials touch are re-merged —
-    untouched tier rows are served as-is. Cost grows with un-compacted
-    batch count (bucket-level rows per batch), so compact periodically."""
-    from drought_t_spark.operators.rollup import _finish
-
-    has_partials = wh.exists(PARTIALS_TBL)
-    assert wh.exists("agg.tier_hour") or has_partials, "no tier data ingested yet"
-    if not has_partials:
-        return _finish(
-            wh.read(spark, "agg.tier_hour").where(~F.col("gap_filled")).select(*_STAT_COLS)
-        )
-    return _merge_with_tier(spark, wh, wh.read(spark, PARTIALS_TBL))
+    """The live continuous aggregate: committed tier ⊎ un-folded stream
+    partials, exact at any moment (a replayed, already-compacted batch
+    included). Cost grows with the un-compacted batch count, so compact
+    periodically."""
+    partials = live_batches(spark, wh, PARTIALS_TBL, _COMPACT_JOB, _COMPACT_SCOPE)
+    tier = _committed_tier(spark, wh)
+    assert tier is not None or partials is not None, "no tier data ingested yet"
+    return _merge_with_tier(partials, tier)
 
 
-def compact_stream_partials(spark: SparkSession, wh, job_id: str = "stream-compact") -> int:
-    """Fold stream partials into the committed hour tier and drop them.
-
-    Incremental: only SOURCE partitions present in the partials are
-    rewritten (dynamic partition overwrite + an explicit bucket-level
-    merge); every other committed partition's files are untouched —
-    compaction cost is O(partials ∪ affected sources), not O(full tier).
-
-    The folded set and the dropped set are IDENTICAL by construction:
-    the batch_key list is collected once and both the merge input and
-    the partition drop are filtered to it, so a micro-batch landing
-    between the two (stream still running) is neither folded nor
-    dropped — it just waits for the next compaction. Folded batch_keys
-    (= <stream-id>-<batch_id>, the stream id being the checkpoint's
-    stable identity) are recorded as checkpoint partition ids, so a
-    foreachBatch REPLAY of an already-folded batch (at-least-once
-    delivery after a crash) is recognized and its recreated partition
-    dropped without re-folding — no double count — while a FRESH
-    checkpoint's batch 0 carries a new stream id and is folded normally
-    (a bare-batch_id ledger would have silently dropped it). The ledger
-    lookup is a driver-side Arrow scan of this job's folded batch ids
-    (no Spark job), intersected with the present keys.
+def compact_stream_partials(spark: SparkSession, wh, job_id: str = _COMPACT_JOB) -> int:
+    """Fold stream partials into the committed hour tier (`fold_batches`,
+    ledger scope `stream_compact`). Only SOURCE partitions present in the
+    partials are rewritten; every other partition's files are untouched,
+    so the cost is O(partials ∪ affected sources), not O(full tier).
     Returns the number of batch partitions folded."""
-    from drought_t_spark.ops import checkpoints as CP
 
-    if not wh.exists(PARTIALS_TBL):
-        return 0
-    present = [
-        str(r.batch_key)
-        for r in wh.read(spark, PARTIALS_TBL).select("batch_key").distinct().collect()
-    ]
-    if not present:
-        return 0
-    folded_before = {f"batch:{b}" for b in present} & CP.committed_partitions(
-        wh, job_id, "stream_compact"
-    )
-    replayed = [b for b in present if f"batch:{b}" in folded_before]
-    if replayed:  # already in the tier — drop without re-folding
-        wh.drop_partitions(PARTIALS_TBL, "batch_key", replayed)
-    batch_keys = [b for b in present if f"batch:{b}" not in folded_before]
-    if not batch_keys:
-        return 0
-    # pin the fold to exactly these batches: a later-landing partition
-    # must not be folded here (it would be double-counted after replay)
-    partials = wh.read(spark, PARTIALS_TBL).where(
-        F.col("batch_key").isin(batch_keys)
-    )
-    n_partials = partials.count()  # BEFORE the partitions are dropped
-    # merge ONLY the affected source partitions
-    affected = partials.select("source").distinct()
-    tier_affected = (
-        wh.read(spark, "agg.tier_hour")
-        .join(F.broadcast(affected), ["source"], "left_semi")
-        .where(~F.col("gap_filled"))
-        .select(*_STAT_COLS)
-        if wh.exists("agg.tier_hour")
-        else None
-    )
-    from drought_t_spark.operators.rollup import _finish
+    def fold(partials: DataFrame):
+        tier = _committed_tier(spark, wh)
+        if tier is not None:
+            affected = partials.select("source").distinct()
+            tier = tier.join(F.broadcast(affected), ["source"], "left_semi")
+        # dynamic overwrite replaces exactly the affected source
+        # partitions, swapping them in at job commit, after the merge
+        # has read them
+        return wh.write_partitioned(
+            _merge_with_tier(partials, tier), TIER_TBL, ["source"],
+            key_cols=["source", "bucket_start"],
+        )
 
-    u = partials.select(*_STAT_COLS)
-    if tier_affected is not None:
-        u = u.unionByName(tier_affected)
-    merged = _finish(u.groupBy("source", "bucket_start").agg(*_merge_agg()))
-    # dynamic overwrite replaces exactly the affected source partitions,
-    # swapping them in at job commit, after the merge has read them
-    n_out, token = wh.write_partitioned(
-        merged, "agg.tier_hour", ["source"], key_cols=["source", "bucket_start"]
-    )
-    # ledger BEFORE the partition drop: a crash between the two leaves
-    # folded-but-present partials, which the next compaction recognizes
-    # from the ledger and drops WITHOUT re-folding (the `replayed` path
-    # above). The only remaining unsafe window is tier-write → ledger —
-    # a crash exactly there leaves folded partials unledgered and the
-    # next compaction double-folds them. That gap is irreducible on the
-    # parquet shim (two separate writes can't be atomic); on Iceberg the
-    # tier overwrite and the ledger append become one transaction and
-    # the window closes. Documented, not hidden.
-    CP.record_commit(
-        wh, job_id, "stream_compact", [f"batch:{b}" for b in batch_keys],
-        snapshot_id=token, rows_in=n_partials, rows_out=n_out,
-        metrics={"folded_batches": float(len(batch_keys))},
-    )
-    wh.drop_partitions(PARTIALS_TBL, "batch_key", batch_keys)
-    return len(batch_keys)
+    return fold_batches(spark, wh, PARTIALS_TBL, job_id, _COMPACT_SCOPE, fold)
 
 
 def run_to_memory(spark: SparkSession, path: str, name: str = "stream_tier_hour"):
     """Drive the stream to completion over static files (test helper)."""
-    agg = _streaming_hour_rollup(read_sequence_stream(spark, path))
+    agg = _streaming_hour_rollup(_read_sequence_stream(spark, path))
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")

@@ -353,3 +353,28 @@ def test_expire_drops_fully_expired_source_with_escaped_name(spark, tmp_path):
         left = wh.read(spark, f"agg.{prefix}_hour")
         assert {r.source for r in left.select("source").distinct().collect()} == {"plain"}
         assert left.where(F.col("bucket_start") >= cutoff).count() == left.count() == n
+
+
+def test_routed_reads_launch_no_job(spark, tmp_path):
+    """`read_series` and `read_payloads(decode=False)` read every tier
+    with its declared schema, so building either frame launches no Spark
+    job; the frames still read what the tiers hold."""
+    from drought_t_spark.plans.retention import read_payloads
+
+    w = Warehouse(str(tmp_path / "wh_jobs"))
+    seqs = synth.sequences_df(spark, n_sources=2, n_total=3000)
+    run_rollup_job(spark, w, seqs, "jobN", CFG, n_groups=1, with_payloads=True)
+    lo, hi = "2024-01-01 02:00:00", "2024-03-02 05:00:00"  # hour, day and month slices
+    sc = spark.sparkContext
+    sc.setJobGroup("routed-reads", "build the routed read frames")
+    try:
+        series = read_series(spark, w, lo, hi)
+        payloads = read_payloads(spark, w, lo, hi, decode=False)
+        assert list(sc.statusTracker().getJobIdsForGroup("routed-reads")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_range = (F.col("bucket_start") >= lo) & (F.col("bucket_start") < hi)
+    want = _tok_sum(w.read(spark, "agg.tier_hour").where(in_range))
+    assert _tok_sum(series) == want
+    assert payloads.agg(F.sum("n_tokens")).first()[0] == want

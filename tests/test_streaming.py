@@ -161,6 +161,7 @@ def test_compaction_incremental_and_replay_safe(spark, tmp_path):
     # simulate an at-least-once foreachBatch replay of a folded batch:
     # its partition reappears, but the next compaction must ignore it
     wh.write_partitioned(replay_rows, PARTIALS_TBL, ["batch_key"])
+    _assert_same_stats(read_stream_hour_tier(spark, wh), truth)  # pre-compaction too
     assert compact_stream_partials(spark, wh) == 0
     assert not wh.exists(PARTIALS_TBL) or wh.read(spark, PARTIALS_TBL).where(
         F.col("batch_key") == replay_bid
@@ -216,3 +217,53 @@ def test_streaming_rollup_equals_batch(spark, tmp_path):
 
     assert stream_out.exceptAll(batch_out).count() == 0
     assert batch_out.exceptAll(stream_out).count() == 0
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run `fn` under a job group; return its result and the group's jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, jobs
+
+
+def test_fold_job_counts(spark, tmp_path):
+    """Both folds find their batch keys by listing partition directories,
+    not with a Spark job. On two sources with both kinds of partials, the
+    first compaction launches at most 5 Spark jobs and the first seal at
+    most 4; folding a second round into the committed tier and tail
+    launches at most 9 and 7."""
+    from drought_t_spark.sources.warehouse import Warehouse
+    from drought_t_spark.streaming.payload_stream import (
+        seal_payload_partials,
+        start_payload_ingest,
+    )
+    from drought_t_spark.streaming.rollup_stream import (
+        compact_stream_partials,
+        start_tier_ingest,
+    )
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    in_dir = str(tmp_path / "in")
+    for lo, max_compact, max_seal in ((0, 5, 4), (120, 9, 7)):
+        for src in ("src_aaaa", "src_bbbb"):
+            _seq_batch(spark, list(range(lo, lo + 120)), src).write.mode(
+                "append"
+            ).parquet(in_dir)
+        for ingest, ckpt in ((start_tier_ingest, "ckpt"), (start_payload_ingest, "ckpt_pay")):
+            q = ingest(spark, in_dir, wh, str(tmp_path / ckpt))
+            q.processAllAvailable()
+            q.stop()
+        folded, compact_jobs = _jobs_in_group(
+            spark, f"compact-jobs-{lo}", lambda: compact_stream_partials(spark, wh)
+        )
+        assert folded >= 1 and 0 < len(compact_jobs) <= max_compact, compact_jobs
+        sealed, seal_jobs = _jobs_in_group(
+            spark, f"seal-jobs-{lo}", lambda: seal_payload_partials(spark, wh)
+        )
+        assert sealed >= 1 and 0 < len(seal_jobs) <= max_seal, seal_jobs
