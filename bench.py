@@ -589,8 +589,8 @@ def run_scaling_bucketed_child(cores: int, root: str) -> None:
         # Exchange across the union branches); the exchange-free plan
         # has no exchange to reuse, so the lazy union recomputed
         # scan+hour per branch — a harness artifact that measured as
-        # INVERSE core scaling (probe: tools/probe_bucketed_stats.py;
-        # lazy 16.5 s flat vs cached 2.7 s at local[32], mult=32).
+        # INVERSE core scaling (BENCH/BASELINE.md §0c: lazy 16.5 s
+        # flat vs cached 2.7 s at local[32], mult=32).
         hour = R.rollup_hour(t1).cache()
         day = R.cascade(hour, "day").cache()
         month = R.cascade(day, "month")

@@ -17,9 +17,10 @@ per-bucket or per-run Python:
      ±k frame (`_moving_avg`);
   3. TH1/TH2 threshold: Spark's exact `percentile` per (source,
      cycle position) or per source (`_threshold`);
-  4. RL1/RL2/EV1: below = x_ma < x0 (strict, missing → not below),
-     deficit/excess floored at 0 (missing → 0), runs by change points
-     and `reduceat`;
+  4. RL1/RL2/EV1: `runs.run_table`, the run step the streaming run
+     fold shares: below = x_ma < x0 (strict, missing → not below),
+     deficit/excess floored at 0 (missing → 0) and summed left to
+     right per run, as Spark's `F.sum` does;
   5. pooling, numbering and exclusion (`_pool_runs`), the last step.
 
 Null and NaN values are both missing buckets, as in `local_ref`.
@@ -63,6 +64,7 @@ from pyspark.sql import functions as F
 
 from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.operators.rollup import grouped_stream
+from drought_t_spark.operators.runs import run_table
 
 _KERNEL_SCHEMA = (
     "source string, event_id long, onset long, termination long, "
@@ -278,22 +280,8 @@ def _source_events(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray,
         n_cycle, key = 1, gid
     x0 = _threshold(x_ma, key, len(starts) * n_cycle, cfg.threshold_pct)
 
-    below = x_ma < x0
-    deficit = np.fmax(x0 - x_ma, 0.0)
-    excess = np.fmax(x_ma - x0, 0.0)
-    head = back == 0
-    head[1:] |= below[1:] != below[:-1]
-    h = np.flatnonzero(head)
-    ev = _pool_runs({
-        "gid": gid[h],
-        "below": below[h],
-        "onset": bts[h],
-        "termination": bts[np.append(h[1:], N) - 1],
-        "duration": np.diff(np.append(h, N)),
-        "severity": np.add.reduceat(deficit, h),
-        "peak": np.maximum.reduceat(deficit, h),
-        "excess": np.add.reduceat(excess, h),
-    }, cfg)
+    runs = run_table(back == 0, bts, x_ma, x0)
+    ev = _pool_runs({**runs, "gid": gid[runs["first"]]}, cfg)
     source = pdf["source"].to_numpy()[starts][ev.pop("gid")]
     return pd.DataFrame({"source": source, **ev})
 

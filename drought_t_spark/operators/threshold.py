@@ -3,9 +3,10 @@
 
 Variable mode: x0(source, cycle_pos) = exact P-th percentile of the
 smoothed value over all history sharing that cycle position (day-of-year
-for the day tier, hour-of-week for hour, month for month). Fixed mode:
-one percentile per source. Exact `percentile` (not approx) —
-determinism is part of the fixture contract.
+for the day tier, hour-of-week for hour, month for month). Exact
+`percentile` (not approx) — determinism is part of the fixture
+contract. The drought kernel computes both modes itself
+(`pooling._threshold`); this Spark form serves `runs_events_variable`.
 
 Scale: the threshold table is tiny (sources × ≤366 cycle positions) —
 it is ALWAYS broadcast back (J1), never shuffled.
@@ -31,20 +32,7 @@ def variable_threshold(
     )
 
 
-def fixed_threshold(
-    df: DataFrame, cfg: EngineConfig = DEFAULT, value_col: str = "x_ma"
-) -> DataFrame:
-    """(source, x0) — one truncation level per source."""
-    return df.groupBy("source").agg(
-        F.percentile(value_col, F.lit(cfg.threshold_pct)).alias("x0")
-    )
-
-
-def attach_threshold(
-    df: DataFrame, th: DataFrame, tier: str | None = None, variable: bool = True
-) -> DataFrame:
+def attach_threshold(df: DataFrame, th: DataFrame, tier: str) -> DataFrame:
     """J1 — broadcast the (tiny) threshold table back onto the series."""
-    if variable:
-        keyed = df.withColumn("cycle_pos", cycle_pos(tier))
-        return keyed.join(F.broadcast(th), ["source", "cycle_pos"], "left").drop("cycle_pos")
-    return df.join(F.broadcast(th), ["source"], "left")
+    keyed = df.withColumn("cycle_pos", cycle_pos(tier))
+    return keyed.join(F.broadcast(th), ["source", "cycle_pos"], "left").drop("cycle_pos")

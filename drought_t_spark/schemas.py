@@ -51,6 +51,24 @@ PAYLOAD = T.StructType(
     ]
 )
 
+# Streaming ingest tables (`streaming/rollup_stream.py`,
+# `streaming/payload_stream.py`). Each micro-batch lands in its own
+# `batch_key` partition: `agg.stream_partials_hour` holds hour-tier
+# stats partials, `agg.stream_payload_partials` raw token rows, and the
+# seal folds the latter into the per-source `agg.stream_payload_tail`.
+_BATCH_KEY = T.StructField("batch_key", T.StringType(), True)
+STREAM_PARTIALS = T.StructType(TIER.fields + [_BATCH_KEY])
+STREAM_RAW = T.StructType(
+    [
+        T.StructField("source", T.StringType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("seq", T.LongType(), True),
+        T.StructField("tokens", T.ArrayType(T.IntegerType(), True), True),
+        T.StructField("n_tok", T.IntegerType(), True),
+    ]
+)
+STREAM_RAW_PARTIALS = T.StructType(STREAM_RAW.fields + [_BATCH_KEY])
+
 # T3 — drought event table (FIXTURES.md §F3)
 EVENTS = T.StructType(
     [

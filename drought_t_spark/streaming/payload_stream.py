@@ -42,6 +42,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from drought_t_spark import schemas as S
 from drought_t_spark.config import DEFAULT, EngineConfig
 from drought_t_spark.streaming.rollup_stream import (
     fold_batches,
@@ -77,7 +78,7 @@ def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> i
         if wh.exists(PAYLOAD_TAIL_TBL):
             affected = partials.select("source").distinct()
             u = u.unionByName(
-                wh.read(spark, PAYLOAD_TAIL_TBL)
+                wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW)
                 .join(F.broadcast(affected), ["source"], "left_semi")
                 .select(*_RAW_COLS)
             )
@@ -89,14 +90,15 @@ def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> i
             u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
         )
 
-    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, job_id, _SEAL_SCOPE, fold)
+    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, S.STREAM_RAW_PARTIALS,
+                        job_id, _SEAL_SCOPE, fold)
 
 
 def _default_cutoff(spark: SparkSession, wh, watermark_hours: int):
     """max event time in the tail, minus the watermark, floored to the
     hour — the streaming-side stand-in for the query watermark (the
     tail is the post-seal analog of the stream's unexpired state)."""
-    hi = wh.read(spark, PAYLOAD_TAIL_TBL).agg(F.max("ts")).first()[0]
+    hi = wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW).agg(F.max("ts")).first()[0]
     if hi is None:
         return None
     return (hi - _dt.timedelta(hours=watermark_hours)).replace(
@@ -155,7 +157,7 @@ def pack_complete_buckets(
     fresh = complete
     if wh.exists("agg.payload_hour"):
         packed_keys = (
-            wh.read(spark, "agg.payload_hour")
+            wh.read(spark, "agg.payload_hour", S.PAYLOAD)
             .where(in_affected & (F.col("bucket_start") < F.lit(cutoff)))
             .select("source", "bucket_start").distinct()
         )
@@ -176,7 +178,10 @@ def pack_complete_buckets(
     )
     if wh.exists("agg.payload_hour"):
         # pass-through rows of the affected sources: fresh ∩ packed = ∅
-        # by the late split above, so a plain union is duplicate-free
+        # by the late split above, so a plain union is duplicate-free.
+        # Whole rows feed the rewrite, so this read (like the tail's
+        # above) infers its schema: a stored column the declared schema
+        # lacks fails the union instead of being dropped
         out = out.unionByName(wh.read(spark, "agg.payload_hour").where(in_affected))
     _, token = wh.write_partitioned(
         out, "agg.payload_hour", ["source"],
@@ -222,7 +227,7 @@ def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
     pieces: list[DataFrame] = []
     packed_keys = None
     if wh.exists("agg.payload_hour"):
-        pay = wh.read(spark, "agg.payload_hour")
+        pay = wh.read(spark, "agg.payload_hour", S.PAYLOAD)
         packed_keys = pay.select("source", "bucket_start").distinct()
         pieces.append(
             pay.select(
@@ -248,8 +253,9 @@ def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
 
     raw = None
     if wh.exists(PAYLOAD_TAIL_TBL):
-        raw = wh.read(spark, PAYLOAD_TAIL_TBL).select(*_RAW_COLS)
-    unsealed = live_batches(spark, wh, PAYLOAD_PARTIALS_TBL, _SEAL_JOB, _SEAL_SCOPE)
+        raw = wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW).select(*_RAW_COLS)
+    unsealed = live_batches(spark, wh, PAYLOAD_PARTIALS_TBL, S.STREAM_RAW_PARTIALS,
+                            _SEAL_JOB, _SEAL_SCOPE)
     if unsealed is not None:
         unsealed = unsealed.select(*_RAW_COLS)
         raw = unsealed if raw is None else raw.unionByName(unsealed)

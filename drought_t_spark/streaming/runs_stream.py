@@ -24,14 +24,18 @@ Semantics and scale notes:
   DROPS any row at or behind it (same late-data contract as the
   append-mode rollup stream: the idempotent batch recompute reconciles
   — SURVEY.md §2.11). Within a micro-batch rows are sorted per source.
-- below(t) = x_ma < x0 strict, null -> false; deficit/excess floored at
-  0 with null -> 0, matching functions.scalars.deficit (greatest
-  ignores nulls).
-- State per source is one fixed-width tuple (9 scalars): the open run's
-  partial aggregates. Memory is O(sources), not O(history) — exactly
-  the shape that survives 10^5 sources on a real cluster. The per-batch
-  fold is vectorized numpy over change-point segments, not per-row
-  Python.
+- The run step is the drought kernel's own, `operators.runs.run_table`:
+  below(t) = x_ma < x0 strict, null -> false; deficit/excess floored
+  at 0 with null -> 0, matching functions.scalars.deficit (greatest
+  ignores nulls); sums left to right, as F.sum folds the sorted
+  partition.
+- State per source is one fixed-width tuple (10 scalars): the
+  high-water mark, a have-run flag and the open run's partial
+  aggregates, whose severity and excess seed the run step's first run
+  when the next micro-batch continues it (sum, count and max partials
+  merge). Memory is O(sources), not O(history) — exactly the shape that
+  survives 10^5 sources on a real cluster. Each micro-batch is one
+  vectorized `run_table` call, not per-row or per-run Python.
 - Output mode is append (rows are final when emitted); the trailing
   open run lives only in state until its terminating bucket arrives.
 - Sizing: the state-partition count (spark.sql.shuffle.partitions at
@@ -60,6 +64,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from drought_t_spark.operators.runs import run_table
 
 # Input contract: what below_mask/segment_runs consume (operators/runs.py).
 RUN_STREAM_INPUT = StructType(
@@ -108,20 +114,25 @@ RUN_STATE_SCHEMA = StructType(
 _US = "datetime64[us]"
 
 
+_EVENT_COLS = ["run_id", "below", "onset", "termination", "duration",
+               "severity", "peak", "excess"]
+
+
 def _fold_runs(
     key: Tuple[str], pdf_iter: Iterator[pd.DataFrame], state
 ) -> Iterator[pd.DataFrame]:
-    """Per-source fold: segment each micro-batch on below-change points
-    (vectorized), extend or close the open run carried in state, emit
-    closed runs. Matches operators/runs.py segment_runs+extract_events."""
+    """Per-source fold: one `operators.runs.run_table` call per
+    micro-batch. When the batch's first bucket continues the run carried
+    in state, that run is the table's first, seeded with the carried
+    severity and excess; otherwise the carried run is closed. Every run
+    but the last is emitted, the last is the new state. Matches
+    operators/runs.py segment_runs+extract_events."""
     (source,) = key
     if state.exists:
-        (last_us, have_run, below, run_id, onset_us, term_us,
-         duration, severity, peak, excess) = state.get
+        last_us, have_run, below, run_id, *rest = state.get
+        carried = [run_id, below, *rest]  # in _EVENT_COLS order
     else:
-        last_us, have_run = -(1 << 62), 0
-        below, run_id, onset_us, term_us = 0, 0, 0, 0
-        duration, severity, peak, excess = 0, 0.0, 0.0, 0.0
+        last_us, have_run, carried = -(1 << 62), 0, [0, 0, 0, 0, 0, 0.0, 0.0, 0.0]
 
     # Materialize the group's micro-batch chunks before sorting: Spark
     # chunks a large group into multiple Arrow batches with NO ordering
@@ -131,79 +142,47 @@ def _fold_runs(
     # one micro-batch (size the trigger accordingly), the same bound the
     # state fold itself implies.
     chunks = [pdf for pdf in pdf_iter if not pdf.empty]
-    rows: list[tuple] = []
-    for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-        pdf = pdf.sort_values("bucket_start", kind="mergesort")
-        ts = pdf["bucket_start"].to_numpy().astype(_US).astype(np.int64)
-        fresh = ts > last_us  # late/replay rows: drop (watermark contract)
-        if not fresh.all():
-            pdf, ts = pdf[fresh], ts[fresh]
-        if len(ts) == 0:
-            continue
-        # Intra-batch replay: an at-least-once upstream can land the
-        # same bucket twice in ONE trigger (e.g. duplicated input
-        # files); keep only the FIRST row per bucket_start (stable
-        # mergesort above preserves arrival order) so a duplicate in
-        # the same micro-batch is dropped exactly like the identical
-        # row arriving one batch later is dropped by the high-water
-        # mark — the two replay timings now behave identically.
-        keep = np.ones(len(ts), bool)
-        keep[1:] = ts[1:] > ts[:-1]
-        if not keep.all():
-            pdf, ts = pdf[keep], ts[keep]
-        x_ma = pdf["x_ma"].to_numpy(dtype=np.float64)
-        x0 = pdf["x0"].to_numpy(dtype=np.float64)
-        nn = ~(np.isnan(x_ma) | np.isnan(x0))
-        b = ((x_ma < x0) & nn).astype(np.int64)  # RL1: strict, null->false
-        d = np.where(nn, np.maximum(x0 - x_ma, 0.0), 0.0)  # deficit
-        e = np.where(nn, np.maximum(x_ma - x0, 0.0), 0.0)  # excess
-        chg = np.flatnonzero(np.diff(b) != 0) + 1
-        starts = np.concatenate(([0], chg))
-        ends = np.concatenate((chg, [len(b)]))
-        # Sequential (cumsum) folds, NOT np.sum's pairwise tree: the batch
-        # operator's F.sum folds the time-sorted partition left-to-right
-        # element by element, and bit-parity requires the same addition
-        # order — including ACROSS micro-batches, so a continuing run
-        # folds its carried total through the new elements rather than
-        # adding a segment subtotal.
-        for s0, s1 in zip(starts, ends):
-            seg_b = int(b[s0])
-            seg_n = int(s1 - s0)
-            seg_peak = float(d[s0:s1].max())
-            if have_run and seg_b == below:  # run continues across batches
-                duration += seg_n
-                severity = float(np.cumsum(np.concatenate(([severity], d[s0:s1])))[-1])
-                peak = max(peak, seg_peak)
-                excess = float(np.cumsum(np.concatenate(([excess], e[s0:s1])))[-1])
-            else:
-                if have_run:  # previous run just terminated: emit
-                    rows.append(
-                        (source, run_id, below, onset_us, term_us,
-                         duration, severity, peak, excess)
-                    )
-                have_run = 1
-                run_id += 1
-                below = seg_b
-                onset_us = int(ts[s0])
-                duration, peak = seg_n, seg_peak
-                severity = float(np.cumsum(d[s0:s1])[-1])
-                excess = float(np.cumsum(e[s0:s1])[-1])
-            term_us = int(ts[s1 - 1])
-        last_us = int(ts[-1])
+    if not chunks:
+        return
+    pdf = pd.concat(chunks, ignore_index=True).sort_values("bucket_start", kind="mergesort")
+    ts = pdf["bucket_start"].to_numpy().astype(_US).astype(np.int64)
+    keep = ts > last_us  # late/replay rows: drop (watermark contract)
+    # Intra-batch replay: an at-least-once upstream can land the
+    # same bucket twice in ONE trigger (e.g. duplicated input
+    # files); keep only the FIRST row per bucket_start (stable
+    # mergesort above preserves arrival order) so a duplicate in
+    # the same micro-batch is dropped exactly like the identical
+    # row arriving one batch later is dropped by the high-water
+    # mark — the two replay timings now behave identically.
+    keep[1:] &= ts[1:] > ts[:-1]
+    if not keep.any():
+        return
+    ts = ts[keep]
+    x_ma = pdf["x_ma"].to_numpy(dtype=np.float64)[keep]
+    x0 = pdf["x0"].to_numpy(dtype=np.float64)[keep]
 
-    state.update(
-        (last_us, have_run, below, run_id, onset_us, term_us,
-         duration, severity, peak, excess)
-    )
-    if rows:
-        out = pd.DataFrame(
-            rows,
-            columns=["source", "run_id", "below", "onset", "termination",
-                     "duration", "severity", "peak", "excess"],
-        )
-        out["onset"] = out["onset"].astype(_US)
-        out["termination"] = out["termination"].astype(_US)
-        yield out
+    run_id, below, onset_us, _, duration, severity, peak, excess = carried
+    # RL1 as run_table reads it: does the first bucket continue the run?
+    cont = bool(have_run) and bool(x_ma[0] < x0[0]) == bool(below)
+    r = run_table(np.arange(len(ts)) == 0, ts, x_ma, x0,
+                  (severity, excess) if cont else (0.0, 0.0))
+    r["run_id"] = run_id + (not cont) + np.arange(len(r["first"]))
+    r["below"] = r["below"].astype(np.int64)
+    if cont:  # the carried run goes on as the batch's first run
+        r["onset"][0] = onset_us
+        r["duration"][0] += duration
+        r["peak"][0] = max(r["peak"][0], peak)
+    runs = [r[c] for c in _EVENT_COLS]
+    if have_run and not cont:  # the carried run ended at the batch edge
+        runs = [np.insert(col, 0, v) for col, v in zip(runs, carried)]
+
+    run_id, below, *rest = (col[-1].item() for col in runs)  # the open run
+    state.update((int(ts[-1]), 1, below, run_id, *rest))
+    closed = {c: col[:-1] for c, col in zip(_EVENT_COLS, runs)}
+    if len(closed["run_id"]):
+        closed["onset"] = closed["onset"].astype(_US)
+        closed["termination"] = closed["termination"].astype(_US)
+        yield pd.DataFrame({"source": source, **closed})
 
 
 def _streaming_run_events(stream: DataFrame) -> DataFrame:

@@ -1,30 +1,16 @@
-"""Chunked-window parity (SURVEY.md §4 skew row): per-(source, chunk)
-windows with halos / edge stitching must equal the global-window
-operators exactly on the F2 fixture — including runs that cross chunk
-edges (chunk_buckets=64 on a ~10-year daily series forces many)."""
+"""Chunked-window parity (SURVEY.md §4 skew row): the per-(source,
+chunk) centered MA with halos must equal the global-window operator on
+the F2 fixture (chunk_buckets=64 on a ~10-year daily series puts many
+frames across chunk edges)."""
 
 import numpy as np
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from drought_t_spark import synth
 from drought_t_spark.config import EngineConfig
-from drought_t_spark.operators.chunked import chunked_run_events, moving_avg_chunked
+from drought_t_spark.operators.chunked import moving_avg_chunked
 from drought_t_spark.operators.gapfill import gap_fill
-from drought_t_spark.operators.runs import below_mask, extract_events, segment_runs
 from drought_t_spark.operators.smoothing import moving_avg
-from drought_t_spark.operators.threshold import attach_threshold, fixed_threshold
 from drought_t_spark.plans.drought import series_to_tier
-
-
-@pytest.fixture(scope="module")
-def masked(spark):
-    tier = series_to_tier(spark.createDataFrame(synth.series_pdf()), ts_col="date")
-    filled = gap_fill(tier, "day", EngineConfig(), value_cols=("value",))
-    sm = moving_avg(filled, 29)
-    th = fixed_threshold(sm, EngineConfig(threshold_pct=0.5))
-    return below_mask(attach_threshold(sm, th, variable=False)).persist()
 
 
 def test_moving_avg_chunked_parity(spark):
@@ -38,48 +24,3 @@ def test_moving_avg_chunked_parity(spark):
     pb = b.toPandas().sort_values(["source", "bucket_start"]).reset_index(drop=True)
     assert len(pa) == len(pb)
     np.testing.assert_allclose(pa.x_ma, pb.x_ma, rtol=0, atol=1e-12)
-
-
-def test_chunked_runs_parity(spark, masked):
-    want = (
-        extract_events(segment_runs(masked))
-        .select("source", "below", "onset", "termination", "duration",
-                "severity", "peak", "excess")
-        .toPandas()
-        .sort_values(["source", "onset"]).reset_index(drop=True)
-    )
-    got = (
-        chunked_run_events(masked, "day", chunk_buckets=64)
-        .select("source", "below", "onset", "termination", "duration",
-                "severity", "peak", "excess")
-        .toPandas()
-        .sort_values(["source", "onset"]).reset_index(drop=True)
-    )
-    assert len(got) == len(want), f"{len(got)} runs vs {len(want)}"
-    pd.testing.assert_frame_equal(
-        got[["source", "below", "duration"]], want[["source", "below", "duration"]]
-    )
-    np.testing.assert_array_equal(
-        got.onset.astype("datetime64[us]").to_numpy(),
-        want.onset.astype("datetime64[us]").to_numpy(),
-    )
-    np.testing.assert_array_equal(
-        got.termination.astype("datetime64[us]").to_numpy(),
-        want.termination.astype("datetime64[us]").to_numpy(),
-    )
-    np.testing.assert_allclose(got.severity, want.severity, rtol=1e-9)
-    np.testing.assert_allclose(got.peak, want.peak, rtol=1e-9)
-    np.testing.assert_allclose(got.excess, want.excess, rtol=1e-9)
-
-
-def test_chunked_runs_cross_edges(spark, masked):
-    """The fixture must actually exercise stitching: with 64-day chunks
-    over ~10 years, some below-runs span a chunk boundary."""
-    span = 86400
-    local = chunked_run_events(masked, "day", chunk_buckets=64)
-    # a stitched run is longer than one chunk OR crosses a 64-day grid line
-    crossing = local.where(
-        (F.floor(F.col("onset").cast("long") / span / 64)
-         != F.floor(F.col("termination").cast("long") / span / 64))
-    ).count()
-    assert crossing > 0, "fixture produced no chunk-crossing runs; test is vacuous"

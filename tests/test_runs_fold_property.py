@@ -1,16 +1,17 @@
-"""Property test for the streaming run-extraction fold as a PURE
-function (no Spark): for ANY series and ANY micro-batch split, feeding
-the chunks through `_fold_runs` with a fake GroupState must emit
-exactly the terminated runs a sequential pandas reference computes —
-and the addition order must make severity/excess equal to a plain
-left-fold sum, the same order batch F.sum uses on the sorted
-partition."""
+"""Property tests for the run step `operators.runs.run_table` and the
+streaming run-extraction fold built on it, as PURE functions (no
+Spark): for ANY series (several sources at once for the run step) and
+ANY micro-batch split, they must give exactly the runs a sequential
+reference computes — and the addition order must make severity/excess
+equal to a plain left-fold sum, the same order batch F.sum uses on the
+sorted partition."""
 
 import numpy as np
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from drought_t_spark.operators.runs import run_table
 from drought_t_spark.streaming.runs_stream import _fold_runs
 
 
@@ -28,9 +29,10 @@ class FakeState:
         self.exists = True
 
 
-def _reference_runs(values, x0=0.0):
+def _reference_runs(values, x0=0.0, include_open=False):
     """Sequential per-row reference (the drought method's run
-    definition): maximal constant-below stretches; left-fold sums."""
+    definition): maximal constant-below stretches; left-fold sums. The
+    trailing run is still open; `include_open` returns it too."""
     out, cur = [], None
     for i, v in enumerate(values):
         isnum = v is not None and not np.isnan(v)
@@ -50,7 +52,7 @@ def _reference_runs(values, x0=0.0):
                    "severity": d, "peak": d, "excess": e,
                    "run_id": (out[-1]["run_id"] + 1) if out else 1}
     # trailing run stays OPEN (never emitted by the stream)
-    return out
+    return out + [cur] if include_open and cur is not None else out
 
 
 def _drive(values, cut_points):
@@ -110,6 +112,78 @@ def test_fold_matches_sequential_reference(values, data):
         hr = np.timedelta64(3600_000_000, "us")
         assert np.datetime64(row["onset"], "us") == t0 + r["onset"] * hr
         assert np.datetime64(row["termination"], "us") == t0 + r["term"] * hr
+
+
+_VALUES = st.lists(
+    st.one_of(
+        st.floats(min_value=-10, max_value=10, allow_nan=False),
+        st.just(float("nan")),
+    ),
+    min_size=1,
+    max_size=60,
+)
+
+
+def _table(values, x0, seed=(0.0, 0.0)):
+    """run_table over one source's `values` (bucket index as ts)."""
+    x = np.array(values, dtype=np.float64)
+    return run_table(np.arange(len(x)) == 0, np.arange(len(x)), x,
+                     np.full(len(x), x0), seed)
+
+
+def _rows(t):
+    cols = ("below", "onset", "termination", "duration", "severity", "peak", "excess")
+    return [tuple(t[c][i].item() for c in cols) for i in range(len(t["first"]))]
+
+
+def _ref_rows(values, x0):
+    return [(bool(r["below"]), r["onset"], r["term"], r["duration"], r["severity"],
+             r["peak"], r["excess"]) for r in _reference_runs(values, x0, include_open=True)]
+
+
+@given(sources=st.lists(_VALUES, min_size=1, max_size=4),
+       x0=st.floats(min_value=-2, max_value=2, allow_nan=False))
+@settings(max_examples=150, deadline=None)
+def test_run_table_matches_sequential_reference(sources, x0):
+    """Concatenated sources with `head` at each start: every run of every
+    source, the trailing open one included, equals the left-fold
+    reference exactly (== on severity, peak and excess)."""
+    x = np.concatenate([np.array(v, dtype=np.float64) for v in sources])
+    sizes = [len(v) for v in sources]
+    offsets = np.cumsum([0] + sizes[:-1])
+    head = np.zeros(len(x), bool)
+    head[offsets] = True
+    pos = np.arange(len(x)) - np.repeat(offsets, sizes)  # bucket index in its source
+    t = run_table(head, pos, x, np.full(len(x), x0))
+    got = _rows(t)
+    want = [row for v in sources for row in _ref_rows(v, x0)]
+    assert got == want
+    src = np.repeat(np.arange(len(sources)), sizes)
+    assert [int(src[i]) for i in t["first"]] == [
+        k for k, v in enumerate(sources) for _ in _ref_rows(v, x0)]
+
+
+@given(values=_VALUES, data=st.data())
+@settings(max_examples=150, deadline=None)
+def test_run_table_split_seeded_equals_whole(values, data):
+    """One source cut at any point: the second call, seeded from the
+    first call's last run when it continues that run, gives the same
+    bits as one call over the whole source."""
+    cut = data.draw(st.integers(min_value=1, max_value=len(values)))
+    whole = _rows(_table(values, 0.0))
+    a = _rows(_table(values[:cut], 0.0))
+    if cut == len(values):
+        assert a == whole
+        return
+    last = a[-1]
+    cont = _rows(_table(values[cut:], 0.0))[0][0] == last[0]  # same `below`
+    b = _rows(_table(values[cut:], 0.0, (last[4], last[6]) if cont else (0.0, 0.0)))
+    b = [(r[0], r[1] + cut, r[2] + cut) + r[3:] for r in b]
+    if cont:  # the first call's last run goes on into the second call
+        r = b[0]
+        b[0] = (last[0], last[1], r[2], last[3] + r[3], r[4], max(last[5], r[5]), r[6])
+        a = a[:-1]
+    assert a + b == whole
 
 
 def test_fold_drops_late_rows_pure():

@@ -234,10 +234,11 @@ def _jobs_in_group(spark, group, fn):
 
 def test_fold_job_counts(spark, tmp_path):
     """Both folds find their batch keys by listing partition directories,
-    not with a Spark job. On two sources with both kinds of partials, the
-    first compaction launches at most 5 Spark jobs and the first seal at
-    most 4; folding a second round into the committed tier and tail
-    launches at most 9 and 7."""
+    not with a Spark job, and read the partials and tail with their
+    declared schemas, not with a schema-inference job. On two sources
+    with both kinds of partials, the first compaction launches at most
+    4 Spark jobs and the first seal at most 3; folding a second round
+    into the committed tier and tail launches at most 8 and 5."""
     from drought_t_spark.sources.warehouse import Warehouse
     from drought_t_spark.streaming.payload_stream import (
         seal_payload_partials,
@@ -250,7 +251,7 @@ def test_fold_job_counts(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh"))
     in_dir = str(tmp_path / "in")
-    for lo, max_compact, max_seal in ((0, 5, 4), (120, 9, 7)):
+    for lo, max_compact, max_seal in ((0, 4, 3), (120, 8, 5)):
         for src in ("src_aaaa", "src_bbbb"):
             _seq_batch(spark, list(range(lo, lo + 120)), src).write.mode(
                 "append"
@@ -267,3 +268,43 @@ def test_fold_job_counts(spark, tmp_path):
             spark, f"seal-jobs-{lo}", lambda: seal_payload_partials(spark, wh)
         )
         assert sealed >= 1 and 0 < len(seal_jobs) <= max_seal, seal_jobs
+
+
+def test_stream_tables_have_the_declared_schemas(spark, tmp_path, monkeypatch):
+    """The frames both ingests and the seal write carry exactly the
+    declared stream schemas (names and types), so the folds and live
+    views that read with them cannot drift from what is written."""
+    from drought_t_spark import schemas as S
+    from drought_t_spark.sources.warehouse import Warehouse
+    from drought_t_spark.streaming.payload_stream import (
+        PAYLOAD_PARTIALS_TBL,
+        PAYLOAD_TAIL_TBL,
+        seal_payload_partials,
+        start_payload_ingest,
+    )
+    from drought_t_spark.streaming.rollup_stream import PARTIALS_TBL, start_tier_ingest
+
+    real = Warehouse.write_partitioned
+    seen = {}
+
+    def recording(self, df, table, *a, **kw):
+        seen[table] = [(f.name, f.dataType) for f in df.schema]
+        return real(self, df, table, *a, **kw)
+
+    monkeypatch.setattr(Warehouse, "write_partitioned", recording)
+    wh = Warehouse(str(tmp_path / "wh"))
+    in_dir = str(tmp_path / "in")
+    _seq_batch(spark, list(range(120))).write.parquet(in_dir)
+    for ingest, ckpt in ((start_tier_ingest, "ckpt"), (start_payload_ingest, "ckpt_pay")):
+        q = ingest(spark, in_dir, wh, str(tmp_path / ckpt))
+        q.processAllAvailable()
+        q.stop()
+    assert seal_payload_partials(spark, wh) >= 1
+    want = {
+        PARTIALS_TBL: S.STREAM_PARTIALS,
+        PAYLOAD_PARTIALS_TBL: S.STREAM_RAW_PARTIALS,
+        PAYLOAD_TAIL_TBL: S.STREAM_RAW,
+    }
+    assert sorted(seen) == sorted(want)
+    for table, fields in seen.items():
+        assert fields == [(f.name, f.dataType) for f in want[table]], table
