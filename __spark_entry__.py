@@ -290,18 +290,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     q["cumulative_deficit"] = cumulative_deficit
 
-    # --- chunked-window skew path (SURVEY §4): same oracles as the
-    # global-window twins — the chunking must be invisible in results ---
+    # --- former chunked-window skew path (SURVEY §4): both now run
+    # their global twins, with the same oracles ---
     def ma_chunked(spark, sf_dir):
-        from drought_t_spark.operators.chunked import moving_avg_chunked
-
-        h = _hour_stats(spark, sf_dir).withColumn("value", F.col("avg_raw"))
-        filled = gap_fill(h, "hour", EngineConfig(), value_cols=("value",))
-        sm = moving_avg_chunked(filled, 7, "hour", chunk_buckets=48)
-        return sm.select(
-            F.col("source").alias("event_type"), "bucket_start",
-            F.round("x_ma", 6).alias("x_ma"),
-        )
+        # the drought method's MA runs in its per-source kernel (a 10^6-bucket
+        # source is one 2.75 s task), so the window MA needs no chunked twin
+        return moving_avg_centered(spark, sf_dir)
     q["ma_chunked"] = ma_chunked
 
     def runs_events_chunked(spark, sf_dir):
@@ -1256,14 +1250,7 @@ def oracle_sql() -> dict[str, str]:
     FROM s JOIN th ON s.event_type = th.event_type
     """
 
-    o["ma_chunked"] = f"""
-    WITH {_SQL_HOURLY}
-    SELECT event_type, bucket_start,
-           round(avg(avg_raw) OVER (
-               PARTITION BY event_type ORDER BY bucket_start
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING), 6) AS x_ma
-    FROM s
-    """
+    o["ma_chunked"] = o["moving_avg_centered"]
 
     o["runs_events_chunked"] = f"""
     WITH {_runs_core}

@@ -697,9 +697,10 @@ def run_cascade_bench() -> None:
     """Payload-cascade throughput (day←hour, month←day) at sf×mult:
     decode→concat→re-encode of the compressed finer tier — the 100 TB
     path where month payloads cost one scan of day payloads instead of
-    re-reading raw. Measures the r3 streamed shape (repartition + sort +
-    mapInPandas); the rejected groupBy().applyInPandas shape costs
-    ~5 ms/group fixed. One JSON line."""
+    re-reading raw. Measures the streamed shape (repartition + sort +
+    mapInArrow on the `grouped_stream` scaffold); the rejected
+    groupBy().applyInPandas shape costs ~5 ms/group fixed. One JSON
+    line."""
     import shutil
     import tempfile
 

@@ -5,8 +5,9 @@ minor-drought exclusion (Fleig et al. 2006 §3.3).
 
 Spark shape: the tier series (source, bucket_start, value) goes through
 ONE repartition(source) → sortWithinPartitions(source, bucket_start) →
-mapInPandas stage on the `rollup.grouped_stream` scaffold: no window
-pass, no join, no checkpoint. The kernel works on whole Arrow batches;
+mapInArrow stage on the `rollup.grouped_stream` scaffold: no window
+pass, no join, no checkpoint. The kernel works on whole Arrow batches,
+with no pandas conversion;
 every complete source in a batch goes through each step at once, one
 vectorized NumPy pass over all of the batch's buckets or runs, with no
 per-bucket or per-run Python:
@@ -58,19 +59,21 @@ source has no inter-event gap.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.operators.rollup import grouped_stream
 from drought_t_spark.operators.runs import run_table
 
-_KERNEL_SCHEMA = (
-    "source string, event_id long, onset long, termination long, "
-    "duration long, severity double, intensity double, peak double, "
-    "pooled boolean, excluded boolean"
-)
+_KERNEL_SCHEMA = pa.schema([
+    ("source", pa.string()), ("event_id", pa.int64()), ("onset", pa.int64()),
+    ("termination", pa.int64()), ("duration", pa.int64()), ("severity", pa.float64()),
+    ("intensity", pa.float64()), ("peak", pa.float64()), ("pooled", pa.bool_()),
+    ("excluded", pa.bool_()),
+])
 
 _STEP_US = {"hour": 3_600_000_000, "day": 86_400_000_000}
 #: cycle positions per tier (hour-of-week 0..167, day-of-year 1..366,
@@ -239,16 +242,14 @@ def _pool_runs(runs: dict, cfg: EngineConfig) -> dict:
     }
 
 
-def _source_events(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray,
-                   tier: str, cfg: EngineConfig) -> pd.DataFrame:
-    """The whole method for the complete sources [starts[i], ends[i]) of
-    one batch: rows (source, ts, value) sorted by (source, ts), `ts` in
-    microseconds → the kernel schema's event rows."""
-    if not len(starts):
-        return pd.DataFrame()
-    n = int(ends[-1])
+def _source_events(rb: pa.RecordBatch, starts: np.ndarray, ends: np.ndarray,
+                   tier: str, cfg: EngineConfig) -> pa.RecordBatch:
+    """The whole method for the complete sources [starts[i], ends[i])
+    that make up `rb`: rows (source, ts, value) sorted by (source, ts),
+    `ts` in microseconds → the kernel schema's event rows."""
+    n = rb.num_rows
     sizes = ends - starts
-    ts = pdf["ts"].to_numpy()[:n]
+    ts = rb.column("ts").to_numpy()
     t0 = ts[starts]
     # GF1: position of each observed bucket on its source's calendar
     pos, aligned = _buckets_from(np.repeat(t0, sizes), ts, tier)
@@ -264,7 +265,7 @@ def _source_events(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray,
     back = np.arange(N) - off[gid]
     ahead = length[gid] - 1 - back
     x = np.full(N, np.nan)
-    x[np.repeat(off, sizes) + pos] = pdf["value"].to_numpy(np.float64)[:n]
+    x[np.repeat(off, sizes) + pos] = rb.column("value").to_numpy(zero_copy_only=False)
     if cfg.gap_fill_mode == "zero":
         x[np.isnan(x)] = 0.0
     elif cfg.gap_fill_mode == "locf":
@@ -282,8 +283,9 @@ def _source_events(pdf: pd.DataFrame, starts: np.ndarray, ends: np.ndarray,
 
     runs = run_table(back == 0, bts, x_ma, x0)
     ev = _pool_runs({**runs, "gid": gid[runs["first"]]}, cfg)
-    source = pdf["source"].to_numpy()[starts][ev.pop("gid")]
-    return pd.DataFrame({"source": source, **ev})
+    source = rb.column("source").take(starts[ev["gid"]])
+    return pa.RecordBatch.from_arrays(
+        [source] + [ev[c] for c in _KERNEL_SCHEMA.names[1:]], schema=_KERNEL_SCHEMA)
 
 
 def pool_events(series: DataFrame, tier: str, cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -291,7 +293,7 @@ def pool_events(series: DataFrame, tier: str, cfg: EngineConfig = DEFAULT) -> Da
     (source, event_id, onset, termination, duration, severity,
     intensity, peak, pooled, excluded). Pooling runs to fixed point for
     `cfg.pooling == "ic"` and is skipped for "none". Lazy: one Exchange
-    + one Sort + one MapInPandas."""
+    + one Sort + one MapInArrow."""
     tz = series.sparkSession.conf.get("spark.sql.session.timeZone")
     rows = series.select(
         "source",
@@ -299,10 +301,10 @@ def pool_events(series: DataFrame, tier: str, cfg: EngineConfig = DEFAULT) -> Da
         F.col("value").cast("double").alias("value"),
     )
     parts = rows.repartition("source").sortWithinPartitions("source", "ts")
-    out = parts.mapInPandas(
+    out = parts.mapInArrow(
         lambda batches: grouped_stream(
-            batches, ["source"], lambda pdf, s, e: _source_events(pdf, s, e, tier, cfg)),
-        _KERNEL_SCHEMA,
+            batches, ["source"], lambda rb, s, e: _source_events(rb, s, e, tier, cfg)),
+        from_arrow_schema(_KERNEL_SCHEMA),
     )
     wall = lambda c: F.to_utc_timestamp(F.timestamp_micros(c), tz).alias(c)  # noqa: E731
     return out.select(

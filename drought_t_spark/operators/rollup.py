@@ -13,8 +13,10 @@ CRITICAL pruning invariant: stats-only rollups must never touch the
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.functions.scalars import seq_index, seq_timestamp
@@ -83,63 +85,75 @@ def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
 #: payload_codec column value (plus "+zlib" for the TSZZ envelope)
 _CODEC = "TSZ1"
 
-_PAYLOAD_SCHEMA = (
-    "source string, bucket_start timestamp, chunk_id int, "
-    "payload binary, payload_n_tokens long"
-)
+#: the encode kernel's output; `bucket_start` crosses as epoch seconds
+_ENCODE_SCHEMA = pa.schema([
+    ("source", pa.string()), ("bs_epoch", pa.int64()), ("chunk_id", pa.int32()),
+    ("payload", pa.binary()), ("payload_n_tokens", pa.int64()),
+])
+_PAYLOAD_SCHEMA = pa.schema([
+    ("source", pa.string()), ("bucket_start", pa.timestamp("us", tz="UTC")),
+    ("chunk_id", pa.int32()), ("payload", pa.binary()), ("payload_n_tokens", pa.int64()),
+])
 
 
 def grouped_stream(batches, key_cols, emit):
-    """Shared mapInPandas scaffold for every payload kernel: the input
-    arrives hash-partitioned by `key_cols` and sorted by (key_cols,
-    order cols), so group boundaries are adjacent-change positions —
-    found vectorized, ~0.1 ms/group. A group spanning a batch boundary
-    is carried into the next batch; the trailing carry flushes at end.
-    A carried group's batches are concatenated once, when it ends, so a
-    group of many batches costs linear time (re-concatenating the carry
-    per batch took 5.4 s for one 10^6-row group in 2048-row batches).
-    `emit(pdf, starts, ends)` maps each complete group [s, e) to output
-    rows. This scaffold (vs groupBy().applyInPandas, ~5 ms/group fixed:
-    one Arrow record batch + two pandas frames per group) is the
-    difference measured at 166 s task time vs 15 s CPU on the payload
-    stage — see BENCH/BASELINE.md §4."""
+    """The one group scaffold under every per-group kernel (payload
+    encode and recode, value-history pack, drought method), for
+    mapInArrow: the input arrives partitioned so that each group lies
+    in one task and sorted by (key_cols, order cols), so group
+    boundaries are the adjacent-change positions of the key columns,
+    found vectorized in Arrow compute.
+
+    `emit(rb, starts, ends)` gets a `RecordBatch` holding only complete
+    groups [starts[i], ends[i]), contiguous from row 0, and returns one
+    `RecordBatch` of output rows (empty ones are dropped). A group that
+    may continue into the next batch is carried as zero-copy slices;
+    when it ends, only its own slices are concatenated (once, however
+    many batches it spans) and emitted alone — concatenating the carry
+    with the whole next batch cost ~4% of the encode kernel, and
+    re-concatenating it per batch took 5.4 s for one 10^6-row group in
+    2048-row batches. This scaffold (vs groupBy().applyInPandas, ~5
+    ms/group fixed: one Arrow record batch + two pandas frames per
+    group) is the difference measured at 166 s task time vs 15 s CPU
+    on the payload stage — see BENCH/BASELINE.md §4."""
     import numpy as np
-    import pandas as pd
+    import pyarrow.compute as pc
 
-    carry = []  # batch slices of the one group that may continue
+    carry = []  # slices of the one group that may continue
 
-    def flush(pdf, complete_only):
-        nonlocal carry
-        n = len(pdf)
-        chg = None
-        for c in key_cols:
-            a = pdf[c].to_numpy()
-            m = a[1:] != a[:-1]
-            chg = m if chg is None else (chg | m)
-        chg = np.flatnonzero(chg)
-        starts = np.concatenate([[0], chg + 1])
-        ends = np.concatenate([chg + 1, [n]])
-        if complete_only:
-            # the last group may continue in the next batch — carry it
-            carry = [pdf.iloc[starts[-1]:]]
-            starts, ends = starts[:-1], ends[:-1]
-        else:
-            carry = []
-        return emit(pdf, starts, ends)
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        if carry:
-            if all((pdf[c].to_numpy() == carry[0][c].iat[0]).all() for c in key_cols):
-                carry.append(pdf)  # the carried group goes on through this batch
-                continue
-            pdf = pd.concat(carry + [pdf], ignore_index=True)
-        out = flush(pdf, complete_only=True)
-        if len(out):
+    def emitted(rb, ends):
+        out = emit(rb.slice(0, ends[-1]), np.append(0, ends[:-1]), ends)
+        if out.num_rows:
             yield out
+
+    def flush():
+        rb = carry[0] if len(carry) == 1 else (
+            pa.Table.from_batches(carry).combine_chunks().to_batches()[0])
+        carry.clear()
+        return emitted(rb, np.array([rb.num_rows]))
+
+    for rb in batches:
+        n = rb.num_rows
+        if n == 0:
+            continue
+        chg = np.zeros(n - 1, bool)
+        for c in key_cols:
+            a = rb.column(c)
+            chg |= pc.not_equal(a.slice(1), a.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+        ends = np.append(np.flatnonzero(chg) + 1, n)
+        if carry:
+            if all(rb.column(c)[0] == carry[0].column(c)[0] for c in key_cols):
+                carry.append(rb.slice(0, ends[0]))  # the carried group goes on
+                if len(ends) == 1:
+                    continue
+                rb, ends = rb.slice(ends[0]), ends[1:] - ends[0]
+            yield from flush()
+        # the last group may continue in the next batch — carry it
+        carry.append(rb.slice(ends[-2] if len(ends) > 1 else 0))
+        if len(ends) > 1:
+            yield from emitted(rb, ends[:-1])
     if carry:
-        yield flush(pd.concat(carry, ignore_index=True), complete_only=False)
+        yield from flush()
 
 
 def _encode_arrow_stream(batches, wrap_zlib: bool = False):
@@ -149,81 +163,32 @@ def _encode_arrow_stream(batches, wrap_zlib: bool = False):
     Arrow, not pandas: the hot input column is `tokens` (list<int32>),
     and Arrow's list layout is ONE contiguous values buffer + offsets —
     a group's flattened token stream is `values[offs[s]:offs[e]]`, a
-    single zero-copy slice. The pandas route materializes every row as
-    its own numpy object then re-concatenates per group; measured at
-    sf0.1 that conversion alone cost ~0.9 s of a 2.3 s stage — more
-    than the codec itself. Group boundaries are adjacent-change
-    positions on the sorted keys (vectorized); a group spanning a batch
-    boundary is carried into the next batch, the trailing carry flushes
-    at end (same contract as `grouped_stream`)."""
+    single zero-copy slice (`offsets` of a sliced batch already count
+    from the slice's start in the unsliced `values`). The pandas route
+    materializes every row as its own numpy object then re-concatenates
+    per group; measured at sf0.1 that conversion alone cost ~0.9 s of a
+    2.3 s stage — more than the codec itself."""
     import numpy as np
-    import pyarrow as pa
 
     from drought_t_spark.codec import tsz1
 
-    if wrap_zlib:
-        enc = lambda a: tsz1.wrap_zlib(tsz1.encode_tokens(a))  # noqa: E731
-    else:
-        enc = tsz1.encode_tokens
-
-    carry = None  # (src, bs, chk, ntok, flat, offs) with offs[0] == 0
-
-    def split(src, bs, chk):
-        n = len(src)
-        m = (src[1:] != src[:-1]) | (bs[1:] != bs[:-1]) | (chk[1:] != chk[:-1])
-        chg = np.flatnonzero(m)
-        return np.concatenate([[0], chg + 1]), np.concatenate([chg + 1, [n]])
-
-    def emit(src, bs, chk, ntok, flat, offs, starts, ends):
-        pays = [
-            enc(flat[offs[s]:offs[e]].astype(np.int32, copy=False))
-            for s, e in zip(starts, ends)
-        ]
-        nn = [int(ntok[s:e].sum()) for s, e in zip(starts, ends)]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(src[starts].tolist(), type=pa.string()),
-                pa.array(bs[starts], type=pa.int64()),
-                pa.array(chk[starts].astype("int32"), type=pa.int32()),
-                pa.array(pays, type=pa.binary()),
-                pa.array(nn, type=pa.int64()),
-            ],
-            names=["source", "bs_epoch", "chunk_id", "payload", "payload_n_tokens"],
-        )
-
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        src = rb.column(0).to_numpy(zero_copy_only=False)
-        bs = rb.column(1).to_numpy()
-        chk = rb.column(2).to_numpy()
-        tl = rb.column(3)
-        ntok = rb.column(4).to_numpy()
-        offs_raw = tl.offsets.to_numpy()  # n+1 offsets into the values buffer
+    def emit(rb, starts, ends):
+        tl = rb.column("tokens")
+        offs = tl.offsets.to_numpy()
         vals = tl.values.to_numpy(zero_copy_only=False)
-        offs = (offs_raw - offs_raw[0]).astype(np.int64)
-        flat = vals[offs_raw[0]:offs_raw[-1]]
-        if carry is not None:
-            csrc, cbs, cchk, cntok, cflat, coffs = carry
-            src = np.concatenate([csrc, src])
-            bs = np.concatenate([cbs, bs])
-            chk = np.concatenate([cchk, chk])
-            ntok = np.concatenate([cntok, ntok])
-            offs = np.concatenate([coffs, offs[1:] + coffs[-1]])
-            flat = np.concatenate([cflat, flat])
-        starts, ends = split(src, bs, chk)
-        s_last = starts[-1]
-        carry = (
-            src[s_last:], bs[s_last:], chk[s_last:], ntok[s_last:],
-            flat[offs[s_last]:].copy(), (offs[s_last:] - offs[s_last]).copy(),
-        )
-        starts, ends = starts[:-1], ends[:-1]
-        if len(starts):
-            yield emit(src, bs, chk, ntok, flat, offs, starts, ends)
-    if carry is not None and len(carry[0]):
-        src, bs, chk, ntok, flat, offs = carry
-        starts, ends = split(src, bs, chk)
-        yield emit(src, bs, chk, ntok, flat, offs, starts, ends)
+        pays = []
+        for s, e in zip(offs[starts], offs[ends]):
+            blob = tsz1.encode_tokens(vals[s:e].astype(np.int32, copy=False))
+            pays.append(tsz1.wrap_zlib(blob) if wrap_zlib else blob)
+        return pa.RecordBatch.from_arrays([
+            rb.column("source").take(starts),
+            rb.column("bs_epoch").take(starts),
+            rb.column("chunk_id").take(starts),
+            pa.array(pays, pa.binary()),
+            pa.array(np.add.reduceat(rb.column("n_tok").to_numpy(), starts, dtype=np.int64)),
+        ], schema=_ENCODE_SCHEMA)
+
+    yield from grouped_stream(batches, ["source", "bs_epoch", "chunk_id"], emit)
 
 
 def pack_payloads(
@@ -295,8 +260,6 @@ def pack_payloads(
         seqs_t1.select("source", bucket, "ts", "seq", "tokens", "n_tok")
         .withColumn("chunk_id", chunk)
         .select(
-            # positional contract with _encode_arrow_stream: it reads
-            # rb.column(0..4) in exactly this order
             "source",
             F.col("bucket_start").cast("long").alias("bs_epoch"),
             "chunk_id", "tokens", "n_tok", "seq",
@@ -317,8 +280,7 @@ def pack_payloads(
     wrap = bool(cfg.payload_zlib)
     pay = parts.drop("seq").mapInArrow(
         lambda batches: _encode_arrow_stream(batches, wrap_zlib=wrap),
-        "source string, bs_epoch long, chunk_id int, "
-        "payload binary, payload_n_tokens long",
+        from_arrow_schema(_ENCODE_SCHEMA),
     ).select(
         "source",
         F.col("bs_epoch").cast("timestamp").alias("bucket_start"),
@@ -336,47 +298,34 @@ def pack_payloads(
 
 
 def _recode_stream(batches, wrap_zlib: bool = False):
-    """mapInPandas kernel for tier cascading: decode each (source,
+    """mapInArrow kernel for tier cascading: decode each (source,
     coarse bucket_start) group's member payloads in (fine_bucket,
     chunk_id) order — the sort key — concat, re-encode. Same
-    `grouped_stream` scaffold as `_encode_stream` (one Exchange + one
-    Sort + one MapInPandas; at 10^5 sources × 365 days ≈ 37M day-tier
-    groups the applyInPandas shape would burn ~50 h of per-group fixed
-    cost). Decode auto-detects the TSZZ envelope, so mixed raw/zlib
-    inputs cascade fine; the output envelope follows `wrap_zlib`."""
+    `grouped_stream` scaffold as `_encode_arrow_stream` (one Exchange +
+    one Sort + one MapInArrow; at 10^5 sources × 365 days ≈ 37M
+    day-tier groups the applyInPandas shape would burn ~50 h of
+    per-group fixed cost). Decode auto-detects the TSZZ envelope, so
+    mixed raw/zlib inputs cascade fine; the output envelope follows
+    `wrap_zlib`."""
     import numpy as np
-    import pandas as pd
 
     from drought_t_spark.codec import tsz1
 
-    def emit(pdf, starts, ends):
-        src = pdf["source"].to_numpy()
-        bkt = pdf["bucket_start"].to_numpy()
-        pay = pdf["payload"].to_numpy()
-        ntok = pdf["payload_n_tokens"].to_numpy()
-        out_src, out_bkt, out_pay, out_n = [], [], [], []
+    def emit(rb, starts, ends):
+        pay = rb.column("payload").to_pylist()
+        blobs = []
         for s, e in zip(starts, ends):
-            flat = (
-                np.concatenate([tsz1.decode_tokens(pay[i]) for i in range(s, e)])
-                if e > s
-                else np.array([], np.int32)
-            )
-            blob = tsz1.encode_tokens(flat)
-            if wrap_zlib:
-                blob = tsz1.wrap_zlib(blob)
-            out_src.append(src[s])
-            out_bkt.append(bkt[s])
-            out_pay.append(blob)
-            out_n.append(int(ntok[s:e].sum()))
-        return pd.DataFrame(
-            {
-                "source": out_src,
-                "bucket_start": pd.Series(out_bkt, dtype="datetime64[us]"),
-                "chunk_id": pd.Series([0] * len(out_src), dtype="int32"),
-                "payload": out_pay,
-                "payload_n_tokens": pd.Series(out_n, dtype="int64"),
-            }
-        )
+            blob = tsz1.encode_tokens(np.concatenate(
+                [tsz1.decode_tokens(pay[i]) for i in range(s, e)]))
+            blobs.append(tsz1.wrap_zlib(blob) if wrap_zlib else blob)
+        return pa.RecordBatch.from_arrays([
+            rb.column("source").take(starts),
+            rb.column("bucket_start").take(starts),
+            pa.array(np.zeros(len(starts), np.int32)),
+            pa.array(blobs, pa.binary()),
+            pa.array(np.add.reduceat(
+                rb.column("payload_n_tokens").to_numpy(), starts, dtype=np.int64)),
+        ], schema=_PAYLOAD_SCHEMA)
 
     yield from grouped_stream(batches, ["source", "bucket_start"], emit)
 
@@ -385,9 +334,9 @@ def cascade_payloads(payloads: DataFrame, to_tier: str, cfg: EngineConfig = DEFA
     """Coarser-tier payloads by decode→concat→re-encode of finer-tier
     payloads — reads the compressed tier, never raw (the 100 TB path:
     month payloads cost one scan of day payloads, ~4× smaller). Same
-    repartition + sortWithinPartitions + mapInPandas stream as
-    pack_payloads: ONE row shuffle, whole-partition Arrow batches, no
-    per-group fixed cost."""
+    repartition + sortWithinPartitions + mapInArrow stream on the
+    `grouped_stream` scaffold as pack_payloads: ONE row shuffle,
+    whole-partition Arrow batches, no per-group fixed cost."""
     assert to_tier in _FINER
     regrouped = payloads.select(
         "source",
@@ -399,8 +348,9 @@ def cascade_payloads(payloads: DataFrame, to_tier: str, cfg: EngineConfig = DEFA
         "source", "bucket_start", "fine_bucket", "chunk_id"
     )
     wrap = bool(cfg.payload_zlib)
-    out = parts.mapInPandas(
-        lambda batches: _recode_stream(batches, wrap_zlib=wrap), _PAYLOAD_SCHEMA
+    out = parts.mapInArrow(
+        lambda batches: _recode_stream(batches, wrap_zlib=wrap),
+        from_arrow_schema(_PAYLOAD_SCHEMA),
     )
     codec_name = _CODEC + ("+zlib" if wrap else "")
     return (

@@ -18,55 +18,43 @@ bucket) one row holding TWO codec payloads —
 UDFs), `arrays_zip` + `posexplode` (JVM) → the original
 (source, bucket_start, value) rows, exactly.
 
-Shape: the same repartition + sortWithinPartitions + mapInPandas stream
-as `pack_payloads` (BENCH/PLANS.md §C/§L) — one row shuffle keyed by the
-group, group boundaries found vectorized, no per-group Arrow batches.
+Shape: the same repartition + sortWithinPartitions + mapInArrow stream
+on the `rollup.grouped_stream` scaffold as `pack_payloads` (BENCH/
+PLANS.md §C/§L) — one row shuffle keyed by the group, group boundaries
+found vectorized, no per-group Arrow batches and no pandas boundary.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-_HISTORY_SCHEMA = (
-    "source string, bucket_start timestamp, n_points long, "
-    "ts_payload binary, val_payload binary"
-)
+_HISTORY_SCHEMA = pa.schema([
+    ("source", pa.string()), ("bucket_start", pa.timestamp("us", tz="UTC")),
+    ("n_points", pa.int64()), ("ts_payload", pa.binary()), ("val_payload", pa.binary()),
+])
 
 
 def _pack_stream(batches):
     import numpy as np
-    import pandas as pd
 
     from drought_t_spark.codec import tsz1
     from drought_t_spark.operators.rollup import grouped_stream
 
-    def emit(pdf, starts, ends):
-        src = pdf["source"].to_numpy()
-        cb = pdf["coarse"].to_numpy()
-        offs = pdf["off_min"].to_numpy()
-        vals = pdf["value"].to_numpy()
-        out = {"source": [], "bucket_start": [], "n_points": [],
-               "ts_payload": [], "val_payload": []}
-        for s, e in zip(starts, ends):
-            out["source"].append(src[s])
-            out["bucket_start"].append(cb[s])
-            out["n_points"].append(int(e - s))
-            out["ts_payload"].append(
-                tsz1.encode_tokens(offs[s:e].astype(np.int32))
-            )
-            out["val_payload"].append(
-                tsz1.encode_floats(vals[s:e].astype(np.float64))
-            )
-        return pd.DataFrame(
-            {
-                "source": out["source"],
-                "bucket_start": pd.Series(out["bucket_start"], dtype="datetime64[us]"),
-                "n_points": pd.Series(out["n_points"], dtype="int64"),
-                "ts_payload": out["ts_payload"],
-                "val_payload": out["val_payload"],
-            }
-        )
+    def emit(rb, starts, ends):
+        offs = rb.column("off_min").to_numpy()
+        vals = rb.column("value").to_numpy(zero_copy_only=False)
+        return pa.RecordBatch.from_arrays([
+            rb.column("source").take(starts),
+            rb.column("coarse").take(starts),
+            pa.array(ends - starts),
+            pa.array([tsz1.encode_tokens(offs[s:e].astype(np.int32))
+                      for s, e in zip(starts, ends)], pa.binary()),
+            pa.array([tsz1.encode_floats(vals[s:e].astype(np.float64))
+                      for s, e in zip(starts, ends)], pa.binary()),
+        ], schema=_HISTORY_SCHEMA)
 
     yield from grouped_stream(batches, ["source", "coarse"], emit)
 
@@ -91,7 +79,7 @@ def pack_value_history(tier_df: DataFrame, to_tier: str = "month") -> DataFrame:
     parts = base.repartition("source", "coarse").sortWithinPartitions(
         "source", "coarse", "off_min"
     )
-    return parts.mapInPandas(_pack_stream, _HISTORY_SCHEMA)
+    return parts.mapInArrow(_pack_stream, from_arrow_schema(_HISTORY_SCHEMA))
 
 
 def unpack_value_history(hist_df: DataFrame) -> DataFrame:

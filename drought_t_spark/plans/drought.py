@@ -4,9 +4,10 @@ engine jobs: the tier rollup DAG and the drought method.
 
 The drought method is one Spark stage, with no window pass and no
 checkpoint: repartition(source) → sortWithinPartitions(source,
-bucket_start) → mapInPandas, whose NumPy kernel
-(`operators.pooling`) runs gap-fill, MA, threshold, runs and, last,
-pooling, numbering and exclusion for every source of a batch.
+bucket_start) → mapInArrow on the `rollup.grouped_stream` scaffold,
+whose NumPy kernel (`operators.pooling`) runs gap-fill, MA, threshold,
+runs and, last, pooling, numbering and exclusion for every source of a
+batch.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ def drought_events_for_tier(
     """The drought method on one rolled-up tier (SURVEY.md §3.2 #2):
     gap-fill → MA → threshold → below-mask → runs → IC pooling fixed
     point → minor exclusion, all per source in `pool_events`' one
-    grouped NumPy stage (Exchange + Sort + MapInPandas). Lazy: nothing
+    grouped NumPy stage (Exchange + Sort + MapInArrow). Lazy: nothing
     runs until an action. `materialize`, when given, is applied once to
     the event frame (e.g. a write-and-read-back or a checkpoint)."""
     events = pool_events(tier_df, tier, cfg)

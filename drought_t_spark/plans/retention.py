@@ -52,6 +52,18 @@ def _parse_ts(t) -> datetime:
     return t if isinstance(t, datetime) else datetime.fromisoformat(str(t))
 
 
+def _floor_day(t: datetime) -> datetime:
+    return t.replace(hour=0, minute=0, second=0, microsecond=0)
+
+
+def _floor_month(t: datetime) -> datetime:
+    return _floor_day(t).replace(day=1)
+
+
+#: start of the coarser-tier bucket holding a time
+_FLOOR = {"day": _floor_day, "month": _floor_month}
+
+
 def expire_tier(
     spark: SparkSession,
     wh: Warehouse,
@@ -125,11 +137,7 @@ def _expire(
     # exists) yet expire only part of that bucket's fine rows, leaving
     # the routed reads with a ragged edge inside a partially-expired bucket
     cut_t = _parse_ts(cutoff)
-    aligned = (
-        cut_t.replace(hour=0, minute=0, second=0, microsecond=0)
-        if coarser == "day"
-        else cut_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-    )
+    aligned = _FLOOR[coarser](cut_t)
     if aligned != cut_t:
         ragged = (
             "would break read_series exactness" if prefix == "tier"
@@ -299,11 +307,7 @@ def read_values(
 
         # coarse bucket holding lo: floor to the coarser boundary so the
         # partition range covers fine rows late inside that bucket
-        c_lo = (
-            lo_t.replace(hour=0, minute=0, second=0, microsecond=0)
-            if coarser == "day"
-            else lo_t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-        )
+        c_lo = _FLOOR[coarser](lo_t)
         hist = wh.read(spark, hist_tbl).where(
             (F.col("cb") >= F.lit(c_lo.strftime("%Y%m%d")))
             & (F.col("cb") <= F.lit(hi_t.strftime("%Y%m%d")))
@@ -334,14 +338,8 @@ def route_slices(lo_t, hi_t) -> list[tuple[str, object, object]]:
     from datetime import timedelta
 
     def _ceil_day(t):
-        d = t.replace(hour=0, minute=0, second=0, microsecond=0)
+        d = _floor_day(t)
         return d if d == t else d + timedelta(days=1)
-
-    def _floor_day(t):
-        return t.replace(hour=0, minute=0, second=0, microsecond=0)
-
-    def _floor_month(t):
-        return t.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
 
     def _ceil_month(t):
         f = _floor_month(t)

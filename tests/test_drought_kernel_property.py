@@ -14,6 +14,7 @@ calendar (`run_site` itself leaves gaps missing)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -108,7 +109,8 @@ def test_kernel_matches_run_site(case):
         }))
     sizes = np.array([len(r) for r in rows])
     ends = np.cumsum(sizes)
-    got = _source_events(pd.concat(rows, ignore_index=True), ends - sizes, ends, tier, cfg)
+    rb = pa.RecordBatch.from_pandas(pd.concat(rows, ignore_index=True))
+    got = _source_events(rb, ends - sizes, ends, tier, cfg).to_pandas()
     for i, (cal, v, seen) in enumerate(srcs):
         want = local_ref.run_site(_prefilled(cal, v, seen, cfg.gap_fill_mode), tier, cfg)
         _check(got[got.source == f"s{i}"], want)
@@ -120,6 +122,6 @@ def test_kernel_matches_run_site(case):
     ("month", [86_400_000_000]),         # January 2nd is no month start
 ], ids=["off-calendar", "repeated", "mid-month"])
 def test_bucket_off_the_calendar_is_an_error(tier, ts):
-    pdf = pd.DataFrame({"source": "s", "ts": ts, "value": 1.0})
+    rb = pa.RecordBatch.from_pandas(pd.DataFrame({"source": "s", "ts": ts, "value": 1.0}))
     with pytest.raises(ValueError, match="calendar"):
-        _source_events(pdf, np.array([0]), np.array([len(ts)]), tier, EngineConfig())
+        _source_events(rb, np.array([0]), np.array([len(ts)]), tier, EngineConfig())

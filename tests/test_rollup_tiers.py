@@ -174,15 +174,15 @@ def test_pack_payloads_plan_is_streamed_arrow(spark, seqs, tmp_path):
 
 def test_cascade_payloads_plan_is_streamed(spark, seqs, tmp_path):
     """The cascade must keep pack_payloads' streaming shape — one
-    Exchange + one Sort + one MapInPandas — and never fall back to the
-    per-group applyInPandas shape (~5 ms/group fixed cost ≈ 50 h of
-    overhead at 37M day-tier groups)."""
+    Exchange + one Sort + one MapInArrow, no pandas boundary — and
+    never fall back to the per-group applyInPandas shape (~5 ms/group
+    fixed cost ≈ 50 h of overhead at 37M day-tier groups)."""
     p = str(tmp_path / "hour_pay")
     R.pack_payloads(seqs, "hour", CFG).write.parquet(p)
     df = R.cascade_payloads(spark.read.parquet(p), "day", CFG)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
-    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+    assert plan.count("MapInArrow") == 1
     assert plan.count("Exchange") == 1 and plan.count("Sort") == 1
     # and the streamed result is still correct (vs the raw-tier pack)
     a = df.select("source", "bucket_start", "payload_crc32")
@@ -190,6 +190,21 @@ def test_cascade_payloads_plan_is_streamed(spark, seqs, tmp_path):
         "source", "bucket_start", "payload_crc32"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_pool_events_plan_is_streamed_arrow(spark, seqs, tmp_path):
+    """The drought method keeps its one-stage shape — one Exchange +
+    one Sort + one MapInArrow on the group scaffold, no pandas
+    boundary."""
+    from drought_t_spark.operators.pooling import pool_events
+
+    p = str(tmp_path / "hour")
+    R.rollup_hour(seqs).write.parquet(p)
+    df = pool_events(spark.read.parquet(p), "hour", CFG)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("Exchange") == 1 and plan.count("Sort") == 1
 
 
 def test_gap_injection_creates_missing_buckets(spark, seqs):
@@ -228,8 +243,8 @@ def test_value_history_roundtrip_bit_exact(spark, seqs):
         hour.write.parquet(f"{td}/hour")
         iso = pack_value_history(spark.read.parquet(f"{td}/hour"), "month")
         plan = iso._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" not in plan
-        assert plan.count("MapInPandas") == 1
+        assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+        assert plan.count("MapInArrow") == 1
 
     back = unpack_value_history(hist)
     orig = hour.select("source", "bucket_start", F.col("value").cast("double").alias("value"))
