@@ -54,6 +54,11 @@ class EngineConfig:
             allowed = get_args(hint) if get_origin(hint) is Literal else None
             if allowed and getattr(self, name) not in allowed:
                 raise ValueError(f"{name}={getattr(self, name)!r}; allowed: {list(allowed)}")
+        # the kernel's MA frame is ±(w // 2): an even w runs as w + 1, w < 1 as no MA
+        if type(w := self.ma_window) is not int or w < 1 or w % 2 == 0:
+            raise ValueError(f"ma_window={w!r}; must be a positive odd int")
+        if type(p := self.threshold_pct) not in (int, float) or not 0 <= p <= 1:
+            raise ValueError(f"threshold_pct={p!r}; must be in [0, 1]")
 
     def with_(self, **kw) -> "EngineConfig":
         return replace(self, **kw)

@@ -29,12 +29,13 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-_HISTORY_SCHEMA = pa.schema([
-    ("source", pa.string()), ("bucket_start", pa.timestamp("us", tz="UTC")),
-    ("n_points", pa.int64()), ("ts_payload", pa.binary()), ("val_payload", pa.binary()),
-])
+from drought_t_spark.schemas import VALUE_HISTORY
+
+#: the pack's rows: the archive table's columns but its `cb` partition
+_HISTORY_SCHEMA = to_arrow_schema(T.StructType([f for f in VALUE_HISTORY if f.name != "cb"]))
 
 
 def _pack_stream(batches):

@@ -4,10 +4,10 @@ SURVEY.md §2 SK1/SK2/J5, §4 checkpoint row).
 Model: a stage processes PARTITION GROUPS (sets of sources). After each
 group's sink write commits, one checkpoint row per partition plus a
 lineage row and metrics rows are appended to the ops tables. On
-restart, `pending_partitions` skips (J5) the stage's work items that
-have a committed checkpoint — only unfinished groups re-run, and the
-sink's per-partition overwrite makes re-runs idempotent (no duplicate
-buckets even if a crash hit mid-write).
+restart, a stage skips (J5) the work items `committed_partitions`
+lists — only unfinished groups re-run, and the sink's per-partition
+overwrite makes re-runs idempotent (no duplicate buckets even if a
+crash hit mid-write).
 
 The ops rows are a handful per commit and produced on the driver, so
 they never touch Spark: `record_commit` appends each table's rows as
@@ -28,11 +28,8 @@ import os
 
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from drought_t_spark.schemas import CHECKPOINTS, LINEAGE, METRICS
 from drought_t_spark.sources.warehouse import Warehouse
 
 CHECKPOINT_TBL = "ops.checkpoints"
@@ -47,19 +44,13 @@ def committed_partitions(wh: Warehouse, job_id: str, stage: str) -> set[str]:
     # the declared schema, not one inferred from some file: a directory
     # holding only a crashed write's temp file reads as empty, and files
     # of older layouts (extra columns) are read by column name
-    cp = ds.dataset(path, format="parquet", schema=to_arrow_schema(CHECKPOINTS)).to_table(
+    cp = ds.dataset(path, format="parquet",
+                    schema=to_arrow_schema(wh.schema(CHECKPOINT_TBL))).to_table(
         columns=["partition_id"],
         filter=(pc.field("job_id") == job_id) & (pc.field("stage") == stage)
         & (pc.field("state") == "committed"),
     )
     return set(cp.column("partition_id").to_pylist())
-
-
-def pending_partitions(wh: Warehouse, job_id: str, stage: str,
-                       work: DataFrame, key: str = "source") -> DataFrame:
-    """J5 — work items with no committed checkpoint."""
-    done = committed_partitions(wh, job_id, stage)
-    return work.where(~F.col(key).isin(sorted(done)))
 
 
 def record_commit(
@@ -72,12 +63,12 @@ def record_commit(
     rows_out: int,
     metrics: dict[str, float] | None = None,
 ) -> None:
-    wh.append_rows(LINEAGE_TBL, LINEAGE, [
+    wh.append_rows(LINEAGE_TBL, [
         (job_id, stage, None, snapshot_id, ",".join(sorted(partition_ids)),
          rows_in, rows_out),
     ])
     if metrics:
-        wh.append_rows(METRICS_TBL, METRICS,
+        wh.append_rows(METRICS_TBL,
                        [(job_id, stage, k, float(v)) for k, v in metrics.items()])
-    wh.append_rows(CHECKPOINT_TBL, CHECKPOINTS,
+    wh.append_rows(CHECKPOINT_TBL,
                    [(job_id, stage, p, "committed", snapshot_id) for p in partition_ids])

@@ -32,14 +32,14 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from drought_t_spark.schemas import EVENTS
 
 # Column order of the reference's events table (onset/termination/
 # duration/severity/intensity/peak per site) — stable order so diffs of
 # exported files are meaningful across runs.
-EVENT_COLUMNS = [
-    "source", "event_id", "onset", "termination",
-    "duration", "severity", "intensity", "peak",
-]
+EVENT_COLUMNS = [c for c in EVENTS.names if c not in ("pooled", "excluded")]
 
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
@@ -115,10 +115,6 @@ def read_events_csv(spark, path: str) -> DataFrame:
     return (
         spark.read.option("header", "true")
         .option("timestampFormat", _TS_FMT)
-        .schema(
-            "source string, event_id long, onset timestamp, "
-            "termination timestamp, duration long, severity double, "
-            "intensity double, peak double"
-        )
+        .schema(T.StructType([EVENTS[c] for c in EVENT_COLUMNS]))
         .csv(path)
     )

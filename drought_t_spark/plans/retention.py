@@ -32,11 +32,11 @@ from __future__ import annotations
 
 import time
 from datetime import datetime
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark import schemas as S
 from drought_t_spark.ops import checkpoints as CP
 from drought_t_spark.sources.warehouse import Warehouse
 
@@ -159,10 +159,7 @@ def _expire(
     per = df.groupBy(
         "source", F.when(is_doomed, F.date_trunc(coarser, "bucket_start")).alias("cb")
     ).agg(F.count(F.lit(1)).alias("n"))
-    # the coverage read only reads, so it takes the declared schema; the
-    # table read above feeds the rewrite and keeps every column it finds
-    cover_schema = S.TIER if prefix == "tier" else S.PAYLOAD
-    cover = wh.read(spark, f"agg.{prefix}_{coarser}", cover_schema).select(
+    cover = wh.read(spark, f"agg.{prefix}_{coarser}").select(
         "source", F.col("bucket_start").alias("cb"), F.lit(True).alias("covered")
     ).distinct()
     doomed_grp = F.col("cb").isNotNull()
@@ -220,9 +217,8 @@ def _archive_values(
     # Partitioning by source alone did exactly that (one cycle wiped
     # the whole source=X partition, including older cycles' rows).
     # cb is the fixed-width yyyyMMdd string (string order == date
-    # order); partition values read back as strings (the session
-    # disables partition-type inference), so the read path's literal
-    # range filter prunes partitions exactly.
+    # order), declared a string (`schemas.VALUE_HISTORY`), so the read
+    # path's literal range filter prunes partitions exactly.
     #
     # LATE ARRIVALS break the disjointness: fine rows landing in an
     # already-archived coarse bucket would make dynamic overwrite
@@ -297,9 +293,9 @@ def read_values(
     pieces: list[DataFrame] = []
     if wh.exists(f"agg.tier_{tier}"):
         pieces.append(
-            wh.read(spark, f"agg.tier_{tier}", S.TIER)
+            wh.read(spark, f"agg.tier_{tier}")
             .where(~F.col("gap_filled") & in_range)
-            .select("source", "bucket_start", F.col("value").cast("double").alias("value"))
+            .select("source", "bucket_start", "value")
         )
     hist_tbl = f"agg.value_history_{tier}"
     if coarser is not None and wh.exists(hist_tbl):
@@ -315,9 +311,7 @@ def read_values(
         pieces.append(unpack_value_history(hist).where(in_range))
     if not pieces:
         raise ValueError(f"no live tier or value-history archive for {tier!r}")
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, pieces)
     # full-row distinct, NOT dropDuplicates(["source","bucket_start"]):
     # the crash-window duplicates are bit-identical whole rows (GZ3 is
     # exact), so distinct() is equivalent — and a subset-dropDuplicates
@@ -378,17 +372,14 @@ def read_series(
         raise ValueError(f"read_series needs lo < hi, got [{lo_t}, {hi_t})")
     pieces: list[DataFrame] = []
     for tier, a, b in route_slices(lo_t, hi_t):
-        t = wh.read(spark, f"agg.tier_{tier}", S.TIER).where(
+        t = wh.read(spark, f"agg.tier_{tier}").where(
             (F.col("bucket_start") >= F.lit(a)) & (F.col("bucket_start") < F.lit(b))
         )
         pieces.append(
             t.select("source", F.lit(tier).alias("tier"), "bucket_start",
                      *[F.col(c) for c in cols])
         )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, pieces)
 
 
 def read_payloads(
@@ -441,7 +432,7 @@ def read_payloads(
                 f"not exist in this warehouse — run the rollup job with "
                 f"payloads (the cascade writes day/month payload tiers)"
             )
-        t = wh.read(spark, tbl, S.PAYLOAD).where(
+        t = wh.read(spark, tbl).where(
             (F.col("bucket_start") >= F.lit(a)) & (F.col("bucket_start") < F.lit(b))
         )
         pieces.append(
@@ -449,9 +440,7 @@ def read_payloads(
                      "chunk_id", F.col("payload_n_tokens").alias("n_tokens"),
                      "payload")
         )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
+    out = reduce(DataFrame.unionByName, pieces)
     if not decode:
         return out
     from drought_t_spark.codec.udfs import decode_tokens_udf

@@ -30,7 +30,6 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark import schemas as S
 from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.operators import rollup as R
 from drought_t_spark.ops import checkpoints as CP
@@ -149,7 +148,7 @@ def run_rollup_job(
             # the cascade DAG runs exactly once (the write) and no table
             # is read back
             seen_in = Observation()
-            src = wh.read(spark, f"agg.tier_{finer}", S.TIER)
+            src = wh.read(spark, f"agg.tier_{finer}")
             writes = [partial(
                 wh.write_partitioned,
                 R.cascade(src.observe(seen_in, F.count(F.lit(1)).alias("n")), tier),
@@ -163,7 +162,7 @@ def run_rollup_job(
                 # All three payload tiers existing is what lets
                 # `read_payloads` route a [lo, hi) token range across the
                 # retention horizon (plans/retention.py).
-                pay_src = wh.read(spark, f"agg.payload_{finer}", S.PAYLOAD)
+                pay_src = wh.read(spark, f"agg.payload_{finer}")
                 writes.append(partial(
                     wh.write_partitioned, R.cascade_payloads(pay_src, tier, cfg),
                     f"agg.payload_{tier}", ["source"],

@@ -4,6 +4,10 @@ T0 ``raw.sequences`` is exactly the input hint from BASELINE.json:15:
 ``(doc_id string, tokens array<int32>, n_tok int32, source string)``.
 Everything downstream is flat columns (no nested structs) so the DuckDB
 oracle comparison stays trivial.
+
+`TABLES` maps each warehouse table to its schema, the only place that
+knows it (Iceberg: the table metadata); `sources.warehouse` reads and
+writes every table by it.
 """
 
 from __future__ import annotations
@@ -23,8 +27,6 @@ SEQUENCES = T.StructType(
 # T2 — rollup tiers (FIXTURES.md §F5). Every tier is written as two
 # tables: stats (`agg.tier_{hour,day,month}`, one shared schema) and
 # TSZ1 token payloads (`agg.payload_{hour,day,month}`).
-# `Warehouse.read(..., schema=...)` hands these to the reader, so
-# reading a tier launches no schema-inference job.
 TIER = T.StructType(
     [
         T.StructField("source", T.StringType(), False),
@@ -68,6 +70,19 @@ STREAM_RAW = T.StructType(
     ]
 )
 STREAM_RAW_PARTIALS = T.StructType(STREAM_RAW.fields + [_BATCH_KEY])
+
+# Value history of expired fine tiers (`retention._archive_values`):
+# one row per (source, coarse bucket), `cb` = its yyyyMMdd partition
+VALUE_HISTORY = T.StructType(
+    [
+        T.StructField("source", T.StringType(), True),
+        T.StructField("bucket_start", T.TimestampType(), True),
+        T.StructField("n_points", T.LongType(), True),
+        T.StructField("ts_payload", T.BinaryType(), True),
+        T.StructField("val_payload", T.BinaryType(), True),
+        T.StructField("cb", T.StringType(), True),
+    ]
+)
 
 # T3 — drought event table (FIXTURES.md §F3)
 EVENTS = T.StructType(
@@ -117,3 +132,17 @@ METRICS = T.StructType(
         T.StructField("value", T.DoubleType(), False),
     ]
 )
+
+_TIERS = ("hour", "day", "month")
+TABLES: dict[str, T.StructType] = {
+    **{f"agg.tier_{t}": TIER for t in _TIERS},
+    **{f"agg.payload_{t}": PAYLOAD for t in _TIERS},
+    **{f"agg.value_history_{t}": VALUE_HISTORY for t in ("hour", "day")},  # tiers that expire
+    **{f"drought.events_{t}": EVENTS for t in _TIERS},
+    "agg.stream_partials_hour": STREAM_PARTIALS,
+    "agg.stream_payload_partials": STREAM_RAW_PARTIALS,
+    "agg.stream_payload_tail": STREAM_RAW,
+    "ops.checkpoints": CHECKPOINTS,
+    "ops.lineage": LINEAGE,
+    "ops.metrics": METRICS,
+}

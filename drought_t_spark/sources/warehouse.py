@@ -2,9 +2,12 @@
 
 Iceberg is the production target (`writeTo(...).overwritePartitions()`,
 snapshot ids as checkpoint tokens); this sandbox has no Iceberg runtime
-jar, so the shim provides the same four primitives over a plain
-parquet warehouse with hive-style partitioning:
+jar, so the shim provides the same primitives over a plain parquet
+warehouse with hive-style partitioning:
 
+* declared schemas — `schemas.TABLES` (Iceberg: table metadata): every
+  read uses it, so none infers, and a write that differs is refused, so
+  no undeclared column is stored for a read to drop;
 * idempotent partition overwrite — dynamic partitionOverwriteMode
   (re-running a stage replaces exactly the partitions it produces);
 * in-place rewrite — `overwrite_partitions` replaces a named set of
@@ -38,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from drought_t_spark.schemas import TABLES
+
 
 class Warehouse:
     def __init__(self, root: str):
@@ -54,16 +59,18 @@ class Warehouse:
             for f in os.listdir(p)
         )
 
-    def read(
-        self, spark: SparkSession, table: str, schema: T.StructType | None = None
-    ) -> DataFrame:
-        """Read `table`. Without `schema` Spark infers it, which costs one
-        Spark job (a scan of the table's parquet footers); with the
-        table's declared schema (`drought_t_spark.schemas`) the read
-        launches none. A file that lacks a declared column reads it as
-        null."""
-        r = spark.read if schema is None else spark.read.schema(schema)
-        return r.parquet(self.path(table))
+    @staticmethod
+    def schema(table: str) -> T.StructType:
+        """`table`'s declared schema, from `schemas.TABLES`."""
+        if table not in TABLES:
+            raise ValueError(f"table {table!r} has no schema in schemas.TABLES")
+        return TABLES[table]
+
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """Read `table` with its declared schema: building the frame
+        launches no Spark job. A file that lacks a declared column reads
+        it as null."""
+        return spark.read.schema(self.schema(table)).parquet(self.path(table))
 
     def write_partitioned(
         self,
@@ -87,7 +94,13 @@ class Warehouse:
         itself. Observed metrics are merged once per successful task, the
         same condition as action accumulators: exact for rows produced in
         the write's own stage; an observation below a shuffle can
-        over-count if a lost map output forces its stage to re-run."""
+        over-count if a lost map output forces its stage to re-run.
+        A frame whose column names or types differ from the declared
+        schema is refused before any Spark job runs."""
+        got, want = ({f.name: f.dataType.simpleString() for f in s}
+                     for s in (df.schema, self.schema(table)))
+        if got != want:
+            raise ValueError(f"refusing to write {table}: columns {got} != declared {want}")
         obs = None
         if key_cols is not None:
             obs = Observation()
@@ -136,23 +149,24 @@ class Warehouse:
             if name.startswith(".spark-staging-"):
                 shutil.rmtree(os.path.join(d, name), ignore_errors=True)
 
-    def append_rows(self, table: str, schema: T.StructType, rows: list[tuple]) -> None:
-        """Append driver rows as one new parquet file, without Spark.
+    def append_rows(self, table: str, rows: list[tuple]) -> None:
+        """Append driver rows (declared column order) as one new parquet
+        file, without Spark.
 
         The file is written under a dot-prefixed name that does not end
         in `.parquet` — invisible to Spark, `pyarrow.dataset` and a
         `*.parquet` glob — and published with `os.replace`, atomic on
         one filesystem: a crash mid-write leaves only an ignored temp
-        file, never a partial part file."""
+        file, never a partial part file. A row of another width than the
+        declared schema is refused."""
+        arrow = to_arrow_schema(self.schema(table))
+        data = pa.Table.from_pylist(
+            [dict(zip(arrow.names, r, strict=True)) for r in rows], schema=arrow)
         d = self.path(table)
         os.makedirs(d, exist_ok=True)
         name = f"part-{uuid.uuid4()}.parquet"
         tmp = os.path.join(d, f".{name}.tmp")
-        arrow = to_arrow_schema(schema)
-        pq.write_table(
-            pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow),
-            tmp, compression="zstd",
-        )
+        pq.write_table(data, tmp, compression="zstd")
         os.replace(tmp, os.path.join(d, name))
 
     def overwrite_partitions(

@@ -38,12 +38,13 @@ idempotent batch re-pack over the committed t0 table reconciles them.
 from __future__ import annotations
 
 import datetime as _dt
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark import schemas as S
 from drought_t_spark.config import DEFAULT, EngineConfig
+from drought_t_spark.schemas import STREAM_RAW
 from drought_t_spark.streaming.rollup_stream import (
     fold_batches,
     live_batches,
@@ -53,7 +54,7 @@ from drought_t_spark.streaming.rollup_stream import (
 PAYLOAD_PARTIALS_TBL = "agg.stream_payload_partials"  # raw rows / batch_key
 PAYLOAD_TAIL_TBL = "agg.stream_payload_tail"  # sealed raw rows / source
 
-_RAW_COLS = ["source", "ts", "seq", "tokens", "n_tok"]
+_RAW_COLS = STREAM_RAW.names  # the tail's columns
 _SEAL_JOB, _SEAL_SCOPE = "stream-payload-seal", "payload_seal"
 
 
@@ -78,9 +79,8 @@ def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> i
         if wh.exists(PAYLOAD_TAIL_TBL):
             affected = partials.select("source").distinct()
             u = u.unionByName(
-                wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW)
+                wh.read(spark, PAYLOAD_TAIL_TBL)
                 .join(F.broadcast(affected), ["source"], "left_semi")
-                .select(*_RAW_COLS)
             )
         # raw rows only — no aggregation, payloads are packed later once
         # their bucket is complete. Every affected source has partial
@@ -90,15 +90,14 @@ def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> i
             u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
         )
 
-    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, S.STREAM_RAW_PARTIALS,
-                        job_id, _SEAL_SCOPE, fold)
+    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, job_id, _SEAL_SCOPE, fold)
 
 
 def _default_cutoff(spark: SparkSession, wh, watermark_hours: int):
     """max event time in the tail, minus the watermark, floored to the
     hour — the streaming-side stand-in for the query watermark (the
     tail is the post-seal analog of the stream's unexpired state)."""
-    hi = wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW).agg(F.max("ts")).first()[0]
+    hi = wh.read(spark, PAYLOAD_TAIL_TBL).agg(F.max("ts")).first()[0]
     if hi is None:
         return None
     return (hi - _dt.timedelta(hours=watermark_hours)).replace(
@@ -157,7 +156,7 @@ def pack_complete_buckets(
     fresh = complete
     if wh.exists("agg.payload_hour"):
         packed_keys = (
-            wh.read(spark, "agg.payload_hour", S.PAYLOAD)
+            wh.read(spark, "agg.payload_hour")
             .where(in_affected & (F.col("bucket_start") < F.lit(cutoff)))
             .select("source", "bucket_start").distinct()
         )
@@ -178,10 +177,7 @@ def pack_complete_buckets(
     )
     if wh.exists("agg.payload_hour"):
         # pass-through rows of the affected sources: fresh ∩ packed = ∅
-        # by the late split above, so a plain union is duplicate-free.
-        # Whole rows feed the rewrite, so this read (like the tail's
-        # above) infers its schema: a stored column the declared schema
-        # lacks fails the union instead of being dropped
+        # by the late split above, so a plain union is duplicate-free
         out = out.unionByName(wh.read(spark, "agg.payload_hour").where(in_affected))
     _, token = wh.write_partitioned(
         out, "agg.payload_hour", ["source"],
@@ -227,35 +223,16 @@ def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
     pieces: list[DataFrame] = []
     packed_keys = None
     if wh.exists("agg.payload_hour"):
-        pay = wh.read(spark, "agg.payload_hour", S.PAYLOAD)
+        pay = wh.read(spark, "agg.payload_hour")
         packed_keys = pay.select("source", "bucket_start").distinct()
-        pieces.append(
-            pay.select(
-                "source", "bucket_start", "chunk_id",
-                decode_tokens_udf("payload").alias("tokens"),
-            )
-            .groupBy("source", "bucket_start")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("chunk_id", "tokens"))
-                        ),
-                        lambda s: s.tokens,
-                    )
-                ).alias("tokens")
-            )
-            .select(
-                "source", "bucket_start", F.lit("packed").alias("state"),
-                F.size("tokens").cast("long").alias("n_tokens"), "tokens",
-            )
-        )
+        pieces.append(_bucket_tokens(pay.select(
+            "source", "bucket_start", "chunk_id", decode_tokens_udf("payload").alias("tokens"),
+        ), "chunk_id", "packed"))
 
     raw = None
     if wh.exists(PAYLOAD_TAIL_TBL):
-        raw = wh.read(spark, PAYLOAD_TAIL_TBL, S.STREAM_RAW).select(*_RAW_COLS)
-    unsealed = live_batches(spark, wh, PAYLOAD_PARTIALS_TBL, S.STREAM_RAW_PARTIALS,
-                            _SEAL_JOB, _SEAL_SCOPE)
+        raw = wh.read(spark, PAYLOAD_TAIL_TBL)
+    unsealed = live_batches(spark, wh, PAYLOAD_PARTIALS_TBL, _SEAL_JOB, _SEAL_SCOPE)
     if unsealed is not None:
         unsealed = unsealed.select(*_RAW_COLS)
         raw = unsealed if raw is None else raw.unionByName(unsealed)
@@ -263,24 +240,19 @@ def read_stream_tokens(spark: SparkSession, wh) -> DataFrame:
         r = raw.withColumn("bucket_start", F.date_trunc("hour", "ts"))
         if packed_keys is not None:
             r = r.join(packed_keys, ["source", "bucket_start"], "left_anti")
-        pieces.append(
-            r.groupBy("source", "bucket_start")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("seq", "tokens"))),
-                        lambda s: s.tokens,
-                    )
-                ).alias("tokens")
-            )
-            .select(
-                "source", "bucket_start", F.lit("raw").alias("state"),
-                F.size("tokens").cast("long").alias("n_tokens"), "tokens",
-            )
-        )
+        pieces.append(_bucket_tokens(r, "seq", "raw"))
 
-    assert pieces, "no streamed payload data ingested yet"
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    if not pieces:
+        raise ValueError("no streamed payload data ingested yet")
+    return reduce(DataFrame.unionByName, pieces)
+
+
+def _bucket_tokens(rows: DataFrame, order: str, state: str) -> DataFrame:
+    """One `state` row per (source, bucket_start) of `rows`: their
+    `tokens` concatenated in `order` and counted."""
+    tokens = F.flatten(F.transform(
+        F.array_sort(F.collect_list(F.struct(order, "tokens"))), lambda s: s.tokens))
+    return rows.groupBy("source", "bucket_start").agg(tokens.alias("tokens")).select(
+        "source", "bucket_start", F.lit(state).alias("state"),
+        F.size("tokens").cast("long").alias("n_tokens"), "tokens",
+    )

@@ -141,21 +141,20 @@ def _batch_keys(wh, table: str, job_id: str, scope: str) -> tuple[list[str], lis
     return [b for b in present if f"batch:{b}" not in ledger], folded
 
 
-def live_batches(spark: SparkSession, wh, table: str, schema, job_id: str,
+def live_batches(spark: SparkSession, wh, table: str, job_id: str,
                  scope: str) -> DataFrame | None:
-    """Rows of `table`'s not yet folded batch partitions (read with its
-    declared `schema`), or None: a replayed partition of a folded batch
-    is left out, so a live view never counts a batch twice."""
+    """Rows of `table`'s not yet folded batch partitions, or None: a
+    replayed partition of a folded batch is left out, so a live view
+    never counts a batch twice."""
     live, _ = _batch_keys(wh, table, job_id, scope)
     if not live:
         return None
-    return wh.read(spark, table, schema).where(F.col("batch_key").isin(live))
+    return wh.read(spark, table).where(F.col("batch_key").isin(live))
 
 
-def fold_batches(spark: SparkSession, wh, table: str, schema, job_id: str,
+def fold_batches(spark: SparkSession, wh, table: str, job_id: str,
                  scope: str, fold) -> int:
-    """Fold `table`'s micro-batch partitions (declared `schema`) exactly
-    once: drop the
+    """Fold `table`'s micro-batch partitions exactly once: drop the
     replays of folded batches, pin the live keys, count their rows, let
     `fold(partials)` write them and return its commit report
     `(rows, token)`, ledger the keys (`rows_in` = partial rows,
@@ -172,7 +171,7 @@ def fold_batches(spark: SparkSession, wh, table: str, schema, job_id: str,
     wh.drop_partitions(table, "batch_key", folded)
     if not live:
         return 0
-    partials = wh.read(spark, table, schema).where(F.col("batch_key").isin(live))
+    partials = wh.read(spark, table).where(F.col("batch_key").isin(live))
     n_partials = partials.count()  # BEFORE the partitions are dropped
     n_out, token = fold(partials)
     # ledger BEFORE the partition drop: a crash between the two leaves
@@ -207,7 +206,7 @@ _COMPACT_JOB, _COMPACT_SCOPE = "stream-compact", "stream_compact"
 def _committed_tier(spark: SparkSession, wh) -> DataFrame | None:
     if not wh.exists(TIER_TBL):
         return None
-    return wh.read(spark, TIER_TBL, S.TIER).where(~F.col("gap_filled")).select(*_STAT_COLS)
+    return wh.read(spark, TIER_TBL).where(~F.col("gap_filled")).select(*_STAT_COLS)
 
 
 def _merge_with_tier(partials: DataFrame | None, tier: DataFrame | None) -> DataFrame:
@@ -238,10 +237,10 @@ def read_stream_hour_tier(spark: SparkSession, wh) -> DataFrame:
     partials, exact at any moment (a replayed, already-compacted batch
     included). Cost grows with the un-compacted batch count, so compact
     periodically."""
-    partials = live_batches(spark, wh, PARTIALS_TBL, S.STREAM_PARTIALS,
-                            _COMPACT_JOB, _COMPACT_SCOPE)
+    partials = live_batches(spark, wh, PARTIALS_TBL, _COMPACT_JOB, _COMPACT_SCOPE)
     tier = _committed_tier(spark, wh)
-    assert tier is not None or partials is not None, "no tier data ingested yet"
+    if tier is None and partials is None:
+        raise ValueError("no hour-tier data ingested yet")
     return _merge_with_tier(partials, tier)
 
 
@@ -265,8 +264,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = _COMPACT_JOB)
             key_cols=["source", "bucket_start"],
         )
 
-    return fold_batches(spark, wh, PARTIALS_TBL, S.STREAM_PARTIALS, job_id,
-                        _COMPACT_SCOPE, fold)
+    return fold_batches(spark, wh, PARTIALS_TBL, job_id, _COMPACT_SCOPE, fold)
 
 
 def run_to_memory(spark: SparkSession, path: str, name: str = "stream_tier_hour"):

@@ -50,3 +50,22 @@ _disk_guard()
 def spark():
     s = build_session("drought-t-spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """`jobs_in_group(group, fn)` runs `fn` under the Spark job group
+    `group` and returns its result and the ids of the jobs it launched."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, jobs
+
+    return run

@@ -57,3 +57,22 @@ def test_unimplemented_mode_is_an_error():
             EngineConfig.from_dict(bad)
         with pytest.raises(ValueError, match=next(iter(bad))):
             EngineConfig(**bad)
+
+
+@pytest.mark.parametrize("bad", [
+    {"ma_window": 4},       # the kernel's frame would be 5 wide
+    {"ma_window": 0},
+    {"ma_window": -3},      # an all-NaN MA: no events, silently
+    {"ma_window": 3.0},
+    {"threshold_pct": 1.5},  # would interpolate into another source's values
+    {"threshold_pct": -0.1},
+    {"threshold_pct": float("nan")},
+], ids=str)
+def test_window_and_level_the_kernel_gets_wrong_are_errors(bad):
+    with pytest.raises(ValueError, match=next(iter(bad))):
+        EngineConfig.from_dict(bad)
+
+
+def test_window_and_level_bounds_are_accepted():
+    for ok in ({"ma_window": 1}, {"threshold_pct": 0}, {"threshold_pct": 1.0}):
+        EngineConfig.from_dict(ok)

@@ -1,13 +1,16 @@
 """Dead-code guard: every top-level public function and class in the
-engine package is referenced from at least one other Python file.
+engine package is referenced from at least one other Python file, and
+every public module-level constant is read somewhere, in its own module
+or elsewhere.
 
 A name that appears only in the file defining it has no caller — not
 the engine, the query entry point, the bench, the tools, the tests or
 the benchmark harness — so it is an unselected alternative that has to
 be either wired in or deleted. Only code references count: names,
 attribute accesses, imported names, and identifier-valued string
-constants (the benchmark harness wraps functions by name). A mention in
-a comment or docstring is not a caller. Pure AST scan; no Spark session.
+constants (the benchmark harness wraps functions by name); a name counts
+only where it is read, not where it is bound. A mention in a comment or
+docstring is not a caller. Pure AST scan; no Spark session.
 """
 
 import ast
@@ -35,10 +38,23 @@ def _public_defs(path: Path) -> list[str]:
     ]
 
 
+def _public_constants(path: Path) -> list[str]:
+    out = []
+    for node in ast.parse(path.read_text(), filename=str(path)).body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        out += [t.id for t in targets if isinstance(t, ast.Name) and not t.id.startswith("_")]
+    return out
+
+
 def _references(path: Path) -> set[str]:
     refs: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
-        if isinstance(node, ast.Name):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
             refs.add(node.id)
         elif isinstance(node, ast.Attribute):
             refs.add(node.attr)
@@ -58,3 +74,13 @@ def test_every_public_engine_def_has_an_outside_reference():
             if not any(name in r for p, r in refs.items() if p != path):
                 unreferenced.append(f"{path.relative_to(ROOT)}:{name}")
     assert not unreferenced, f"defined but referenced nowhere else: {unreferenced}"
+
+
+def test_every_public_engine_constant_is_read():
+    refs = [_references(p) for p in _py_files()]
+    unread = [
+        f"{path.relative_to(ROOT)}:{name}"
+        for path in sorted(PACKAGE.rglob("*.py")) for name in _public_constants(path)
+        if not any(name in r for r in refs)
+    ]
+    assert not unread, f"module-level constants read nowhere: {unread}"

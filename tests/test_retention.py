@@ -340,11 +340,14 @@ def test_expire_drops_fully_expired_source_with_escaped_name(spark, tmp_path):
     days = {"st:1": [d1], "plain": [d1, d2]}
     for prefix, chunks in (("tier", [0]), ("payload", [0, 1])):
         for tier, buckets in (("hour", hours), ("day", days)):
+            tbl = f"agg.{prefix}_{tier}"
             rows = [(s, b, c) for s, bs in buckets.items() for b in bs for c in chunks]
-            wh.write_partitioned(
-                spark.createDataFrame(rows, "source string, bucket_start timestamp, chunk_id int"),
-                f"agg.{prefix}_{tier}", ["source"],
-            )
+            df = spark.createDataFrame(rows, "source string, bucket_start timestamp, chunk_id int")
+            # widened to the declared columns: the ones this test does not need are null
+            wh.write_partitioned(df.select(*[
+                F.col(f.name) if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name) for f in wh.schema(tbl)
+            ]), tbl, ["source"])
     cutoff = "2024-01-02 00:00:00"
     assert expire_tier(spark, wh, "jobE", "hour", cutoff) == {"expired": 12, "kept": 6}
     assert expire_payload_tier(spark, wh, "jobE", "hour", cutoff) == {
@@ -378,3 +381,33 @@ def test_routed_reads_launch_no_job(spark, tmp_path):
     want = _tok_sum(w.read(spark, "agg.tier_hour").where(in_range))
     assert _tok_sum(series) == want
     assert payloads.agg(F.sum("n_tokens")).first()[0] == want
+
+
+def test_expiry_and_value_read_job_counts(spark, tmp_path, jobs_in_group):
+    """Every table read, the rewrites' own and the value archive's
+    included, takes its declared schema, so no read launches a
+    schema-inference job. On two sources: a first archiving
+    `expire_tier` launches at most 8 Spark jobs and `expire_payload_tier`
+    at most 6 (9 and 7 while those reads inferred); a second cycle,
+    which probes the existing archive for overlap, at most 11 and 6 (13
+    and 7); and building a `read_values` frame over live tier and
+    archive launches none (1)."""
+    from drought_t_spark.plans.retention import expire_payload_tier, read_values
+
+    w = Warehouse(str(tmp_path / "wh_expiry_jobs"))
+    seqs = synth.sequences_df(spark, n_sources=2, n_total=6000)
+    run_rollup_job(spark, w, seqs, "jobX", CFG, n_groups=1, with_payloads=True)
+    for cycle, (cutoff, max_tier, max_pay) in enumerate(
+            [("2024-01-02 00:00:00", 8, 6), ("2024-01-03 00:00:00", 11, 6)]):
+        res, jobs = jobs_in_group(f"expire-{cycle}", lambda: expire_tier(
+            spark, w, "jobX", "hour", cutoff, archive_values=True))
+        assert res["expired"] > 0 and len(jobs) <= max_tier, (cycle, jobs)
+        res, jobs = jobs_in_group(f"expire-payload-{cycle}", lambda: expire_payload_tier(
+            spark, w, "jobX", "hour", cutoff))
+        assert res["expired"] > 0 and len(jobs) <= max_pay, (cycle, jobs)
+    values, jobs = jobs_in_group("read-values", lambda: read_values(
+        spark, w, "hour", "2024-01-01 00:00:00", "2024-01-04 00:00:00"))
+    assert jobs == []
+    # both sides serve rows: the archive below the cutoff, the tier above
+    assert values.where(F.col("bucket_start") < "2024-01-03").count() > 0
+    assert values.where(F.col("bucket_start") >= "2024-01-03").count() > 0

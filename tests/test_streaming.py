@@ -219,20 +219,7 @@ def test_streaming_rollup_equals_batch(spark, tmp_path):
     assert batch_out.exceptAll(stream_out).count() == 0
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run `fn` under a job group; return its result and the group's jobs."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, jobs
-
-
-def test_fold_job_counts(spark, tmp_path):
+def test_fold_job_counts(spark, tmp_path, jobs_in_group):
     """Both folds find their batch keys by listing partition directories,
     not with a Spark job, and read the partials and tail with their
     declared schemas, not with a schema-inference job. On two sources
@@ -260,51 +247,21 @@ def test_fold_job_counts(spark, tmp_path):
             q = ingest(spark, in_dir, wh, str(tmp_path / ckpt))
             q.processAllAvailable()
             q.stop()
-        folded, compact_jobs = _jobs_in_group(
-            spark, f"compact-jobs-{lo}", lambda: compact_stream_partials(spark, wh)
+        folded, compact_jobs = jobs_in_group(
+            f"compact-jobs-{lo}", lambda: compact_stream_partials(spark, wh)
         )
         assert folded >= 1 and 0 < len(compact_jobs) <= max_compact, compact_jobs
-        sealed, seal_jobs = _jobs_in_group(
-            spark, f"seal-jobs-{lo}", lambda: seal_payload_partials(spark, wh)
+        sealed, seal_jobs = jobs_in_group(
+            f"seal-jobs-{lo}", lambda: seal_payload_partials(spark, wh)
         )
         assert sealed >= 1 and 0 < len(seal_jobs) <= max_seal, seal_jobs
 
 
-def test_stream_tables_have_the_declared_schemas(spark, tmp_path, monkeypatch):
-    """The frames both ingests and the seal write carry exactly the
-    declared stream schemas (names and types), so the folds and live
-    views that read with them cannot drift from what is written."""
-    from drought_t_spark import schemas as S
+def test_live_tier_view_of_empty_warehouse_is_an_error(spark, tmp_path):
+    """With neither a committed hour tier nor stream partials the live
+    view raises, under `python -O` too."""
     from drought_t_spark.sources.warehouse import Warehouse
-    from drought_t_spark.streaming.payload_stream import (
-        PAYLOAD_PARTIALS_TBL,
-        PAYLOAD_TAIL_TBL,
-        seal_payload_partials,
-        start_payload_ingest,
-    )
-    from drought_t_spark.streaming.rollup_stream import PARTIALS_TBL, start_tier_ingest
+    from drought_t_spark.streaming.rollup_stream import read_stream_hour_tier
 
-    real = Warehouse.write_partitioned
-    seen = {}
-
-    def recording(self, df, table, *a, **kw):
-        seen[table] = [(f.name, f.dataType) for f in df.schema]
-        return real(self, df, table, *a, **kw)
-
-    monkeypatch.setattr(Warehouse, "write_partitioned", recording)
-    wh = Warehouse(str(tmp_path / "wh"))
-    in_dir = str(tmp_path / "in")
-    _seq_batch(spark, list(range(120))).write.parquet(in_dir)
-    for ingest, ckpt in ((start_tier_ingest, "ckpt"), (start_payload_ingest, "ckpt_pay")):
-        q = ingest(spark, in_dir, wh, str(tmp_path / ckpt))
-        q.processAllAvailable()
-        q.stop()
-    assert seal_payload_partials(spark, wh) >= 1
-    want = {
-        PARTIALS_TBL: S.STREAM_PARTIALS,
-        PAYLOAD_PARTIALS_TBL: S.STREAM_RAW_PARTIALS,
-        PAYLOAD_TAIL_TBL: S.STREAM_RAW,
-    }
-    assert sorted(seen) == sorted(want)
-    for table, fields in seen.items():
-        assert fields == [(f.name, f.dataType) for f in want[table]], table
+    with pytest.raises(ValueError, match="no hour-tier data"):
+        read_stream_hour_tier(spark, Warehouse(str(tmp_path / "wh")))

@@ -6,6 +6,7 @@ must survive foreachBatch replays and the pack-crash window."""
 import datetime as dt
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark.operators import rollup as R
@@ -188,4 +189,32 @@ def test_tail_source_partition_dropped_when_emptied(spark, tmp_path):
         not wh.exists(PAYLOAD_TAIL_TBL)
         or wh.read(spark, PAYLOAD_TAIL_TBL).count() == 0
     )
+    _assert_same_tokens(read_stream_tokens(spark, wh), _token_truth(spark, in_dir))
+
+
+def test_live_token_view_of_empty_warehouse_is_an_error(spark, tmp_path):
+    """With no packed tier, tail or partials the live token view raises,
+    under `python -O` too."""
+    with pytest.raises(ValueError, match="no streamed payload data"):
+        read_stream_tokens(spark, Warehouse(str(tmp_path / "wh")))
+
+
+def test_pack_job_counts(spark, tmp_path, jobs_in_group):
+    """The pack reads the tail and the committed payloads' pass-through
+    rows with their declared schemas, not with schema-inference jobs: on
+    two sources the first pack launches at most 5 Spark jobs and a pack
+    into the existing tier at most 9 (6 and 11 while those reads
+    inferred)."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    _seq_batch(spark, list(range(200)), "src_aaaa").write.mode("append").parquet(in_dir)
+    _seq_batch(spark, list(range(100)), "src_bbbb").write.mode("append").parquet(in_dir)
+    q = start_payload_ingest(spark, in_dir, wh, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    assert seal_payload_partials(spark, wh) >= 1
+    for hour, max_jobs in ((1, 5), (3, 9)):
+        packed, jobs = jobs_in_group(f"pack-{hour}", lambda: pack_complete_buckets(
+            spark, wh, cutoff=dt.datetime(2024, 1, 1, hour)))
+        assert packed > 0 and len(jobs) <= max_jobs, (hour, jobs)
     _assert_same_tokens(read_stream_tokens(spark, wh), _token_truth(spark, in_dir))
