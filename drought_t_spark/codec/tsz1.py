@@ -84,14 +84,14 @@ def _unpack_classes(buf: np.ndarray, n: int) -> np.ndarray:
 
 
 
-def wrap_zlib(container: bytes, level: int = 1) -> bytes:
+def wrap_zlib(container: bytes) -> bytes:
     """Optional container envelope: DEFLATE the whole TSZ1 container.
     The byte-aligned class/payload streams still carry statistical
     redundancy on skewed (real-world) token distributions that the
     fixed {0,1,2,4}-byte classes can't reach; DEFLATE's entropy stage
     recovers it. Level 1 keeps encode ~GB/s-class; the inner CRC still
     guards the payload after unwrap."""
-    return MAGIC_Z + zlib.compress(container, level)
+    return MAGIC_Z + zlib.compress(container, 1)
 
 
 def _unwrap(blob: bytes | bytearray | memoryview) -> bytes:

@@ -44,9 +44,6 @@ class EngineConfig:
     # --- gap-fill (GF1) ---
     gap_fill_mode: Literal["none", "locf", "zero"] = "none"
 
-    # --- codec ---
-    payload_zlib: bool = False   # wrap containers in the TSZZ DEFLATE envelope
-
     def __post_init__(self) -> None:
         # a mode the engine does not implement must not silently fall
         # back to another one — same reasoning as from_dict's key check

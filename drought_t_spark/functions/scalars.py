@@ -12,22 +12,21 @@ from drought_t_spark.config import TIER_SECONDS
 TS_EPOCH_LIT = "timestamp'2024-01-01 00:00:00'"
 
 
-def seq_index(doc_id: Column | str = "doc_id") -> Column:
+def seq_index() -> Column:
     """Parse the per-source sequence index from doc_id '<source>/<seq:012d>'."""
-    c = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    return F.substring_index(c, "/", -1).cast("long").alias("seq")
+    return F.substring_index("doc_id", "/", -1).cast("long").alias("seq")
 
 
-def seq_timestamp(seq: Column | str = "seq") -> Column:
-    """Derived event time: epoch + seq minutes (SURVEY.md §1.2 T1)."""
-    c = F.col(seq) if isinstance(seq, str) else seq
-    return F.timestamp_add("MINUTE", c, F.expr(TS_EPOCH_LIT))
+def seq_timestamp() -> Column:
+    """Derived event time: epoch + `seq` minutes (SURVEY.md §1.2 T1)."""
+    return F.timestamp_add("MINUTE", F.col("seq"), F.expr(TS_EPOCH_LIT))
 
 
-def cycle_pos(tier: str, ts: Column | str = "bucket_start") -> Column:
-    """Seasonal index for the variable threshold (SURVEY.md §2.10 TH1):
-    hour tier → hour-of-week (0..167), day → day-of-year, month → month."""
-    c = F.col(ts) if isinstance(ts, str) else ts
+def cycle_pos(tier: str) -> Column:
+    """Seasonal index of `bucket_start` for the variable threshold
+    (SURVEY.md §2.10 TH1): hour tier → hour-of-week (0..167), day →
+    day-of-year, month → month."""
+    c = F.col("bucket_start")
     if tier == "hour":
         return ((F.dayofweek(c) - 1) * 24 + F.hour(c)).cast("int")
     if tier == "day":
@@ -37,11 +36,10 @@ def cycle_pos(tier: str, ts: Column | str = "bucket_start") -> Column:
     raise ValueError(f"unknown tier {tier}")
 
 
-def deficit(x_ma: Column | str = "x_ma", x0: Column | str = "x0") -> Column:
-    """Below-threshold deficit, floored at 0 (Yevjevich run sums)."""
-    a = F.col(x_ma) if isinstance(x_ma, str) else x_ma
-    b = F.col(x0) if isinstance(x0, str) else x0
-    return F.greatest(b - a, F.lit(0.0))
+def deficit(x_ma: str, x0: str) -> Column:
+    """Below-threshold deficit x0 - x_ma of two columns, floored at 0
+    (Yevjevich run sums)."""
+    return F.greatest(F.col(x0) - F.col(x_ma), F.lit(0.0))
 
 
 def bucket_count(tier: str, start: Column, end: Column) -> Column:

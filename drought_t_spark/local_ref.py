@@ -47,12 +47,10 @@ def run_site(
     pdf: pd.DataFrame,
     tier: str = "day",
     cfg: EngineConfig = DEFAULT,
-    ts_col: str = "bucket_start",
-    value_col: str = "value",
 ) -> pd.DataFrame:
-    """Full method for one site. Input: observed (ts, value) rows.
-    Output: FIXTURES.md §F3 event table (without the site column)."""
-    s = pdf.sort_values(ts_col).set_index(ts_col)[value_col]
+    """Full method for one site. Input: observed (bucket_start, value)
+    rows. Output: FIXTURES.md §F3 event table (without the site column)."""
+    s = pdf.sort_values("bucket_start").set_index("bucket_start")["value"]
     s.index = pd.DatetimeIndex(s.index)
     idx = pd.date_range(s.index.min(), s.index.max(), freq=_FREQ[tier])
     x = s.reindex(idx).to_numpy(dtype=np.float64)

@@ -14,7 +14,14 @@ vectorized Arrow/NumPy kernel per record batch:
 Scale: LSH banding turns the O(n²) pair problem into groupBys on band
 keys; the verify join touches only bucket-colliding pairs. Band keys
 are integers (xxhash64), so the shuffle is cheap; skewed buckets (giant
-near-dup clusters) are bounded by `max_bucket` pair capping.
+near-dup clusters) are bounded by a per-bucket member cap.
+
+Input columns are the fixture's: `doc_id`/`text` for documents,
+`vec_id`/`embedding` for vectors. Tables reused by several joins are
+materialized with `localCheckpoint(eager=True)`: unlike persist() the
+blocks are ContextCleaner-collected once the result is dropped, but the
+checkpoint computes at call time and ties the result to executor
+liveness.
 """
 
 from __future__ import annotations
@@ -22,6 +29,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+#: MinHash signature length and the band-bucket member cap
+_N_HASHES, _MINHASH_MAX_BUCKET = 32, 256
+#: embedding near-dup hyperplane LSH: 6 bands of 24-bit keys, bucket cap
+_EMB_PLANES, _EMB_BANDS, _EMB_MAX_BUCKET = 144, 6, 200
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True)
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -32,12 +48,12 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def _shingles(text_col: str, k: int = 3):
-    """Character k-shingle array (JVM-side, distinct)."""
+def _shingles(k: int = 3):
+    """Character k-shingle array of `text` (JVM-side, distinct)."""
     return F.array_distinct(
         F.expr(
-            f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-            f" i -> substring({text_col}, i, {k}))"
+            f"transform(sequence(1, greatest(length(text) - {k - 1}, 1)),"
+            f" i -> substring(text, i, {k}))"
         )
     )
 
@@ -161,19 +177,13 @@ def _auto_bands(n_hashes: int, threshold: float, target_recall: float = 0.85) ->
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
-    n_hashes: int = 32,
-    bands: int | None = None,
     jaccard_threshold: float = 0.7,
-    max_bucket: int = 256,
-    materialize=None,
     counters: dict | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH: banding tuned to the
     threshold, signature-estimate prefilter, exact Jaccard verify.
-    Returns (id_a, id_b, jaccard).
+    Returns (id_a, id_b, jaccard) over (doc_id, text).
 
     Three-stage funnel, each stage orders of magnitude cheaper per
     survivor than the next:
@@ -181,27 +191,18 @@ def minhash_lsh_pairs(
       2. signature estimate (32-int comparison) kills candidates far
          below the threshold BEFORE the wide shingle arrays are joined;
       3. exact Jaccard on shingle sets for the survivors.
-    `max_bucket` drops degenerate band buckets (> max_bucket members,
-    i.e. >max_bucket²/2 pairs): giant clusters are boilerplate already
-    caught by exact dedup, and the cap bounds the worst skewed reducer.
-    The signature table is materialized — it is reused by both
-    self-join sides and both estimate joins. `materialize=None`
-    (default) uses localCheckpoint(eager): unlike persist() the blocks
-    are ContextCleaner-collected once the result is dropped, BUT it
-    computes at call time and ties the result to executor liveness —
-    pass `lambda df: df` for lazy, or a write-table callback at
-    production scale."""
-    if materialize is None:
-        materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-    if bands is None:
-        bands = _auto_bands(n_hashes, jaccard_threshold)
-    rows_per_band = n_hashes // bands
-    assert rows_per_band * bands == n_hashes
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    Band buckets of more than 256 members (> 256²/2 pairs) are dropped:
+    giant clusters are boilerplate already caught by exact dedup, and
+    the cap bounds the worst skewed reducer. The 32-hash signature table
+    is materialized — it is reused by both self-join sides and both
+    estimate joins."""
+    bands = _auto_bands(_N_HASHES, jaccard_threshold)
+    rows_per_band = _N_HASHES // bands
+    base = df.select(F.col("doc_id").alias("id"), "text")
     # vectorized NumPy kernel: measured 4-8x the Catalyst HOF
     # (xxhash64-per-shingle) signature's docs/s at 1M docs
     # (BENCH/BASELINE.md r5 A/B)
-    sig_tbl = materialize(minhash_signatures_arrow(base, k=k, n_hashes=n_hashes))
+    sig_tbl = _materialize(minhash_signatures_arrow(base, k=k, n_hashes=_N_HASHES))
     # Band rows carry ONLY (id, band, bkey) — never shingle arrays.
     # The band shuffle is then 3 scalar columns wide; wide arrays rejoin
     # only for surviving pairs. At 100TB this is the difference between
@@ -217,7 +218,7 @@ def minhash_lsh_pairs(
     )
     sz = Window.partitionBy("band", "bkey")
     banded = banded.withColumn("bsz", F.count("*").over(sz)).where(
-        F.col("bsz") <= max_bucket
+        F.col("bsz") <= _MINHASH_MAX_BUCKET
     ).drop("bsz")
     cand = (
         banded.alias("a")
@@ -230,12 +231,12 @@ def minhash_lsh_pairs(
         # bench/diagnostic knob: materialize the candidate set and record
         # the funnel's stage-1 selectivity; downstream reuses the
         # checkpoint, so the band join still runs once. Zero cost when off.
-        cand = materialize(cand)
+        cand = _materialize(cand)
         counters["stage1_band_candidates"] = cand.count()
     # stage 2: signature-estimate prefilter (3σ + slack below threshold)
     import math
 
-    sigma = math.sqrt(jaccard_threshold * (1 - jaccard_threshold) / n_hashes)
+    sigma = math.sqrt(jaccard_threshold * (1 - jaccard_threshold) / _N_HASHES)
     est_cut = max(0.0, jaccard_threshold - 3 * sigma - 0.05)
     est = (
         cand.join(sig_tbl.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
@@ -243,13 +244,13 @@ def minhash_lsh_pairs(
         .withColumn(
             "est_j",
             F.expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-                   f" 0, (s, v) -> s + v) / {n_hashes}"),
+                   f" 0, (s, v) -> s + v) / {_N_HASHES}"),
         )
         .where(F.col("est_j") >= est_cut)
         .select("id_a", "id_b")
     )
     if counters is not None:
-        est = materialize(est)
+        est = _materialize(est)
         counters["stage2_estimate_survivors"] = est.count()
     # stage 3: exact Jaccard on the shingle sets of the survivors.
     # NOTE (r6): three variants of restricting the shingle build to
@@ -262,7 +263,7 @@ def minhash_lsh_pairs(
     # estimate joins, not the shingle projection). Shingles also stay
     # BELOW the verify join so the jaccard threshold cannot be pushed
     # into (and duplicate) the shingle HOF.
-    sh_tbl = base.select("id", _shingles("text", k).alias("sh"))
+    sh_tbl = base.select("id", _shingles(k).alias("sh"))
     jac = (
         est.join(sh_tbl.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(sh_tbl.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -277,13 +278,15 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash over whitespace words: bit b of the fingerprint is
+def simhash(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (id, simhash64).
+
+    64-bit SimHash over whitespace words: bit b of the fingerprint is
     1 iff Σ_words (±1 per word-hash bit b) > 0. ONE aggregate per doc —
     the bit-vector fold runs once and the `finish` lambda packs it to an
     int64 (embedding the fold inside a per-bit expression would
     re-evaluate it 64× per row). O(words · 64) JVM work, zero Python."""
-    words = f"filter(split({text_col}, ' +'), w -> w <> '')"
+    words = "filter(split(text, ' +'), w -> w <> '')"
     bits = (
         "aggregate("
         f"  transform({words}, w -> xxhash64(w)),"
@@ -293,13 +296,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         "  acc -> aggregate(zip_with(acc, sequence(0, 63),"
         "      (c, b) -> IF(c > 0, shiftleft(1L, b), 0L)), 0L, (x, y) -> x | y))"
     )
-    return df.select(
-        F.col(id_col).alias("id"), F.expr(bits).alias("simhash64")
-    )
+    return df.select(F.col("doc_id").alias("id"), F.expr(bits).alias("simhash64"))
 
 
-def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", max_hamming: int = 3) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: block on (max_hamming + 1) bit-range
     sub-keys — pigeonhole: ≤ max_hamming flips across max_hamming + 1
     blocks leave ≥ 1 block identical, so recall over the fingerprints is
@@ -321,7 +321,7 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
             else F.shiftrightunsigned("simhash64", lo).bitwiseAND(F.lit((1 << w) - 1))
         )
         blocks.append(F.struct(F.lit(i).alias("blk"), key.alias("bkey")))
-    sh = simhash(df, id_col, text_col)
+    sh = simhash(df)
     blocked = sh.select(
         "id", "simhash64", F.explode(F.array(*blocks)).alias("b")
     ).select("id", "simhash64", "b.blk", "b.bkey")
@@ -343,19 +343,12 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
 
 def embedding_near_dups(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int = 144,
-    n_bands: int = 6,
-    seed: int = 42,
-    max_bucket: int = 200,
-    materialize=None,
     counters: dict | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dups: BANDED random-hyperplane LSH (the
-    MinHash OR-of-ANDs amplification lifted to sign bits), exact cosine
-    verify on colliding pairs.
+    """(vec_id, embedding) → (id_a, id_b, cosine) near-dup pairs: BANDED
+    random-hyperplane LSH (the MinHash OR-of-ANDs amplification lifted
+    to sign bits), exact cosine verify on colliding pairs.
 
     A single n_planes-bit bucket requires ALL sign bits to agree — at
     threshold 0.95 a true pair flips a marginal hyperplane with high
@@ -370,33 +363,31 @@ def embedding_near_dups(
     16-bit keys put ~15 members in every bucket → 64.7M structural
     candidates for 9.9k true pairs): sign bits come from ONE Arrow
     matmul per record batch (`hyperplane_band_rows` — no interpreted
-    per-plane HOF), which makes wide keys free, so the default is 6
-    bands of 24-bit keys (2^24 buckets: expected occupancy ≪ 1 at 10^6
-    rows, structural-collision mass ~2^-24 per random pair per band)
-    while near-dup recall stays ≈1-(1-0.984^24)^6 ≈ 0.999 at cosine
-    0.999. `max_bucket` additionally drops degenerate buckets (all-equal
-    or near-constant vector cohorts) exactly like `minhash_lsh_pairs`."""
+    per-plane HOF), which makes wide keys free, so the planes are 144
+    in 6 bands of 24-bit keys (2^24 buckets: expected occupancy ≪ 1 at
+    10^6 rows, structural-collision mass ~2^-24 per random pair per
+    band) while near-dup recall stays ≈1-(1-0.984^24)^6 ≈ 0.999 at
+    cosine 0.999. Buckets of more than 200 members (all-equal or
+    near-constant vector cohorts) are dropped exactly like
+    `minhash_lsh_pairs`' degenerate buckets."""
     from drought_t_spark.operators.similarity import (
         cosine_expr,
         hyperplane_band_rows,
     )
 
-    assert n_planes % n_bands == 0
-    if materialize is None:
-        materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     # the vector table feeds the band kernel AND both verify-join
     # sides: materialized once (same posture as the minhash signature
     # table) so the input is scanned once, not 3-4×
-    vecs = materialize(
+    vecs = _materialize(
         df.select(
-            F.col(id_col).alias("id"),
-            F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
+            F.col("vec_id").alias("id"),
+            F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
     )
-    banded = hyperplane_band_rows(vecs, n_planes, n_bands, seed)
+    banded = hyperplane_band_rows(vecs, _EMB_PLANES, _EMB_BANDS)
     sz = Window.partitionBy("band", "bkey")
     banded = banded.withColumn("bsz", F.count("*").over(sz)).where(
-        F.col("bsz") <= max_bucket
+        F.col("bsz") <= _EMB_MAX_BUCKET
     ).drop("bsz")
     cand = (
         banded.alias("a")
@@ -407,7 +398,7 @@ def embedding_near_dups(
     )
     if counters is not None:
         # bench/diagnostic knob, same semantics as minhash_lsh_pairs
-        cand = materialize(cand)
+        cand = _materialize(cand)
         counters["band_candidates"] = cand.count()
     scored = (
         cand.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a")
@@ -417,36 +408,28 @@ def embedding_near_dups(
     return scored.where(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
 
 
-def near_dup_clusters(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "id",
-    max_iters: int = 25,
-    materialize=None,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph → one canonical
-    keeper (= min id) per cluster: the step that turns pairwise dedup
-    output into droppable duplicates (transitive chains A~B~C collapse
-    even when A~C never paired directly).
+def near_dup_clusters(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
+    """Connected components over a near-dup pair graph (id_a, id_b) on
+    `vertices` (id) → one canonical keeper (= min id) per cluster: the
+    step that turns pairwise dedup output into droppable duplicates
+    (transitive chains A~B~C collapse even when A~C never paired
+    directly).
 
     Iterative min-label propagation: rep ← min(rep, min over neighbors'
-    rep), one join + one groupBy per round, converging in O(component
-    diameter) rounds — near-dup clusters are shallow (dups of dups), so
-    2-4 rounds in practice. Each round shuffles only (id, rep) pairs.
-    For adversarial web-scale graphs with long chains, swap the loop
-    body for the large-star/small-star contraction — the DataFrame-only
-    shape is the same. Returns (id, keeper) for EVERY vertex
-    (singletons keep themselves)."""
-    if materialize is None:
-        materialize = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
+    rep), one join + one groupBy per round, until a round changes no
+    label — at most the largest component's diameter + 1 rounds, so
+    the answer is exact for any graph. Near-dup clusters are shallow
+    (dups of dups), so 2-4 rounds in practice. Each round shuffles only
+    (id, rep) pairs. For adversarial web-scale graphs with long chains,
+    swap the loop body for the large-star/small-star contraction — the
+    DataFrame-only shape is the same. Returns (id, keeper) for EVERY
+    vertex (singletons keep themselves)."""
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = materialize(
+    edges = _materialize(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     )
-    labels = materialize(
-        vertices.select(F.col(id_col).alias("id")).withColumn("rep", F.col("id"))
-    )
-    for _ in range(max_iters):
+    labels = _materialize(vertices.select("id").withColumn("rep", F.col("id")))
+    while True:
         nbr = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("rep").alias("nrep")),
@@ -458,53 +441,32 @@ def near_dup_clusters(
         )
         # one materialized frame per round carries both the new label
         # and the old (for the convergence count) — no second join
-        upd = materialize(
+        upd = _materialize(
             labels.join(nbr, "id", "left").select(
                 "id",
                 F.col("rep").alias("old"),
                 F.least("rep", F.coalesce("min_nbr", F.col("rep"))).alias("rep"),
             )
         )
-        changed = upd.where(F.col("rep") != F.col("old")).count()
+        if upd.where(F.col("rep") != F.col("old")).count() == 0:
+            return upd.select("id", F.col("rep").alias("keeper"))
         labels = upd.select("id", "rep")
-        if changed == 0:
-            break
-    return labels.select("id", F.col("rep").alias("keeper"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.2,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram (character k-shingle) Jaccard similarity.
-
-    With `candidates` (id_a, id_b) given, scores only those pairs — the
-    verify stage of any blocking scheme (MinHash LSH supplies candidates
-    at scale). Without, scores ALL pairs — O(n²), for small cohorts
-    only; the join is a size-guarded broadcast nested loop. Returns
-    (id_a, id_b, jaccard ≥ threshold)."""
-    sh = df.select(F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh"))
-    if candidates is None:
-        pairs = (
-            sh.alias("a")
-            .join(F.broadcast(sh.alias("b")), F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"),
-            )
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.2) -> DataFrame:
+    """Exact n-gram (character 3-shingle) Jaccard similarity of ALL
+    (doc_id, text) pairs — O(n²), for small cohorts only; the join is a
+    size-guarded broadcast nested loop (`minhash_lsh_pairs` blocks and
+    verifies at scale). Returns (id_a, id_b, jaccard ≥ threshold)."""
+    sh = df.select(F.col("doc_id").alias("id"), _shingles().alias("sh"))
+    pairs = (
+        sh.alias("a")
+        .join(F.broadcast(sh.alias("b")), F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+            F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"),
         )
-    else:
-        pairs = (
-            candidates.join(
-                sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-            ).join(
-                sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"
-            )
-        )
+    )
     jac = pairs.withColumn(
         "jaccard",
         F.size(F.array_intersect("sh_a", "sh_b"))

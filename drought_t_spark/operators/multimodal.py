@@ -51,20 +51,21 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-def synth_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Deterministic fake media table: text bytes become the opaque
-    payload; metadata derived from lengths. Pure function of the input."""
+def synth_media(df: DataFrame) -> DataFrame:
+    """Deterministic fake media table from (doc_id, text) documents: text
+    bytes become the opaque payload; metadata derived from lengths. Pure
+    function of the input."""
     return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.when(F.col(id_col) % 3 == 0, "image")
-        .when(F.col(id_col) % 3 == 1, "audio")
+        F.col("doc_id").cast("long").alias("media_id"),
+        F.when(F.col("doc_id") % 3 == 0, "image")
+        .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")
         .alias("kind"),
         F.lit("application/octet-stream").alias("mime"),
-        (F.length(text_col) % 640 + 16).cast("int").alias("width"),
-        (F.length(text_col) % 480 + 16).cast("int").alias("height"),
-        (F.length(text_col) * 10).cast("int").alias("duration_ms"),
-        F.encode(text_col, "UTF-8").alias("payload"),
+        (F.length("text") % 640 + 16).cast("int").alias("width"),
+        (F.length("text") % 480 + 16).cast("int").alias("height"),
+        (F.length("text") * 10).cast("int").alias("duration_ms"),
+        F.encode("text", "UTF-8").alias("payload"),
     )
 
 

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.functions.scalars import seq_index, seq_timestamp
 
 _FINER = {"day": "hour", "month": "day"}
@@ -82,7 +81,7 @@ def cascade(tier_df: DataFrame, to_tier: str) -> DataFrame:
 # ------------------------------------------------------------ payload --
 
 
-#: payload_codec column value (plus "+zlib" for the TSZZ envelope)
+#: payload_codec column value
 _CODEC = "TSZ1"
 
 #: the encode kernel's output; `bucket_start` crosses as epoch seconds
@@ -156,9 +155,9 @@ def grouped_stream(batches, key_cols, emit):
         yield from flush()
 
 
-def _encode_arrow_stream(batches, wrap_zlib: bool = False):
-    """mapInArrow kernel: concat+encode each (source, bs_epoch,
-    chunk_id) group's tokens, ordered by seq (the sort key).
+def _encode_arrow_stream(batches):
+    """mapInArrow kernel: concat+encode each (source, bs_epoch) group's
+    tokens, ordered by seq (the sort key), as chunk 0.
 
     Arrow, not pandas: the hot input column is `tokens` (list<int32>),
     and Arrow's list layout is ONE contiguous values buffer + offsets —
@@ -176,29 +175,21 @@ def _encode_arrow_stream(batches, wrap_zlib: bool = False):
         tl = rb.column("tokens")
         offs = tl.offsets.to_numpy()
         vals = tl.values.to_numpy(zero_copy_only=False)
-        pays = []
-        for s, e in zip(offs[starts], offs[ends]):
-            blob = tsz1.encode_tokens(vals[s:e].astype(np.int32, copy=False))
-            pays.append(tsz1.wrap_zlib(blob) if wrap_zlib else blob)
+        pays = [tsz1.encode_tokens(vals[s:e].astype(np.int32, copy=False))
+                for s, e in zip(offs[starts], offs[ends])]
         return pa.RecordBatch.from_arrays([
             rb.column("source").take(starts),
             rb.column("bs_epoch").take(starts),
-            rb.column("chunk_id").take(starts),
+            pa.array(np.zeros(len(starts), np.int32)),
             pa.array(pays, pa.binary()),
             pa.array(np.add.reduceat(rb.column("n_tok").to_numpy(), starts, dtype=np.int64)),
         ], schema=_ENCODE_SCHEMA)
 
-    yield from grouped_stream(batches, ["source", "bs_epoch", "chunk_id"], emit)
+    yield from grouped_stream(batches, ["source", "bs_epoch"], emit)
 
 
-def pack_payloads(
-    seqs_t1: DataFrame,
-    tier: str,
-    cfg: EngineConfig = DEFAULT,
-    chunk_minutes: int | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """AG8+GZ1 — per-(source, bucket[, chunk]) TSZ1 token payload.
+def pack_payloads(seqs_t1: DataFrame, tier: str, pre_partitioned: bool = False) -> DataFrame:
+    """AG8+GZ1 — one TSZ1 token payload per (source, bucket).
 
     ``pre_partitioned=True`` skips the repartition: the caller asserts
     every input partition contains ALL rows of each ``source`` it holds
@@ -207,15 +198,15 @@ def pack_payloads(
     engine's biggest shuffle vanishes from the plan and only the
     within-partition sort + Arrow kernel remain. A violated assertion
     splits a group across partitions and yields duplicate
-    (source, bucket, chunk) rows, which the bit-identity test in
+    (source, bucket) rows, which the bit-identity test in
     tests/test_bucketed.py would catch — do not set it for inputs with
     unknown partitioning.
 
     Tokens of member sequences are ordered by seq (== ts order), then
-    flattened and encoded. Oversize buckets are split into fixed
-    chunk_minutes chunks (chunk_id ascending reconstructs the bucket) so
-    a single group's token count is bounded by one chunk's span — the
-    spill-safety bound from SURVEY.md §4.
+    flattened and encoded as one payload. Its `chunk_id` is 0: the
+    payload tables keep the column, and readers order by it, but the
+    engine writes one chunk per bucket, so a group's token count is
+    bounded by the bucket's span (SURVEY.md §4).
 
     Shape: repartition by (source, day bucket) + sortWithinPartitions +
     mapInArrow — ONE plain row shuffle, whole-partition Arrow streams,
@@ -224,7 +215,7 @@ def pack_payloads(
     buffer (see `_encode_arrow_stream`; the pandas kernel's per-row
     object materialization cost more than the codec).
     The shuffle key is (source, day) rather than the group key (source,
-    bucket, chunk). The group key scatters each source's hours over
+    bucket). The group key scatters each source's hours over
     every task, so every task wrote a file into nearly every `source=`
     partition of the payload table (107 `payload_hour` files for the
     benchmark's 32 sources on 4 tasks). By (source, day) each
@@ -243,52 +234,33 @@ def pack_payloads(
       (source, bucket_start, chunk_id, payload, payload_codec,
        payload_n_tokens, payload_crc32)
     """
-    if chunk_minutes is None:
-        chunk_minutes = {"hour": 60, "day": 1440, "month": 44640}[tier]
-    bucket = F.date_trunc(tier, "ts").alias("bucket_start")
-    chunk = (
-        F.floor(
-            (F.col("ts").cast("long") - F.col("bucket_start").cast("long")) / (60 * chunk_minutes)
-        )
-        .cast("int")
-        .alias("chunk_id")
-    )
     # bucket_start travels through the Python boundary as epoch seconds
     # (bucket starts are whole seconds) — dodges the Arrow<->Spark
     # timestamp-timezone impedance entirely; cast back after the kernel
-    base = (
-        seqs_t1.select("source", bucket, "ts", "seq", "tokens", "n_tok")
-        .withColumn("chunk_id", chunk)
-        .select(
-            "source",
-            F.col("bucket_start").cast("long").alias("bs_epoch"),
-            "chunk_id", "tokens", "n_tok", "seq",
-        )
+    base = seqs_t1.select(
+        "source", F.date_trunc(tier, "ts").cast("long").alias("bs_epoch"),
+        "tokens", "n_tok", "seq",
     )
     # the UTC day of the bucket start is a function of the group key, so
-    # every (source, bucket, chunk) group still lands whole in one task
+    # every (source, bucket) group still lands whole in one task
     shuffled = base if pre_partitioned else base.repartition(
         "source", F.floor(F.col("bs_epoch") / 86400)
     )
     # Sort by (source, seq) only: ts := epoch + seq minutes (the T1
-    # contract, with_event_time), so bs_epoch and chunk_id are
-    # nondecreasing in seq within a source — (source, seq) order IS
-    # (source, bs_epoch, chunk_id, seq) order with half the comparator
-    # key walk (the radix prefix covers `source`; ties resolve on one
-    # long instead of long+int+long).
+    # contract, with_event_time), so bs_epoch is nondecreasing in seq
+    # within a source — (source, seq) order IS (source, bs_epoch, seq)
+    # order with one comparator key fewer (the radix prefix covers
+    # `source`; ties resolve on one long instead of two).
     parts = shuffled.sortWithinPartitions("source", "seq")
-    wrap = bool(cfg.payload_zlib)
     pay = parts.drop("seq").mapInArrow(
-        lambda batches: _encode_arrow_stream(batches, wrap_zlib=wrap),
-        from_arrow_schema(_ENCODE_SCHEMA),
+        _encode_arrow_stream, from_arrow_schema(_ENCODE_SCHEMA),
     ).select(
         "source",
         F.col("bs_epoch").cast("timestamp").alias("bucket_start"),
         "chunk_id", "payload", "payload_n_tokens",
     )
-    codec_name = _CODEC + ("+zlib" if wrap else "")
     return (
-        pay.withColumn("payload_codec", F.lit(codec_name))
+        pay.withColumn("payload_codec", F.lit(_CODEC))
         .withColumn("payload_crc32", F.crc32("payload").cast("long"))
         .select(
             "source", "bucket_start", "chunk_id", "payload",
@@ -297,27 +269,24 @@ def pack_payloads(
     )
 
 
-def _recode_stream(batches, wrap_zlib: bool = False):
+def _recode_stream(batches):
     """mapInArrow kernel for tier cascading: decode each (source,
     coarse bucket_start) group's member payloads in (fine_bucket,
     chunk_id) order — the sort key — concat, re-encode. Same
     `grouped_stream` scaffold as `_encode_arrow_stream` (one Exchange +
     one Sort + one MapInArrow; at 10^5 sources × 365 days ≈ 37M
     day-tier groups the applyInPandas shape would burn ~50 h of
-    per-group fixed cost). Decode auto-detects the TSZZ envelope, so
-    mixed raw/zlib inputs cascade fine; the output envelope follows
-    `wrap_zlib`."""
+    per-group fixed cost). Decode auto-detects the TSZZ envelope, so a
+    zlib-wrapped input cascades too; the output is plain TSZ1."""
     import numpy as np
 
     from drought_t_spark.codec import tsz1
 
     def emit(rb, starts, ends):
         pay = rb.column("payload").to_pylist()
-        blobs = []
-        for s, e in zip(starts, ends):
-            blob = tsz1.encode_tokens(np.concatenate(
-                [tsz1.decode_tokens(pay[i]) for i in range(s, e)]))
-            blobs.append(tsz1.wrap_zlib(blob) if wrap_zlib else blob)
+        blobs = [tsz1.encode_tokens(np.concatenate(
+            [tsz1.decode_tokens(pay[i]) for i in range(s, e)]))
+            for s, e in zip(starts, ends)]
         return pa.RecordBatch.from_arrays([
             rb.column("source").take(starts),
             rb.column("bucket_start").take(starts),
@@ -330,7 +299,7 @@ def _recode_stream(batches, wrap_zlib: bool = False):
     yield from grouped_stream(batches, ["source", "bucket_start"], emit)
 
 
-def cascade_payloads(payloads: DataFrame, to_tier: str, cfg: EngineConfig = DEFAULT) -> DataFrame:
+def cascade_payloads(payloads: DataFrame, to_tier: str) -> DataFrame:
     """Coarser-tier payloads by decode→concat→re-encode of finer-tier
     payloads — reads the compressed tier, never raw (the 100 TB path:
     month payloads cost one scan of day payloads, ~4× smaller). Same
@@ -347,14 +316,9 @@ def cascade_payloads(payloads: DataFrame, to_tier: str, cfg: EngineConfig = DEFA
     parts = regrouped.repartition("source", "bucket_start").sortWithinPartitions(
         "source", "bucket_start", "fine_bucket", "chunk_id"
     )
-    wrap = bool(cfg.payload_zlib)
-    out = parts.mapInArrow(
-        lambda batches: _recode_stream(batches, wrap_zlib=wrap),
-        from_arrow_schema(_PAYLOAD_SCHEMA),
-    )
-    codec_name = _CODEC + ("+zlib" if wrap else "")
+    out = parts.mapInArrow(_recode_stream, from_arrow_schema(_PAYLOAD_SCHEMA))
     return (
-        out.withColumn("payload_codec", F.lit(codec_name))
+        out.withColumn("payload_codec", F.lit(_CODEC))
         .withColumn("payload_crc32", F.crc32("payload").cast("long"))
         .select(
             "source", "bucket_start", "chunk_id", "payload",

@@ -26,17 +26,18 @@ from pyspark.sql import functions as F
 from drought_t_spark.functions.scalars import deficit
 
 
-def below_mask(df: DataFrame, x_ma: str = "x_ma", x0: str = "x0") -> DataFrame:
-    """RL1 — strict below-threshold flag; null-safe false."""
+def below_mask(df: DataFrame) -> DataFrame:
+    """RL1 — strict below-threshold flag x_ma < x0; null-safe false."""
     return df.withColumn(
         "below",
-        F.when(F.col(x_ma) < F.col(x0), F.lit(1)).otherwise(F.lit(0)),
+        F.when(F.col("x_ma") < F.col("x0"), F.lit(1)).otherwise(F.lit(0)),
     )
 
 
-def segment_runs(df: DataFrame, order_col: str = "bucket_start") -> DataFrame:
-    """RL2 — run_id per maximal constant-`below` stretch per source."""
-    w = Window.partitionBy("source").orderBy(order_col)
+def segment_runs(df: DataFrame) -> DataFrame:
+    """RL2 — run_id per maximal constant-`below` stretch per source, in
+    bucket_start order."""
+    w = Window.partitionBy("source").orderBy("bucket_start")
     chg = F.when(
         F.lag("below").over(w).isNull() | (F.lag("below").over(w) != F.col("below")),
         F.lit(1),
@@ -46,7 +47,7 @@ def segment_runs(df: DataFrame, order_col: str = "bucket_start") -> DataFrame:
     ).drop("chg")
 
 
-def extract_events(runs: DataFrame, order_col: str = "bucket_start") -> DataFrame:
+def extract_events(runs: DataFrame) -> DataFrame:
     """EV1 — one row per below-run AND per above-run (gap).
 
     Below-runs carry (onset, termination, duration, severity, peak);
@@ -60,8 +61,8 @@ def extract_events(runs: DataFrame, order_col: str = "bucket_start") -> DataFram
         runs.groupBy("source", "run_id")
         .agg(
             F.first("below").alias("below"),
-            F.min(order_col).alias("onset"),
-            F.max(order_col).alias("termination"),
+            F.min("bucket_start").alias("onset"),
+            F.max("bucket_start").alias("termination"),
             F.count("*").cast("long").alias("duration"),
             F.sum(d).alias("severity"),
             F.max(d).alias("peak"),

@@ -1,11 +1,12 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over the fixture's (vec_id, embedding) table
+(embedding: array<float>).
 
 Brute-force cosine top-k is the exact baseline: one scan, JVM-side
 zip_with/aggregate dot products, TakeOrderedAndProject for the top-k —
 no shuffle beyond the final k-row reduce. The scale path is
 random-hyperplane LSH bucketing (probe only the query's bucket —
 candidates shrink by ~2^n_planes) — same hyperplanes both sides,
-deterministic from the seed.
+deterministic from one fixed seed.
 """
 
 from __future__ import annotations
@@ -28,28 +29,23 @@ def cosine_expr(a: str, b: str) -> Column:
     return F.expr(f"({dot}) / nullif(({na}) * ({nb}), 0.0)")
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+#: the embedding column cast to array<double>
+_VEC = "transform(embedding, x -> cast(x as double))"
+
+
+def cosine_topk(df: DataFrame, query_vec, k: int = 10) -> DataFrame:
     """Exact brute-force cosine top-k vs a constant query vector."""
     q = _lit_vec(query_vec)
-    scored = df.select(
-        F.col(id_col),
-        cosine_expr(f"transform({vec_col}, x -> cast(x as double))", q).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    scored = df.select("vec_id", cosine_expr(_VEC, q).alias("score"))
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
-def _hyperplanes(n_planes: int, seed: int = 42) -> np.ndarray:
+def _hyperplanes(n_planes: int) -> np.ndarray:
     """The seeded plane matrix every bucketing path shares. Generated as
-    one (n_planes, 512) row-major draw so a SMALLER n_planes with the
-    same seed yields a prefix of a larger one — kernel and driver-side
+    one (n_planes, 512) row-major draw from seed 42 so a SMALLER
+    n_planes yields a prefix of a larger one — kernel and driver-side
     query bucketing stay consistent at any plane count."""
-    return np.random.default_rng(seed).standard_normal((n_planes, 512))
+    return np.random.default_rng(42).standard_normal((n_planes, 512))
 
 
 def _batch_sign_bits(vcol, P: np.ndarray) -> np.ndarray:
@@ -73,13 +69,12 @@ def _batch_sign_bits(vcol, P: np.ndarray) -> np.ndarray:
     return bits
 
 
-def _attach_lsh_bucket(dv: DataFrame, n_planes: int = 8,
-                       seed: int = 42) -> DataFrame:
+def _attach_lsh_bucket(dv: DataFrame, n_planes: int) -> DataFrame:
     """(id, v:array<double>) → (id, v, bucket:long) — the single-key LSH
     bucket as one Arrow matmul + packbits per record batch. n_planes ≤
     63 so the key fits an int64."""
     assert n_planes <= 63, "single-key bucket packs into one int64"
-    P = _hyperplanes(n_planes, seed)
+    P = _hyperplanes(n_planes)
     pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
 
     def kernel(batches):
@@ -99,8 +94,7 @@ def _attach_lsh_bucket(dv: DataFrame, n_planes: int = 8,
     return dv.mapInArrow(kernel, f"id {id_t}, v array<double>, bucket bigint")
 
 
-def hyperplane_band_rows(dv: DataFrame, n_planes: int, n_bands: int,
-                         seed: int = 42) -> DataFrame:
+def hyperplane_band_rows(dv: DataFrame, n_planes: int, n_bands: int) -> DataFrame:
     """(id, v:array<double>) → (id, band:int, bkey:long) — banded LSH
     keys straight from one Arrow kernel: X @ Pᵀ → sign bits → each
     band's w = n_planes/n_bands bits packed into an int64. Emitting the
@@ -111,7 +105,7 @@ def hyperplane_band_rows(dv: DataFrame, n_planes: int, n_bands: int,
     selective keys (e.g. 144 planes / 6 bands of 24 bits)."""
     w = n_planes // n_bands
     assert w * n_bands == n_planes and w <= 63
-    P = _hyperplanes(n_planes, seed)
+    P = _hyperplanes(n_planes)
     pow2 = (np.uint64(1) << np.arange(w, dtype=np.uint64))
 
     def kernel(batches):
@@ -146,10 +140,7 @@ def cosine_topk_lsh(
     df: DataFrame,
     query_vec,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
-    seed: int = 42,
     probe_hamming: int = 1,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH with multi-probe:
@@ -159,57 +150,43 @@ def cosine_topk_lsh(
     (1+n_planes)/2^n_planes fraction of the data scanned). Recall < 1 by
     design; `cosine_topk` is the exact baseline."""
     q = np.asarray(query_vec, dtype=np.float64)
-    planes = _hyperplanes(n_planes, seed)
+    planes = _hyperplanes(n_planes)
     qbucket = 0
     for p, plane in enumerate(planes):
         if float(np.dot(q, plane[: len(q)])) > 0:
             qbucket |= 1 << p
     dv = _attach_lsh_bucket(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-        ),
-        n_planes,
-        seed,
-    ).withColumnRenamed("id", id_col)
+        df.select(F.col("vec_id").alias("id"), F.expr(_VEC).alias("v")), n_planes,
+    ).withColumnRenamed("id", "vec_id")
     near = F.bit_count(
         F.col("bucket").bitwiseXOR(F.lit(qbucket))
     ) <= probe_hamming
     scored = dv.where(near).select(
-        id_col, cosine_expr("v", _lit_vec(q)).alias("score")
+        "vec_id", cosine_expr("v", _lit_vec(q)).alias("score")
     )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample_n: int = 4096,
-    n_iter: int = 5,
-    seed: int = 42,
-) -> np.ndarray:
+def train_ivf_centroids(df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Spherical k-means coarse centroids for IVF, trained on a
-    DETERMINISTIC sample: rows ordered by xxhash64(id) (stable under any
-    partitioning), capped at `sample_n`, Lloyd-iterated on the driver.
-    The collect is bounded by sample_n × dim floats — at 100 TB a 100k ×
-    1k sample is still ~800 MB-free territory (tens of MB); k-means||
-    inside Spark is the alternative if the sample must grow, and the
-    assign/probe expressions downstream don't change either way.
-    Centroids are L2-normalized (spherical k-means: assignment by max
-    dot product == max cosine)."""
+    DETERMINISTIC sample: rows ordered by xxhash64(vec_id) (stable under
+    any partitioning), capped at 4096 rows, 5 Lloyd iterations on the
+    driver from a seed-42 pick. The collect is bounded by 4096 × dim
+    floats (tens of MB); k-means|| inside Spark is the alternative if
+    the sample must grow, and the assign/probe expressions downstream
+    don't change either way. Centroids are L2-normalized (spherical
+    k-means: assignment by max dot product == max cosine)."""
     rows = (
-        df.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
+        df.select(F.col("embedding").alias("v"), F.xxhash64("vec_id").alias("h"))
         .orderBy("h")
-        .limit(sample_n)
+        .limit(4096)
         .collect()
     )
     X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
-    for _ in range(n_iter):
+    for _ in range(5):
         assign = np.argmax(X @ C.T, axis=1)
         for c in range(len(C)):
             members = X[assign == c]
@@ -219,7 +196,7 @@ def train_ivf_centroids(
     return C
 
 
-def _topk_ivf_udf(df, q, cents, k, id_col, vec_col, n_probe) -> DataFrame:
+def _topk_ivf_udf(df, q, cents, k, n_probe) -> DataFrame:
     """IVF scan with Arrow-batched cell assignment: one NumPy matmul +
     argmax per record batch (closure-captured centroids — Spark ships
     them once per executor, exactly what a broadcast would do for an
@@ -235,24 +212,18 @@ def _topk_ivf_udf(df, q, cents, k, id_col, vec_col, n_probe) -> DataFrame:
         X = np.stack(vecs.map(np.asarray)).astype(np.float64)
         return pd.Series(np.argmax(X @ C.T, axis=1).astype(np.int32))
 
-    dv = df.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-    ).withColumn("cell", cell_of(F.col("v")))
+    dv = df.select("vec_id", F.expr(_VEC).alias("v")).withColumn("cell", cell_of(F.col("v")))
     cand = dv.where(F.col("cell").isin(list(probe)))
-    scored = cand.select(id_col, cosine_expr("v", _lit_vec(q)).alias("score"))
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    scored = cand.select("vec_id", cosine_expr("v", _lit_vec(q)).alias("score"))
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
 def cosine_topk_ivf(
     df: DataFrame,
     query_vec,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: vectors are assigned to their nearest
@@ -268,14 +239,14 @@ def cosine_topk_ivf(
     cents = (
         centroids
         if centroids is not None
-        else train_ivf_centroids(df, id_col, vec_col, n_centroids, seed=seed)
+        else train_ivf_centroids(df, n_centroids)
     )
     if cents.size > 4096:
         # large codebooks: the inlined-literal argmax expression grows
         # as n_centroids × dim and is interpreted per element — switch
         # to the Arrow-batched matmul path (same assignment, closure-
         # broadcast centroids, one BLAS argmax per record batch)
-        return _topk_ivf_udf(df, q, cents, k, id_col, vec_col, n_probe)
+        return _topk_ivf_udf(df, q, cents, k, n_probe)
 
     # driver-side probe list: the query's n_probe nearest centroids
     probe = np.argsort(-(cents @ q))[:n_probe].tolist()
@@ -291,17 +262,15 @@ def cosine_topk_ivf(
         for c in cents
     )
     assign = (
-        f"transform(array(transform({vec_col}, x -> cast(x as double))), v -> "
+        f"transform(array({_VEC}), v -> "
         f"  transform(array(array({dots})), ds -> "
         f"    array_position(ds, array_max(ds))"
         f"  )[0]"
         f")[0]"
     )
     dv = df.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-        (F.expr(assign) - 1).cast("int").alias("cell"),
+        "vec_id", F.expr(_VEC).alias("v"), (F.expr(assign) - 1).cast("int").alias("cell"),
     )
     cand = dv.where(F.col("cell").isin(probe))
-    scored = cand.select(id_col, cosine_expr("v", _lit_vec(q)).alias("score"))
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    scored = cand.select("vec_id", cosine_expr("v", _lit_vec(q)).alias("score"))
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)

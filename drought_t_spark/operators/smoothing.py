@@ -16,21 +16,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def moving_avg(
-    df: DataFrame,
-    window: int,
-    value_col: str = "value",
-    out_col: str = "x_ma",
-    order_col: str = "bucket_start",
-) -> DataFrame:
-    """Centered MA of width `window` (odd) over a DENSE calendar."""
+def moving_avg(df: DataFrame, window: int) -> DataFrame:
+    """x_ma: centered MA of `value`, width `window` (odd), over a DENSE
+    bucket_start calendar."""
     assert window % 2 == 1, "centered window must be odd"
     if window == 1:
         # identity smoothing (MA disabled in config): avg over the
         # [0, 0] frame is the row's own value with identical null
         # semantics — skip the whole window pass (one fewer
         # Exchange+Sort in every ma_window=1 DAG, e.g. runs_events)
-        return df.withColumn(out_col, F.col(value_col).cast("double"))
+        return df.withColumn("x_ma", F.col("value").cast("double"))
     k = window // 2
-    w = Window.partitionBy("source").orderBy(order_col).rowsBetween(-k, k)
-    return df.withColumn(out_col, F.avg(value_col).over(w))
+    w = Window.partitionBy("source").orderBy("bucket_start").rowsBetween(-k, k)
+    return df.withColumn("x_ma", F.avg("value").over(w))

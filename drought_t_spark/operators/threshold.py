@@ -21,14 +21,13 @@ from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.functions.scalars import cycle_pos
 
 
-def variable_threshold(
-    df: DataFrame, tier: str, cfg: EngineConfig = DEFAULT, value_col: str = "x_ma"
-) -> DataFrame:
-    """(source, cycle_pos, x0) — exact percentile per seasonal position."""
+def variable_threshold(df: DataFrame, tier: str, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """(source, cycle_pos, x0) — exact percentile of x_ma per seasonal
+    position."""
     return (
         df.withColumn("cycle_pos", cycle_pos(tier))
         .groupBy("source", "cycle_pos")
-        .agg(F.percentile(value_col, F.lit(cfg.threshold_pct)).alias("x0"))
+        .agg(F.percentile("x_ma", F.lit(cfg.threshold_pct)).alias("x0"))
     )
 
 

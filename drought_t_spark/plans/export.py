@@ -66,13 +66,12 @@ def export_events_csv(
     events: DataFrame,
     path: str,
     single_file: bool = False,
-    columns: list[str] | None = None,
 ) -> None:
-    """Write a drought-events frame as CSV with a header, ISO-8601 UTC
-    timestamps, and per-file (source, onset) ordering. `path` is a
-    directory in the default mode, an exact file name with
-    single_file=True."""
-    cols = columns or [c for c in EVENT_COLUMNS if c in events.columns]
+    """Write a drought-events frame's `EVENT_COLUMNS` as CSV with a
+    header, ISO-8601 UTC timestamps, and per-file (source, onset)
+    ordering. `path` is a directory in the default mode, an exact file
+    name with single_file=True."""
+    cols = [c for c in EVENT_COLUMNS if c in events.columns]
     out = events.select(*cols).sortWithinPartitions("source", "onset")
     if single_file:
         out = out.coalesce(1)

@@ -355,18 +355,12 @@ def route_slices(lo_t, hi_t) -> list[tuple[str, object, object]]:
     return [(t, a, b) for (t, a, b) in out if a < b]
 
 
-def read_series(
-    spark: SparkSession,
-    wh: Warehouse,
-    lo,
-    hi,
-    cols: tuple[str, ...] = ("n_seq", "n_tok_sum"),
-) -> DataFrame:
+def read_series(spark: SparkSession, wh: Warehouse, lo, hi) -> DataFrame:
     """Continuous-aggregate read of [lo, hi): month tier for whole
     months, day tier for whole days at the edges, hour tier for the
-    ragged hourly tails. Slices are disjoint and bucket-aligned, so
-    additive columns (`n_seq`, `n_tok_sum`) sum to exactly the raw
-    total. Output: (source, tier, bucket_start, *cols)."""
+    ragged hourly tails. Slices are disjoint and bucket-aligned, so the
+    additive columns `n_seq` and `n_tok_sum` sum to exactly the raw
+    total. Output: (source, tier, bucket_start, n_seq, n_tok_sum)."""
     lo_t, hi_t = _parse_ts(lo), _parse_ts(hi)
     if not lo_t < hi_t:
         raise ValueError(f"read_series needs lo < hi, got [{lo_t}, {hi_t})")
@@ -377,7 +371,7 @@ def read_series(
         )
         pieces.append(
             t.select("source", F.lit(tier).alias("tier"), "bucket_start",
-                     *[F.col(c) for c in cols])
+                     "n_seq", "n_tok_sum")
         )
     return reduce(DataFrame.unionByName, pieces)
 

@@ -30,7 +30,6 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark.config import EngineConfig, DEFAULT
 from drought_t_spark.operators import rollup as R
 from drought_t_spark.ops import checkpoints as CP
 from drought_t_spark.sources.warehouse import Warehouse
@@ -61,7 +60,6 @@ def run_rollup_job(
     wh: Warehouse,
     seqs: DataFrame,
     job_id: str,
-    cfg: EngineConfig = DEFAULT,
     n_groups: int = 8,
     fail_after_groups: int | None = None,
     fail_before_cascade: bool = False,
@@ -116,7 +114,7 @@ def run_rollup_job(
             writes = [partial(wh.write_partitioned, stats, "agg.tier_hour", ["source"],
                               key_cols=["source", "bucket_start"])]
             if with_payloads:
-                pay = R.pack_payloads(part, "hour", cfg, pre_partitioned=pre_partitioned)
+                pay = R.pack_payloads(part, "hour", pre_partitioned=pre_partitioned)
                 writes.append(partial(wh.write_partitioned, pay, "agg.payload_hour", ["source"]))
             (n_out, token), *_ = _write_side_by_side(pool, spark, *writes)
             m = seen.get
@@ -164,7 +162,7 @@ def run_rollup_job(
                 # retention horizon (plans/retention.py).
                 pay_src = wh.read(spark, f"agg.payload_{finer}")
                 writes.append(partial(
-                    wh.write_partitioned, R.cascade_payloads(pay_src, tier, cfg),
+                    wh.write_partitioned, R.cascade_payloads(pay_src, tier),
                     f"agg.payload_{tier}", ["source"],
                 ))
             (n_out, token), *_ = _write_side_by_side(pool, spark, *writes)

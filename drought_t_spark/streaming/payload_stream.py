@@ -43,7 +43,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from drought_t_spark.config import DEFAULT, EngineConfig
 from drought_t_spark.schemas import STREAM_RAW
 from drought_t_spark.streaming.rollup_stream import (
     fold_batches,
@@ -56,6 +55,7 @@ PAYLOAD_TAIL_TBL = "agg.stream_payload_tail"  # sealed raw rows / source
 
 _RAW_COLS = STREAM_RAW.names  # the tail's columns
 _SEAL_JOB, _SEAL_SCOPE = "stream-payload-seal", "payload_seal"
+_PACK_JOB = "stream-payload-pack"
 
 
 def start_payload_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
@@ -67,12 +67,13 @@ def start_payload_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str
                               lambda batch: batch.select(*_RAW_COLS), files_per_trigger)
 
 
-def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> int:
+def seal_payload_partials(spark: SparkSession, wh) -> int:
     """Fold raw batch partitions into the per-source tail
-    (`rollup_stream.fold_batches`, ledger scope `payload_seal`). Only
-    source partitions present in the partials are rewritten; the commit's
-    `rows_out` is the tail rows written for them. Returns the number of
-    batch partitions folded."""
+    (`rollup_stream.fold_batches`, ledger scope `payload_seal`, under the
+    job id `read_stream_tokens` reads). Only source partitions present
+    in the partials are rewritten; the commit's `rows_out` is the tail
+    rows written for them. Returns the number of batch partitions
+    folded."""
 
     def fold(partials: DataFrame):
         u = partials.select(*_RAW_COLS)
@@ -90,7 +91,7 @@ def seal_payload_partials(spark: SparkSession, wh, job_id: str = _SEAL_JOB) -> i
             u, PAYLOAD_TAIL_TBL, ["source"], key_cols=["source", "seq"]
         )
 
-    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, job_id, _SEAL_SCOPE, fold)
+    return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, _SEAL_JOB, _SEAL_SCOPE, fold)
 
 
 def _default_cutoff(spark: SparkSession, wh, watermark_hours: int):
@@ -110,8 +111,6 @@ def pack_complete_buckets(
     wh,
     cutoff=None,
     watermark_hours: int = 2,
-    cfg: EngineConfig = DEFAULT,
-    job_id: str = "stream-payload-pack",
 ) -> int:
     """Encode every COMPLETE hour bucket (bucket_start < `cutoff`) from
     the tail into `agg.payload_hour` and shrink the tail to the
@@ -131,8 +130,8 @@ def pack_complete_buckets(
     replaces: the tier write always produces every affected source (its
     new payloads or its pass-through rows), and the tail shrink goes
     through `Warehouse.overwrite_partitions`, which drops a source whose
-    tail empties. Returns the number of (source, bucket, chunk) payload
-    rows committed."""
+    tail empties. Returns the number of (source, bucket) payload rows
+    committed."""
     from drought_t_spark.operators.rollup import pack_payloads
     from drought_t_spark.ops import checkpoints as CP
 
@@ -172,7 +171,7 @@ def pack_complete_buckets(
     # the new payloads are counted in flight, so the shuffle+sort+encode
     # runs once, inside the tier write
     pay_obs = Observation()
-    out = pack_payloads(fresh.select(*_RAW_COLS), "hour", cfg).observe(
+    out = pack_payloads(fresh.select(*_RAW_COLS), "hour").observe(
         pay_obs, F.count(F.lit(1)).alias("n")
     )
     if wh.exists("agg.payload_hour"):
@@ -193,7 +192,7 @@ def pack_complete_buckets(
     )
 
     CP.record_commit(
-        wh, job_id, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
+        wh, _PACK_JOB, "payload_pack", [f"cutoff:{cutoff.isoformat()}"],
         snapshot_id=token,
         rows_in=n_new + late_dropped, rows_out=n_new,
         metrics={

@@ -244,12 +244,14 @@ def read_stream_hour_tier(spark: SparkSession, wh) -> DataFrame:
     return _merge_with_tier(partials, tier)
 
 
-def compact_stream_partials(spark: SparkSession, wh, job_id: str = _COMPACT_JOB) -> int:
+def compact_stream_partials(spark: SparkSession, wh) -> int:
     """Fold stream partials into the committed hour tier (`fold_batches`,
     ledger scope `stream_compact`). Only SOURCE partitions present in the
     partials are rewritten; every other partition's files are untouched,
     so the cost is O(partials ∪ affected sources), not O(full tier).
-    Returns the number of batch partitions folded."""
+    The ledger's job id is the one `read_stream_hour_tier` reads, so a
+    replayed, already-folded batch is never counted twice. Returns the
+    number of batch partitions folded."""
 
     def fold(partials: DataFrame):
         tier = _committed_tier(spark, wh)
@@ -264,7 +266,7 @@ def compact_stream_partials(spark: SparkSession, wh, job_id: str = _COMPACT_JOB)
             key_cols=["source", "bucket_start"],
         )
 
-    return fold_batches(spark, wh, PARTIALS_TBL, job_id, _COMPACT_SCOPE, fold)
+    return fold_batches(spark, wh, PARTIALS_TBL, _COMPACT_JOB, _COMPACT_SCOPE, fold)
 
 
 def run_to_memory(spark: SparkSession, path: str, name: str = "stream_tier_hour"):

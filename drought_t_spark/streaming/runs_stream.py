@@ -231,8 +231,7 @@ def start_runs_stream(spark: SparkSession, path: str,
 
 
 def start_runs_stream_to_parquet(spark: SparkSession, path: str, out: str,
-                                 checkpoint: str,
-                                 files_per_trigger: int = 1):
+                                 checkpoint: str):
     """Checkpointed runner: appends each micro-batch's terminated-run
     rows to a parquet dir via foreachBatch, resumable from `checkpoint`
     (source offsets AND the per-source run state restore, so a run left
@@ -243,7 +242,7 @@ def start_runs_stream_to_parquet(spark: SparkSession, path: str, out: str,
     Each batch therefore writes into its own `_batch=<id>` partition —
     dynamic overwrite makes the replay idempotent (the same trick the
     ingest partials use, streaming/rollup_stream.py batch keys)."""
-    events = _streaming_run_events(_read_series_stream(spark, path, files_per_trigger))
+    events = _streaming_run_events(_read_series_stream(spark, path))
     return (
         events.writeStream.outputMode("append")
         .foreachBatch(lambda df, bid: write_events_batch(df, bid, out))

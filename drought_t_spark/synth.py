@@ -153,8 +153,8 @@ def sequences_df(spark, seed: int = 42, n_sources: int = 4, n_total: int = 8000,
     return rng.mapInPandas(gen, schema=SEQUENCES)
 
 
-def zipf_tokens(n: int, s: float = 1.2, seed: int = 42) -> np.ndarray:
-    """Deterministic Zipf(s)-distributed token ids (rank = token id).
+def zipf_tokens(n: int, seed: int = 42) -> np.ndarray:
+    """Deterministic Zipf(1.2)-distributed token ids (rank = token id).
 
     Real token streams are head-heavy, not uniform: the uniform F1
     tokens are entropy-bound near log2(VOCAB) ≈ 15.6 bits/token, which
@@ -162,7 +162,7 @@ def zipf_tokens(n: int, s: float = 1.2, seed: int = 42) -> np.ndarray:
     skewed stream (inverse-CDF over rank weights, seeded counter RNG —
     same determinism contract as F1)."""
     ranks = np.arange(1, VOCAB + 1, dtype=np.float64)
-    w = ranks**-s
+    w = ranks**-1.2
     cdf = np.cumsum(w)
     cdf /= cdf[-1]
     u = _u01(_key(seed, np.arange(n, dtype=np.uint64), 0x5A4950))

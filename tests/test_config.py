@@ -43,7 +43,7 @@ def test_from_dict_strict():
     # removed knobs: a stale config that still sets them fails loudly
     for stale in ({"salt_buckets": 16}, {"shuffle_partitions": 8},
                   {"threshold_ma_window": 1}, {"max_bucket_tokens": 4_000_000},
-                  {"payload_codec": "TSZ1"}):
+                  {"payload_codec": "TSZ1"}, {"payload_zlib": True}):
         with pytest.raises(ValueError, match=next(iter(stale))):
             EngineConfig.from_dict(stale)
 

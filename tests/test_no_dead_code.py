@@ -1,7 +1,8 @@
 """Dead-code guard: every top-level public function and class in the
-engine package is referenced from at least one other Python file, and
-every public module-level constant is read somewhere, in its own module
-or elsewhere.
+engine package is referenced from at least one other Python file, every
+public module-level constant is read somewhere, in its own module or
+elsewhere, and every defaulted parameter of a public engine function or
+method is set by some call.
 
 A name that appears only in the file defining it has no caller — not
 the engine, the query entry point, the bench, the tools, the tests or
@@ -10,7 +11,9 @@ be either wired in or deleted. Only code references count: names,
 attribute accesses, imported names, and identifier-valued string
 constants (the benchmark harness wraps functions by name); a name counts
 only where it is read, not where it is bound. A mention in a comment or
-docstring is not a caller. Pure AST scan; no Spark session.
+docstring is not a caller. A defaulted parameter that no call sets has
+one value in use: it is a constant, and the branches it selects are
+dead. Pure AST scan; no Spark session.
 """
 
 import ast
@@ -84,3 +87,61 @@ def test_every_public_engine_constant_is_read():
         if not any(name in r for r in refs)
     ]
     assert not unread, f"module-level constants read nowhere: {unread}"
+
+
+def _defaulted_params(path: Path) -> list[tuple[str, str, int | None]]:
+    """(function name, parameter, positional index or None if keyword-
+    only) of every defaulted parameter of a public top-level function or
+    a public method of a public class; a method's index skips its
+    `self`/`cls`."""
+    def params(fn, is_method):
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        if is_method and not any(
+                isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list):
+            pos = pos[1:]
+        out = [(fn.name, p.arg, pos.index(p)) for p in pos[len(pos) - len(a.defaults):]]
+        return out + [(fn.name, p.arg, None)
+                      for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+    out = []
+    for node in ast.parse(path.read_text(), filename=str(path)).body:
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+            out += params(node, False)
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            out += [p for m in node.body
+                    if isinstance(m, ast.FunctionDef) and not m.name.startswith("_")
+                    for p in params(m, True)]
+    return out
+
+
+def _calls(path: Path) -> list[tuple[str, int, set[str], bool]]:
+    """(callee name, positional argument count, keyword names, unpacks)
+    of every call by name or attribute; `partial(f, ...)` is a call of
+    `f`."""
+    def name(f):
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    out = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if not isinstance(node, ast.Call):
+            continue
+        callee, args = name(node.func), node.args
+        if callee == "partial" and args:
+            callee, args = name(args[0]), args[1:]
+        unpacks = (any(isinstance(a, ast.Starred) for a in args)
+                   or any(k.arg is None for k in node.keywords))
+        out.append((callee, len(args), {k.arg for k in node.keywords}, unpacks))
+    return out
+
+
+def test_every_defaulted_engine_parameter_is_set():
+    calls = [c for p in _py_files() for c in _calls(p)]
+    unset = [
+        f"{path.relative_to(ROOT)}:{fn}.{param}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for fn, param, idx in _defaulted_params(path)
+        if not any(callee == fn and (unpacks or param in kws or (idx is not None and n > idx))
+                   for callee, n, kws, unpacks in calls)
+    ]
+    assert not unset, f"{len(unset)} defaulted parameters no call sets: {unset}"

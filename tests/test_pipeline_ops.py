@@ -167,8 +167,7 @@ def test_ivf_udf_path_matches_expression_path(spark, emb):
     expr_ids = [r.vec_id for r in
                 SIM.cosine_topk_ivf(e, qv, k=10, n_probe=4, centroids=C).collect()]
     udf_ids = [r.vec_id for r in
-               SIM._topk_ivf_udf(e, np.asarray(qv, dtype=np.float64), C, 10,
-                                 "vec_id", "embedding", 4).collect()]
+               SIM._topk_ivf_udf(e, np.asarray(qv, dtype=np.float64), C, 10, 4).collect()]
     assert expr_ids == udf_ids
 
 
@@ -284,6 +283,18 @@ def test_near_dup_clusters_transitive_chains(spark):
     out = {r.id: r.keeper for r in near_dup_clusters(pairs, verts).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20, 24: 20, 99: 99}
+
+
+def test_near_dup_clusters_runs_to_convergence(spark):
+    """A 31-vertex chain 0~1~...~30 has diameter 30: label propagation
+    needs 30 rounds to carry keeper 0 to the far end, and one more to
+    see no change. Every vertex's keeper is 0."""
+    from drought_t_spark.operators.dedup import near_dup_clusters
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
+    verts = spark.createDataFrame([(i,) for i in range(31)], "id long")
+    out = {r.id: r.keeper for r in near_dup_clusters(pairs, verts).collect()}
+    assert out == {i: 0 for i in range(31)}
 
 
 def test_text_stats_and_quality(spark, docs):

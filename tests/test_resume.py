@@ -8,12 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark import synth
-from drought_t_spark.config import DEFAULT
 from drought_t_spark.ops import checkpoints as CP
 from drought_t_spark.plans.rollup_job import InjectedFailure, run_rollup_job
 from drought_t_spark.sources.warehouse import Warehouse
-
-CFG = DEFAULT
 
 
 @pytest.fixture(scope="module")
@@ -27,18 +24,18 @@ def _tier_key(df):
 
 def test_crash_resume_identical_to_single_shot(spark, seqs, tmp_path):
     wh1 = Warehouse(str(tmp_path / "wh_single"))
-    run_rollup_job(spark, wh1, seqs, "job1", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh1, seqs, "job1", n_groups=3, with_payloads=False)
     single = _tier_key(wh1.read(spark, "agg.tier_hour")).toPandas()
 
     wh2 = Warehouse(str(tmp_path / "wh_crashed"))
     with pytest.raises(InjectedFailure):
-        run_rollup_job(spark, wh2, seqs, "job1", CFG, n_groups=3,
+        run_rollup_job(spark, wh2, seqs, "job1", n_groups=3,
                        fail_after_groups=1, with_payloads=False)
     # partial state: some groups committed, not all
     committed = len(CP.committed_partitions(wh2, "job1", "hour"))
     assert 0 < committed < 3
 
-    run_rollup_job(spark, wh2, seqs, "job1", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh2, seqs, "job1", n_groups=3, with_payloads=False)
     resumed = _tier_key(wh2.read(spark, "agg.tier_hour")).toPandas()
 
     key = ["source", "bucket_start"]
@@ -58,12 +55,12 @@ def test_crash_before_cascade_resumes_with_stage_token(spark, seqs, tmp_path):
     cascade checkpoint is the single stage token `{tier}:all`."""
     wh = Warehouse(str(tmp_path / "wh_casc"))
     with pytest.raises(InjectedFailure):
-        run_rollup_job(spark, wh, seqs, "jobC", CFG, n_groups=3,
+        run_rollup_job(spark, wh, seqs, "jobC", n_groups=3,
                        fail_before_cascade=True, with_payloads=False)
     assert len(CP.committed_partitions(wh, "jobC", "hour")) == 3
     assert len(CP.committed_partitions(wh, "jobC", "day")) == 0
 
-    run_rollup_job(spark, wh, seqs, "jobC", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobC", n_groups=3, with_payloads=False)
     for tier in ("day", "month"):
         parts = CP.committed_partitions(wh, "jobC", tier)
         assert parts == {f"{tier}:all"}  # stage token, never a source list
@@ -76,16 +73,16 @@ def test_resume_skips_committed_work(spark, seqs, tmp_path):
     """A re-run of a finished job skips every committed hour group and
     cascade tier: it appends no checkpoint or lineage row."""
     wh = Warehouse(str(tmp_path / "wh_skip"))
-    run_rollup_job(spark, wh, seqs, "jobX", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobX", n_groups=3, with_payloads=False)
     before = [wh.read(spark, t).count() for t in (CP.CHECKPOINT_TBL, CP.LINEAGE_TBL)]
     assert before == [5, 5]  # 3 hour groups, day and month
-    run_rollup_job(spark, wh, seqs, "jobX", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobX", n_groups=3, with_payloads=False)
     assert [wh.read(spark, t).count() for t in (CP.CHECKPOINT_TBL, CP.LINEAGE_TBL)] == before
 
 
 def test_lineage_and_metrics_written(spark, seqs, tmp_path):
     wh = Warehouse(str(tmp_path / "wh_ops"))
-    run_rollup_job(spark, wh, seqs, "jobL", CFG, n_groups=3, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobL", n_groups=3, with_payloads=False)
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
     mt = wh.read(spark, CP.METRICS_TBL).toPandas()
     assert (ln.rows_in > 0).all() and (ln.rows_out > 0).all()
@@ -131,11 +128,11 @@ def test_crash_before_commit_marker_leaves_group_pending(spark, seqs, tmp_path, 
 
     monkeypatch.setattr(Warehouse, "append_rows", metrics_crash)
     with pytest.raises(InjectedFailure):
-        run_rollup_job(spark, wh, seqs, "jobM", CFG, n_groups=1, with_payloads=False)
+        run_rollup_job(spark, wh, seqs, "jobM", n_groups=1, with_payloads=False)
     assert CP.committed_partitions(wh, "jobM", "hour") == set()
 
     monkeypatch.setattr(Warehouse, "append_rows", real)
-    run_rollup_job(spark, wh, seqs, "jobM", CFG, n_groups=1, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobM", n_groups=1, with_payloads=False)
     assert CP.committed_partitions(wh, "jobM", "hour") == {"1:0"}
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas()
     ln = ln[(ln.job_id == "jobM") & (ln.stage == "hour")]
@@ -230,7 +227,7 @@ def test_hour_rollup_executes_exactly_once_per_group(spark, seqs, tmp_path, monk
 
     monkeypatch.setattr(R, "rollup_hour", counting_rollup)
     wh = Warehouse(str(tmp_path / "wh_once_hour"))
-    run_rollup_job(spark, wh, seqs, "jobOH", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobOH", n_groups=2, with_payloads=False)
     # every raw row passes through the hour aggregation exactly once
     assert acc.value == seqs.count()
 
@@ -257,7 +254,7 @@ def test_cascade_executes_exactly_once_per_tier(spark, seqs, tmp_path, monkeypat
 
     monkeypatch.setattr(R, "cascade", counting_cascade)
     wh = Warehouse(str(tmp_path / "wh_once"))
-    run_rollup_job(spark, wh, seqs, "jobO", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobO", n_groups=2, with_payloads=False)
     hour_rows = wh.read(spark, "agg.tier_hour").count()
     day_rows = wh.read(spark, "agg.tier_day").count()
     # day cascade reads each hour row once; month cascade each day row once
@@ -270,10 +267,10 @@ def test_hour_lineage_scoped_to_run_sources(spark, seqs, tmp_path):
     (here n_groups=1, so every stale source hashes into its one group)
     must not count the first job's stale partitions in rows_out/metrics."""
     wh = Warehouse(str(tmp_path / "wh_scope"))
-    run_rollup_job(spark, wh, seqs, "jobFull", CFG, n_groups=1, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobFull", n_groups=1, with_payloads=False)
     one_src = seqs.select("source").distinct().orderBy("source").first()["source"]
     run_rollup_job(
-        spark, wh, seqs.where(F.col("source") == one_src), "jobSub", CFG,
+        spark, wh, seqs.where(F.col("source") == one_src), "jobSub",
         n_groups=1, with_payloads=False,
     )
     own_rows = (
@@ -320,7 +317,7 @@ def test_lineage_equals_written_content(spark, tmp_path):
     keys = ["source", "bucket_start"]
     seqs = synth.sequences_df(spark, n_sources=5, n_total=12_000)
     wh = Warehouse(str(tmp_path / "wh_lineage"))
-    run_rollup_job(spark, wh, seqs, "jobFull", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobFull", n_groups=2, with_payloads=False)
 
     by_grp = {r.g: r.source for r in seqs.select(
         "source", group_expr(2).alias("g")).distinct().orderBy("source").collect()}
@@ -328,7 +325,7 @@ def test_lineage_equals_written_content(spark, tmp_path):
     srcs = sorted(r.source for r in seqs.select("source").distinct().collect())
     vanished = next(s for s in reversed(srcs) if s not in sub)
     wh.drop_partitions("agg.tier_hour", "source", [vanished])
-    run_rollup_job(spark, wh, seqs.where(F.col("source").isin(sub)), "jobSub", CFG,
+    run_rollup_job(spark, wh, seqs.where(F.col("source").isin(sub)), "jobSub",
                    n_groups=2, with_payloads=False)
 
     got = _lineage(spark, wh, "jobSub")
@@ -378,7 +375,7 @@ def test_zero_padded_source_ids_survive_every_tier(spark, tmp_path):
     want = {r.source for r in seqs.select("source").distinct().collect()}
     assert want == {f"{i:04d}" for i in range(6)}
     wh = Warehouse(str(tmp_path / "wh_padded"))
-    run_rollup_job(spark, wh, seqs, "jobP", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobP", n_groups=2, with_payloads=False)
     for tier in ("hour", "day", "month"):
         got = {r.source for r in
                wh.read(spark, f"agg.tier_{tier}").select("source").distinct().collect()}
@@ -405,7 +402,7 @@ def _tables(spark, wh):
 @pytest.fixture(scope="module")
 def single_shot(spark, seqs, tmp_path_factory):
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_single_shot")))
-    run_rollup_job(spark, wh, seqs, "jobS", CFG, n_groups=1)
+    run_rollup_job(spark, wh, seqs, "jobS", n_groups=1)
     return _tables(spark, wh)
 
 
@@ -431,7 +428,7 @@ def test_failed_payload_write_commits_nothing_and_stops_its_sibling(
 
     monkeypatch.setattr(Warehouse, "write_partitioned", flaky)
     with pytest.raises(InjectedFailure, match=failing):
-        run_rollup_job(spark, wh, seqs, "jobF", CFG, n_groups=1)
+        run_rollup_job(spark, wh, seqs, "jobF", n_groups=1)
     sibling = failing.replace("payload", "tier")
     assert finished[-1] == sibling  # the stats write ran to its end first
     assert CP.committed_partitions(wh, "jobF", stage) == set()
@@ -439,7 +436,7 @@ def test_failed_payload_write_commits_nothing_and_stops_its_sibling(
         assert CP.committed_partitions(wh, "jobF", "hour") == {"1:0"}
 
     monkeypatch.setattr(Warehouse, "write_partitioned", real)
-    run_rollup_job(spark, wh, seqs, "jobF", CFG, n_groups=1)
+    run_rollup_job(spark, wh, seqs, "jobF", n_groups=1)
     got = _tables(spark, wh)
     for t in _TABLES:
         assert got[t].equals(single_shot[t]), t
@@ -456,7 +453,7 @@ def test_empty_groups_commit_zeros(spark, seqs, tmp_path):
         F.count("*").alias("n"), F.sum("n_tok").alias("tok")).collect()}
     assert len(by_grp) < n  # some groups are empty
     wh = Warehouse(str(tmp_path / "wh_empty"))
-    run_rollup_job(spark, wh, seqs, "jobE", CFG, n_groups=n, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobE", n_groups=n, with_payloads=False)
     assert CP.committed_partitions(wh, "jobE", "hour") == {f"{n}:{g}" for g in range(n)}
     ln = wh.read(spark, CP.LINEAGE_TBL).toPandas().set_index("partition_id")
     mt = wh.read(spark, CP.METRICS_TBL).toPandas()
@@ -479,7 +476,7 @@ def test_rollup_job_launches_at_most_12_jobs(spark, seqs, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("rollup-job-count", "one rollup job")
     try:
-        run_rollup_job(spark, wh, seqs, "jobJ", CFG, n_groups=1)
+        run_rollup_job(spark, wh, seqs, "jobJ", n_groups=1)
         jobs = list(sc.statusTracker().getJobIdsForGroup("rollup-job-count"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -8,12 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from drought_t_spark import synth
-from drought_t_spark.config import DEFAULT
 from drought_t_spark.plans.retention import RetentionError, expire_tier, read_series
 from drought_t_spark.plans.rollup_job import run_rollup_job
 from drought_t_spark.sources.warehouse import Warehouse
-
-CFG = DEFAULT
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +19,7 @@ def wh(spark, tmp_path_factory):
     sequences at 1/minute, Zipf-skewed across 4 sources)."""
     w = Warehouse(str(tmp_path_factory.mktemp("wh_retention")))
     seqs = synth.sequences_df(spark, n_sources=4, n_total=90_000)
-    run_rollup_job(spark, w, seqs, "jobR", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, w, seqs, "jobR", n_groups=2, with_payloads=False)
     return w
 
 
@@ -112,7 +109,7 @@ def test_expire_with_value_history_archive(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh_arch"))
     seqs = synth.sequences_df(spark, n_sources=3, n_total=25_000)
-    run_rollup_job(spark, wh, seqs, "jobA", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobA", n_groups=2, with_payloads=False)
     cutoff = "2024-01-04 00:00:00"
     doomed_before = (
         wh.read(spark, "agg.tier_hour")
@@ -139,7 +136,7 @@ def test_value_history_survives_cycles_and_serves_reads(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh_arch2"))
     seqs = synth.sequences_df(spark, n_sources=3, n_total=25_000)
-    run_rollup_job(spark, wh, seqs, "jobA2", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobA2", n_groups=2, with_payloads=False)
     fine = (
         wh.read(spark, "agg.tier_hour")
         .where(~F.col("gap_filled"))
@@ -174,7 +171,7 @@ def test_value_history_survives_cycles_and_serves_reads(spark, tmp_path):
 def test_expire_refuses_uncovered_range(spark, tmp_path):
     wh2 = Warehouse(str(tmp_path / "wh_uncov"))
     seqs = synth.sequences_df(spark, n_sources=3, n_total=30_000)
-    run_rollup_job(spark, wh2, seqs, "jobU", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh2, seqs, "jobU", n_groups=2, with_payloads=False)
     # truncate the day tier so part of the would-be-expired range has
     # no coarser coverage — the expiry must refuse and change nothing
     day = wh2.read(spark, "agg.tier_day").localCheckpoint(eager=True)
@@ -199,7 +196,7 @@ def test_archive_merges_late_arrivals(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh_late"))
     seqs = synth.sequences_df(spark, n_sources=3, n_total=25_000)
-    run_rollup_job(spark, wh, seqs, "jobL", CFG, n_groups=2, with_payloads=False)
+    run_rollup_job(spark, wh, seqs, "jobL", n_groups=2, with_payloads=False)
     fine = (
         wh.read(spark, "agg.tier_hour")
         .where(~F.col("gap_filled"))
@@ -287,7 +284,7 @@ def test_read_payloads_routed_reconstruction(spark, tmp_path):
     # ~04:00), so the range below exercises hour tails, day edges AND a
     # whole-month (February) slice
     seqs = synth.sequences_df(spark, n_sources=3, n_total=150_000)
-    run_rollup_job(spark, wh, seqs, "jobP", CFG, n_groups=2, with_payloads=True)
+    run_rollup_job(spark, wh, seqs, "jobP", n_groups=2, with_payloads=True)
     lo, hi = "2024-01-02 00:00:00", "2024-03-02 04:00:00"
 
     routed = read_payloads(spark, wh, lo, hi)
@@ -366,7 +363,7 @@ def test_routed_reads_launch_no_job(spark, tmp_path):
 
     w = Warehouse(str(tmp_path / "wh_jobs"))
     seqs = synth.sequences_df(spark, n_sources=2, n_total=3000)
-    run_rollup_job(spark, w, seqs, "jobN", CFG, n_groups=1, with_payloads=True)
+    run_rollup_job(spark, w, seqs, "jobN", n_groups=1, with_payloads=True)
     lo, hi = "2024-01-01 02:00:00", "2024-03-02 05:00:00"  # hour, day and month slices
     sc = spark.sparkContext
     sc.setJobGroup("routed-reads", "build the routed read frames")
@@ -396,7 +393,7 @@ def test_expiry_and_value_read_job_counts(spark, tmp_path, jobs_in_group):
 
     w = Warehouse(str(tmp_path / "wh_expiry_jobs"))
     seqs = synth.sequences_df(spark, n_sources=2, n_total=6000)
-    run_rollup_job(spark, w, seqs, "jobX", CFG, n_groups=1, with_payloads=True)
+    run_rollup_job(spark, w, seqs, "jobX", n_groups=1, with_payloads=True)
     for cycle, (cutoff, max_tier, max_pay) in enumerate(
             [("2024-01-02 00:00:00", 8, 6), ("2024-01-03 00:00:00", 11, 6)]):
         res, jobs = jobs_in_group(f"expire-{cycle}", lambda: expire_tier(

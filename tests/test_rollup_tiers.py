@@ -76,7 +76,7 @@ def test_tier_cascade_consistency(spark, seqs):
 
 
 def test_payload_roundtrip_and_invariants(spark, seqs):
-    pay = R.pack_payloads(seqs, "hour", CFG)
+    pay = R.pack_payloads(seqs, "hour")
     stats = R.rollup_hour(seqs)
     joined = pay.join(stats, ["source", "bucket_start"]).select(
         "source", "bucket_start", "payload", "payload_n_tokens", "n_tok_sum"
@@ -102,55 +102,16 @@ def test_payload_roundtrip_and_invariants(spark, seqs):
     np.testing.assert_array_equal(tsz1.decode_tokens(heavy.payload), want)
 
 
-def test_payload_zlib_envelope_equivalent(spark, seqs):
-    """cfg.payload_zlib wraps each container in the TSZZ envelope:
-    identical decoded token streams per bucket, codec column tagged."""
-    raw = R.pack_payloads(seqs, "hour", CFG).select(
-        "source", "bucket_start", "chunk_id", "payload"
-    )
-    z = R.pack_payloads(seqs, "hour", CFG.with_(payload_zlib=True)).select(
-        "source", "bucket_start", "chunk_id",
-        F.col("payload").alias("zpayload"), "payload_codec",
-    )
-    j = raw.join(z, ["source", "bucket_start", "chunk_id"]).collect()
-    assert len(j) > 0
-    for r in j:
-        assert r.payload_codec == "TSZ1+zlib"
-        assert bytes(r.zpayload)[:4] == b"TSZZ"
-        np.testing.assert_array_equal(
-            tsz1.decode_tokens(r.zpayload), tsz1.decode_tokens(r.payload)
-        )
-    # the envelope survives the cascade re-code path too
-    zcfg = CFG.with_(payload_zlib=True)
-    zc = R.cascade_payloads(R.pack_payloads(seqs, "hour", zcfg), "day", zcfg)
-    rawc = R.cascade_payloads(R.pack_payloads(seqs, "hour", CFG), "day", CFG)
-    j2 = (
-        rawc.select("source", "bucket_start", F.col("payload").alias("p_raw"))
-        .join(
-            zc.select("source", "bucket_start", F.col("payload").alias("p_z"),
-                      "payload_codec"),
-            ["source", "bucket_start"],
-        )
-        .collect()
-    )
-    assert len(j2) > 0
-    for r in j2:
-        assert r.payload_codec == "TSZ1+zlib" and bytes(r.p_z)[:4] == b"TSZZ"
-        np.testing.assert_array_equal(
-            tsz1.decode_tokens(r.p_z), tsz1.decode_tokens(r.p_raw)
-        )
-
-
 def test_payload_cascade_equals_from_raw(spark, seqs):
-    hour_pay = R.pack_payloads(seqs, "hour", CFG)
-    day_from_hour = R.cascade_payloads(hour_pay, "day", CFG)
-    day_from_raw = R.pack_payloads(seqs, "day", CFG, chunk_minutes=1440)
+    hour_pay = R.pack_payloads(seqs, "hour")
+    day_from_hour = R.cascade_payloads(hour_pay, "day")
+    day_from_raw = R.pack_payloads(seqs, "day")
     a = day_from_hour.select("source", "bucket_start", "payload_crc32", "payload_n_tokens")
     b = day_from_raw.select("source", "bucket_start", "payload_crc32", "payload_n_tokens")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # second cascade hop: month re-coded from day partials == from raw
-    month_from_day = R.cascade_payloads(day_from_hour, "month", CFG)
-    month_from_raw = R.pack_payloads(seqs, "month", CFG, chunk_minutes=44640)
+    month_from_day = R.cascade_payloads(day_from_hour, "month")
+    month_from_raw = R.pack_payloads(seqs, "month")
     c = month_from_day.select("source", "bucket_start", "payload_crc32", "payload_n_tokens")
     d = month_from_raw.select("source", "bucket_start", "payload_crc32", "payload_n_tokens")
     assert c.exceptAll(d).count() == 0 and d.exceptAll(c).count() == 0
@@ -165,7 +126,7 @@ def test_pack_payloads_plan_is_streamed_arrow(spark, seqs, tmp_path):
     measured multi-×  slowdown on the north-rule headline metric."""
     p = str(tmp_path / "seqs_pp")
     seqs.write.parquet(p)
-    df = R.pack_payloads(R.with_event_time(spark.read.parquet(p)), "hour", CFG)
+    df = R.pack_payloads(R.with_event_time(spark.read.parquet(p)), "hour")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
     assert plan.count("MapInArrow") == 1
@@ -178,15 +139,15 @@ def test_cascade_payloads_plan_is_streamed(spark, seqs, tmp_path):
     never fall back to the per-group applyInPandas shape (~5 ms/group
     fixed cost ≈ 50 h of overhead at 37M day-tier groups)."""
     p = str(tmp_path / "hour_pay")
-    R.pack_payloads(seqs, "hour", CFG).write.parquet(p)
-    df = R.cascade_payloads(spark.read.parquet(p), "day", CFG)
+    R.pack_payloads(seqs, "hour").write.parquet(p)
+    df = R.cascade_payloads(spark.read.parquet(p), "day")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
     assert plan.count("MapInArrow") == 1
     assert plan.count("Exchange") == 1 and plan.count("Sort") == 1
     # and the streamed result is still correct (vs the raw-tier pack)
     a = df.select("source", "bucket_start", "payload_crc32")
-    b = R.pack_payloads(seqs, "day", CFG, chunk_minutes=1440).select(
+    b = R.pack_payloads(seqs, "day").select(
         "source", "bucket_start", "payload_crc32"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
