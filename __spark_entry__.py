@@ -119,7 +119,7 @@ def entry(spark: SparkSession) -> DataFrame:
     threshold → runs → IC pooling → exclusion) on sf0.001 daily tier."""
     sf_dir = "/root/testdata/sf0.001"
     tier = series_to_tier(_daily_series(spark, sf_dir), site_col="source",
-                          ts_col="bucket_start", value_col="value")
+                          ts_col="bucket_start")
     return drought_events_for_tier(tier, "day", _FLAGSHIP_CFG)
 
 
@@ -362,7 +362,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # native ASOF JOIN oracle unchanged)
         out = asof_join_bucketed(
             ev, h, by=["event_type"], left_ts="probe", right_ts="bucket_start",
-            value_cols=["bucket_start", "avg_raw"], step="hour",
+            value_cols=["bucket_start", "avg_raw"],
         )
         return out.select(
             "event_type", "event_id", "bucket_start",
@@ -577,7 +577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def cosine_topk(spark, sf_dir):
         e = _t(spark, sf_dir, "embeddings")
         qv = e.where(F.col("vec_id") == 0).select("embedding").first()[0]
-        return SIM.cosine_topk(e, qv, k=10).select(
+        return SIM.cosine_topk(e, qv).select(
             "vec_id", F.round("score", 6).alias("score")
         )
     q["cosine_topk"] = cosine_topk
@@ -707,7 +707,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def cosine_topk_ivf(spark, sf_dir):
         aug, qv = _aug_embeddings(spark, sf_dir)
-        return SIM.cosine_topk_ivf(aug, qv, k=6, n_centroids=16, n_probe=4).select(
+        return SIM.cosine_topk_ivf(aug, qv, k=6).select(
             "vec_id", F.round("score", 6).alias("score")
         )
     q["cosine_topk_ivf"] = cosine_topk_ivf
@@ -865,26 +865,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from drought_t_spark import synth
-        from drought_t_spark.streaming.rollup_stream import run_to_memory
+        from drought_t_spark.sources.warehouse import Warehouse
+        from drought_t_spark.streaming.rollup_stream import (
+            read_stream_hour_tier,
+            start_tier_ingest,
+        )
 
-        path = tempfile.mkdtemp(prefix="stream_t0_")
+        root = tempfile.mkdtemp(prefix="stream_t0_")
         try:
-            # 8 input files (maxFilesPerTrigger=8 → one micro-batch):
-            # multi-batch increments are pinned by test_streaming; this
-            # entry smoke-checks the streaming rollup result cheaply
+            # 8 input files, 8 per trigger → one micro-batch: multi-batch
+            # increments are pinned by test_streaming; this entry
+            # smoke-checks the streamed live hour tier cheaply
             synth.sequences_df(spark, n_sources=3, n_total=3000, slices=8).write.mode(
                 "overwrite"
-            ).parquet(path)
-            # run_to_memory fully materializes into the memory sink, so
-            # the input directory is safe to delete afterwards
-            out = run_to_memory(spark, path, name="q_stream_tier_hour")
+            ).parquet(f"{root}/in")
+            wh = Warehouse(f"{root}/wh")
+            sq = start_tier_ingest(spark, f"{root}/in", wh, f"{root}/ckpt",
+                                   files_per_trigger=8)
+            sq.processAllAvailable()
+            sq.stop()
+            out = read_stream_hour_tier(spark, wh).select(
+                "source", "bucket_start", "n_seq", "n_tok_sum",
+            )
+            # materialized before the warehouse directory goes
+            return out.localCheckpoint(eager=True)
         finally:
-            shutil.rmtree(path, ignore_errors=True)
-        return out.select(
-            "source", "bucket_start",
-            F.col("n_seq").cast("long").alias("n_seq"),
-            "n_tok_sum",
-        )
+            shutil.rmtree(root, ignore_errors=True)
     q["streaming_rollup"] = streaming_rollup
 
     # --- multimodal plumbing, ORACLE-CHECKED: the decoder body stays a
@@ -903,10 +909,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         payload tier (bit-identical to the batch kernel, pinned by
         test_streaming_payload); stateful runs (r5, §2.11's last row) —
         the committed hour series re-streamed in two micro-batches
-        through applyInPandasWithState run extraction, whose emitted
-        events must be bit-equal to the batch operator over the same
-        series minus each source's open trailing run (pinned by
-        test_streaming_runs; cross-checked here per source). The
+        through applyInPandasWithState run extraction into
+        `drought.stream_runs`, whose emitted events must be bit-equal
+        to the batch operator over the same series minus each source's
+        open trailing run (pinned by test_streaming_runs;
+        cross-checked here per source). The
         returned row cross-checks the paths: `n_tokens` (streamed stats
         sums) must equal `n_tokens_payload` (live decoded token-view
         sizes), and `runs_match` is 1 iff streamed == batch-terminated
@@ -948,7 +955,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             sq.processAllAvailable()
             sq.stop()
             seal_payload_partials(spark, wh)
-            pack_complete_buckets(spark, wh, watermark_hours=2)
+            pack_complete_buckets(spark, wh)
             stats = (
                 read_stream_hour_tier(spark, wh)
                 .groupBy("source")
@@ -971,7 +978,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # committed hour series (x_ma = mean tokens/bucket, x0 =
             # per-source mean), driven in two in-order micro-batches
             from drought_t_spark.operators import runs as RUNS
-            from drought_t_spark.streaming.runs_stream import start_runs_stream
+            from drought_t_spark.streaming.runs_stream import RUNS_TBL, start_runs_stream
 
             ser = read_stream_hour_tier(spark, wh).select(
                 "source",
@@ -992,7 +999,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ser.where(F.col("bucket_start") < F.lit(mid)).coalesce(1).write.mode(
                 "append"
             ).parquet(ser_dir)
-            rq = start_runs_stream(spark, ser_dir, name="q_ingest_runs")
+            rq = start_runs_stream(spark, ser_dir, wh, f"{root}/ckpt_runs")
             try:
                 rq.processAllAvailable()
                 ser.where(F.col("bucket_start") >= F.lit(mid)).coalesce(
@@ -1003,7 +1010,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 rq.stop()
             cols = ["source", "run_id", "below", "onset", "termination",
                     "duration", "severity", "peak", "excess"]
-            streamed = spark.sql("SELECT * FROM q_ingest_runs").select(cols)
+            streamed = wh.read(spark, RUNS_TBL).select(cols)
             ev = RUNS.extract_events(RUNS.segment_runs(RUNS.below_mask(ser)))
             rid_max = ev.groupBy("source").agg(F.max("run_id").alias("rid_max"))
             term = (
@@ -1068,7 +1075,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "media_id", "width", "height", F.col("n_bytes").alias("resize_bytes")
         )
         fr = (
-            sample_frames(media, n_frames=4)
+            sample_frames(media)
             .groupBy("media_id")
             .agg(F.count("*").cast("long").alias("n_frames"),
                  F.sum(F.length("frame")).cast("long").alias("frame_bytes"))

@@ -32,10 +32,9 @@ def asof_join_bucketed(
     left_ts: str = "ts",
     right_ts: str = "ts",
     value_cols: list[str] | None = None,
-    step: str = "hour",
 ) -> DataFrame:
-    """Backward as-of join specialised for a SMALL, step-aligned right
-    side (every right_ts lies on a `step` boundary, e.g. hourly rollup
+    """Backward as-of join specialised for a SMALL, hour-aligned right
+    side (every right_ts lies on an hour boundary, e.g. hourly rollup
     buckets): result-identical to ``asof_join(..., how='inner')`` but
     with a completely different physical shape.
 
@@ -43,10 +42,10 @@ def asof_join_bucketed(
     left side partitioned only by `by` — with a handful of keys that is
     a few giant sorted partitions regardless of cluster size (the J7
     skew trap). Here the right side is densified instead: a per-key
-    calendar from min to max right_ts at `step` granularity, each slot
+    calendar from min to max right_ts at hour granularity, each slot
     carrying the latest real right row at-or-before it (one lead window
     + explode over the tiny right side). Each left row then equi-joins on
-    (by, least(date_trunc(step, left_ts), max right_ts per key)) — a
+    (by, least(date_trunc('hour', left_ts), max right_ts per key)) — a
     broadcast hash join; the big side is never shuffled or sorted.
     The clamp maps late probes to the final bucket, exactly what
     backward as-of yields there; probes before the first right row find
@@ -54,10 +53,10 @@ def asof_join_bucketed(
     (a probe ON a bucket start matches that bucket) because the slot at
     t carries any real row at t itself.
 
-    The calendar size is span/step per key — time-bounded, not
+    The calendar size is span/hour per key — time-bounded, not
     row-bounded, so the broadcast stays small for any rollup-tier right
-    side. Do not use for right sides with multi-year gaps at sub-hour
-    steps or rows off the step lattice (asserted nowhere: caller
+    side. Do not use for right sides with multi-year gaps or rows off
+    the hour lattice (asserted nowhere: caller
     contract, covered by the oracle parity test)."""
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in set(by) | {right_ts}]
@@ -79,8 +78,8 @@ def asof_join_bucketed(
             F.col("_rv").alias("_m"),
             F.explode(
                 F.expr(
-                    f"sequence(_rts, coalesce(_nxt - interval 1 {step}, _rts),"
-                    f" interval 1 {step})"
+                    "sequence(_rts, coalesce(_nxt - interval 1 hour, _rts),"
+                    " interval 1 hour)"
                 )
             ).alias("_slot"),
         )
@@ -90,7 +89,7 @@ def asof_join_bucketed(
     maxb = r.groupBy(*by).agg(F.max("_rts").alias("_maxb"))
     out = (
         left.join(F.broadcast(maxb), by)
-        .withColumn("_slot", F.least(F.date_trunc(step, F.col(left_ts)), F.col("_maxb")))
+        .withColumn("_slot", F.least(F.date_trunc("hour", F.col(left_ts)), F.col("_maxb")))
         .join(F.broadcast(filled), [*by, "_slot"])
     )
     return out.select(

@@ -128,8 +128,11 @@ def decode_image_features(df: DataFrame, real_decode: bool = False) -> DataFrame
     return df.select("media_id", "payload").mapInPandas(extract, FEATURES_SCHEMA)
 
 
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Deterministic frame sampling: split the payload into n equal
+_N_FRAMES = 4
+
+
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Deterministic frame sampling: split the payload into 4 equal
     byte slices (stand-in for video frame extraction; the Spark-side
     shape — one row per (media, frame) — is the real contract)."""
 
@@ -138,8 +141,8 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
             ids, idxs, frames = [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 b = bytes(payload)
-                step = max(1, len(b) // n_frames)
-                for i in range(n_frames):
+                step = max(1, len(b) // _N_FRAMES)
+                for i in range(_N_FRAMES):
                     ids.append(mid)
                     idxs.append(i)
                     frames.append(b[i * step : (i + 1) * step])

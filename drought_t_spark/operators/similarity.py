@@ -33,11 +33,11 @@ def cosine_expr(a: str, b: str) -> Column:
 _VEC = "transform(embedding, x -> cast(x as double))"
 
 
-def cosine_topk(df: DataFrame, query_vec, k: int = 10) -> DataFrame:
-    """Exact brute-force cosine top-k vs a constant query vector."""
+def cosine_topk(df: DataFrame, query_vec) -> DataFrame:
+    """Exact brute-force cosine top-10 vs a constant query vector."""
     q = _lit_vec(query_vec)
     scored = df.select("vec_id", cosine_expr(_VEC, q).alias("score"))
-    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
+    return scored.orderBy(F.desc("score"), "vec_id").limit(10)
 
 
 def _hyperplanes(n_planes: int) -> np.ndarray:
@@ -167,8 +167,12 @@ def cosine_topk_lsh(
     return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
-def train_ivf_centroids(df: DataFrame, n_centroids: int = 16) -> np.ndarray:
-    """Spherical k-means coarse centroids for IVF, trained on a
+#: IVF coarse cells, and the cells nearest the query that are scanned
+_N_CENTROIDS, _N_PROBE = 16, 4
+
+
+def train_ivf_centroids(df: DataFrame) -> np.ndarray:
+    """Spherical k-means coarse centroids (16) for IVF, trained on a
     DETERMINISTIC sample: rows ordered by xxhash64(vec_id) (stable under
     any partitioning), capped at 4096 rows, 5 Lloyd iterations on the
     driver from a seed-42 pick. The collect is bounded by 4096 × dim
@@ -185,7 +189,7 @@ def train_ivf_centroids(df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(42)
-    C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
+    C = X[rng.choice(len(X), size=min(_N_CENTROIDS, len(X)), replace=False)].copy()
     for _ in range(5):
         assign = np.argmax(X @ C.T, axis=1)
         for c in range(len(C)):
@@ -196,7 +200,7 @@ def train_ivf_centroids(df: DataFrame, n_centroids: int = 16) -> np.ndarray:
     return C
 
 
-def _topk_ivf_udf(df, q, cents, k, n_probe) -> DataFrame:
+def _topk_ivf_udf(df, q, cents, k) -> DataFrame:
     """IVF scan with Arrow-batched cell assignment: one NumPy matmul +
     argmax per record batch (closure-captured centroids — Spark ships
     them once per executor, exactly what a broadcast would do for an
@@ -204,7 +208,7 @@ def _topk_ivf_udf(df, q, cents, k, n_probe) -> DataFrame:
     un-probed vectors never cross into the JVM scoring stage."""
     from pyspark.sql.functions import pandas_udf
 
-    probe = set(int(x) for x in np.argsort(-(cents @ q))[:n_probe])
+    probe = set(int(x) for x in np.argsort(-(cents @ q))[:_N_PROBE])
     C = cents.astype(np.float64)
 
     @pandas_udf("int")
@@ -222,15 +226,13 @@ def cosine_topk_ivf(
     df: DataFrame,
     query_vec,
     k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: vectors are assigned to their nearest
     coarse centroid (spherical-k-means-trained over a deterministic
     sample by default — pass `centroids` to reuse a trained set across
-    queries), and only the query's `n_probe` nearest cells are scanned
-    with exact cosine. Candidate count shrinks ~n_probe/n_centroids.
+    queries), and only the query's 4 nearest of 16 cells are scanned
+    with exact cosine. Candidate count shrinks ~4/16.
     Recall is ~1 for near-duplicate neighbors (they share the query's
     cell) and < 1 by design in the weak-similarity regime —
     `cosine_topk` is the exact baseline, `cosine_topk_lsh` the
@@ -239,17 +241,17 @@ def cosine_topk_ivf(
     cents = (
         centroids
         if centroids is not None
-        else train_ivf_centroids(df, n_centroids)
+        else train_ivf_centroids(df)
     )
     if cents.size > 4096:
         # large codebooks: the inlined-literal argmax expression grows
         # as n_centroids × dim and is interpreted per element — switch
         # to the Arrow-batched matmul path (same assignment, closure-
         # broadcast centroids, one BLAS argmax per record batch)
-        return _topk_ivf_udf(df, q, cents, k, n_probe)
+        return _topk_ivf_udf(df, q, cents, k)
 
-    # driver-side probe list: the query's n_probe nearest centroids
-    probe = np.argsort(-(cents @ q))[:n_probe].tolist()
+    # driver-side probe list: the query's _N_PROBE nearest centroids
+    probe = np.argsort(-(cents @ q))[:_N_PROBE].tolist()
 
     # assignment expression: argmax of centroid dot products. Double
     # let-binding: the cast vector is built once, AND the dot-product

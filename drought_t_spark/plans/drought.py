@@ -46,13 +46,12 @@ def drought_events_for_tier(
     return events if materialize is None else materialize(events)
 
 
-def series_to_tier(df: DataFrame, site_col: str = "site", ts_col: str = "date",
-                   value_col: str = "value") -> DataFrame:
+def series_to_tier(df: DataFrame, site_col: str = "site", ts_col: str = "date") -> DataFrame:
     """Adapt a generic (site, ts, value) observed series — e.g. the F2
     fixture or the driver's events table — to the tier-frame shape the
     drought method consumes."""
     return df.select(
         F.col(site_col).alias("source"),
         F.col(ts_col).cast("timestamp").alias("bucket_start"),
-        F.col(value_col).cast("double").alias("value"),
+        F.col("value").cast("double").alias("value"),
     )

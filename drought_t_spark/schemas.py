@@ -70,6 +70,23 @@ STREAM_RAW = T.StructType(
     ]
 )
 STREAM_RAW_PARTIALS = T.StructType(STREAM_RAW.fields + [_BATCH_KEY])
+# `drought.stream_runs` (`streaming/runs_stream.py`): one row per run
+# the stream closed, bit-equal to `operators.runs.extract_events`' row
+# for it, in its micro-batch's `batch_key` partition
+STREAM_RUNS = T.StructType(
+    [
+        T.StructField("source", T.StringType(), True),
+        T.StructField("run_id", T.LongType(), True),
+        T.StructField("below", T.IntegerType(), True),
+        T.StructField("onset", T.TimestampType(), True),
+        T.StructField("termination", T.TimestampType(), True),
+        T.StructField("duration", T.LongType(), True),
+        T.StructField("severity", T.DoubleType(), True),
+        T.StructField("peak", T.DoubleType(), True),
+        T.StructField("excess", T.DoubleType(), True),
+        _BATCH_KEY,
+    ]
+)
 
 # Value history of expired fine tiers (`retention._archive_values`):
 # one row per (source, coarse bucket), `cb` = its yyyyMMdd partition
@@ -142,6 +159,7 @@ TABLES: dict[str, T.StructType] = {
     "agg.stream_partials_hour": STREAM_PARTIALS,
     "agg.stream_payload_partials": STREAM_RAW_PARTIALS,
     "agg.stream_payload_tail": STREAM_RAW,
+    "drought.stream_runs": STREAM_RUNS,
     "ops.checkpoints": CHECKPOINTS,
     "ops.lineage": LINEAGE,
     "ops.metrics": METRICS,

@@ -1,24 +1,24 @@
 """Streaming TOKEN-PAYLOAD ingest (SURVEY.md §2.11, payload twin of
 `rollup_stream`): micro-batches of pre-tokenized sequences land as raw
 per-batch partials; a seal step folds them into a per-source raw tail;
-a watermark-gated pack step encodes COMPLETE hour buckets into the
+an event-time-gated pack step encodes COMPLETE hour buckets into the
 committed `agg.payload_hour` tier with the exact batch kernel
 (`pack_payloads` — TSZ1 mapInArrow), so streamed packing is
 bit-identical to batch packing of the same rows.
 
-Why three stages instead of packing inside foreachBatch: a bucket's
+Why three stages instead of packing inside the batch sink: a bucket's
 payload is its member tokens in seq order, which is NOT mergeable —
 two partial payloads of one bucket cannot be combined without decode +
 re-sort + re-encode. Packing therefore waits until a bucket is
-COMPLETE (its end is behind the watermark cutoff, the same late-data
-contract as the stats append stream), at which point all of its rows
+COMPLETE (its end is behind the pack cutoff: by default the tail's
+latest event time less two hours), at which point all of its rows
 sit in the tail and one deterministic batch pack emits the final
 payload. Until then the live view serves the raw tail exactly.
 
 Ingest and seal are the stats ingest's own exactly-once protocol, not
 a copy of it: the partials land through `rollup_stream.start_batch_ingest`,
 the seal is a `rollup_stream.fold_batches` call (ledger-before-drop;
-replayed foreachBatch partitions are recognized by
+replayed micro-batch partitions are recognized by
 `<stream-id>-<batch_id>` and dropped without re-folding), and the live
 view reads the un-sealed partials through `rollup_stream.live_batches`.
 
@@ -31,8 +31,9 @@ transaction):
     the late-drop metric counts them once.
 
 Genuinely LATE rows (bucket already packed) are dropped at pack time
-with a metric, mirroring the append-mode watermark drop; the
-idempotent batch re-pack over the committed t0 table reconciles them.
+with a metric; the idempotent batch re-pack over the committed t0
+table reconciles them. (The stats ingest has no such drop: its
+partials are mergeable, so a late row is counted exactly.)
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ from pyspark.sql import functions as F
 
 from drought_t_spark.schemas import STREAM_RAW
 from drought_t_spark.streaming.rollup_stream import (
+    _read_sequence_stream,
     fold_batches,
     live_batches,
     start_batch_ingest,
@@ -56,6 +58,7 @@ PAYLOAD_TAIL_TBL = "agg.stream_payload_tail"  # sealed raw rows / source
 _RAW_COLS = STREAM_RAW.names  # the tail's columns
 _SEAL_JOB, _SEAL_SCOPE = "stream-payload-seal", "payload_seal"
 _PACK_JOB = "stream-payload-pack"
+_WATERMARK_HOURS = 2  # the default pack cutoff's lag behind the tail's event time
 
 
 def start_payload_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
@@ -63,8 +66,9 @@ def start_payload_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str
     """Each micro-batch's raw rows (with derived event time) land in
     `agg.stream_payload_partials` through the shared batch sink
     (`rollup_stream.start_batch_ingest`)."""
-    return start_batch_ingest(spark, path, wh, checkpoint_dir, PAYLOAD_PARTIALS_TBL,
-                              lambda batch: batch.select(*_RAW_COLS), files_per_trigger)
+    return start_batch_ingest(_read_sequence_stream(spark, path, files_per_trigger),
+                              wh, checkpoint_dir, PAYLOAD_PARTIALS_TBL,
+                              lambda batch: batch.select(*_RAW_COLS))
 
 
 def seal_payload_partials(spark: SparkSession, wh) -> int:
@@ -94,24 +98,19 @@ def seal_payload_partials(spark: SparkSession, wh) -> int:
     return fold_batches(spark, wh, PAYLOAD_PARTIALS_TBL, _SEAL_JOB, _SEAL_SCOPE, fold)
 
 
-def _default_cutoff(spark: SparkSession, wh, watermark_hours: int):
+def _default_cutoff(spark: SparkSession, wh):
     """max event time in the tail, minus the watermark, floored to the
     hour — the streaming-side stand-in for the query watermark (the
     tail is the post-seal analog of the stream's unexpired state)."""
     hi = wh.read(spark, PAYLOAD_TAIL_TBL).agg(F.max("ts")).first()[0]
     if hi is None:
         return None
-    return (hi - _dt.timedelta(hours=watermark_hours)).replace(
+    return (hi - _dt.timedelta(hours=_WATERMARK_HOURS)).replace(
         minute=0, second=0, microsecond=0
     )
 
 
-def pack_complete_buckets(
-    spark: SparkSession,
-    wh,
-    cutoff=None,
-    watermark_hours: int = 2,
-) -> int:
+def pack_complete_buckets(spark: SparkSession, wh, cutoff=None) -> int:
     """Encode every COMPLETE hour bucket (bucket_start < `cutoff`) from
     the tail into `agg.payload_hour` and shrink the tail to the
     incomplete remainder.
@@ -138,7 +137,7 @@ def pack_complete_buckets(
     if not wh.exists(PAYLOAD_TAIL_TBL):
         return 0
     if cutoff is None:
-        cutoff = _default_cutoff(spark, wh, watermark_hours)
+        cutoff = _default_cutoff(spark, wh)
     if cutoff is None:
         return 0
     tail = wh.read(spark, PAYLOAD_TAIL_TBL)

@@ -1,11 +1,16 @@
-"""Structured Streaming analog of the hour-tier rollup (SURVEY.md
-§2.11): tumbling 1-hour windows per source with a watermark for late
-sequences. Batch tiers remain the contract; this is the streaming
-ingest path for tier-0.
+"""Streaming ingest of the hour tier (SURVEY.md §2.11) and the one
+exactly-once micro-batch protocol every streamed path runs on.
 
-It also holds the exactly-once micro-batch protocol of both streaming
-ingests (stats here, tokens in `payload_stream`): the sink
-`start_batch_ingest`, the ledgered `fold_batches` and `live_batches`.
+`start_batch_ingest` is the engine's only streaming sink: each
+micro-batch lands in its own idempotent `batch_key` partition of a
+declared warehouse table. The stats ingest (`start_tier_ingest`), the
+token ingest (`payload_stream`) and the run stream (`runs_stream`) all
+write through it. The ledgered `fold_batches` folds the stats
+partials and the raw token rows into the committed tables, and
+`live_batches` serves the un-folded ones. Stats partials are
+mergeable, so the live hour tier (`read_stream_hour_tier`) is exact at
+any moment, late rows included, with no watermark and no windowed
+state. Batch tiers remain the contract.
 
 Run segmentation (RL1/RL2/EV1) streams separately: `runs_stream`
 folds each micro-batch through the drought kernel's run step
@@ -23,47 +28,13 @@ from drought_t_spark import schemas as S
 from drought_t_spark.operators import rollup as R
 
 
-def _read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int = 8) -> DataFrame:
-    return (
+def _read_sequence_stream(spark: SparkSession, path: str, files_per_trigger: int) -> DataFrame:
+    """T0 sequences (`schemas.SEQUENCES`) streamed from parquet files
+    under `path`, with their event time (`R.with_event_time`)."""
+    return R.with_event_time(
         spark.readStream.schema(S.SEQUENCES)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
-    )
-
-
-def _streaming_hour_rollup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window continuous aggregate; late rows beyond the
-    watermark are dropped (batch re-rollup reconciles them)."""
-    t1 = R.with_event_time(stream)
-    return (
-        t1.withWatermark("ts", watermark)
-        .groupBy("source", F.window("ts", "1 hour").alias("win"))
-        .agg(*R._stats_agg())
-        .select(
-            "source",
-            F.col("win.start").alias("bucket_start"),
-            "n_seq", "n_tok_sum", "n_tok_min", "n_tok_max",
-            (F.col("n_tok_sum") / F.col("n_seq")).alias("n_tok_avg"),
-        )
-    )
-
-
-def start_append_stream(spark: SparkSession, path: str,
-                        name: str = "stream_tier_hour_append",
-                        watermark: str = "2 hours"):
-    """Append-mode variant: a window row is emitted only once its end
-    falls behind the watermark, and rows arriving later than the
-    watermark are DROPPED (the late-data contract; the idempotent batch
-    re-rollup over the committed table reconciles them — SURVEY.md
-    §2.11). Returns the running StreamingQuery; the caller drives
-    micro-batches (processAllAvailable) between file drops so the
-    watermark actually advances between batches."""
-    agg = _streaming_hour_rollup(_read_sequence_stream(spark, path), watermark)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
     )
 
 
@@ -102,16 +73,15 @@ def _stream_identity(checkpoint_dir: str) -> str:
         ) from e
 
 
-def start_batch_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
-                       table: str, to_rows, files_per_trigger: int = 1):
-    """Each micro-batch's `to_rows(batch)` lands in `table` partitioned
-    by `batch_key = <stream-id>-<batch_id>` via idempotent partition
-    overwrite. foreachBatch is at-least-once — a crash between sink and
+def start_batch_ingest(stream: DataFrame, wh, checkpoint_dir: str, table: str, to_rows):
+    """Run the streaming frame `stream` from `checkpoint_dir`: each
+    micro-batch's `to_rows(batch)` lands in `table` partitioned by
+    `batch_key = <stream-id>-<batch_id>` via idempotent partition
+    overwrite. The sink is at-least-once — a crash between sink and
     stream checkpoint replays the batch — so the sink must be IDEMPOTENT,
-    not guarded: a replay overwrites its own partition with identical
+    not guarded: a replay overwrites its own partition with the same
     rows, and `fold_batches` drops a replay of a batch it already
-    folded."""
-    t1 = R.with_event_time(_read_sequence_stream(spark, path, files_per_trigger))
+    folded. Returns the running StreamingQuery."""
     sid: list[str] = []  # resolved lazily: metadata exists once started
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -123,7 +93,7 @@ def start_batch_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
         wh.write_partitioned(part, table, ["batch_key"])
 
     return (
-        t1.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -195,8 +165,8 @@ def start_tier_ingest(spark: SparkSession, path: str, wh, checkpoint_dir: str,
     """Each micro-batch's hour partials (mergeable integer stats) land
     in `agg.stream_partials_hour` until `compact_stream_partials` folds
     them into the tier (the Iceberg append-only + compaction shape)."""
-    return start_batch_ingest(spark, path, wh, checkpoint_dir, PARTIALS_TBL,
-                              R.rollup_hour, files_per_trigger)
+    return start_batch_ingest(_read_sequence_stream(spark, path, files_per_trigger),
+                              wh, checkpoint_dir, PARTIALS_TBL, R.rollup_hour)
 
 
 _STAT_COLS = ["source", "bucket_start", "n_seq", "n_tok_sum", "n_tok_min", "n_tok_max"]
@@ -268,16 +238,3 @@ def compact_stream_partials(spark: SparkSession, wh) -> int:
 
     return fold_batches(spark, wh, PARTIALS_TBL, _COMPACT_JOB, _COMPACT_SCOPE, fold)
 
-
-def run_to_memory(spark: SparkSession, path: str, name: str = "stream_tier_hour"):
-    """Drive the stream to completion over static files (test helper)."""
-    agg = _streaming_hour_rollup(_read_sequence_stream(spark, path))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")

@@ -11,8 +11,14 @@ numbers (run_id, onset, termination, duration, severity, peak, excess),
 so a monitoring consumer sees drought events as they close instead of
 at the next batch recompute. Parity with `operators.runs` is pinned
 bit-for-bit by tests/test_streaming_runs.py, including across
-micro-batch boundaries, checkpoint restarts, and a run spanning many
-micro-batches.
+micro-batch boundaries, checkpoint restarts, a replayed micro-batch and
+a run spanning many micro-batches.
+
+The closed runs land in the declared table `drought.stream_runs`
+(`schemas.STREAM_RUNS`) through the engine's one streaming sink,
+`rollup_stream.start_batch_ingest`: each micro-batch in its own
+`batch_key` partition, so a replayed batch rewrites its partition
+instead of appending its runs twice.
 
 Semantics and scale notes:
 - Input: the rolled-up, gap-filled, threshold-joined series
@@ -21,9 +27,9 @@ Semantics and scale notes:
   (static, broadcast) per-cycle-position threshold table; the tests
   drive it from parquet files appended in time order.
 - Ordering / late data: state keeps the max bucket seen per source and
-  DROPS any row at or behind it (same late-data contract as the
-  append-mode rollup stream: the idempotent batch recompute reconciles
-  — SURVEY.md §2.11). Within a micro-batch rows are sorted per source.
+  DROPS any row at or behind it: a run already emitted is final, and
+  the idempotent batch recompute reconciles late rows (SURVEY.md
+  §2.11). Within a micro-batch rows are sorted per source.
 - The run step is the drought kernel's own, `operators.runs.run_table`:
   below(t) = x_ma < x0 strict, null -> false; deficit/excess floored
   at 0 with null -> 0, matching functions.scalars.deficit (greatest
@@ -36,8 +42,8 @@ Semantics and scale notes:
   merge). Memory is O(sources), not O(history) — exactly the shape that
   survives 10^5 sources on a real cluster. Each micro-batch is one
   vectorized `run_table` call, not per-row or per-run Python.
-- Output mode is append (rows are final when emitted); the trailing
-  open run lives only in state until its terminating bucket arrives.
+- Rows are final when emitted (append); the trailing open run lives
+  only in state until its terminating bucket arrives.
 - Sizing: the state-partition count (spark.sql.shuffle.partitions at
   first start) is FROZEN into the checkpoint. Size it to steady-state
   parallelism, not burst cores: each partition pays worker-spawn +
@@ -54,7 +60,6 @@ from typing import Iterator, Tuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -66,6 +71,8 @@ from pyspark.sql.types import (
 )
 
 from drought_t_spark.operators.runs import run_table
+from drought_t_spark.schemas import STREAM_RUNS
+from drought_t_spark.streaming.rollup_stream import start_batch_ingest
 
 # Input contract: what below_mask/segment_runs consume (operators/runs.py).
 RUN_STREAM_INPUT = StructType(
@@ -77,21 +84,11 @@ RUN_STREAM_INPUT = StructType(
     ]
 )
 
-# Output contract: extract_events' schema (operators/runs.py:extract_events)
-# plus nothing — bit-parity is the point.
-RUN_EVENTS_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("run_id", LongType()),
-        StructField("below", IntegerType()),
-        StructField("onset", TimestampType()),
-        StructField("termination", TimestampType()),
-        StructField("duration", LongType()),
-        StructField("severity", DoubleType()),
-        StructField("peak", DoubleType()),
-        StructField("excess", DoubleType()),
-    ]
-)
+RUNS_TBL = "drought.stream_runs"
+# Output contract: extract_events' columns (operators/runs.py), the
+# table's schema without its `batch_key` partition — bit-parity is the
+# point.
+_RUN_EVENTS = StructType([f for f in STREAM_RUNS if f.name != "batch_key"])
 
 # State: (last_us, have_run, below, run_id, onset_us, term_us, duration,
 #         severity, peak, excess) — timestamps as int64 epoch-micros
@@ -192,74 +189,28 @@ def _streaming_run_events(stream: DataFrame) -> DataFrame:
     stays in state until a bucket with flipped `below` closes it."""
     return stream.groupBy("source").applyInPandasWithState(
         _fold_runs,
-        outputStructType=RUN_EVENTS_SCHEMA,
+        outputStructType=_RUN_EVENTS,
         stateStructType=RUN_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
     )
 
 
-def _read_series_stream(spark: SparkSession, path: str,
-                        files_per_trigger: int = 1) -> DataFrame:
-    return (
+def start_runs_stream(spark: SparkSession, path: str, wh, checkpoint_dir: str,
+                      files_per_trigger: int = 1):
+    """Stream the series files under `path` through the run fold into
+    `drought.stream_runs` (the one batch sink,
+    `rollup_stream.start_batch_ingest`), resumable from
+    `checkpoint_dir`: source offsets AND the per-source run state
+    restore, so a run left open at shutdown closes correctly after
+    restart, and a batch replayed after a crash before its commit
+    re-runs from the state it started with and rewrites its own
+    `batch_key` partition. Returns the running StreamingQuery; the
+    caller drives micro-batches (processAllAvailable)."""
+    series = (
         spark.readStream.schema(RUN_STREAM_INPUT)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(path)
     )
-
-
-def start_runs_stream(spark: SparkSession, path: str,
-                      name: str = "stream_run_events",
-                      files_per_trigger: int = 1,
-                      checkpoint: str | None = None):
-    """Memory-sink runner for tests/driver smoke: returns the running
-    StreamingQuery; caller drives micro-batches (processAllAvailable).
-    (The memory sink does not support checkpoint RECOVERY — restart
-    coverage uses start_runs_stream_to_parquet — but `checkpoint` still
-    controls where the state store writes its per-batch deltas, which
-    matters: the default lands in java.io.tmpdir, and on a slow scratch
-    disk the state-store fsyncs dominate the micro-batch wall.)"""
-    events = _streaming_run_events(_read_series_stream(spark, path, files_per_trigger))
-    w = (
-        events.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-    )
-    if checkpoint is not None:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
-
-
-def start_runs_stream_to_parquet(spark: SparkSession, path: str, out: str,
-                                 checkpoint: str):
-    """Checkpointed runner: appends each micro-batch's terminated-run
-    rows to a parquet dir via foreachBatch, resumable from `checkpoint`
-    (source offsets AND the per-source run state restore, so a run left
-    open at shutdown closes correctly after restart).
-
-    foreachBatch is at-least-once: a crash between the sink write and
-    the checkpoint commit replays the batch and duplicates its rows.
-    Each batch therefore writes into its own `_batch=<id>` partition —
-    dynamic overwrite makes the replay idempotent (the same trick the
-    ingest partials use, streaming/rollup_stream.py batch keys)."""
-    events = _streaming_run_events(_read_series_stream(spark, path))
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: write_events_batch(df, bid, out))
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def write_events_batch(batch_df: DataFrame, batch_id: int, out: str) -> None:
-    """Idempotent per-batch event write: the batch lands in its own
-    `_batch=<id>` partition via dynamic overwrite, so an at-least-once
-    replay rewrites the same partition instead of appending duplicates.
-    Module-level so the replay property is directly testable."""
-    (
-        batch_df.withColumn("_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch")
-        .parquet(out)
-    )
+    return start_batch_ingest(_streaming_run_events(series), wh, checkpoint_dir,
+                              RUNS_TBL, lambda batch: batch)

@@ -43,7 +43,7 @@ def test_bucketed_equals_generic(frames):
     kw = dict(by=["key"], left_ts="probe", right_ts="bucket_start",
               value_cols=["bucket_start", "v"])
     ref = asof_join(left, right, how="inner", **kw)
-    got = asof_join_bucketed(left, right, step="hour", **kw)
+    got = asof_join_bucketed(left, right, **kw)
     ref_rows = {tuple(r) for r in ref.collect()}
     got_rows = {tuple(r) for r in got.collect()}
     assert got_rows == ref_rows
@@ -65,7 +65,7 @@ def test_bucketed_big_side_not_shuffled(frames):
     left, right = frames
     out = asof_join_bucketed(
         left, right, by=["key"], left_ts="probe", right_ts="bucket_start",
-        value_cols=["bucket_start", "v"], step="hour",
+        value_cols=["bucket_start", "v"],
     )
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -11,9 +11,9 @@ be either wired in or deleted. Only code references count: names,
 attribute accesses, imported names, and identifier-valued string
 constants (the benchmark harness wraps functions by name); a name counts
 only where it is read, not where it is bound. A mention in a comment or
-docstring is not a caller. A defaulted parameter that no call sets has
-one value in use: it is a constant, and the branches it selects are
-dead. Pure AST scan; no Spark session.
+docstring is not a caller. A defaulted parameter that no call sets to
+another value than its default has one value in use: it is a constant,
+and the branches it selects are dead. Pure AST scan; no Spark session.
 """
 
 import ast
@@ -89,19 +89,20 @@ def test_every_public_engine_constant_is_read():
     assert not unread, f"module-level constants read nowhere: {unread}"
 
 
-def _defaulted_params(path: Path) -> list[tuple[str, str, int | None]]:
+def _defaulted_params(path: Path) -> list[tuple[str, str, int | None, str]]:
     """(function name, parameter, positional index or None if keyword-
-    only) of every defaulted parameter of a public top-level function or
-    a public method of a public class; a method's index skips its
-    `self`/`cls`."""
+    only, `ast.dump` of the default) of every defaulted parameter of a
+    public top-level function or a public method of a public class; a
+    method's index skips its `self`/`cls`."""
     def params(fn, is_method):
         a = fn.args
         pos = a.posonlyargs + a.args
         if is_method and not any(
                 isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list):
             pos = pos[1:]
-        out = [(fn.name, p.arg, pos.index(p)) for p in pos[len(pos) - len(a.defaults):]]
-        return out + [(fn.name, p.arg, None)
+        out = [(fn.name, p.arg, pos.index(p), ast.dump(d))
+               for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)]
+        return out + [(fn.name, p.arg, None, ast.dump(d))
                       for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
 
     out = []
@@ -115,10 +116,10 @@ def _defaulted_params(path: Path) -> list[tuple[str, str, int | None]]:
     return out
 
 
-def _calls(path: Path) -> list[tuple[str, int, set[str], bool]]:
-    """(callee name, positional argument count, keyword names, unpacks)
-    of every call by name or attribute; `partial(f, ...)` is a call of
-    `f`."""
+def _calls(path: Path) -> list[tuple[str, list[str], dict[str, str], bool]]:
+    """(callee name, `ast.dump` of each positional argument, keyword name
+    → `ast.dump` of its value, unpacks) of every call by name or
+    attribute; `partial(f, ...)` is a call of `f`."""
     def name(f):
         return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
 
@@ -131,17 +132,33 @@ def _calls(path: Path) -> list[tuple[str, int, set[str], bool]]:
             callee, args = name(args[0]), args[1:]
         unpacks = (any(isinstance(a, ast.Starred) for a in args)
                    or any(k.arg is None for k in node.keywords))
-        out.append((callee, len(args), {k.arg for k in node.keywords}, unpacks))
+        out.append((callee, [ast.dump(a) for a in args],
+                    {k.arg: ast.dump(k.value) for k in node.keywords}, unpacks))
     return out
+
+
+# Set by no caller the dead-code scan may change: only
+# `perfbench/workloads.py` passes `end`, to its default, and the
+# benchmark harness is not edited along with the engine.
+_SET_OUTSIDE = {"drought_t_spark/synth.py:series_pdf.end"}
+
+
+def _sets(call, param: str, idx: int | None, default: str) -> bool:
+    """Does `call` set `param` to another value than its default?"""
+    _, args, kws, unpacks = call
+    if unpacks:
+        return True
+    given = kws.get(param, args[idx] if idx is not None and idx < len(args) else None)
+    return given is not None and given != default
 
 
 def test_every_defaulted_engine_parameter_is_set():
     calls = [c for p in _py_files() for c in _calls(p)]
     unset = [
-        f"{path.relative_to(ROOT)}:{fn}.{param}"
+        name
         for path in sorted(PACKAGE.rglob("*.py"))
-        for fn, param, idx in _defaulted_params(path)
-        if not any(callee == fn and (unpacks or param in kws or (idx is not None and n > idx))
-                   for callee, n, kws, unpacks in calls)
+        for fn, param, idx, default in _defaulted_params(path)
+        if (name := f"{path.relative_to(ROOT)}:{fn}.{param}") not in _SET_OUTSIDE
+        and not any(c[0] == fn and _sets(c, param, idx, default) for c in calls)
     ]
     assert not unset, f"{len(unset)} defaulted parameters no call sets: {unset}"

@@ -91,7 +91,7 @@ def test_cosine_topk_matches_numpy(spark, emb):
     scores = mat @ qv / (np.linalg.norm(mat, axis=1) * np.linalg.norm(qv))
     order = np.lexsort((pdf.vec_id.to_numpy(), -scores))
     want = pdf.vec_id.to_numpy()[order][:10].tolist()
-    got = [r.vec_id for r in SIM.cosine_topk(emb, qv, k=10).collect()]
+    got = [r.vec_id for r in SIM.cosine_topk(emb, qv).collect()]
     assert got == want
 
 
@@ -141,13 +141,13 @@ def test_ivf_trained_centroids_recall_and_quantization(spark, emb):
     aug = e.unionByName(
         spark.createDataFrame(planted, "vec_id long, embedding array<double>")
     )
-    got = {r.vec_id for r in SIM.cosine_topk_ivf(aug, qv, k=11, n_probe=4).collect()}
+    got = {r.vec_id for r in SIM.cosine_topk_ivf(aug, qv, k=11).collect()}
     want = {0} | {10_000 + s for s in range(1, 11)}
     assert got == want  # recall@10 = 1 for near-dup neighbors at n_probe=4
 
     # trained centroids quantize the data better than the old seeded
     # random directions: mean max-cosine to nearest centroid improves
-    C = SIM.train_ivf_centroids(e, n_centroids=16)
+    C = SIM.train_ivf_centroids(e)
     pdf = emb.toPandas()
     X = np.stack(pdf.embedding.map(np.asarray)).astype(np.float64)
     X /= np.linalg.norm(X, axis=1, keepdims=True)
@@ -160,14 +160,14 @@ def test_ivf_trained_centroids_recall_and_quantization(spark, emb):
 def test_ivf_udf_path_matches_expression_path(spark, emb):
     """The Arrow-matmul assignment (large-codebook path) must return
     exactly what the inlined-literal expression path returns for the
-    same trained centroids, query and n_probe."""
+    same trained centroids and query."""
     e = _emb_double(emb)
     qv = [float(x) for x in e.where(F.col("vec_id") == 0).first()["embedding"]]
-    C = SIM.train_ivf_centroids(e, n_centroids=16)
+    C = SIM.train_ivf_centroids(e)
     expr_ids = [r.vec_id for r in
-                SIM.cosine_topk_ivf(e, qv, k=10, n_probe=4, centroids=C).collect()]
+                SIM.cosine_topk_ivf(e, qv, k=10, centroids=C).collect()]
     udf_ids = [r.vec_id for r in
-               SIM._topk_ivf_udf(e, np.asarray(qv, dtype=np.float64), C, 10, 4).collect()]
+               SIM._topk_ivf_udf(e, np.asarray(qv, dtype=np.float64), C, 10).collect()]
     assert expr_ids == udf_ids
 
 
@@ -343,7 +343,7 @@ def test_multimodal_stub_plumbing(spark, docs):
     assert len(feats) == docs.count()
     assert (feats.features.map(len) == 16).all()
     np.testing.assert_allclose(feats.features.map(sum).to_numpy(), 1.0, rtol=1e-9)
-    frames = sample_frames(media, n_frames=4)
+    frames = sample_frames(media)
     assert frames.groupBy("media_id").count().where("count != 4").count() == 0
     try:
         import PIL  # noqa: F401

@@ -1,6 +1,6 @@
-"""Structured Streaming tier-0 rollup (SURVEY.md §2.11): the streaming
-tumbling-window aggregate over static files must equal the batch AG1
-rollup on the same input."""
+"""Structured Streaming tier-0 rollup (SURVEY.md §2.11): the live hour
+tier over the streamed micro-batch partials, and the committed tier
+after compaction, must equal the batch AG1 rollup on the same input."""
 
 import pandas as pd
 import pytest
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from drought_t_spark import synth
 from drought_t_spark.operators import rollup as R
-from drought_t_spark.streaming.rollup_stream import run_to_memory, start_append_stream
 
 
 def _seq_batch(spark, seqs: list[int], source: str = "src_0000"):
@@ -24,38 +23,6 @@ def _seq_batch(spark, seqs: list[int], source: str = "src_0000"):
     from drought_t_spark.schemas import SEQUENCES
 
     return spark.createDataFrame(pdf, SEQUENCES)
-
-
-def test_watermark_drops_late_rows_batch_reconciles(spark, tmp_path):
-    """Late-data contract (SURVEY.md §2.11): a row older than the
-    watermark is dropped by the append-mode stream, while the idempotent
-    batch re-rollup over the same files still counts it — so a finalized
-    streamed window differs from batch by exactly the late rows."""
-    path = str(tmp_path / "late_seqs")
-    # batch 1: minutes 0..239 (hour buckets 0-3); max event time 03:59
-    _seq_batch(spark, list(range(240))).write.mode("overwrite").parquet(path)
-    q = start_append_stream(spark, path, name="q_wm", watermark="2 hours")
-    try:
-        q.processAllAvailable()  # watermark advances to 03:59 - 2h = 01:59
-        # batch 2: one LATE row in hour 0 (behind the watermark → drop)
-        # plus rows in hour 4 that push the watermark past hour 1's end
-        _seq_batch(spark, [30, 250, 251]).write.mode("append").parquet(path)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = spark.sql("SELECT * FROM q_wm").toPandas().set_index("bucket_start")
-    # hours 0 and 1 are finalized (ends 01:00/02:00 ≤ final watermark
-    # 02:10); the late minute-30 row must NOT be in hour 0's count
-    h0 = streamed.loc[pd.Timestamp("2024-01-01 00:00:00")]
-    h1 = streamed.loc[pd.Timestamp("2024-01-01 01:00:00")]
-    assert int(h0.n_seq) == 60 and int(h1.n_seq) == 60
-    # batch reconciliation counts the late row: hour 0 has 61 rows
-    batch = (
-        R.rollup_hour(R.with_event_time(spark.read.parquet(path)))
-        .where(F.col("bucket_start") == "2024-01-01 00:00:00")
-        .first()
-    )
-    assert int(batch.n_seq) == 61
 
 
 def _assert_same_stats(a, b):
@@ -105,6 +72,42 @@ def test_stream_ingest_incremental_and_compaction(spark, tmp_path):
     assert folded == n_batches
     _assert_same_stats(wh.read(spark, "agg.tier_hour"), batch_truth())
     _assert_same_stats(read_stream_hour_tier(spark, wh), batch_truth())
+
+
+def test_late_rows_reach_live_view_and_compaction(spark, tmp_path):
+    """Late-data contract (SURVEY.md §2.11): the streamed partials are
+    mergeable, so a row arriving after later hours were ingested is
+    counted exactly, with no watermark drop: hour 0 holds 61 rows in
+    the live view and after compaction, as in the batch rollup."""
+    from drought_t_spark.sources.warehouse import Warehouse
+    from drought_t_spark.streaming.rollup_stream import (
+        compact_stream_partials,
+        read_stream_hour_tier,
+        start_tier_ingest,
+    )
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    path, ckpt = str(tmp_path / "late_seqs"), str(tmp_path / "ckpt")
+    # drop 1: minutes 0..239 (hour buckets 0-3)
+    _seq_batch(spark, list(range(240))).write.mode("overwrite").parquet(path)
+    q = start_tier_ingest(spark, path, wh, ckpt)
+    try:
+        q.processAllAvailable()
+        # drop 2: one LATE row in hour 0 plus two rows in hour 4
+        _seq_batch(spark, [30, 250, 251]).write.mode("append").parquet(path)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def hour0(df):
+        return int(df.where(F.col("bucket_start") == "2024-01-01 00:00:00").first().n_seq)
+
+    batch = R.rollup_hour(R.with_event_time(spark.read.parquet(path)))
+    assert hour0(batch) == 61
+    assert hour0(read_stream_hour_tier(spark, wh)) == 61
+    assert compact_stream_partials(spark, wh) >= 2
+    assert hour0(wh.read(spark, "agg.tier_hour")) == 61
+    _assert_same_stats(read_stream_hour_tier(spark, wh), batch)
 
 
 def test_compaction_incremental_and_replay_safe(spark, tmp_path):
@@ -201,22 +204,6 @@ def test_fresh_checkpoint_batch_zero_is_not_mistaken_for_replay(spark, tmp_path)
     # both incarnations' rows are present exactly once
     both = spark.read.parquet(in1).unionByName(spark.read.parquet(in2))
     _assert_same_stats(tier, R.rollup_hour(R.with_event_time(both)))
-
-
-def test_streaming_rollup_equals_batch(spark, tmp_path):
-    path = str(tmp_path / "seqs")
-    seqs = synth.sequences_df(spark, n_sources=3, n_total=3000)
-    seqs.write.parquet(path)
-
-    stream_out = run_to_memory(spark, path).select(
-        "source", "bucket_start", "n_seq", "n_tok_sum", "n_tok_min", "n_tok_max"
-    )
-    batch_out = R.rollup_hour(
-        R.with_event_time(spark.read.parquet(path))
-    ).select("source", "bucket_start", "n_seq", "n_tok_sum", "n_tok_min", "n_tok_max")
-
-    assert stream_out.exceptAll(batch_out).count() == 0
-    assert batch_out.exceptAll(stream_out).count() == 0
 
 
 def test_fold_job_counts(spark, tmp_path, jobs_in_group):

@@ -1,21 +1,20 @@
 """Streaming stateful run extraction (§2.11's last row): the
-applyInPandasWithState operator must emit, for every TERMINATED run,
-bit-for-bit the batch extract_events row — across micro-batch
-boundaries, runs spanning many micro-batches, checkpoint restarts, and
-late rows."""
+applyInPandasWithState operator must land in `drought.stream_runs`, for
+every TERMINATED run, bit-for-bit the batch extract_events row — across
+micro-batch boundaries, runs spanning many micro-batches, checkpoint
+restarts, a replayed micro-batch, and late rows."""
 
 import math
+import os
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from drought_t_spark.operators import runs as R
+from drought_t_spark.sources.warehouse import Warehouse
 from drought_t_spark.streaming.runs_stream import (
     RUN_STREAM_INPUT,
+    RUNS_TBL,
     start_runs_stream,
-    start_runs_stream_to_parquet,
 )
 
 
@@ -51,9 +50,10 @@ def _batch_terminated(spark, pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _collect(spark, name: str) -> pd.DataFrame:
+def _collect(spark, wh) -> pd.DataFrame:
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        wh.read(spark, RUNS_TBL)
+        .drop("batch_key")  # the sink's batch partition, not event data
         .toPandas()
         .sort_values(["source", "run_id"])
         .reset_index(drop=True)
@@ -70,37 +70,48 @@ def _assert_parity(streamed: pd.DataFrame, batch: pd.DataFrame):
     )
 
 
-def _write_slices(pdf: pd.DataFrame, path: str, spark, cuts):
-    """Append time-ordered slices as separate files (one per trigger)."""
+def _slices(pdf: pd.DataFrame, cuts) -> list[pd.DataFrame]:
+    """`pdf`'s rows before each of the time-ordered `cuts`, in turn."""
     lo = pd.Timestamp("1970-01-01")
+    out = []
     for hi in cuts:
-        cut = pdf[(pdf["bucket_start"] >= lo) & (pdf["bucket_start"] < hi)]
-        spark.createDataFrame(cut, RUN_STREAM_INPUT).coalesce(1).write.mode(
+        out.append(pdf[(pdf["bucket_start"] >= lo) & (pdf["bucket_start"] < hi)])
+        lo = hi
+    return out
+
+
+def _stream(spark, tmp_path, drops) -> Warehouse:
+    """Run the runs stream from `tmp_path`'s checkpoint into its
+    warehouse: each frame of `drops` is appended as one input file and
+    processed as its own micro-batch (the first before the start), so
+    arrival stays in order; with no drops the restart only finishes the
+    batches the checkpoint left uncommitted. Returns the warehouse."""
+    path, wh = str(tmp_path / "series"), Warehouse(str(tmp_path / "wh"))
+
+    def drop(pdf):
+        spark.createDataFrame(pdf, RUN_STREAM_INPUT).coalesce(1).write.mode(
             "append"
         ).parquet(path)
-        lo = hi
+
+    if drops:
+        drop(drops[0])
+    q = start_runs_stream(spark, path, wh, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        for pdf in drops[1:]:
+            drop(pdf)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    return wh
 
 
 def test_stream_matches_batch_across_microbatches(spark, tmp_path):
     pdf = _series_pdf()
-    path = str(tmp_path / "series")
     t0 = pd.Timestamp("2024-01-01")
     cuts = [t0 + pd.Timedelta(hours=h) for h in (24, 48, 72, 96)]
-    _write_slices(pdf, path, spark, cuts[:1])
-    q = start_runs_stream(spark, path, name="q_runs_parity")
-    try:
-        q.processAllAvailable()
-        lo = cuts[0]
-        for hi in cuts[1:]:
-            cut = pdf[(pdf["bucket_start"] >= lo) & (pdf["bucket_start"] < hi)]
-            spark.createDataFrame(cut, RUN_STREAM_INPUT).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
-            q.processAllAvailable()
-            lo = hi
-    finally:
-        q.stop()
-    _assert_parity(_collect(spark, "q_runs_parity"), _batch_terminated(spark, pdf))
+    wh = _stream(spark, tmp_path, _slices(pdf, cuts))
+    _assert_parity(_collect(spark, wh), _batch_terminated(spark, pdf))
 
 
 def test_run_spanning_many_microbatches(spark, tmp_path):
@@ -116,60 +127,25 @@ def test_run_spanning_many_microbatches(spark, tmp_path):
             "x0": 0.0,
         }
     )
-    path = str(tmp_path / "long_run")
-    spark.createDataFrame(pdf.iloc[0:6], RUN_STREAM_INPUT).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    q = start_runs_stream(spark, path, name="q_runs_long")
-    try:
-        q.processAllAvailable()
-        for s in range(6, len(vals), 6):
-            spark.createDataFrame(
-                pdf.iloc[s : s + 6], RUN_STREAM_INPUT
-            ).coalesce(1).write.mode("append").parquet(path)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = _collect(spark, "q_runs_long")
+    wh = _stream(spark, tmp_path, [pdf.iloc[s : s + 6] for s in range(0, len(vals), 6)])
+    streamed = _collect(spark, wh)
     batch = _batch_terminated(spark, pdf)
     assert (streamed["duration"] == 30).any()
     _assert_parity(streamed, batch)
 
 
 def test_restart_from_checkpoint_no_dupes_no_loss(spark, tmp_path):
-    """Stop after half the files, restart from the same checkpoint:
-    state (incl. the open run's partials) restores and the union of the
-    two memory sinks is exactly the batch terminated set."""
+    """Stop after half the series, restart from the same checkpoint:
+    state (incl. the open run's partials) restores and the table holds
+    exactly the batch terminated set."""
     pdf = _series_pdf(sources=2, hours=72)
-    path = str(tmp_path / "series_ckpt")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "events_out")
     t0 = pd.Timestamp("2024-01-01")
-    _write_slices(pdf, path, spark, [t0 + pd.Timedelta(hours=36)])
-    q = start_runs_stream_to_parquet(spark, path, out, checkpoint=ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # slice the second half to mid-run boundaries: the open run's
-    # partials were checkpointed in state and must restore on restart
-    lo = t0 + pd.Timedelta(hours=36)
-    cut = pdf[pdf["bucket_start"] >= lo]
-    spark.createDataFrame(cut, RUN_STREAM_INPUT).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    q2 = start_runs_stream_to_parquet(spark, path, out, checkpoint=ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    both = (
-        spark.read.parquet(out)
-        .drop("_batch")  # per-batch idempotency partition, not event data
-        .toPandas()
-        .sort_values(["source", "run_id"])
-        .reset_index(drop=True)
-    )
+    # cut mid-run: the open run's partials were checkpointed in state
+    # and must restore on restart
+    first, second = _slices(pdf, [t0 + pd.Timedelta(hours=h) for h in (36, 72)])
+    _stream(spark, tmp_path, [first])
+    wh = _stream(spark, tmp_path, [second])
+    both = _collect(spark, wh)
     assert not both.duplicated(["source", "run_id"]).any()
     _assert_parity(both, _batch_terminated(spark, pdf))
 
@@ -187,23 +163,9 @@ def test_variable_threshold_parity(spark, tmp_path):
             x0 = 0.3 * math.cos(2 * math.pi * (h % 24) / 24.0)  # hour-of-day
             rows.append((f"src_{s:04d}", t0 + pd.Timedelta(hours=h), x, x0))
     pdf = pd.DataFrame(rows, columns=["source", "bucket_start", "x_ma", "x0"])
-    path = str(tmp_path / "var_thresh")
     cuts = [t0 + pd.Timedelta(hours=h) for h in (40, 80, 120)]
-    _write_slices(pdf, path, spark, cuts[:1])
-    q = start_runs_stream(spark, path, name="q_runs_varx0")
-    try:
-        q.processAllAvailable()
-        lo = cuts[0]
-        for hi in cuts[1:]:  # one drop per micro-batch: arrival stays in order
-            cut = pdf[(pdf["bucket_start"] >= lo) & (pdf["bucket_start"] < hi)]
-            spark.createDataFrame(cut, RUN_STREAM_INPUT).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
-            q.processAllAvailable()
-            lo = hi
-    finally:
-        q.stop()
-    _assert_parity(_collect(spark, "q_runs_varx0"), _batch_terminated(spark, pdf))
+    wh = _stream(spark, tmp_path, _slices(pdf, cuts))
+    _assert_parity(_collect(spark, wh), _batch_terminated(spark, pdf))
 
 
 def test_group_spanning_multiple_arrow_chunks(spark, tmp_path):
@@ -216,51 +178,31 @@ def test_group_spanning_multiple_arrow_chunks(spark, tmp_path):
     spark.conf.set(key, "16")  # 96-row group → ≥6 chunks per micro-batch
     try:
         pdf = _series_pdf(sources=2, hours=96)
-        path = str(tmp_path / "chunked_series")
-        _write_slices(pdf, path, spark,
-                      [pd.Timestamp("2024-01-01") + pd.Timedelta(hours=96)])
-        q = start_runs_stream(spark, path, name="q_runs_chunks")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _assert_parity(_collect(spark, "q_runs_chunks"),
-                       _batch_terminated(spark, pdf))
+        wh = _stream(spark, tmp_path, [pdf])
+        _assert_parity(_collect(spark, wh), _batch_terminated(spark, pdf))
     finally:
         spark.conf.set(key, old)
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
-    """An at-least-once foreachBatch replay re-invokes the sink with the
-    same batch id: the dynamic-overwrite partition write must leave the
-    output identical to a single delivery, and other batches untouched."""
-    from drought_t_spark.streaming.runs_stream import write_events_batch
-
-    out = str(tmp_path / "events")
+    """A crash between the sink write and the batch commit: the stream
+    ran two file drops, and the checkpoint lost the last batch's commit
+    marker. On restart Spark re-runs that batch from the state it
+    started with, and the sink rewrites the batch's own partition, so
+    each run is in the table once and the table still equals the batch
+    terminated runs."""
+    pdf = _series_pdf()
     t0 = pd.Timestamp("2024-01-01")
-    ev = pd.DataFrame(
-        {
-            "source": ["a", "b"],
-            "run_id": pd.array([1, 1], dtype="int64"),
-            "below": pd.array([1, 0], dtype="int32"),
-            "onset": [t0, t0],
-            "termination": [t0, t0],
-            "duration": pd.array([3, 4], dtype="int64"),
-            "severity": [1.5, 0.0],
-            "peak": [0.7, 0.0],
-            "excess": [0.0, 2.0],
-        }
-    )
-    from drought_t_spark.streaming.runs_stream import RUN_EVENTS_SCHEMA
-
-    df0 = spark.createDataFrame(ev, RUN_EVENTS_SCHEMA)
-    df1 = spark.createDataFrame(ev.assign(source=["c", "d"]), RUN_EVENTS_SCHEMA)
-    write_events_batch(df0, 0, out)
-    write_events_batch(df1, 1, out)
-    write_events_batch(df0, 0, out)  # replay of batch 0
-    got = spark.read.parquet(out).drop("_batch").toPandas()
-    assert len(got) == 4
-    assert sorted(got["source"]) == ["a", "b", "c", "d"]
+    _stream(spark, tmp_path, _slices(pdf, [t0 + pd.Timedelta(hours=h) for h in (48, 96)]))
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1
+    os.remove(commits / str(last))
+    os.remove(commits / f".{last}.crc")
+    wh = _stream(spark, tmp_path, [])
+    got = _collect(spark, wh)
+    assert not got.duplicated(["source", "run_id"]).any()
+    _assert_parity(got, _batch_terminated(spark, pdf))
 
 
 def test_late_rows_dropped(spark, tmp_path):
@@ -291,20 +233,7 @@ def test_late_rows_dropped(spark, tmp_path):
             "x0": [0.0],
         }
     )
-    path = str(tmp_path / "late")
-    spark.createDataFrame(inorder, RUN_STREAM_INPUT).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    q = start_runs_stream(spark, path, name="q_runs_late")
-    try:
-        q.processAllAvailable()
-        for chunk in (late, closer):
-            spark.createDataFrame(chunk, RUN_STREAM_INPUT).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = _collect(spark, "q_runs_late")
+    wh = _stream(spark, tmp_path, [inorder, late, closer])
+    streamed = _collect(spark, wh)
     batch = _batch_terminated(spark, pd.concat([inorder, closer]))
     _assert_parity(streamed, batch)

@@ -1,10 +1,11 @@
 """Throughput probe for the streaming stateful run extraction
 (streaming/runs_stream.py): N sources × H hourly buckets of a
 deterministic multi-run series, fed as `slices` parquet file drops
-through applyInPandasWithState, timed end-to-end (all micro-batches)
-and cross-checked against the batch operator (terminated-run counts
-AND a severity checksum must agree — the probe never times a wrong
-answer).
+through applyInPandasWithState into `drought.stream_runs` of a
+warehouse under the probe's temp root, timed end-to-end (all
+micro-batches, sink writes included) and cross-checked against the
+batch operator (terminated-run counts AND a severity checksum must
+agree — the probe never times a wrong answer).
 
 Reported: buckets/sec through the stateful operator, emitted runs,
 per-micro-batch wall. State is O(sources) fixed-width, so the number
@@ -33,8 +34,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from drought_t_spark.operators import runs as R  # noqa: E402
 from drought_t_spark.session import build_session  # noqa: E402
+from drought_t_spark.sources.warehouse import Warehouse  # noqa: E402
 from drought_t_spark.streaming.runs_stream import (  # noqa: E402
     RUN_STREAM_INPUT,
+    RUNS_TBL,
     start_runs_stream,
 )
 
@@ -91,10 +94,10 @@ def main() -> None:
         sdf_all.where(
             (F.col("bucket_start") >= F.lit(lo)) & (F.col("bucket_start") < F.lit(hi))
         ).write.mode("append").parquet(in_dir)
+        wh = Warehouse(f"{root}/wh")
         wall0 = time.time()
-        q = start_runs_stream(spark, in_dir, name="q_runs_bench",
-                              files_per_trigger=10_000,
-                              checkpoint=f"{root}/ckpt")
+        q = start_runs_stream(spark, in_dir, wh, f"{root}/ckpt",
+                              files_per_trigger=10_000)
         try:
             t = time.time()
             q.processAllAvailable()
@@ -110,8 +113,8 @@ def main() -> None:
             stream_wall = time.time() - wall0
         finally:
             q.stop()
-        streamed = spark.sql(
-            "SELECT count(*) AS n, sum(severity) AS sev FROM q_runs_bench"
+        streamed = wh.read(spark, RUNS_TBL).agg(
+            F.count("*").alias("n"), F.sum("severity").alias("sev")
         ).collect()[0]
         # batch cross-check: terminated runs only
         ev = R.extract_events(R.segment_runs(R.below_mask(sdf_all)))
